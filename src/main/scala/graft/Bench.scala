@@ -400,15 +400,17 @@ object Bench {
       val entries = keep.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v) } ++
         (if (foldedN > 0) Seq("\"other_" + foldedN + "_fastest\":" + fmt(foldedSum)) else Nil)
       val qs = entries.mkString("{", ",", "}")
+      // a heavily contended run can flag most of the suite, and a
+      // broken build can fail most of it; neither name list may push
+      // the machine line past the recording window (the fold loop
+      // below only shrinks the queries map), so past 10 names the
+      // line carries the COUNT and the full list stays in
+      // BENCH_LOCAL.json — exactly the runs these fields were built
+      // to adjudicate must keep a parseable line
       val failedField =
-        if (failed.isEmpty) ""
+        if (failed.size > 10) s""","failed_n":${failed.size}"""
+        else if (failed.isEmpty) ""
         else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
-      // a heavily contended run can flag most of the suite; the name
-      // list must never push the machine line past the recording
-      // window (the fold loop below only shrinks the queries map), so
-      // past 24 names the line carries the COUNT and the full list
-      // stays in BENCH_LOCAL.json — exactly the runs this field was
-      // built to adjudicate must keep a parseable line
       // r14 (r13 verdict #2): the r13 driver run's diagnostic fields
       // (28 record_ratio entries + 12 env_flagged names + 16
       // remeasured entries) crowded the ~2000-char window and the
@@ -582,11 +584,11 @@ object Bench {
       // fits the window with slack; a per-query map thinner than this
       // blinds the driver's round-over-round comparison, which is
       // worth more than any diagnostic
-      while (keepN > 15 && {
+      while (keepN > 15 && line.length > budget) {
+        keepN -= 1
         val (keep, fold) = byTime.splitAt(keepN)
         line = render(keep, fold.length, fold.map(_._2).sum)
-        line.length > budget
-      }) keepN -= 1
+      }
     }
     spark.stop()
     try {

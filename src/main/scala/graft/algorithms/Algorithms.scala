@@ -586,7 +586,8 @@ object Algorithms {
     * bucket-b edge only produces arrivals in bucket b and only
     * consumes arrivals ≤ ed, all settled by buckets ≤ b; parity with
     * the flat form probe-verified. The trade is measured, not
-    * guessed (TemporalReachProbe, sf0.1, 2.39M temporal edges):
+    * guessed (the temporal-reach probe, OPTIMIZATION_r13.md Retired
+    * diagnostics; sf0.1, 2.39M temporal edges):
     * without broadcast hints the bucketed form wins (15.9 → 13.1 s —
     * each phase's join is bucket-sliced where the flat form's
     * frontier matches nearly every LATER edge of its vertex, and

@@ -232,18 +232,8 @@ object Curation {
     corpusDriftJoint(sideUnion(a, b, idCol, textCol), idCol, textCol,
       buckets, alpha, untouchedCorrection)
 
-  /** [[corpusDrift]] over ONE frame carrying a boolean `__sa` side
-    * column (true = snapshot A) — when both snapshots derive from the
-    * same base table this form profiles them in a SINGLE corpus scan
-    * and shingle pass (r13: the two-DataFrame form paid two scans and
-    * two persists for one 4096-row answer; at 100 TB the scan IS the
-    * query). Values are identical: the joint (bk, ca, cb) profile is
-    * the full-outer join of the per-side profiles by construction.
-    */
   /** Per-bucket JS contribution (bits) quantized to 1e-9-bit units;
-    * pointwise ≥ 0 (two-point KL), so the unit count is ≥ 0. ONE
-    * definition shared by the shipping JS drift and the r14 probe-d
-    * terms query, so the probe measures the identical expression.
+    * pointwise ≥ 0 (two-point KL), so the unit count is ≥ 0.
     */
   private def jsTermUnits(p: Column, q: Column): Column = {
     val m = (p + q) / 2
@@ -252,9 +242,7 @@ object Curation {
   }
 
   /** Per-bucket TV numerator |(ca+1)(n_b+B) − (cb+1)(n_a+B)| in
-    * decimal(38,0) — shared by [[corpusDriftTvFromProfile]] and the
-    * r14 probe-d terms query (same sharing rationale as
-    * [[jsTermUnits]]).
+    * decimal(38,0).
     */
   private def tvTermAbs(ca: Column, cb: Column, na: Column, nb: Column,
       bL: Column): Column = {
@@ -263,17 +251,24 @@ object Curation {
         (cb + 1L).cast(dec) * (na + bL).cast(dec))
   }
 
+  /** [[corpusDrift]] over ONE frame carrying a boolean `__sa` side
+    * column (true = snapshot A) — when both snapshots derive from the
+    * same base table this form profiles them in a SINGLE corpus scan
+    * and shingle pass (r13: the two-DataFrame form paid two scans and
+    * two persists for one 4096-row answer; at 100 TB the scan IS the
+    * query). Values are identical: the joint (bk, ca, cb) profile is
+    * the full-outer join of the per-side profiles by construction.
+    */
   def corpusDriftJoint(df: DataFrame, idCol: String,
       textCol: String, buckets: Int = 4096,
       alpha: Double = 1.0, untouchedCorrection: Boolean = true): DataFrame = {
-    def termUnits(p: Column, q: Column): Column = jsTermUnits(p, q)
     val prof = graft.TransientCache.persist(
       bigramProfileJoint(df, textCol, buckets))
     val na = prof.agg(sum("ca").as("na"))
     val nb = prof.agg(sum("cb").as("nb"))
     val touched = prof
       .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .select(col("na"), col("nb"), termUnits(
+      .select(col("na"), col("nb"), jsTermUnits(
         (col("ca").cast("double") + alpha) /
           (col("na").cast("double") + alpha * buckets),
         (col("cb").cast("double") + alpha) /
@@ -282,7 +277,7 @@ object Curation {
       .agg(sum("u").as("su"), count(lit(1)).as("touched"))
     val units =
       if (untouchedCorrection)
-        col("su") + (lit(buckets.toLong) - col("touched")) * termUnits(
+        col("su") + (lit(buckets.toLong) - col("touched")) * jsTermUnits(
           lit(alpha) / (col("na").cast("double") + alpha * buckets),
           lit(alpha) / (col("nb").cast("double") + alpha * buckets))
       else col("su")
@@ -318,30 +313,6 @@ object Curation {
         sum(when(col("__sa"), 1L).otherwise(0L)).as("ca"),
         sum(when(col("__sa"), 0L).otherwise(1L)).as("cb"))
   }
-
-  /** Order-free checksums of the joint drift profile, one row:
-    * (a_bk_weighted, a_total, a_buckets, b_bk_weighted, b_total,
-    * b_buckets) — Σ(bk·c), Σc and the touched-bucket count per side.
-    * Any engine that builds the same per-side profiles produces the
-    * same six integers regardless of row order, so a cross-engine
-    * profile divergence is visible WITHOUT comparing 4096 rows
-    * (r13 drift-bisect probe b).
-    */
-  def driftProfileChecksums(df: DataFrame, idCol: String,
-      textCol: String, buckets: Int = 4096): DataFrame =
-    // every aggregate coalesced to 0 — the DuckDB mirror does the
-    // same, so a degenerate corpus (one side empty) reads 0 == 0 on
-    // both engines instead of a 0-vs-NULL false red on exactly the
-    // probe built to LOCALIZE divergence
-    bigramProfileJoint(df, textCol, buckets).agg(
-      coalesce(sum(col("bk") * col("ca")), lit(0L)).as("a_bk_weighted"),
-      coalesce(sum(col("ca")), lit(0L)).as("a_total"),
-      coalesce(sum(when(col("ca") > 0, 1L).otherwise(0L)), lit(0L))
-        .as("a_buckets"),
-      coalesce(sum(col("bk") * col("cb")), lit(0L)).as("b_bk_weighted"),
-      coalesce(sum(col("cb")), lit(0L)).as("b_total"),
-      coalesce(sum(when(col("cb") > 0, 1L).otherwise(0L)), lit(0L))
-        .as("b_buckets"))
 
   /** Tag-and-union fallback for the generic two-DataFrame drift
     * forms: the joint profile still computes in one aggregation, but
@@ -392,13 +363,9 @@ object Curation {
       bigramProfileJoint(df, textCol, buckets)), buckets)
 
   /** The TV statistic over an already-built joint (bk, ca, cb)
-    * profile — the arithmetic-only tail of [[corpusDriftTv]], exposed
-    * so a literal-input probe can check the statistic's integer
-    * arithmetic with no corpus dependence (r12 verdict: bisecting a
-    * cross-engine divergence needs the stat isolated from the
-    * profile build).
+    * profile — the arithmetic-only tail of [[corpusDriftTv]].
     */
-  def corpusDriftTvFromProfile(prof: DataFrame,
+  private def corpusDriftTvFromProfile(prof: DataFrame,
       buckets: Int = 4096): DataFrame = {
     val na = prof.agg(sum("ca").as("na"))
     val nb = prof.agg(sum("cb").as("nb"))
@@ -418,98 +385,6 @@ object Curation {
       .select(col("na").as("n_a"), col("nb").as("n_b"),
         expr(s"cast((s * 1000000 + dd) div (dd * 2) as long)")
           .as("tv_units"))
-  }
-
-  /** r14 drift-bisect probe d (r13 verdict #1): the RAW integer
-    * components of BOTH drift statistics over the REAL joint profile,
-    * emitted as columns with NO final divide — su (the JS 1e-9-bit
-    * unit sum, the one libm-adjacent quantity), st (the TV decimal
-    * numerator sum, as a string so no engine's big-integer rendering
-    * is trusted), the touched-bucket count, and the two totals. The
-    * r13 vector proved split (a), per-side profile checksums (b) and
-    * literal-profile statistic (c) all agree cross-engine while the
-    * shipping rows stay red; this isolates the one remaining
-    * aggregation stage — the statistic over the real profile — from
-    * the final divide/presentation ([[driftProbeUnits]] covers that).
-    * Shares [[jsTermUnits]]/[[tvTermAbs]]/[[bigramProfileJoint]] with
-    * the shipping queries BY CONSTRUCTION.
-    */
-  def driftProbeTerms(df: DataFrame, idCol: String, textCol: String,
-      buckets: Int = 4096, alpha: Double = 1.0): DataFrame = {
-    val prof = graft.TransientCache.persist(
-      bigramProfileJoint(df, textCol, buckets))
-    val na = prof.agg(sum("ca").as("na"))
-    val nb = prof.agg(sum("cb").as("nb"))
-    val bL = lit(buckets.toLong)
-    prof.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .select(col("na"), col("nb"),
-        jsTermUnits(
-          (col("ca").cast("double") + alpha) /
-            (col("na").cast("double") + alpha * buckets),
-          (col("cb").cast("double") + alpha) /
-            (col("nb").cast("double") + alpha * buckets)).as("u"),
-        tvTermAbs(col("ca"), col("cb"), col("na"), col("nb"), bL).as("t"))
-      .groupBy("na", "nb")
-      .agg(sum("u").as("su"), sum("t").as("st"),
-        count(lit(1)).as("touched"))
-      .select(col("na").as("n_a"), col("nb").as("n_b"), col("touched"),
-        col("su").as("js_su"), col("st").cast("string").as("tv_st"))
-  }
-
-  /** r14 drift-bisect probe e (r13 verdict #1): the FINAL drift
-    * values over the real profile, each emitted under every plausible
-    * typing — the TV unit count as the shipping BIGINT, as a string,
-    * and with its two divide operands as strings; the JS unit counts
-    * (full-corrected and touched-only) as BIGINTs plus both shipping
-    * 6dp DOUBLE presentations. If probe d is green and any column
-    * here differs, the divergent stage is the divide/typing/rendering
-    * of that one value; if ALL columns here are green while the
-    * shipping rows stay red, the divergence is not in any computed
-    * value at all and the driver's per-name comparison machinery is
-    * the remaining suspect — either way the round names the stage.
-    */
-  def driftProbeUnits(df: DataFrame, idCol: String, textCol: String,
-      buckets: Int = 4096, alpha: Double = 1.0): DataFrame = {
-    val prof = graft.TransientCache.persist(
-      bigramProfileJoint(df, textCol, buckets))
-    val na = prof.agg(sum("ca").as("na"))
-    val nb = prof.agg(sum("cb").as("nb"))
-    val bL = lit(buckets.toLong)
-    val terms = prof.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
-      .select(col("na"), col("nb"),
-        jsTermUnits(
-          (col("ca").cast("double") + alpha) /
-            (col("na").cast("double") + alpha * buckets),
-          (col("cb").cast("double") + alpha) /
-            (col("nb").cast("double") + alpha * buckets)).as("u"),
-        tvTermAbs(col("ca"), col("cb"), col("na"), col("nb"), bL).as("t"))
-      .groupBy("na", "nb")
-      .agg(sum("u").as("su"), sum("t").as("st"),
-        count(lit(1)).as("touched"))
-    val dec = "decimal(38,0)"
-    val jsUnitsFull = col("su") +
-      (lit(buckets.toLong) - col("touched")) * jsTermUnits(
-        lit(alpha) / (col("na").cast("double") + alpha * buckets),
-        lit(alpha) / (col("nb").cast("double") + alpha * buckets))
-    terms
-      .select(col("na"), col("nb"), col("su"),
-        jsUnitsFull.as("juf"),
-        (col("st") + (bL - col("touched")).cast(dec) *
-          abs(col("nb") - col("na")).cast(dec)).as("s"),
-        ((col("na") + bL).cast(dec) * (col("nb") + bL).cast(dec)).as("dd"))
-      .select(col("na").as("n_a"), col("nb").as("n_b"),
-        expr("cast((s * 1000000 + dd) div (dd * 2) as long)")
-          .as("tv_units"),
-        expr("cast((s * 1000000 + dd) div (dd * 2) as string)")
-          .as("tv_units_str"),
-        col("s").cast("string").as("tv_s"),
-        col("dd").cast("string").as("tv_dd"),
-        col("juf").as("js_units_full"),
-        col("su").as("js_units_nc"),
-        (expr("(juf + 500) div 1000").cast("double") / 1e6)
-          .as("js_bits_full"),
-        (expr("(su + 500) div 1000").cast("double") / 1e6)
-          .as("js_bits_nc"))
   }
 
   /** Leakage-free train/val/test split. The naive per-doc hash split

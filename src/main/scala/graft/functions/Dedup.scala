@@ -911,7 +911,8 @@ object Dedup {
   /** Calibrated per-candidate cost ratio of the prefix path (pair
     * dedup + per-candidate set movement + sorted_intersect verify)
     * relative to the plain self-join's in-stage partial aggregate.
-    * Measured on sf0.1 bigrams (NgramCrossoverProbe, min-noise runs,
+    * Measured on sf0.1 bigrams (the n-gram crossover probe, retired —
+    * OPTIMIZATION_r13.md, Retired diagnostics; min-noise runs,
     * identical 256-row output at every point):
     *
     *   t     pVol/fullVol   plain    prefix

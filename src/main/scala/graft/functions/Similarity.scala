@@ -217,7 +217,7 @@ object Similarity {
     * (centroids unit-norm, so no per-vector normalization is needed
     * for the argmax). corpus × nlist rows — nlist is small.
     */
-  private[graft] def ivfAssign(vecs: DataFrame, centDF: DataFrame): DataFrame =
+  private def ivfAssign(vecs: DataFrame, centDF: DataFrame): DataFrame =
     ivfAssignWithCos(vecs, centDF).select(col("vec_id"), col("cid"))
 
   /** Top-`nprobe` cells per query vector. */

@@ -694,7 +694,7 @@ object AlgoQueries {
     s"""WITH $coOrderCte,
        k0 AS (SELECT id, 1.0 AS score FROM v),
        $stages
-       SELECT id AS suppkey, ROUND(score, 6) AS score FROM k8
+       SELECT id AS suppkey, CAST(ROUND(score, 6) AS DOUBLE) AS score FROM k8
        ORDER BY suppkey"""
   }
 

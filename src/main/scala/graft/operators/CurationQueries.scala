@@ -30,24 +30,14 @@ object CurationQueries {
     * snapshot. One frame instead of two filtered halves so the drift
     * profiles build in a single corpus scan ([[Curation.corpusDriftJoint]]).
     *
-    * r13 de-regex (r12 verdict #1): the snapshot number is substring
-    * arithmetic on the literal 'src' prefix, not `regexp_extract` —
-    * that regex was the ONLY construct unique to the driver-red drift
-    * family, with both the stale-oracle and libm hypotheses
-    * experimentally refuted; sources are 'src<N>' by the corpus
+    * The snapshot number is substring arithmetic on the literal 'src'
+    * prefix, not `regexp_extract`: sources are 'src<N>' by the corpus
     * contract, so `substr(source, 4)` is the same integer on any
-    * engine. The null-guard filter keeps the two-filter semantics
+    * engine, with no regex engine involved. The null-guard filter
+    * keeps the two-filter semantics
     * (a hypothetical non-numeric source lands in NEITHER snapshot)
     * bit-identical.
     */
-  /** Fixed literal joint profile for `pipe_drift_probe_stat` — the
-    * statistic's integer arithmetic with zero corpus dependence. The
-    * DuckDB oracle inlines the identical VALUES rows.
-    */
-  private val driftProbeProfile: Seq[(Long, Long, Long)] = Seq(
-    (0L, 5L, 3L), (1L, 0L, 7L), (2L, 2L, 0L), (40L, 11L, 11L),
-    (4095L, 1L, 2L))
-
   private def driftSide(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
     val sn = substring(col("source"), 4, 10).cast("int")
@@ -140,44 +130,6 @@ object CurationQueries {
     // libm on either engine, deterministic by construction.
     "pipe_corpus_drift_tv" -> ((s, dir) => {
       Curation.corpusDriftTvJoint(driftSide(s, dir), "doc_id", "text")
-    }),
-
-    // r13 drift bisect probes (r12 verdict #1): three fresh-name
-    // oracle rows decomposing the drift pipeline so the driver's
-    // green/red vector pinpoints WHERE its environment diverges —
-    // (a) the snapshot split + bigram construction alone, (b) the
-    // md5-bucketed profiles as order-free checksums, (c) the TV
-    // statistic over a LITERAL profile (no corpus dependence at all).
-    "pipe_drift_probe_split" -> ((s, dir) => {
-      val old = driftSide(s, dir).filter(col("__sa"))
-      old.agg(count(lit(1)).as("n_docs")).crossJoin(
-        graft.functions.TextFunctions.shingleRows(old, "doc_id", "text", 2)
-          .agg(count(lit(1)).as("n_bigrams")))
-    }),
-    "pipe_drift_probe_profile" -> ((s, dir) => {
-      Curation.driftProfileChecksums(driftSide(s, dir), "doc_id", "text")
-    }),
-    "pipe_drift_probe_stat" -> ((s, _) => {
-      Curation.corpusDriftTvFromProfile(
-        s.createDataFrame(driftProbeProfile)
-          .toDF("bk", "ca", "cb"))
-    }),
-    // r14 drift bisect probes d/e (r13 verdict #1): the r13 vector
-    // proved split (a), profile checksums (b) and literal-profile
-    // statistic (c) all green in the driver environment while the
-    // three shipping rows stay hash-red. (d) emits the RAW integer
-    // components of both statistics over the REAL profile (no final
-    // divide); (e) emits the final values under every plausible
-    // typing. The (d, e, shipping) green/red vector names the
-    // divergent stage: d red = the aggregation over the real
-    // profile; d green + e red = the divide/typing of the column e
-    // localizes; d and e green + shipping red = no computed value
-    // differs and the divergence is in the per-name compare itself.
-    "pipe_drift_probe_terms" -> ((s, dir) => {
-      Curation.driftProbeTerms(driftSide(s, dir), "doc_id", "text")
-    }),
-    "pipe_drift_probe_units" -> ((s, dir) => {
-      Curation.driftProbeUnits(driftSide(s, dir), "doc_id", "text")
     }),
 
     // Per-doc top-3 TF-IDF terms.
@@ -311,17 +263,12 @@ object CurationQueries {
     })
   )
 
-  /** The Morton-interleave bit expression, generated to mirror
-    * Layout.zorderKey(Seq(orderkey%256, suppkey%256), 8) term by term.
-    */
   /** Shared profile CTEs for EVERY drift oracle (r12 verdict #7: one
     * builder so a change to the split or the profile lands in one
     * place): snapshot split, bigram construction, md5 bucketing,
-    * per-side profiles and totals. r13 de-regex: the snapshot number
-    * is `CAST(substr(source, 4) AS INT)` — substring arithmetic on
-    * the literal 'src' prefix, no regex engine anywhere (the
-    * `regexp_extract` this replaces was the only construct unique to
-    * the driver-red drift family).
+    * per-side profiles and totals. The snapshot number is
+    * `CAST(substr(source, 4) AS INT)` — substring arithmetic on the
+    * literal 'src' prefix, no regex engine anywhere.
     */
   /* r14 failure-mode parity (r13 ADVICE): TRY_CAST + the same 10-char
    * cap as Spark's `substring(source, 4, 10).cast("int")`, so a
@@ -331,7 +278,11 @@ object CurationQueries {
    * the same numeric totals the Spark joint profile produces (sum of
    * all-zero conditional counts) instead of NULL. Both changes are
    * value-identical on the corpus contract (every source is
-   * 'src<N>', both snapshots non-empty). */
+   * 'src<N>', both snapshots non-empty). The totals CAST to BIGINT:
+   * DuckDB types SUM(BIGINT) as HUGEINT, which a pandas fetch reads
+   * as float64 while Spark emits a bigint, so the un-cast n_a/n_b
+   * hash-mismatched at equal values (tools/check.py now fails that
+   * typing as TYPE_MISMATCH). */
   private def driftProfileCtes: String =
     s"""t AS (SELECT doc_id,
               TRY_CAST(substr(source, 4, 10) AS INT) AS sn,
@@ -346,8 +297,8 @@ object CurationQueries {
                 FROM (SELECT sn, unnest(b) AS s FROM t)),
           pa AS (SELECT bk, COUNT(*) AS ca FROM g WHERE sn < 10 GROUP BY bk),
           pb AS (SELECT bk, COUNT(*) AS cb FROM g WHERE sn >= 10 GROUP BY bk),
-          ta AS (SELECT COALESCE(SUM(ca), 0) AS na FROM pa),
-          tb AS (SELECT COALESCE(SUM(cb), 0) AS nb FROM pb)"""
+          ta AS (SELECT CAST(COALESCE(SUM(ca), 0) AS BIGINT) AS na FROM pa),
+          tb AS (SELECT CAST(COALESCE(SUM(cb), 0) AS BIGINT) AS nb FROM pb)"""
 
   /** JS-drift oracle, with (`full`) or without the untouched-bucket
     * closed-form correction — shared scaffold, one diverging CTE.
@@ -383,6 +334,9 @@ object CurationQueries {
           FROM c"""
   }
 
+  /** The Morton-interleave bit expression, generated to mirror
+    * Layout.zorderKey(Seq(orderkey%256, suppkey%256), 8) term by term.
+    */
   private val zorderSql: String = (0 until 8).flatMap(i => Seq(
     s"((((l_orderkey % 256) >> $i) & 1) << ${2 * i})",
     s"((((l_suppkey % 256) >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
@@ -457,120 +411,6 @@ object CurationQueries {
                 FROM s)
           SELECT na AS n_a, nb AS n_b,
                  CAST((s * 1000000 + dd) // (dd * 2) AS BIGINT) AS tv_units
-          FROM c""",
-    // r13 drift-bisect probes (r12 verdict #1). (a) split + bigram
-    // construction only; (b) order-free per-side profile checksums;
-    // (c) the TV statistic over a literal profile, no corpus at all.
-    // The driver's green/red vector across (a)(b)(c) names the
-    // diverging stage.
-    "pipe_drift_probe_split" ->
-      s"""WITH $driftProfileCtes
-          SELECT (SELECT COUNT(*) FROM t WHERE sn < 10) AS n_docs,
-                 (SELECT COUNT(*)
-                  FROM (SELECT unnest(b) FROM t WHERE sn < 10))
-                   AS n_bigrams""",
-    "pipe_drift_probe_profile" ->
-      s"""WITH $driftProfileCtes
-          SELECT (SELECT CAST(COALESCE(SUM(bk * ca), 0) AS BIGINT) FROM pa)
-                   AS a_bk_weighted,
-                 (SELECT CAST(COALESCE(SUM(ca), 0) AS BIGINT) FROM pa)
-                   AS a_total,
-                 (SELECT COUNT(*) FROM pa) AS a_buckets,
-                 (SELECT CAST(COALESCE(SUM(bk * cb), 0) AS BIGINT) FROM pb)
-                   AS b_bk_weighted,
-                 (SELECT CAST(COALESCE(SUM(cb), 0) AS BIGINT) FROM pb)
-                   AS b_total,
-                 (SELECT COUNT(*) FROM pb) AS b_buckets""",
-    "pipe_drift_probe_stat" ->
-      """WITH prof(bk, ca, cb) AS (
-            VALUES (0, 5, 3), (1, 0, 7), (2, 2, 0), (40, 11, 11),
-                   (4095, 1, 2)),
-          ta AS (SELECT CAST(SUM(ca) AS BIGINT) AS na FROM prof),
-          tb AS (SELECT CAST(SUM(cb) AS BIGINT) AS nb FROM prof),
-          terms AS (
-            SELECT na, nb,
-                   abs((ca + 1)::HUGEINT * (nb + 4096)::HUGEINT
-                     - (cb + 1)::HUGEINT * (na + 4096)::HUGEINT) AS t
-            FROM prof CROSS JOIN ta CROSS JOIN tb),
-          s AS (SELECT na, nb, SUM(t) AS st, COUNT(*) AS touched
-                FROM terms GROUP BY na, nb),
-          c AS (SELECT na, nb,
-                  st + (4096 - touched)::HUGEINT * abs(nb - na)::HUGEINT AS s,
-                  (na + 4096)::HUGEINT * (nb + 4096)::HUGEINT AS dd
-                FROM s)
-          SELECT na AS n_a, nb AS n_b,
-                 CAST((s * 1000000 + dd) // (dd * 2) AS BIGINT) AS tv_units
-          FROM c""",
-    // r14 drift-bisect probes d/e (r13 verdict #1): raw components of
-    // both statistics over the REAL profile (d — no final divide, the
-    // big-integer sum as VARCHAR so no engine's rendering is
-    // trusted), and the final values under every plausible typing
-    // (e). Shares driftProfileCtes and repeats the shipping terms
-    // arithmetic verbatim.
-    "pipe_drift_probe_terms" ->
-      s"""WITH $driftProfileCtes,
-          jt AS (
-            SELECT na, nb,
-                   CAST(floor((p * log2(p / ((p + q) / 2)) / 2 +
-                               q * log2(q / ((p + q) / 2)) / 2)
-                              * 1000000000 + 0.5) AS BIGINT) AS u,
-                   abs((ca0 + 1)::HUGEINT * (nb + 4096)::HUGEINT
-                     - (cb0 + 1)::HUGEINT * (na + 4096)::HUGEINT) AS t
-            FROM (SELECT na, nb,
-                    COALESCE(ca, 0) AS ca0, COALESCE(cb, 0) AS cb0,
-                    (COALESCE(ca, 0) + 1.0) / (na + 4096.0) AS p,
-                    (COALESCE(cb, 0) + 1.0) / (nb + 4096.0) AS q
-                  FROM pa FULL OUTER JOIN pb USING (bk)
-                  CROSS JOIN ta CROSS JOIN tb)),
-          s AS (SELECT na, nb, SUM(u) AS su, SUM(t) AS st,
-                       COUNT(*) AS touched
-                FROM jt GROUP BY na, nb)
-          SELECT na AS n_a, nb AS n_b, touched,
-                 CAST(su AS BIGINT) AS js_su,
-                 CAST(st AS VARCHAR) AS tv_st
-          FROM s""",
-    "pipe_drift_probe_units" ->
-      s"""WITH $driftProfileCtes,
-          jt AS (
-            SELECT na, nb,
-                   CAST(floor((p * log2(p / ((p + q) / 2)) / 2 +
-                               q * log2(q / ((p + q) / 2)) / 2)
-                              * 1000000000 + 0.5) AS BIGINT) AS u,
-                   abs((ca0 + 1)::HUGEINT * (nb + 4096)::HUGEINT
-                     - (cb0 + 1)::HUGEINT * (na + 4096)::HUGEINT) AS t
-            FROM (SELECT na, nb,
-                    COALESCE(ca, 0) AS ca0, COALESCE(cb, 0) AS cb0,
-                    (COALESCE(ca, 0) + 1.0) / (na + 4096.0) AS p,
-                    (COALESCE(cb, 0) + 1.0) / (nb + 4096.0) AS q
-                  FROM pa FULL OUTER JOIN pb USING (bk)
-                  CROSS JOIN ta CROSS JOIN tb)),
-          s AS (SELECT na, nb, SUM(u) AS su, SUM(t) AS st,
-                       COUNT(*) AS touched
-                FROM jt GROUP BY na, nb),
-          c AS (SELECT na, nb, su, touched,
-                  CAST(su AS BIGINT) + (4096 - touched) *
-                    CAST(floor((p0 * log2(p0 / ((p0 + q0) / 2)) / 2 +
-                                q0 * log2(q0 / ((p0 + q0) / 2)) / 2)
-                               * 1000000000 + 0.5) AS BIGINT) AS juf,
-                  st + (4096 - touched)::HUGEINT * abs(nb - na)::HUGEINT
-                    AS sfull,
-                  (na + 4096)::HUGEINT * (nb + 4096)::HUGEINT AS dd
-                FROM (SELECT na, nb, su, st, touched,
-                        1.0 / (na + 4096.0) AS p0,
-                        1.0 / (nb + 4096.0) AS q0 FROM s))
-          SELECT na AS n_a, nb AS n_b,
-                 CAST((sfull * 1000000 + dd) // (dd * 2) AS BIGINT)
-                   AS tv_units,
-                 CAST((sfull * 1000000 + dd) // (dd * 2) AS VARCHAR)
-                   AS tv_units_str,
-                 CAST(sfull AS VARCHAR) AS tv_s,
-                 CAST(dd AS VARCHAR) AS tv_dd,
-                 juf AS js_units_full,
-                 CAST(su AS BIGINT) AS js_units_nc,
-                 CAST((juf + 500) // 1000 AS DOUBLE) / 1000000.0
-                   AS js_bits_full,
-                 CAST((su + 500) // 1000 AS DOUBLE) / 1000000.0
-                   AS js_bits_nc
           FROM c""",
     // LM mirror: identical bigram construction (incl. the <2-word
     // whole-text fallback), add-0.4 smoothing over the English

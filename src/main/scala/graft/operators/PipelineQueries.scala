@@ -622,7 +622,8 @@ object PipelineQueries {
       // ONE percentile aggregate with the array form: separate
       // percentile(x, q) expressions each build their own
       // per-partition value map (measured 10.0 s vs 2.5 s for the
-      // array form at sf0.1 — QuantileProbe)
+      // array form at sf0.1 — the quantile probe, OPTIMIZATION_r13.md
+      // Retired diagnostics)
       val qsLit = qs.map(q => s"${q}D").mkString("array(", ", ", ")")
       val ex = li
         .agg(expr(s"percentile(l_extendedprice, $qsLit)").as("ps"))
@@ -1287,7 +1288,8 @@ object PipelineQueries {
               quantile_cont(l_extendedprice, 0.75) AS q75,
               quantile_cont(l_extendedprice, 0.90) AS q90
             FROM lineitem)
-         SELECT 0.10 AS q, ROUND(q10, 4) AS exact_value, TRUE AS certified FROM e
+         SELECT CAST(0.10 AS DOUBLE) AS q, ROUND(q10, 4) AS exact_value,
+                TRUE AS certified FROM e
          UNION ALL
          SELECT 0.25, ROUND(q25, 4), TRUE FROM e
          UNION ALL
@@ -1306,7 +1308,7 @@ object PipelineQueries {
               quantile_cont(l_extendedprice, 0.90) AS q90,
               COUNT(*) AS n
             FROM lineitem)
-         SELECT 0.10 AS q, ROUND(q10, 4) AS exact_value, n,
+         SELECT CAST(0.10 AS DOUBLE) AS q, ROUND(q10, 4) AS exact_value, n,
                 TRUE AS within_slack FROM e
          UNION ALL
          SELECT 0.50, ROUND(q50, 4), n, TRUE FROM e
@@ -1334,7 +1336,7 @@ object PipelineQueries {
                      LEAST(CAST(CEIL(target * 1.0 / 500) * 500 AS BIGINT),
                            m) AS pos
                    FROM tgt)
-          SELECT p.k AS l_returnflag, p.q, r.v AS estimate,
+          SELECT p.k AS l_returnflag, CAST(p.q AS DOUBLE) AS q, r.v AS estimate,
                  TRUE AS certified
           FROM pick p JOIN r ON r.k = p.k AND r.rn = p.pos
           ORDER BY l_returnflag, q""",

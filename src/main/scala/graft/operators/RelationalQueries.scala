@@ -259,7 +259,8 @@ object RelationalQueries {
     "a10_percentiles" -> ((s, dir) => {
       // ONE array-form percentile per group: separate percentile
       // expressions each build their own per-partition value map —
-      // measured 4x at sf0.1 (QuantileProbe, sketch_quantiles note)
+      // measured 4x at sf0.1 (the quantile probe, sketch_quantiles
+      // note; OPTIMIZATION_r13.md, Retired diagnostics)
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(expr("percentile(l_extendedprice, array(0.5D, 0.25D, 0.9D))")

@@ -575,7 +575,8 @@ object StreamQueries {
     // (closure fold + walk states + composition + chain prefix
     // states, twice) — on a 25-nation fixture its wall-clock is
     // driver job count, not data; the scale evidence is
-    // ViewScaleProbe's shuffle columns, not this number.
+    // the view-scale probe's shuffle columns (OPTIMIZATION_r13.md,
+    // Retired diagnostics), not this number.
     "v6_pattern_view_composed_lower" -> ((s, dir) => {
       import graft.graph.GraphStore
       import graft.model.PropValue

@@ -189,7 +189,10 @@ object Views {
     def definitions: Seq[ViewDefn] = defns.values.toSeq
     def get(name: String): Option[ViewDefn] = defns.get(name)
 
-    def put(name: String, df: DataFrame, persist: Boolean = true): Unit = {
+    /** Journal and release the frame `name` is about to be replaced
+      * by — the one replacement rule put() and load() share.
+      */
+    private def releaseReplaced(name: String): Unit = {
       journal.foreach(j => if (!j.contains(name))
         j(name) = (data.get(name), lastRefresh.get(name)))
       data.get(name).foreach { old =>
@@ -200,6 +203,10 @@ object Views {
           deferredUnpersist += old
         else old.unpersist(false)
       }
+    }
+
+    def put(name: String, df: DataFrame, persist: Boolean = true): Unit = {
+      releaseReplaced(name)
       val stored = if (persist) df.persist(StorageLevel.MEMORY_AND_DISK) else df
       data(name) = stored
       lastRefresh(name) = System.currentTimeMillis()
@@ -214,9 +221,9 @@ object Views {
       // journal-covered like put()/putMeta() (r13 ADVICE): a load
       // inside an open batch must roll back — both the replaced frame
       // and the purged derived counters — or a foreachBatch retry
-      // restarts from a half-loaded catalog.
-      journal.foreach(j => if (!j.contains(name))
-        j(name) = (data.get(name), lastRefresh.get(name)))
+      // restarts from a half-loaded catalog. The replaced frame is
+      // released under put()'s rule, so a load never leaks it.
+      releaseReplaced(name)
       data(name) = df
       // Loading an older snapshot over a live entry must drop the
       // derived counters of the frame it replaces (r12 ADVICE): a
@@ -413,8 +420,9 @@ object Views {
     * Dataset.localCheckpoint captures the physical plan's
     * outputPartitioning/outputOrdering into the returned LogicalRDD —
     * but only usefully with AQE off at CREATION time: under AQE the
-    * captured partitioning degrades to unknown (measured,
-    * PartitionProbe r12 — consumers plan an ENSURE_REQUIREMENTS
+    * captured partitioning degrades to unknown (measured by the r12
+    * partition probe, see OPTIMIZATION_r13.md, Retired diagnostics —
+    * consumers plan an ENSURE_REQUIREMENTS
     * exchange over the checkpointed scan with AQE on at creation,
     * and no exchange / no sort with it off). The scope covers only
     * the checkpoint's own planning; consumer queries keep AQE.
@@ -461,7 +469,8 @@ object Views {
   /** Lazy checkpoint of a frame DERIVED from a partitioned core by
     * layout-preserving operators (broadcast joins, filters, alias
     * projections) — the carried partitioning/ordering survives into
-    * the new checkpoint (PartitionProbe case 3), so a filtered core
+    * the new checkpoint (partition probe case 3, same table), so a
+    * filtered core
     * keeps serving exchange-free joins.
     */
   private def preservedCkpt(df: DataFrame): DataFrame =
@@ -473,26 +482,13 @@ object Views {
     * fixed 4M-row cap (r11 verdict: 4M rows of a 3-long delta is
     * ~100 MB, an order past the 10 MB default the rest of the plan
     * broadcasts under; a row count must track the row SHAPE). A
-    * disabled threshold (-1/0) or an unparsable value falls back to
-    * the byte budget of the Spark default (10 MB).
+    * disabled threshold (-1/0) falls back to the byte budget of the
+    * Spark default (10 MB).
     */
   private[graft] def broadcastRowBudget(df: DataFrame): Long = {
-    val raw = try df.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    catch { case _: Throwable => "10485760" }
-    val m = "(?i)^(-?\\d+)\\s*(b|kb?|mb?|gb?|tb?|pb?)?$".r
-      .findFirstMatchIn(raw.trim)
-    val bytes = m.map { mm =>
-      val n = mm.group(1).toLong
-      Option(mm.group(2)).map(_.toLowerCase.head) match {
-        case Some('k') => n << 10
-        case Some('m') => n << 20
-        case Some('g') => n << 30
-        case Some('t') => n << 40
-        case Some('p') => n << 50
-        case _ => n
-      }
-    }.filter(_ > 0).getOrElse(10L << 20)
+    val threshold =
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = if (threshold > 0) threshold else 10L << 20
     math.max(1L, bytes / math.max(df.schema.defaultSize.toLong, 8L))
   }
 
@@ -512,8 +508,9 @@ object Views {
     * SHUFFLE-FREE on the state side (r11): the old form unioned
     * state ∪ delta and re-grouped — a STATE-sized shuffle on every
     * refresh, the one per-refresh network cost that would not be
-    * window-bounded at cluster scale (ViewScaleProbe's shuffle
-    * column measured it as the dominant refresh shuffle). Now the
+    * window-bounded at cluster scale (the view-scale probe's shuffle
+    * column measured it as the dominant refresh shuffle; see
+    * OPTIMIZATION_r13.md, Retired diagnostics). Now the
     * delta nets to per-key sums first (delta-sized shuffle), and the
     * state is only SCANNED: a broadcast left-outer merges matched
     * keys in place, and the unmatched delta keys append through a
@@ -560,7 +557,8 @@ object Views {
     * implies (the keys whose net count crosses zero) — a sub-state's
     * consumer (the composed-chain fold) needs both, and deriving the
     * ops as `new-state ANTI old-state` both ways shuffled two
-    * state-sized frames per refresh (ViewScaleProbe measured that
+    * state-sized frames per refresh (the view-scale probe, see
+    * OPTIMIZATION_r13.md, Retired diagnostics, measured that
     * anti-join pair as the dominant composed-class refresh shuffle
     * once the walk bases were stored — r11 stage D). One netted
     * delta (delta-sized shuffle) and ONE extra state scan (the
@@ -719,7 +717,8 @@ object Views {
     * `prefixOld` supplied (the catalog refreshers pass their stored
     * per-level prefix bags, maintained under `name!p<i>`), every
     * big frame in the whole fold is a stored scan and the only
-    * shuffles are delta-sized: ViewScaleProbe measured the lazy
+    * shuffles are delta-sized: the view-scale probe (OPTIMIZATION_r13.md,
+    * Retired diagnostics) measured the lazy
     * prefix re-joins as the dominant refresh shuffle once the
     * state-merge shuffle was removed. Stateless callers (no
     * `prefixOld`) keep the lazy prefix join — correct, and still one
@@ -766,7 +765,8 @@ object Views {
     // materializes the frame, later consumers read blocks — while
     // dropping the standalone eager-materialization job each frame
     // used to pay: the chain fold's per-refresh driver-job count
-    // roughly halves (ViewScaleProbe's jobsRefresh column).
+    // roughly halves (the view-scale probe's jobsRefresh column;
+    // OPTIMIZATION_r13.md, Retired diagnostics).
     def cut(df: DataFrame): DataFrame = lazyCut(df)
     // update_vertex_props joins the touched set: for a predicated
     // position the update can flip membership; for label-only
@@ -954,8 +954,9 @@ object Views {
   /** Per-level PREFIX states for a catalog-backed k-hop chain view
     * (r11): the prefix bags P_1..P_{k-1} live under `name!p<i>` so
     * every refresh reads them as stored scans instead of lazily
-    * re-joining the prefix pipeline once per level — ViewScaleProbe
-    * measured those re-joins as the dominant refresh shuffle.
+    * re-joining the prefix pipeline once per level — the view-scale
+    * probe measured those re-joins as the dominant refresh shuffle
+    * (OPTIMIZATION_r13.md, Retired diagnostics).
     * Returns (prefixOld relations for the delta fold, the fold
     * callback that merges each level's delta forward — skipping the
     * state rewrite entirely when a level's delta is empty).
@@ -1073,7 +1074,8 @@ object Views {
     * their stored per-level walk bags, maintained under `name!w<i>`
     * by [[walkHooks]]), every walk base is a STORED SCAN instead of a
     * lazy join pipeline re-executed once per downstream term — the
-    * residual refresh shuffle ViewScaleProbe measured in the composed
+    * residual refresh shuffle the view-scale probe (OPTIMIZATION_r13.md,
+    * Retired diagnostics) measured in the composed
     * class after the chain-level r11 fixes ("the same disease, one
     * layer down"). The emission's dst-delta term is reassociated like
     * [[level2Delta]]: W_{h-1} ⋈ (E ⋈ broadcast(ΔV_dst)) — so no
@@ -1126,7 +1128,8 @@ object Views {
     *
     * Probe shape (r12): a normal change window is a HANDFUL of ids,
     * yet the old broadcast-semi-join form paid one broadcast-build
-    * job per consumer query — JobTraceProbe attributed 52 of a
+    * job per consumer query — the job-trace probe (OPTIMIZATION_r13.md,
+    * Retired diagnostics) attributed 52 of a
     * composed refresh's 76 jobs to broadcast builds, many of them
     * this frame over and over. [[IdProbe]] collects the set once
     * (one driver job) when it fits `collectCap` and probes as an
@@ -1321,8 +1324,9 @@ object Views {
   }
 
   /** Per-level WALK states for a catalog-backed var-length view
-    * (r11, stage D — the composed-class residual ViewScaleProbe
-    * named): W_1..W_{maxHops−1} persist under `prefix!w<i>` as
+    * (r11, stage D — the composed-class residual the view-scale probe
+    * named; OPTIMIZATION_r13.md, Retired diagnostics):
+    * W_1..W_{maxHops−1} persist under `prefix!w<i>` as
     * counted pair bags, so every refresh reads them as stored scans
     * instead of lazily re-joining the walk pipeline once per level
     * per term. Bootstrap of an absent level extends the previous
@@ -1505,7 +1509,6 @@ object Views {
       dstPred: Option[Column], edgePred: Option[Column],
       sharedTouchedV: Option[IdProbe] = None)
       : (DataFrame, DataFrame) = {
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint()
     def members(store: graft.graph.GraphStore): DataFrame =
       store.vertices.filter(
           srcPred.foldLeft(col("label") === srcLabel)(_ && _))
@@ -1542,7 +1545,8 @@ object Views {
     // slice outward — the members(store)-then-semi-join form left
     // Catalyst to re-plan the three-way props-carrying join, and
     // without post-semi stats it shuffled all three base frames
-    // (ViewScaleProbe: the where-chain class's dominant refresh
+    // (the view-scale probe, OPTIMIZATION_r13.md Retired diagnostics:
+    // the where-chain class's dominant refresh
     // shuffle). Every frame here is scanned once; every join side
     // that crosses is window-sized and hinted.
     def touchedMembers(store: graft.graph.GraphStore) = {
@@ -1596,8 +1600,9 @@ object Views {
     * Each predicated hop keeps its member bag as a sub-state under
     * `name!wh<j>` (src, dst, mult): the chain fold then reads R_j as
     * a STORED SCAN instead of re-executing the three-way
-    * props-carrying member join once per delta term — ViewScaleProbe
-    * measured those lazy re-joins (shuffling the props maps each
+    * props-carrying member join once per delta term — the view-scale
+    * probe (OPTIMIZATION_r13.md, Retired diagnostics) measured those
+    * lazy re-joins (shuffling the props maps each
     * time) as the reason this class shuffled MORE on refresh than on
     * recompute. The sub-state folds forward by the same ±op rows
     * that feed the chain. Endpoint labels/preds apply both inside
@@ -1917,7 +1922,7 @@ object Views {
     *    the same contract (end state identical by construction). The
     *    switch is MEASURED, not static (r11, was a fixed 2²⁰ row
     *    cap): both counts fall out of work DRed does anyway, and
-    *    ReachCrossoverProbe's clustered-closure sweep (1× and 10×
+    *    the reach-crossover probe's clustered-closure sweep (1× and 10×
     *    graph, wavefront 1%→51% of state — table in ROUND11.md)
     *    reads DRed ahead through 26% at both scales and a toss-up
     *    by 51% (10× flips to recompute, 1× ties within 3%); 0.3 is
@@ -1975,7 +1980,8 @@ object Views {
     * the added ones — netting the two window-bounded frames costs
     * two broadcast anti-joins. The old form (`new ANTI old` both
     * ways) shuffled two closure-sized frames per refresh, which
-    * ViewScaleProbe measured as a dominant composed-class refresh
+    * the view-scale probe (OPTIMIZATION_r13.md, Retired diagnostics)
+    * measured as a dominant composed-class refresh
     * shuffle. Only the measured-recompute fallback keeps the
     * state-diff anti-join — proportionate there, since recompute
     * fires when the wavefront is a large fraction of the state.
@@ -2001,7 +2007,8 @@ object Views {
     // the window-sized probe side: the core side plans with no
     // exchange and no sort, the tail side broadcasts. Before this,
     // each fixpoint round's anti/semi against the closure shuffled
-    // the whole state — ViewScaleProbe r12 measured a w=64 refresh
+    // the whole state — the r12 view-scale probe (OPTIMIZATION_r13.md,
+    // Retired diagnostics) measured a w=64 refresh
     // shuffling 116 MB on the 1× dep fixture, the same as recompute,
     // i.e. the class was NOT window-bounded in shuffle terms.
     // the core's row count rides along as catalog meta so finish()'s
@@ -2092,7 +2099,8 @@ object Views {
       // shared by shapes 3 and 4. Counted + re-hinted: composing it
       // into shape4 with a second raw join would strand the broadcast
       // hint on the inner frame and SMJ the closure-sized rFromV on
-      // __v (LowerShuffleProbe r12: a 74 MB refresh exchange on a
+      // __v (r12 lower-bound shuffle probe, OPTIMIZATION_r13.md Retired
+      // diagnostics: a 74 MB refresh exchange on a
       // w=64 window — the state-sized shuffle this fold must not pay)
       val (remReach, remReachCnt) = cutCount(remUV.join(rFromV, "__v")
         .select(col("__u"), col("__b")))
@@ -2161,7 +2169,8 @@ object Views {
         // BUILD side: a semi join can only broadcast its RIGHT input,
         // so `p.join(eMid, semi)` strands the hint and SMJs — which
         // exchanged + rebroadcast the corpus-sized eMid EVERY round
-        // (LowerShuffleProbe r12: 11 × (6.1 MB exchange + 8 MB
+        // (r12 lower-bound shuffle probe, OPTIMIZATION_r13.md Retired
+        // diagnostics: 11 × (6.1 MB exchange + 8 MB
         // broadcast build) on a w=64 window)
         val direct = eMid.join(p, Seq("src", "dst"), "left_semi")
         val probe = p.join(eMid.select(col("src"), col("dst").as("__x")),
@@ -2394,7 +2403,8 @@ object Views {
     * remaining label-chain depth per round: O(log diameter) rounds
     * instead of O(diameter). Rounds are the serialized driver→cluster
     * round-trips a 100 TB refresh pays, and they dominated the local
-    * wall too (ViewScaleProbe r13: a w=64 CC fold spent 22 s in ~27
+    * wall too (the r13 view-scale probe, OPTIMIZATION_r13.md Retired
+    * diagnostics: a w=64 CC fold spent 22 s in ~27
     * diameter-bound rounds over chain-of-32 clusters, 1.7 MB
     * shuffle). The convergence count rides the round's own
     * materialization; the change test fuses into the round's

@@ -125,10 +125,25 @@ class CurationSpec extends SparkSpec {
     }.sum
     val dd = (BigInt(na) + B) * (BigInt(nb) + B)
     val expected = ((s * 1000000 + dd) / (dd * 2)).toLong
+    // the shipped closed form: touched buckets summed, every untouched
+    // bucket contributing |n_b − n_a|, equals the dense sum
+    val touched = pa.keySet ++ pb.keySet
+    val sTouched = touched.toSeq.map { k =>
+      ((BigInt(pa.getOrElse(k, 0L)) + 1) * (BigInt(nb) + B) -
+        (BigInt(pb.getOrElse(k, 0L)) + 1) * (BigInt(na) + B)).abs
+    }.sum
+    assert(sTouched + (B - touched.size) * (BigInt(nb) - na).abs == s)
     val out = Curation.corpusDriftTv(a, b, "doc_id", "text").head()
     assert(out.getLong(0) == na && out.getLong(1) == nb)
     assert(out.getLong(2) == expected,
       s"tv_units=${out.getLong(2)} expected=$expected")
+    // the single-scan joint form the pipe_corpus_drift_tv row ships
+    val joint = a.withColumn("__sa", lit(true))
+      .unionByName(b.withColumn("__sa", lit(false)))
+    val outJoint = Curation.corpusDriftTvJoint(joint, "doc_id", "text").head()
+    assert(outJoint.getLong(0) == na && outJoint.getLong(1) == nb)
+    assert(outJoint.getLong(2) == expected,
+      s"joint tv_units=${outJoint.getLong(2)} expected=$expected")
     // sanity: the rational statistic tracks the float TV to 1e-6
     val tvFloat = (0 until B).map { k =>
       math.abs((pa.getOrElse(k.toLong, 0L) + 1.0) / (na.toDouble + B) -
@@ -139,45 +154,6 @@ class CurationSpec extends SparkSpec {
     assert(same.getLong(2) == 0L)
     val rev = Curation.corpusDriftTv(b, a, "doc_id", "text").head()
     assert(rev.getLong(2) == out.getLong(2), "TV is symmetric")
-  }
-
-  test("drift probes d/e: raw components and typed finals reproduce " +
-    "the shipping drift values bit for bit") {
-    // the r14 bisect probes exist to decompose the SHIPPING rows, so
-    // their columns must be derivable from / identical to the
-    // shipping outputs on the same side-tagged input
-    val bigText = (0 to 1000).map(i => "w" + (i % 37)).mkString(" ")
-    val joint = Seq((1L, bigText, true), (2L, "alpha beta kappa", false))
-      .toDF("doc_id", "text", "__sa")
-    val terms = Curation.driftProbeTerms(joint, "doc_id", "text").head()
-    val units = Curation.driftProbeUnits(joint, "doc_id", "text").head()
-    val tv = Curation.corpusDriftTvJoint(joint, "doc_id", "text").head()
-    val jsFull = Curation.corpusDriftJoint(joint, "doc_id", "text").head()
-    val jsNc = Curation.corpusDriftJoint(joint, "doc_id", "text",
-      untouchedCorrection = false).head()
-    // totals agree across every emitter
-    assert(terms.getLong(0) == tv.getLong(0) &&
-      terms.getLong(1) == tv.getLong(1))
-    assert(units.getLong(0) == tv.getLong(0))
-    // probe e's shipping-typed TV value IS the shipping value, and its
-    // string/decimal variants render the same integer
-    assert(units.getLong(2) == tv.getLong(2), "tv_units (long)")
-    assert(units.getString(3) == tv.getLong(2).toString, "tv_units_str")
-    // probe d's components recombine into probe e's finals:
-    // s_full = st + (B - touched)·|nb - na|; tv = (s·1e6 + dd) div 2dd
-    val bI = BigInt(4096)
-    val naI = BigInt(terms.getLong(0)); val nbI = BigInt(terms.getLong(1))
-    val st = BigInt(terms.getString(4))
-    val sFull = st + (bI - terms.getLong(2)) * (nbI - naI).abs
-    assert(units.getString(4) == sFull.toString, "tv_s recombines")
-    val dd = (naI + bI) * (nbI + bI)
-    assert(units.getString(5) == dd.toString, "tv_dd")
-    assert(((sFull * 1000000 + dd) / (dd * 2)).toLong == tv.getLong(2))
-    // JS: probe d's su is the uncorrected unit sum; probe e's two
-    // presentations equal the two shipping js_bits values
-    assert(units.getLong(7) == terms.getLong(3), "js_units_nc == su")
-    assert(units.getDouble(8) == jsFull.getDouble(2), "js_bits_full")
-    assert(units.getDouble(9) == jsNc.getDouble(2), "js_bits_nc")
   }
 
   // ---- lmPerplexity --------------------------------------------------

@@ -1142,8 +1142,8 @@ class PipelineSpec extends SparkSpec {
     // partition-sized; this pins its SOUNDNESS half — a high nlist
     // can only lose border-pair recall (allowed), never drop a
     // vector without an exact neighbor or merge across exact
-    // components. The probe tool (SemDedupScaleProbe) measures the
-    // cost half on the 10x corpus.
+    // components. The SemDeDup scale probe measured the cost half on
+    // the 10x corpus (OPTIMIZATION_r13.md, Retired diagnostics).
     import graft.functions.{Dedup, Similarity}
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val resolved = Similarity.semanticDedup(emb, 0.4, nlist = 64)

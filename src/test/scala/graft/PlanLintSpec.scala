@@ -44,10 +44,6 @@ class PlanLintSpec extends SparkSpec {
       "crossJoined into the one-row result (same shape as pipe_corpus_drift)"),
     "pipe_corpus_drift_tv" -> ("single-row bigram-total aggregates " +
       "crossJoined into the one-row result (same shape as pipe_corpus_drift)"),
-    "pipe_drift_probe_split" -> ("two single-row counts (docs x bigrams " +
-      "of the old snapshot) crossJoined into the one-row probe result"),
-    "pipe_drift_probe_stat" -> ("single-row total aggregates over the " +
-      "5-row LITERAL profile crossJoined into the one-row statistic"),
     "pipe_temperature_mix" -> "single-row weight-sum broadcast",
     "text_fingerprint" -> "single-row aggregate",
     "emb_outliers" -> "per-label centroid model",

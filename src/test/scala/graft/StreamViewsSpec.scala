@@ -1078,6 +1078,52 @@ class StreamViewsSpec extends SparkSpec {
       "rollback must restore the purged derived counter")
   }
 
+  test("view catalog: load() releases the frame it replaces — no " +
+    "persisted RDD outlives put→load→commit or put→load→rollback") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_views_leak").toString
+    val catalog = new ViewCatalog(spark, dir)
+    catalog.register(ViewDefn("v1", Lookup("id", Seq(1L)),
+      EventDriven(50), Seq("vertices")))
+    // count only the RDDs this test persists: the context's map holds
+    // its RDDs weakly, so earlier tests' entries can vanish under GC
+    val ours = scala.collection.mutable.Set[Int]()
+    def ids = spark.sparkContext.getPersistentRDDs.keySet
+    def persisted: Int = ids.count(ours)
+    def putLive(tag: String): Unit = {
+      val before = ids
+      catalog.put("v1", Seq((1L, tag)).toDF("id", "v"))
+      catalog.dataOf("v1").get.count() // materializes the cache
+      ours ++= ids -- before
+    }
+    putLive("snapshot")
+    catalog.save("v1")
+    assert(persisted == 1)
+    catalog.load("v1")
+    assert(persisted == 0, "a load outside a batch leaked the live frame")
+    // put→load→commit: the in-batch frame releases at the load, the
+    // pre-batch original at commit
+    putLive("pre1")
+    catalog.beginBatch()
+    putLive("mid1")
+    assert(persisted == 2)
+    catalog.load("v1")
+    assert(persisted == 1,
+      "the in-batch frame a load replaces must release at once")
+    catalog.commitBatch()
+    assert(persisted == 0, "commit must release the pre-batch original")
+    // put→load→rollback: only the restored pre-batch original stays
+    putLive("pre2")
+    catalog.beginBatch()
+    putLive("mid2")
+    catalog.load("v1")
+    catalog.rollbackBatch()
+    assert(persisted == 1)
+    assert(catalog.dataOf("v1").get.collect().map(_.getString(1)).toSeq ==
+      Seq("pre2"))
+    catalog.load("v1")
+    assert(persisted == 0)
+  }
+
   test("pattern view: incremental refresh equals MATCH recompute across two mutation rounds") {
     import spark.implicits._
     import graft.graph.GraphStore

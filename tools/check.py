@@ -14,6 +14,13 @@ r10's 1e-9-relative-tolerance local green shipped a driver-red
 hash green. `--tol` restores the old 1e-9 relative tolerance for
 triage only (e.g. "is this a rounding-convention gap or a real
 value gap") — NEVER for a round record.
+
+Column TYPES are compared too, always: an oracle column DuckDB types
+HUGEINT, UHUGEINT, UBIGINT or DECIMAL against a Spark integral or
+DOUBLE column fails as TYPE_MISMATCH. Fetched rows cannot show this
+(13414 reads the same either way), but a pandas fetch turns a
+HUGEINT into float64, so such a row fails a typed hash compare —
+`SUM(BIGINT)` is HUGEINT in DuckDB; CAST oracle totals to BIGINT.
 """
 import sys, os, json, glob, math
 import duckdb
@@ -41,6 +48,19 @@ def cell_eq(a, b):
                 math.copysign(1.0, fa) == math.copysign(1.0, fb)
         return abs(fa - fb) <= 1e-9 * max(1.0, abs(fa), abs(fb))
     return str(a) == str(b)
+
+WIDE_ORACLE_TYPES = ("HUGEINT", "UHUGEINT", "UBIGINT", "DECIMAL")
+NARROW_SPARK_TYPES = ("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "DOUBLE")
+
+def type_mismatches(got_rel, exp_rel):
+    """Columns whose oracle type a pandas fetch would read as a
+    different value type than the Spark column: [(col, spark, oracle)]."""
+    got = dict(zip(got_rel.columns, map(str, got_rel.types)))
+    bad = []
+    for c, t in zip(exp_rel.columns, map(str, exp_rel.types)):
+        if t.split("(")[0] in WIDE_ORACLE_TYPES and got.get(c) in NARROW_SPARK_TYPES:
+            bad.append((c, got[c], t))
+    return sorted(bad)
 
 def main(sf_dir, out_dir):
     con = duckdb.connect()
@@ -74,6 +94,11 @@ def main(sf_dir, out_dir):
             continue
         if got_cols != exp_cols:
             results[name] = f"SCHEMA_MISMATCH spark={got_cols} oracle={exp_cols}"
+            continue
+        bad_types = type_mismatches(got_rel, exp_rel)
+        if bad_types:
+            results[name] = "TYPE_MISMATCH " + ", ".join(
+                f"{c}: spark={g} oracle={e}" for c, g, e in bad_types)
             continue
         if len(got) != len(exp):
             results[name] = f"ROWCOUNT_MISMATCH spark={len(got)} oracle={len(exp)}"
