@@ -58,7 +58,7 @@ object Algorithms {
     */
   private[graft] def hintIfFits(df: DataFrame, rows: Long,
       ceiling: Long): DataFrame =
-    if (graft.views.Views.fitsBudget(df, rows, ceiling)) broadcast(df) else df
+    graft.views.Views.hintIfFits(df, rows, ceiling)
 
   /** True when `df` is a pure projection over an already-cached (or
     * driver-local) relation — the cases where re-persisting would
@@ -2051,8 +2051,6 @@ object Algorithms {
           movers = 1
         }
       }
-      if (sys.props.contains("graft.louvain.trace"))
-        println(f"[louvain] round $round movers=$movers q=$q%.6f")
       best.unpersist(blocking = false)
       if (!converged && minMovers > 1 && movers < minMovers) stop = true
     }

@@ -1455,7 +1455,6 @@ object Dedup {
         cuts.unpersist(blocking = false)
         System.gc()
         rounds += 1
-        System.err.println(s"[graft] span fixpoint round $rounds done")
       }
     }
     (cur, rounds, converged)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
+import graft.graph.GraphStore
 
 /** Materialized-view subsystem (SURVEY §2.10): catalog, refresh
   * policies, change-impact analysis, dependency DAG, incremental
@@ -17,6 +18,42 @@ import scala.collection.mutable
   * not the base table.
   */
 object Views {
+
+  // ---- map of the pattern-view refreshers (V5c–V5e) ----------------
+  //
+  // Every `refresh*View` entry computes the feed-touched vertex set
+  // once (feedTouchedV) and passes it to each of its sub-folds. The
+  // change-window bricks, each written once:
+  //   netOps             n ANTI o → add, o ANTI n → remove (uncut)
+  //   windowVertexDelta  one label's vertex ±ops (lazy cut)
+  //   touchedEdgeKeys    edge keys the window could change (uncut)
+  //   edgeMembers        edge scan restricted to those keys (uncut)
+  //   windowEdgeDelta    one label's edge ±ops, symmetrized for
+  //                      undirected hops (lazy cuts)
+  //   hopRelation        old hop relation; symmetrize gives E ∪ Eᵀ
+  //   twoLevelDelta      reassociated Δ((P⋈E)⋈V) of a hop / emission
+  //   levelStateFold     stored per-level bags (!p<i>, !w<i>)
+  //   commitJoinState    merge → eager cut → !state → serve rows
+  // Who uses what, and where each refresher cuts:
+  //   refreshPatternView, refreshPatternChainView — chain fold
+  //     (windowVertexDelta, windowEdgeDelta, twoLevelDelta) through
+  //     refreshChain; lazy window frames, counted level cuts, eager
+  //     prefix and chain states.
+  //   refreshWherePatternView — whereHopMembers (touchedEdgeKeys,
+  //     netOps), lazy touched keys and ops; eager state.
+  //   refreshWhereChainView — whereHopMembers per hop (eager !wh<j>)
+  //     feeding refreshChain.
+  //   refreshVarLengthPatternView — walkFoldLevels (windowEdgeDelta,
+  //     windowVertexDelta) + twoLevelDelta emissions + walkHooks;
+  //     counted level cuts, eager walk bags and state.
+  //   refreshComposedChainView — sub-folds (eager !vl<j> and its ops,
+  //     lazy walk delta; !tc<j>; !lb<j>) feeding refreshChain.
+  //   refreshReachabilityView, refreshUndirectedReachView —
+  //     foldReachState / foldCcState over reachEdgeDelta (touchedEdgeKeys
+  //     + edgeMembers), EAGER touched keys, lazy adds/removes, counted
+  //     rounds.
+  //   refreshLowerBoundedReachView — foldReachState + walkFoldLevels +
+  //     gated twoLevelDelta; lazy delta, eager state.
 
   // ---- V1: view types ---------------------------------------------
 
@@ -357,17 +394,8 @@ object Views {
     */
   def joinViewDelta(aOld: DataFrame, dA: DataFrame,
       bOld: DataFrame, dB: DataFrame, keys: Seq[String]): DataFrame = {
-    // op validated in-plan (validatedSign): a typo'd op must fail
-    // the batch, not silently insert rows into the maintained view.
-    // A delta may instead arrive PRE-WEIGHTED with a `__sign` column
-    // (r11: the var-length walk folds net each level's delta to
-    // per-pair counts, whose magnitudes are legitimately > 1 — op
-    // rows cannot carry them without re-exploding walk counts).
-    def signed(d: DataFrame, s: String) =
-      if (d.columns.contains("__sign")) d.withColumnRenamed("__sign", s)
-      else d.withColumn(s, validatedSign).drop("op")
-    val sA = signed(dA, "__sa")
-    val sB = signed(dB, "__sb")
+    val sA = signedAs(dA, "__sa")
+    val sB = signedAs(dB, "__sb")
     // the DELTA side broadcasts in every term — deltas have no stats,
     // so without the hint Catalyst would sort-merge and shuffle the
     // whole base, the exact cost this operator exists to avoid
@@ -378,6 +406,18 @@ object Views {
       .withColumn("__sign", col("__sa") * col("__sb"))
       .drop("__sa", "__sb")
   }
+
+  /** A delta's sign factor as column `s`. Op rows are validated
+    * in-plan ([[validatedSign]]): a typo'd op must fail the batch,
+    * not silently insert rows into the maintained view. A delta may
+    * instead arrive PRE-WEIGHTED with a `__sign` column (r11: the
+    * var-length walk folds net each level's delta to per-pair
+    * counts, whose magnitudes are legitimately > 1 — op rows cannot
+    * carry them without re-exploding walk counts).
+    */
+  private def signedAs(d: DataFrame, s: String): DataFrame =
+    if (d.columns.contains("__sign")) d.withColumnRenamed("__sign", s)
+    else d.withColumn(s, validatedSign).drop("op")
 
   /** A base relation may arrive as a WEIGHTED bag — a state frame
     * whose `__mult` column is the row's multiplicity (r11: prefix
@@ -501,6 +541,11 @@ object Views {
       ceiling: Long): Boolean =
     rows <= math.min(ceiling, broadcastRowBudget(df))
 
+  /** `df` with a broadcast hint when `rows` fits [[fitsBudget]]. */
+  private[graft] def hintIfFits(df: DataFrame, rows: Long,
+      ceiling: Long): DataFrame =
+    if (fitsBudget(df, rows, ceiling)) broadcast(df) else df
+
   /** Fold a signed join delta into multiset state: merge on the view
     * columns, sum multiplicities, drop rows whose net count reaches
     * zero.
@@ -589,12 +634,8 @@ object Views {
         .agg(sum("__m").as("__mult"))
         .filter(col("__mult") > 0)
         .localCheckpoint()
-      val k0 = state.select(cols.map(col): _*)
-      val k1 = s1.select(cols.map(col): _*)
-      return (s1, k1.join(k0, cols.toSeq, "left_anti")
-        .select(cols.map(col) :+ lit("add").as("op"): _*)
-        .unionByName(k0.join(k1, cols.toSeq, "left_anti")
-          .select(cols.map(col) :+ lit("remove").as("op"): _*)))
+      return (s1, netOps(state.select(cols.map(col): _*),
+        s1.select(cols.map(col): _*), cols.toSeq))
     }
     // keys present in BOTH state and delta, with both counts — one
     // state scan feeds the merge, the inserts, and the ops (lazy:
@@ -632,204 +673,361 @@ object Views {
       .drop("__i")
   }
 
+  // ---- change-window bricks ---------------------------------------
+  //
+  // The pieces every pattern-view fold reads the change window
+  // through. Each is written once; bricks return UNCUT frames unless
+  // every caller wants the same cut, so a caller keeps its own
+  // lazy/eager checkpoint discipline (see the map at the top).
+
+  /** `label` rows, narrowed by an optional per-position predicate. */
+  private def labeled(label: String, pred: Option[Column]): Column =
+    pred.foldLeft(col("label") === label)(_ && _)
+
+  /** Ids of the `label` (+ pred) vertices, aliased `as`. */
+  private def vertexIds(store: GraphStore, label: String,
+      pred: Option[Column], as: String): DataFrame =
+    store.vertices.filter(labeled(label, pred)).select(col("id").as(as))
+
+  /** `df` ∪ `df` with src/dst swapped, other columns kept: the bag
+    * E ∪ Eᵀ of the executor's Undirected orientation union — a
+    * reciprocal pair counts twice, a self-loop matches (v, v) twice.
+    */
+  private def symmetrize(df: DataFrame): DataFrame =
+    df.unionByName(df.select(df.columns.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*))
+
+  /** The `label` (+ pred) edge relation aliased (s, d), symmetrized
+    * when `undirected`.
+    */
+  private def hopRelation(store: GraphStore, label: String,
+      pred: Option[Column], undirected: Boolean, s: String = "src",
+      d: String = "dst"): DataFrame = {
+    val e = store.edges.filter(labeled(label, pred)).select("src", "dst")
+    (if (undirected) symmetrize(e) else e)
+      .select(col("src").as(s), col("dst").as(d))
+  }
+
+  /** Net membership ops between two key frames: `n ANTI o` → add,
+    * `o ANTI n` → remove, as (keys…, op). Uncut.
+    */
+  private def netOps(o: DataFrame, n: DataFrame, keys: Seq[String])
+      : DataFrame =
+    n.join(o, keys, "left_anti").withColumn("op", lit("add"))
+      .unionByName(o.join(n, keys, "left_anti")
+        .withColumn("op", lit("remove")))
+
+  /** The feed-touched vertex-id set every window brick probes —
+    * computed ONCE per refresh by each `refresh*View` entry and
+    * passed down to every sub-fold.
+    *
+    * Probe shape (r12): a normal change window is a HANDFUL of ids,
+    * yet the old broadcast-semi-join form paid one broadcast-build
+    * job per consumer query — the job-trace probe (OPTIMIZATION_r13.md,
+    * Retired diagnostics) attributed 52 of a
+    * composed refresh's 76 jobs to broadcast builds, many of them
+    * this frame over and over. [[IdProbe]] collects the set once
+    * (one driver job) when it fits `collectCap` and probes as an
+    * InSet FILTER pushed into each scan — zero per-consumer build
+    * jobs, tighter codegen; an oversized window falls back to the
+    * broadcast semi-join.
+    */
+  private[views] final class IdProbe(val df: DataFrame,
+      ids: Option[Array[Long]]) {
+    /** rows of `x` whose column `on` is in the touched set */
+    def semi(x: DataFrame, on: String): DataFrame = ids match {
+      case Some(a) if a.isEmpty => x.filter(lit(false))
+      case Some(a) => x.filter(col(on).isInCollection(a))
+      case None =>
+        x.join(broadcast(df.select(col("id").as(on))), Seq(on), "left_semi")
+    }
+  }
+
+  private val collectCap = 1 << 16
+
+  /** Wrap a single-column id frame as an [[IdProbe]] — one bounded
+    * collect; oversize sets stay as broadcast semi-joins.
+    */
+  private def idProbe(df: DataFrame): IdProbe = {
+    val head = df.limit(collectCap + 1).collect()
+    new IdProbe(df,
+      if (head.length > collectCap) None
+      else Some(head.map(_.getLong(0))))
+  }
+
+  private def feedOf(oldStore: GraphStore, newStore: GraphStore): DataFrame =
+    newStore.changes.filter(col("version") > oldStore.version)
+
+  /** update_vertex_props joins the touched set: for a predicated
+    * position the update can flip membership; for label-only
+    * positions the NET compare yields no delta row, so the wider set
+    * costs nothing but a few extra probe keys.
+    */
+  private def feedTouchedV(oldStore: GraphStore,
+      newStore: GraphStore): IdProbe =
+    idProbe(feedOf(oldStore, newStore)
+      .filter(col("op").isin("add_vertex", "remove_vertex",
+        "update_vertex_props"))
+      .select(col("id")).distinct().localCheckpoint(false))
+
+  /** Net ±op membership delta (op, `keyName`) of the `label` (+ pred)
+    * vertex set between two store versions, restricted to the
+    * touched ids. Every caller wants it lazily cut, so it is.
+    */
+  private def windowVertexDelta(oldStore: GraphStore,
+      newStore: GraphStore, label: String, pred: Option[Column],
+      keyName: String, touchedV: IdProbe): DataFrame = {
+    def members(store: GraphStore) =
+      touchedV.semi(vertexIds(store, label, pred, keyName), keyName)
+    lazyCut(netOps(members(oldStore), members(newStore), Seq(keyName)))
+  }
+
+  /** (src, dst) keys of `edgeLabel` edges the window could have
+    * changed: explicit edge ops (prop updates included — they can
+    * flip a predicated edge's membership) plus every old/new edge
+    * incident to a touched vertex (cascades are not spelled out in
+    * the feed). Uncut.
+    */
+  private def touchedEdgeKeys(oldStore: GraphStore, newStore: GraphStore,
+      edgeLabel: String, touchedV: IdProbe): DataFrame = {
+    val explicitE = feedOf(oldStore, newStore).filter(
+        col("op").isin("add_edge", "remove_edge", "update_edge_props")
+          && col("elabel") === edgeLabel)
+      .select(col("src"), col("dst")).distinct()
+    def incident(store: GraphStore) = {
+      val e = store.edges.filter(col("label") === edgeLabel)
+      touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
+        .select(col("src"), col("dst"))
+    }
+    explicitE.unionByName(incident(oldStore))
+      .unionByName(incident(newStore)).distinct()
+  }
+
+  /** The `edgeLabel` (+ pred) edges of `store` whose key is in the
+    * (cut) touched-key frame: a base scan with the window broadcast.
+    */
+  private def edgeMembers(store: GraphStore, edgeLabel: String,
+      pred: Option[Column], touchedE: DataFrame): DataFrame =
+    store.edges.filter(labeled(edgeLabel, pred))
+      .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
+      .select("src", "dst")
+
+  /** Net ±op delta (op, src, dst) of one edge label over the window,
+    * lazily cut. Membership nets on the STORED orientation and
+    * symmetrization happens after, so an undirected hop's op
+    * contributes ±1 in both orientations (bag semantics — reciprocal
+    * edges and self-loops keep their multiplicities).
+    */
+  private def windowEdgeDelta(oldStore: GraphStore, newStore: GraphStore,
+      edgeLabel: String, pred: Option[Column], undirected: Boolean,
+      touchedV: IdProbe): DataFrame = {
+    val touchedE = lazyCut(
+      touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV))
+    val net = netOps(edgeMembers(oldStore, edgeLabel, pred, touchedE),
+      edgeMembers(newStore, edgeLabel, pred, touchedE), Seq("src", "dst"))
+    lazyCut(if (undirected) symmetrize(net) else net)
+  }
+
+  /** Second-level delta Δ((P ⋈ E) ⋈ V) of a chain hop or a walk
+    * emission, REASSOCIATED so both big relations are scanned with
+    * broadcast probes instead of the old-side term re-executing the
+    * lazy P ⋈ E join:
+    *
+    *   t1 = ΔA ⋈ V_old          (ΔA = Δ(P⋈E), broadcast)
+    *   t2 = P_old ⋈ (E_old ⋈ ΔV) (equi-join associativity — the
+    *        window-sized E-slice broadcasts into the prefix scan)
+    *   t3 = ΔA ⋈ ΔV             (the simultaneous-window cross term)
+    *
+    * Identical bag to joinViewDelta(P ⋈ E, ΔA, V, ΔV) — same three
+    * terms, same sign products — with P ⋈ E never materialized on
+    * the probe path. ΔA may be op rows or netted `__sign` counts and
+    * P_old a weighted bag ([[signedAs]], [[weighted]]); every term
+    * projects onto ΔA's columns, which drops the interior position a
+    * walk's old-side term joined on. Returns (ΔA's columns, __sign).
+    *
+    * Posture note: `eTouched`'s size is the hop relation's fan-in to
+    * the touched V set — for an edge base that is per-vertex-degree
+    * bounded, so the default path broadcasts without a measuring
+    * action; when the lower-bounded composition passes the CLOSURE
+    * as `eOld`, a touched hub can pull its whole reach-set slice
+    * into the broadcast even while the closure itself is quiet (the
+    * recompute switch one level up only fires on closure churn) —
+    * that caller passes `gateETouched = true`, which spends one
+    * count on the materialized slice and downgrades to a
+    * SHUFFLE_HASH join when it exceeds the session broadcast budget
+    * ([[broadcastRowBudget]]): a skew-safe shuffle instead of a
+    * driver/executor OOM.
+    */
+  private def twoLevelDelta(pOld: DataFrame, eOld: DataFrame,
+      vOld: DataFrame, dA: DataFrame, dV: DataFrame,
+      joinP: String, joinV: String,
+      gateETouched: Boolean = false): DataFrame = {
+    val sA = signedAs(dA, "__sa")
+    val sV = signedAs(dV, "__sb")
+    val eTouched = {
+      val raw = eOld.join(broadcast(sV), joinV)
+      if (!gateETouched) broadcast(raw)
+      else {
+        val (eT, eTCnt) = cutCount(raw)
+        if (eTCnt <= broadcastRowBudget(eT)) broadcast(eT)
+        else eT.hint("shuffle_hash")
+      }
+    }
+    val out = sA.columns.map(col) :+ col("__sb")
+    Seq(broadcast(sA).join(vOld.withColumn("__sb", lit(1)), joinV),
+        weighted(pOld, "__sa").join(eTouched, joinP),
+        broadcast(sA).join(sV, joinV))
+      .map(_.select(out: _*)).reduce(_ unionByName _)
+      .withColumn("__sign", col("__sa") * col("__sb"))
+      .drop("__sa", "__sb")
+  }
+
+  /** Per-level state fold shared by the stored-level hooks (chain
+    * prefixes `!p<i>`, walk bags `!w<i>`): merge a nonempty level
+    * delta into the stored bag, or persist a fresh bootstrap when the
+    * level is quiet. The fused level count replaces the old isEmpty
+    * action (r12).
+    */
+  private def levelStateFold(catalog: ViewCatalog, key: Int => String,
+      oldStates: Map[Int, DataFrame]): (Int, DataFrame, Long) => Unit =
+    (i, delta, cnt) =>
+      if (cnt > 0)
+        catalog.put(key(i), mergeJoinDelta(oldStates(i), delta).localCheckpoint())
+      else if (catalog.dataOf(key(i)).isEmpty)
+        catalog.put(key(i), oldStates(i)) // persist the bootstrap
+
+  /** State-commit tail of the join-state refreshers: fold the signed
+    * delta, store the multiset state under `name!state`, serve the
+    * finalized rows under `name`. The state is MATERIALIZED
+    * (localCheckpoint — eager, lineage-cut): the state IS the view,
+    * and leaving it lazy makes refresh chains compose every prior
+    * round's delta plan into one nest the analyzer re-walks per
+    * action (measured 51 s → ~2 s for a two-round chain at sf0.1,
+    * almost all of it driver-side planning). Same discipline as
+    * GraphStore.truncated().
+    */
+  private def commitJoinState(catalog: ViewCatalog, name: String,
+      state0: DataFrame, delta: DataFrame): DataFrame = {
+    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
+    catalog.put(s"$name!state", state1)
+    val view = finalizeJoin(state1)
+    catalog.put(name, view)
+    view
+  }
+
+  /** A sub-state's pair relation as a chain hop: (old relation, ±op
+    * rows), both aliased to the hop's (s, d) columns.
+    */
+  private def pairHop(old: DataFrame, ops: DataFrame)
+      : (String, String) => (DataFrame, DataFrame) =
+    (s, d) => (old.select(col("src").as(s), col("dst").as(d)),
+      ops.select(col("op"), col("src").as(s), col("dst").as(d)))
+
   // ---- V5c: incremental GQL pattern views -------------------------
 
-  /** Signed delta of a single-hop label-filtered MATCH-pattern view
-    * `(a:srcLabel)-[:edgeLabel]->(b:dstLabel)` between two versions
-    * of an (immutable) GraphStore, derived from its change feed —
-    * so a REGISTERED pattern view refreshes at delta cost instead of
-    * re-running the MATCH (the reference recomputes pattern views on
-    * refresh; its incremental engine covers only aggregates,
-    * incremental_engine.rs:464-648).
+  /** Per-position chain lists padded to "none" when empty, each
+    * size-checked against the chain: (vertexPreds, edgePreds,
+    * undirectedHops).
+    */
+  private def chainShape(vertexLabels: Seq[String],
+      edgeLabels: Seq[String], vertexPreds: Seq[Option[Column]],
+      edgePreds: Seq[Option[Column]], undirectedHops: Seq[Boolean])
+      : (Seq[Option[Column]], Seq[Option[Column]], Seq[Boolean]) = {
+    require(vertexLabels.size == edgeLabels.size + 1 && edgeLabels.nonEmpty,
+      s"chain wants k+1 vertex labels for k>=1 edge labels, got " +
+        s"${vertexLabels.size}/${edgeLabels.size}")
+    def pad[A](xs: Seq[A], none: A, n: Int, what: String): Seq[A] = {
+      val p = if (xs.isEmpty) Seq.fill(n)(none) else xs
+      require(p.size == n,
+        s"$what wants one entry per chain position ($n), got ${p.size}")
+      p
+    }
+    (pad(vertexPreds, None, vertexLabels.size, "vertexPreds"),
+      pad(edgePreds, None, edgeLabels.size, "edgePreds"),
+      pad(undirectedHops, false, edgeLabels.size, "undirectedHops"))
+  }
+
+  /** Signed delta of the k-hop chain view
+    * `(c0:l0)-[:e1]->(c1:l1)-...-[:ek]->(ck:lk)` (column `ci` is the
+    * position-i vertex id; the single-hop view is k = 1) between two
+    * versions of an (immutable) GraphStore, derived from its change
+    * feed — so a REGISTERED pattern view refreshes at delta cost
+    * instead of re-running the MATCH (the reference recomputes
+    * pattern views on refresh; its incremental engine covers only
+    * aggregates, incremental_engine.rs:464-648).
     *
-    * The three-way Δ(V⋈E⋈V) composes the two-way signed rule twice:
-    * Δ(A⋈E) feeds as the delta side of Δ((A⋈E)⋈B), with signs
+    * Each hop composes the two-way signed rule twice: Δ(P⋈E) feeds
+    * as the delta side of Δ((P⋈E)⋈V) ([[twoLevelDelta]]), with signs
     * multiplying through — the ΔΔ cross terms are exactly what keeps
     * simultaneous vertex+edge changes (e.g. remove_vertex cascading
-    * its edges) from double-counting.
+    * its edges) from double-counting. The fold runs once per hop by
+    * induction: ΔP_i (as ±1 op rows) feeds the next hop's first
+    * level, so the delta stays exact for arbitrary simultaneous
+    * windows at every depth, with per-hop constant work.
     *
     * Deltas are NET per key: membership of every feed-touched key is
     * compared between the two stores (add = gained, remove = lost),
     * so arbitrary chained windows (add then remove, cascaded edge
     * removal the feed does not spell out, re-add of a removed id,
     * a prop update that flips a predicate) resolve to their end
-    * state. Patterns may carry per-position VERTEX PREDICATES
-    * (deterministic Column filters over the vertex frame —
-    * `(a:Person {active: true})` shapes): update_vertex_props ops
-    * join the touched set, and the membership compare evaluates the
-    * predicate on both stores, so prop flips enter and leave the
-    * view incrementally like any other delta.
+    * state. Positions may carry VERTEX/EDGE PREDICATES
+    * (deterministic Column filters — `(a:Person {active: true})`
+    * shapes): prop-update ops join the touched sets, and the
+    * membership compare evaluates the predicate on both stores, so
+    * prop flips enter and leave the view like any other delta.
     *
-    * Cost: base tables are SCANNED with broadcast semi-joins on the
-    * feed-touched keys and never shuffled; every join in the
-    * composed rule broadcasts a delta side ([[joinViewDelta]]), so
-    * refresh cost scales with the change window, not V or E.
+    * Cost: base tables are SCANNED with broadcast probes on the
+    * touched keys and never shuffled; every join in the composed rule
+    * broadcasts a delta side ([[joinViewDelta]]), so refresh cost
+    * scales with the change window, not V or E. `prefixOld(i)` is
+    * the stored prefix bag P_i (`name!p<i>`, maintained by
+    * [[refreshChain]]): every big frame is a stored scan and the only
+    * shuffles are delta-sized — the view-scale probe
+    * (OPTIMIZATION_r13.md, Retired diagnostics) measured lazy prefix
+    * re-joins as the dominant refresh shuffle once the state-merge
+    * shuffle was removed. `onLevelDelta(i, signedCut, cnt)` fires
+    * once per interior level with the checkpointed level delta and
+    * its fused row count, so the caller folds its prefix state
+    * forward without an isEmpty action.
     *
-    * `undirected = true` maintains `(a:L1)-[:e]-(b:L2)` — the hop
-    * relation is the BAG E ∪ Eᵀ exactly like the executor's
-    * Undirected orientation union (GqlExecutor.matchPattern), so a
-    * reciprocal pair contributes multiplicity 2 and a self-loop
-    * matches (v, v) twice; the multiset state absorbs both.
-    */
-  def patternViewDelta(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore, srcLabel: String,
-      edgeLabel: String, dstLabel: String,
-      srcPred: Option[Column] = None,
-      dstPred: Option[Column] = None,
-      edgePred: Option[Column] = None,
-      undirected: Boolean = false): DataFrame =
-    patternChainViewDelta(oldStore, newStore,
-      Seq(srcLabel, dstLabel), Seq(edgeLabel), Seq(srcPred, dstPred),
-      Seq(edgePred), Seq(undirected))
-      .withColumnRenamed("c0", "src").withColumnRenamed("c1", "dst")
-
-  /** K-HOP generalization: signed delta of the chain view
-    * `(c0:l0)-[:e1]->(c1:l1)-...-[:ek]->(ck:lk)` — column `ci` is the
-    * position-i vertex id. The two-level composition folds once per
-    * hop by induction: ΔP_i (as ±1 op rows) feeds the next hop's
-    * first level, so Δ(P_{i-1}⋈E_i⋈V_i) stays exact for arbitrary
-    * simultaneous vertex+edge windows at every depth; the old chain
-    * prefix P_{i-1} is a lazy join of label-filtered base scans that
-    * each delta term reads with the delta side broadcast (bases
-    * scanned, never shuffled — the joinViewDelta economics at every
-    * level). A registered multi-hop MATCH view therefore refreshes
-    * at change-window cost too, with per-hop constant work.
-    *
-    * `undirectedHops(i)` makes hop i+1 undirected: that hop's edge
-    * base AND edge delta are symmetrized to the bag E ∪ Eᵀ (each
-    * edge op contributes ±1 in both orientations), which is exactly
-    * the executor's Undirected orientation union — per-hop, so
-    * chains may mix `->` and `-` positions.
+    * `undirectedHops(i)` makes hop i+1 undirected: its edge base AND
+    * edge delta are symmetrized to the bag E ∪ Eᵀ ([[symmetrize]]) —
+    * per hop, so chains may mix `->` and `-` positions.
     *
     * `hopOverrides(i)` substitutes hop i+1's relation entirely: the
     * provider receives the hop's (srcCol, dstCol) names and returns
-    * (oldRelation, ±1 op rows) — the composed var-length machinery
-    * ([[refreshComposedChainView]]) injects a counting sub-state's
-    * DISTINCT-pair membership this way, and the algebra is
-    * indifferent to where a hop relation comes from as long as
-    * old + ops = new.
+    * (oldRelation, ±1 op rows) — the composed var-length and WHERE
+    * chain refreshers inject a sub-state's DISTINCT-pair membership
+    * this way; the algebra is indifferent to where a hop relation
+    * comes from as long as old + ops = new.
     *
-    * SHUFFLE POSTURE (r11): the second level of each hop folds
-    * through [[level2Delta]], which reassociates the old-side probe
-    * term to P_old ⋈ (E_old ⋈ broadcast(ΔV)) — so the prefix
-    * relation is only ever SCANNED with a window-sized broadcast
-    * probe, never re-joined against the vertex delta. With
-    * `prefixOld` supplied (the catalog refreshers pass their stored
-    * per-level prefix bags, maintained under `name!p<i>`), every
-    * big frame in the whole fold is a stored scan and the only
-    * shuffles are delta-sized: the view-scale probe (OPTIMIZATION_r13.md,
-    * Retired diagnostics) measured the lazy
-    * prefix re-joins as the dominant refresh shuffle once the
-    * state-merge shuffle was removed. Stateless callers (no
-    * `prefixOld`) keep the lazy prefix join — correct, and still one
-    * association level cheaper than the pre-r11 form.
-    * `onLevelDelta(i, signedCut, cnt)` fires once per interior level
-    * with the (checkpointed) level delta and its fused row count so
-    * the caller can fold its prefix state forward without spending
-    * an isEmpty action.
+    * Every intermediate is DELTA-sized and read by several
+    * downstream joins/broadcasts; left UNCHECKPOINTED, the tree
+    * re-executes multiplicatively (measured 32 s for a 9-op window at
+    * sf0.1, ~3 s once cut). LAZY checkpoint marks (r12) keep the
+    * compute-exactly-once property while dropping the standalone
+    * eager-materialization job each frame used to pay.
     */
-  def patternChainViewDelta(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore, vertexLabels: Seq[String],
-      edgeLabels: Seq[String],
-      vertexPreds: Seq[Option[Column]] = Nil,
-      edgePreds: Seq[Option[Column]] = Nil,
-      undirectedHops: Seq[Boolean] = Nil,
+  private def patternChainViewDelta(oldStore: GraphStore,
+      newStore: GraphStore, touchedV: IdProbe, vertexLabels: Seq[String],
+      edgeLabels: Seq[String], preds: Seq[Option[Column]],
+      epreds: Seq[Option[Column]], undir: Seq[Boolean],
       hopOverrides: Map[Int, (String, String) => (DataFrame, DataFrame)] =
         Map.empty,
       prefixOld: Map[Int, DataFrame] = Map.empty,
       onLevelDelta: (Int, DataFrame, Long) => Unit = (_, _, _) => ())
       : DataFrame = {
-    require(vertexLabels.size == edgeLabels.size + 1 && edgeLabels.nonEmpty,
-      s"chain wants k+1 vertex labels for k>=1 edge labels, got " +
-        s"${vertexLabels.size}/${edgeLabels.size}")
-    val preds = if (vertexPreds.isEmpty)
-      Seq.fill(vertexLabels.size)(None: Option[Column]) else vertexPreds
-    require(preds.size == vertexLabels.size,
-      s"vertexPreds wants one entry per vertex label")
-    val epreds = if (edgePreds.isEmpty)
-      Seq.fill(edgeLabels.size)(None: Option[Column]) else edgePreds
-    require(epreds.size == edgeLabels.size,
-      s"edgePreds wants one entry per edge label")
-    val undir = if (undirectedHops.isEmpty)
-      Seq.fill(edgeLabels.size)(false) else undirectedHops
-    require(undir.size == edgeLabels.size,
-      s"undirectedHops wants one entry per edge label")
-    val feed = newStore.changes.filter(col("version") > oldStore.version)
-    // Every intermediate here is DELTA-sized, and each is read by
-    // several downstream joins/broadcasts; left UNCHECKPOINTED, the
-    // tree re-executes multiplicatively (the level-1 delta re-runs
-    // the edge delta up to 3×, which runs touched-keys 2×, which runs
-    // the incident scans 3× — measured 32 s for a 9-op window at
-    // sf0.1, ~3 s once cut). A LAZY checkpoint mark (r12) keeps the
-    // compute-exactly-once property — the first consumer job
-    // materializes the frame, later consumers read blocks — while
-    // dropping the standalone eager-materialization job each frame
-    // used to pay: the chain fold's per-refresh driver-job count
-    // roughly halves (the view-scale probe's jobsRefresh column;
-    // OPTIMIZATION_r13.md, Retired diagnostics).
-    def cut(df: DataFrame): DataFrame = lazyCut(df)
-    // update_vertex_props joins the touched set: for a predicated
-    // position the update can flip membership; for label-only
-    // positions the NET compare below yields no delta row, so the
-    // wider set costs nothing but a few extra probe keys
-    val touchedV = feedTouchedV(oldStore, newStore)
-    def vFilter(label: String, pred: Option[Column]): Column =
-      pred.foldLeft(col("label") === label)(_ && _)
-    def members(store: graft.graph.GraphStore, label: String,
-        pred: Option[Column]) =
-      touchedV.semi(store.vertices.filter(vFilter(label, pred)), "id")
-        .select("id")
-    def vDelta(pos: Int, keyName: String): DataFrame = {
-      val o = members(oldStore, vertexLabels(pos), preds(pos))
-      val n = members(newStore, vertexLabels(pos), preds(pos))
-      cut(n.join(o, Seq("id"), "left_anti")
-        .select(lit("add").as("op"), col("id").as(keyName))
-        .unionByName(o.join(n, Seq("id"), "left_anti")
-          .select(lit("remove").as("op"), col("id").as(keyName))))
-    }
-    // edge keys the window could have changed: explicit edge ops
-    // (incl. prop updates, which can flip a predicated edge's
-    // membership) on this label + every old/new edge of this label
-    // incident to a touched vertex (cascades are not spelled out in
-    // the feed)
-    def eDelta(edgeLabel: String, pred: Option[Column], srcName: String,
-        dstName: String, sym: Boolean): DataFrame = {
-      val explicitE = feed.filter(
-          col("op").isin("add_edge", "remove_edge", "update_edge_props")
-            && col("elabel") === edgeLabel)
-        .select(col("src"), col("dst")).distinct()
-      def incident(store: graft.graph.GraphStore) = {
-        val e = store.edges.filter(col("label") === edgeLabel)
-        touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
-          .select(col("src"), col("dst"))
-      }
-      val touchedE = cut(explicitE.unionByName(incident(oldStore))
-        .unionByName(incident(newStore)).distinct())
-      def eMembers(store: graft.graph.GraphStore) =
-        store.edges.filter(
-            pred.foldLeft(col("label") === edgeLabel)(_ && _))
-          .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
-          .select("src", "dst")
-      val eo = eMembers(oldStore)
-      val en = eMembers(newStore)
-      // membership nets on the STORED orientation; symmetrization
-      // happens after, so an undirected hop's op contributes ±1 in
-      // both orientations (bag semantics — reciprocal edges and
-      // self-loops keep their multiplicities)
-      val net = en.join(eo, Seq("src", "dst"), "left_anti")
-        .select(lit("add").as("op"), col("src"), col("dst"))
-        .unionByName(eo.join(en, Seq("src", "dst"), "left_anti")
-          .select(lit("remove").as("op"), col("src"), col("dst")))
-      val netSym = if (!sym) net else net.unionByName(
-        net.select(col("op"), col("dst").as("src"), col("src").as("dst")))
-      cut(netSym)
-        .select(col("op"), col("src").as(srcName), col("dst").as(dstName))
-    }
     def vOld(pos: Int, name: String) =
-      oldStore.vertices.filter(vFilter(vertexLabels(pos), preds(pos)))
-        .select(col("id").as(name))
+      vertexIds(oldStore, vertexLabels(pos), preds(pos), name)
+    def vDelta(pos: Int, name: String) = windowVertexDelta(oldStore,
+      newStore, vertexLabels(pos), preds(pos), name, touchedV)
+    // re-expressed as op rows so the next level's sign validation
+    // and broadcasts apply unchanged (each row is exactly ±1)
     def opify(signed: DataFrame): DataFrame =
-      cut(signed.withColumn("op",
+      lazyCut(signed.withColumn("op",
         when(col("__sign") > 0, lit("add")).otherwise(lit("remove")))
         .drop("__sign"))
     // fold the two-level rule across hops: chainOld/deltaOps always
@@ -843,180 +1041,104 @@ object Views {
       val (e, eOps) = hopOverrides.get(i - 1) match {
         case Some(provider) => provider(s, d)
         case None =>
-          val eBase = oldStore.edges.filter(
-              epreds(i - 1).foldLeft(col("label") === edgeLabels(i - 1))(_ && _))
-            .select(col("src"), col("dst"))
-          val sym = (if (!undir(i - 1)) eBase
-            else eBase.unionByName(
-              eBase.select(col("dst").as("src"), col("src").as("dst"))))
-            .select(col("src").as(s), col("dst").as(d))
-          (sym, eDelta(edgeLabels(i - 1), epreds(i - 1), s, d, undir(i - 1)))
+          (hopRelation(oldStore, edgeLabels(i - 1), epreds(i - 1),
+            undir(i - 1), s, d),
+            windowEdgeDelta(oldStore, newStore, edgeLabels(i - 1),
+              epreds(i - 1), undir(i - 1), touchedV)
+              .select(col("op"), col("src").as(s), col("dst").as(d)))
       }
       val d1 = joinViewDelta(chainOld, deltaOps, e, eOps, Seq(s))
-      // re-expressed as op rows so the next level's sign validation
-      // and broadcasts apply unchanged (each row is exactly ±1)
-      val v = vOld(i, d)
-      signed = level2Delta(chainOld, e, v, opify(d1), vDelta(i, d), s, d)
+      signed = twoLevelDelta(chainOld, e, vOld(i, d), opify(d1),
+        vDelta(i, d), s, d)
       if (i < edgeLabels.size) {
         // fused: one job materializes the level delta AND yields the
         // count the prefix-state fold branches on
         val (sc, scCnt) = cutCount(signed)
         signed = sc
         onLevelDelta(i, sc, scCnt)
-        chainOld = prefixOld.getOrElse(i, chainOld.join(e, s).join(v, d))
+        chainOld = prefixOld(i)
         deltaOps = opify(signed)
       }
     }
     signed
   }
 
-  /** Second-level chain delta Δ((P ⋈ E) ⋈ V), REASSOCIATED so both
-    * big relations are scanned with broadcast probes instead of the
-    * old-side term re-executing the lazy P ⋈ E join:
-    *
-    *   t1 = ΔA ⋈ V_old          (ΔA = Δ(P⋈E) op rows, broadcast)
-    *   t2 = P_old ⋈ (E_old ⋈ ΔV) (equi-join associativity — the
-    *        window-sized E-slice broadcasts into the prefix scan)
-    *   t3 = ΔA ⋈ ΔV             (the simultaneous-window cross term)
-    *
-    * Identical bag to joinViewDelta(P ⋈ E, ΔA, V, ΔV) — same three
-    * terms, same sign products — with P ⋈ E never materialized on
-    * the probe path.
-    */
-  private def level2Delta(pOld: DataFrame, eOld: DataFrame,
-      vOld: DataFrame, dA: DataFrame, dV: DataFrame,
-      joinP: String, joinV: String): DataFrame = {
-    val sA = dA.withColumn("__sa", validatedSign).drop("op")
-    val sV = dV.withColumn("__sb", validatedSign).drop("op")
-    val t1 = broadcast(sA).join(vOld.withColumn("__sb", lit(1)), joinV)
-    val eTouched = eOld.join(broadcast(sV), joinV)
-    val t2 = pOld.withColumn("__sa", lit(1))
-      .join(broadcast(eTouched), joinP)
-    val t3 = broadcast(sA).join(sV, joinV)
-    t1.unionByName(t2).unionByName(t3)
-      .withColumn("__sign", col("__sa") * col("__sb"))
-      .drop("__sa", "__sb")
-  }
-
-  /** Bootstrap pattern-view state: the matched (src, dst) pairs with
-    * multiplicity (1 by store construction — ids and edge keys are
-    * unique — but kept as multiset state so [[mergeJoinDelta]]'s
-    * net-zero drop applies unchanged).
-    */
-  def initPatternState(store: graft.graph.GraphStore, srcLabel: String,
-      edgeLabel: String, dstLabel: String,
-      srcPred: Option[Column] = None,
-      dstPred: Option[Column] = None,
-      edgePred: Option[Column] = None,
-      undirected: Boolean = false): DataFrame =
-    initPatternChainState(store, Seq(srcLabel, dstLabel), Seq(edgeLabel),
-      Seq(srcPred, dstPred), Seq(edgePred), Seq(undirected))
-      .withColumnRenamed("c0", "src").withColumnRenamed("c1", "dst")
-
   /** Chain-state bootstrap: the matched (c0..ck) tuples with
-    * multiplicity.
+    * multiplicity (1 by store construction for plain hops — ids and
+    * edge keys are unique — but kept as multiset state so
+    * [[mergeJoinDelta]]'s net-zero drop applies unchanged).
     */
-  def initPatternChainState(store: graft.graph.GraphStore,
+  private def initPatternChainState(store: GraphStore,
       vertexLabels: Seq[String], edgeLabels: Seq[String],
-      vertexPreds: Seq[Option[Column]] = Nil,
-      edgePreds: Seq[Option[Column]] = Nil,
-      undirectedHops: Seq[Boolean] = Nil,
-      hopOverrides: Map[Int, (String, String) => DataFrame] =
-        Map.empty): DataFrame = {
-    val preds = if (vertexPreds.isEmpty)
-      Seq.fill(vertexLabels.size)(None: Option[Column]) else vertexPreds
-    val epreds = if (edgePreds.isEmpty)
-      Seq.fill(edgeLabels.size)(None: Option[Column]) else edgePreds
-    val undir = if (undirectedHops.isEmpty)
-      Seq.fill(edgeLabels.size)(false) else undirectedHops
+      preds: Seq[Option[Column]], epreds: Seq[Option[Column]],
+      undir: Seq[Boolean],
+      hopOverrides: Map[Int, (String, String) => DataFrame]): DataFrame = {
     def vF(pos: Int, name: String) =
-      store.vertices.filter(
-        preds(pos).foldLeft(col("label") === vertexLabels(pos))(_ && _))
-        .select(col("id").as(name))
+      vertexIds(store, vertexLabels(pos), preds(pos), name)
     val joined = (1 to edgeLabels.size).foldLeft(vF(0, "c0")) { (acc, i) =>
-      val hop = hopOverrides.get(i - 1) match {
-        case Some(provider) => provider(s"c${i - 1}", s"c$i")
-        case None =>
-          val eBase = store.edges.filter(
-              epreds(i - 1).foldLeft(col("label") === edgeLabels(i - 1))(_ && _))
-            .select(col("src"), col("dst"))
-          val e = if (!undir(i - 1)) eBase
-            else eBase.unionByName(
-              eBase.select(col("dst").as("src"), col("src").as("dst")))
-          e.select(col("src").as(s"c${i - 1}"), col("dst").as(s"c$i"))
-      }
-      acc.join(hop, s"c${i - 1}").join(vF(i, s"c$i"), s"c$i")
+      val (s, d) = (s"c${i - 1}", s"c$i")
+      val hop = hopOverrides.get(i - 1).map(_(s, d)).getOrElse(
+        hopRelation(store, edgeLabels(i - 1), epreds(i - 1), undir(i - 1),
+          s, d))
+      acc.join(hop, s).join(vF(i, d), d)
     }
     joined.groupBy(joined.columns.map(col): _*)
       .agg(count(lit(1)).as("__mult"))
   }
 
-  /** Per-level PREFIX states for a catalog-backed k-hop chain view
-    * (r11): the prefix bags P_1..P_{k-1} live under `name!p<i>` so
-    * every refresh reads them as stored scans instead of lazily
-    * re-joining the prefix pipeline once per level — the view-scale
-    * probe measured those re-joins as the dominant refresh shuffle
-    * (OPTIMIZATION_r13.md, Retired diagnostics).
-    * Returns (prefixOld relations for the delta fold, the fold
-    * callback that merges each level's delta forward — skipping the
-    * state rewrite entirely when a level's delta is empty).
-    * Bootstrap of an absent prefix state joins once on the OLD store
-    * (the same work the lazy path did per refresh, paid once).
+  /** The catalog-backed chain fold every chain refresher ends in.
+    * Bootstraps the chain state and the per-level PREFIX states
+    * P_1..P_{k-1} (`name!p<i>`, r11) off the old store — hop
+    * overrides supply their old relations — folds the chain delta,
+    * and commits. The prefix bags are read as stored scans instead
+    * of lazily re-joining the prefix pipeline once per level (the
+    * view-scale probe measured those re-joins as the dominant refresh
+    * shuffle; OPTIMIZATION_r13.md, Retired diagnostics); bootstrap of
+    * an absent prefix state joins once on the OLD store, and a quiet
+    * level skips its state rewrite ([[levelStateFold]]).
     */
-  private def chainPrefixHooks(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore,
+  private def refreshChain(catalog: ViewCatalog, name: String,
+      oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       vertexLabels: Seq[String], edgeLabels: Seq[String],
       preds: Seq[Option[Column]], epreds: Seq[Option[Column]],
       undir: Seq[Boolean],
-      bootOverrides: Map[Int, (String, String) => DataFrame] = Map.empty)
-      : (Map[Int, DataFrame], (Int, DataFrame, Long) => Unit) = {
-    val oldStates = (1 until edgeLabels.size).map { i =>
+      overrides: Map[Int, (String, String) => (DataFrame, DataFrame)] =
+        Map.empty): DataFrame = {
+    val bootOverrides = overrides.map { case (j, provider) =>
+      j -> ((s: String, d: String) => provider(s, d)._1)
+    }
+    val state0 = catalog.dataOf(s"$name!state").getOrElse(
+      initPatternChainState(oldStore, vertexLabels, edgeLabels,
+        preds, epreds, undir, bootOverrides))
+    val prefixStates = (1 until edgeLabels.size).map { i =>
       i -> catalog.dataOf(s"$name!p$i").getOrElse(
         initPatternChainState(oldStore,
           vertexLabels.take(i + 1), edgeLabels.take(i),
           preds.take(i + 1), epreds.take(i), undir.take(i),
           bootOverrides.filter(_._1 < i)).localCheckpoint())
     }.toMap
-    val fold = (i: Int, signed: DataFrame, cnt: Long) => {
-      // the fused level count replaces the old isEmpty action (r12)
-      if (cnt > 0) {
-        val s1 = mergeJoinDelta(oldStates(i), signed).localCheckpoint()
-        catalog.put(s"$name!p$i", s1)
-      } else if (catalog.dataOf(s"$name!p$i").isEmpty)
-        catalog.put(s"$name!p$i", oldStates(i)) // persist the bootstrap
-    }
-    (oldStates.map { case (i, st) => i -> finalizeJoin(st) }, fold)
+    val delta = patternChainViewDelta(oldStore, newStore, touchedV,
+      vertexLabels, edgeLabels, preds, epreds, undir, overrides,
+      prefixStates.map { case (i, st) => i -> finalizeJoin(st) },
+      levelStateFold(catalog, i => s"$name!p$i", prefixStates))
+    commitJoinState(catalog, name, state0, delta)
   }
 
   /** Catalog-driven refresh of a registered k-hop chain view — the
     * multi-hop form of [[refreshPatternView]], same materialize-state
-    * contract, plus per-level prefix states ([[chainPrefixHooks]]).
+    * contract, plus per-level prefix states ([[refreshChain]]).
     */
   def refreshPatternChainView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       vertexLabels: Seq[String], edgeLabels: Seq[String],
       vertexPreds: Seq[Option[Column]] = Nil,
       edgePreds: Seq[Option[Column]] = Nil,
       undirectedHops: Seq[Boolean] = Nil): DataFrame = {
-    val preds = if (vertexPreds.isEmpty)
-      Seq.fill(vertexLabels.size)(None: Option[Column]) else vertexPreds
-    val epreds = if (edgePreds.isEmpty)
-      Seq.fill(edgeLabels.size)(None: Option[Column]) else edgePreds
-    val undir = if (undirectedHops.isEmpty)
-      Seq.fill(edgeLabels.size)(false) else undirectedHops
-    val state0 = catalog.dataOf(s"$name!state").getOrElse(
-      initPatternChainState(oldStore, vertexLabels, edgeLabels,
-        preds, epreds, undir))
-    val (prefixOld, fold) = chainPrefixHooks(catalog, name, oldStore,
-      vertexLabels, edgeLabels, preds, epreds, undir)
-    val delta = patternChainViewDelta(oldStore, newStore,
-      vertexLabels, edgeLabels, preds, epreds, undir,
-      prefixOld = prefixOld, onLevelDelta = fold)
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
-    catalog.put(s"$name!state", state1)
-    val view = finalizeJoin(state1)
-    catalog.put(name, view)
-    view
+    val (preds, epreds, undir) = chainShape(vertexLabels, edgeLabels,
+      vertexPreds, edgePreds, undirectedHops)
+    refreshChain(catalog, name, oldStore, newStore,
+      feedTouchedV(oldStore, newStore), vertexLabels, edgeLabels,
+      preds, epreds, undir)
   }
 
   // ---- V5d: var-length pattern views (counting maintenance) -------
@@ -1070,19 +1192,17 @@ object Views {
     * number of i-hop walks c0⇝c_i, which is all any later join reads
     * (interiors are never referenced again), and each level's delta
     * nets to per-pair signed counts before it broadcasts into the
-    * next level. With `walkOld` supplied (the catalog refreshers pass
-    * their stored per-level walk bags, maintained under `name!w<i>`
-    * by [[walkHooks]]), every walk base is a STORED SCAN instead of a
-    * lazy join pipeline re-executed once per downstream term — the
-    * residual refresh shuffle the view-scale probe (OPTIMIZATION_r13.md,
-    * Retired diagnostics) measured in the composed
-    * class after the chain-level r11 fixes ("the same disease, one
-    * layer down"). The emission's dst-delta term is reassociated like
-    * [[level2Delta]]: W_{h-1} ⋈ (E ⋈ broadcast(ΔV_dst)) — so no
-    * W_max state is ever needed. `onWalkDelta(i, netted)` fires once
-    * per interior level for the caller's state fold; stateless
-    * callers (no `walkOld`) keep lazy pair-compressed bases, still
-    * strictly cheaper than the pre-r11 full-tuple pipelines.
+    * next level. `walkOld` holds the stored per-level walk bags
+    * (`name!w<i>`, maintained by [[walkHooks]]), so every walk base
+    * is a STORED SCAN instead of a lazy join pipeline re-executed
+    * once per downstream term — the residual refresh shuffle the
+    * view-scale probe (OPTIMIZATION_r13.md, Retired diagnostics)
+    * measured in the composed class after the chain-level r11 fixes
+    * ("the same disease, one layer down"). The emission's dst-delta
+    * term is reassociated ([[twoLevelDelta]]): W_{h-1} ⋈ (E ⋈
+    * broadcast(ΔV_dst)) — so no W_max state is ever needed.
+    * `onWalkDelta(i, netted)` fires once per interior level for the
+    * caller's state fold.
     *
     * `undirected = true` maintains the UNDIRECTED form
     * `(a)-[:e*m..n]-(b)` — the executor's own `gql_varlength` shape:
@@ -1093,102 +1213,29 @@ object Views {
     * including back-and-forth walks like a–b–a, which the executor's
     * revisit-allowing semantics include as (a, a).
     */
-  def varLengthViewDelta(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore, srcLabel: String,
+  private def varLengthViewDelta(oldStore: GraphStore,
+      newStore: GraphStore, touchedV: IdProbe, srcLabel: String,
       edgeLabel: String, dstLabel: String, minHops: Int, maxHops: Int,
-      srcPred: Option[Column] = None,
-      dstPred: Option[Column] = None,
-      undirected: Boolean = false,
-      walkOld: Map[Int, DataFrame] = Map.empty,
-      onWalkDelta: (Int, DataFrame, Long) => Unit = (_, _, _) => ())
-      : DataFrame = {
+      srcPred: Option[Column], dstPred: Option[Column],
+      undirected: Boolean, walkOld: Map[Int, DataFrame],
+      onWalkDelta: (Int, DataFrame, Long) => Unit): DataFrame = {
     requireHops(minHops, maxHops)
-    val touchedV = feedTouchedV(oldStore, newStore)
-    val dstOld = oldStore.vertices.filter(
-      dstPred.foldLeft(col("label") === dstLabel)(_ && _))
     val dstDelta = windowVertexDelta(oldStore, newStore, dstLabel,
-      dstPred, "__d", Some(touchedV))
+      dstPred, "__d", touchedV)
     // shared-prefix fold over COUNTED PAIR bags: W_i(c0, c_i[, __mult])
     // = i-hop walk counts; emit Δ(W_h ⋈ V_dst) at each h ∈ [min, max]
-    val emitted = scala.collection.mutable.Buffer[DataFrame]()
-    walkFoldLevels(oldStore, newStore, srcLabel, edgeLabel, maxHops,
-      srcPred, undirected, walkOld, (i, wPrev, e, dW, dwCnt, s, d) => {
+    val emitted = mutable.Buffer[DataFrame]()
+    walkFoldLevels(oldStore, newStore, touchedV, srcLabel, edgeLabel,
+      maxHops, srcPred, undirected, walkOld,
+      (i, wPrev, e, dW, dwCnt, s, d) => {
         if (i >= minHops)
-          emitted += walkEmitDelta(wPrev, e,
-            dstOld.select(col("id").as(d)), dW,
+          emitted += twoLevelDelta(wPrev, e,
+            vertexIds(oldStore, dstLabel, dstPred, d), dW,
             dstDelta.select(col("op"), col("__d").as(d)), s, d)
+            .select(col("c0").as("src"), col(d).as("dst"), col("__sign"))
         if (i < maxHops) onWalkDelta(i, dW, dwCnt)
-      }, Some(touchedV))
+      })
     emitted.reduce(_ unionByName _)
-  }
-
-  /** The feed-touched vertex-id set every window brick probes —
-    * computed ONCE per refresh and passed as `sharedTouchedV` to
-    * [[windowVertexDelta]] / [[walkFoldLevels]] / [[reachEdgeDelta]].
-    *
-    * Probe shape (r12): a normal change window is a HANDFUL of ids,
-    * yet the old broadcast-semi-join form paid one broadcast-build
-    * job per consumer query — the job-trace probe (OPTIMIZATION_r13.md,
-    * Retired diagnostics) attributed 52 of a
-    * composed refresh's 76 jobs to broadcast builds, many of them
-    * this frame over and over. [[IdProbe]] collects the set once
-    * (one driver job) when it fits `collectCap` and probes as an
-    * InSet FILTER pushed into each scan — zero per-consumer build
-    * jobs, tighter codegen; an oversized window falls back to the
-    * broadcast semi-join.
-    */
-  private[views] final class IdProbe(val df: DataFrame,
-      ids: Option[Array[Long]]) {
-    /** rows of `x` whose column `on` is in the touched set */
-    def semi(x: DataFrame, on: String): DataFrame = ids match {
-      case Some(a) if a.isEmpty => x.filter(lit(false))
-      case Some(a) => x.filter(col(on).isInCollection(a))
-      case None =>
-        x.join(broadcast(df.select(col("id").as(on))), Seq(on), "left_semi")
-    }
-  }
-
-  private val collectCap = 1 << 16
-
-  /** Wrap a single-column id frame as an [[IdProbe]] — one bounded
-    * collect; oversize sets stay as broadcast semi-joins.
-    */
-  private def idProbe(df: DataFrame): IdProbe = {
-    val head = df.limit(collectCap + 1).collect()
-    new IdProbe(df,
-      if (head.length > collectCap) None
-      else Some(head.map(_.getLong(0))))
-  }
-
-  private def feedTouchedV(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore): IdProbe =
-    idProbe(newStore.changes.filter(col("version") > oldStore.version)
-      .filter(col("op").isin("add_vertex", "remove_vertex",
-        "update_vertex_props"))
-      .select(col("id")).distinct().localCheckpoint(false))
-
-  /** Net ±op membership delta of the `label`-filtered (optionally
-    * predicated) vertex set between two store versions, restricted
-    * to feed-touched ids — the vertex-delta brick every walk/chain
-    * fold uses, extracted (r11) so folds that need several label
-    * deltas share it.
-    */
-  private def windowVertexDelta(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore, label: String,
-      pred: Option[Column], keyName: String,
-      sharedTouchedV: Option[IdProbe] = None): DataFrame = {
-    val touchedV = sharedTouchedV.getOrElse(
-      feedTouchedV(oldStore, newStore))
-    def members(store: graft.graph.GraphStore) =
-      touchedV.semi(store.vertices.filter(
-        pred.foldLeft(col("label") === label)(_ && _)), "id").select("id")
-    val o = members(oldStore)
-    val n = members(newStore)
-    n.join(o, Seq("id"), "left_anti")
-      .select(lit("add").as("op"), col("id").as(keyName))
-      .unionByName(o.join(n, Seq("id"), "left_anti")
-        .select(lit("remove").as("op"), col("id").as(keyName)))
-      .localCheckpoint(false)
   }
 
   /** The counted-pair walk fold shared by [[varLengthViewDelta]] and
@@ -1199,56 +1246,21 @@ object Views {
     * fused with its materialization — r12) (`wPrevOld` is
     * W_{i-1}'s old bag, `e` the old edge relation aliased (s, d)).
     * One edge delta serves every level (all hops share the label);
-    * cascades arrive through the incident scans. `walkOld` substitutes
-    * stored bags for the lazy prefix joins level by level.
+    * cascades arrive through the incident scans. `walkOld(i)` is the
+    * stored bag W_i for every interior level.
     */
-  private def walkFoldLevels(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore, srcLabel: String,
-      edgeLabel: String, maxLevel: Int, srcPred: Option[Column],
-      undirected: Boolean, walkOld: Map[Int, DataFrame],
+  private def walkFoldLevels(oldStore: GraphStore, newStore: GraphStore,
+      touchedV: IdProbe, srcLabel: String, edgeLabel: String,
+      maxLevel: Int, srcPred: Option[Column], undirected: Boolean,
+      walkOld: Map[Int, DataFrame],
       onLevel: (Int, DataFrame, DataFrame, DataFrame, Long, String,
-        String) => Unit,
-      sharedTouchedV: Option[IdProbe] = None): Unit = {
-    val feed = newStore.changes.filter(col("version") > oldStore.version)
-    val touchedV = sharedTouchedV.getOrElse(
-      feedTouchedV(oldStore, newStore))
-    // explicit edge ops + old/new edges incident to touched vertices
-    // (cascades are not spelled out in the feed)
-    val explicitE = feed.filter(
-        col("op").isin("add_edge", "remove_edge", "update_edge_props")
-          && col("elabel") === edgeLabel)
-      .select(col("src"), col("dst")).distinct()
-    def incident(store: graft.graph.GraphStore) = {
-      val e = store.edges.filter(col("label") === edgeLabel)
-      touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
-        .select(col("src"), col("dst"))
-    }
-    val touchedE = lazyCut(explicitE.unionByName(incident(oldStore))
-      .unionByName(incident(newStore)).distinct())
-    def eMembers(store: graft.graph.GraphStore) =
-      store.edges.filter(col("label") === edgeLabel)
-        .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
-        .select("src", "dst")
-    val eo = eMembers(oldStore)
-    val en = eMembers(newStore)
-    def sym(df: DataFrame): DataFrame =
-      if (!undirected) df
-      else df.unionByName(df.select(df.columns.map {
-        case "src" => col("dst").as("src")
-        case "dst" => col("src").as("dst")
-        case c => col(c)
-      }: _*))
-    val eDelta = lazyCut(sym(en.join(eo, Seq("src", "dst"), "left_anti")
-      .select(lit("add").as("op"), col("src"), col("dst"))
-      .unionByName(eo.join(en, Seq("src", "dst"), "left_anti")
-        .select(lit("remove").as("op"), col("src"), col("dst")))))
-    val eOld = sym(oldStore.edges.filter(col("label") === edgeLabel)
-      .select("src", "dst"))
-    var wPrev = oldStore.vertices.filter(
-        srcPred.foldLeft(col("label") === srcLabel)(_ && _))
-      .select(col("id").as("c0"))
+        String) => Unit): Unit = {
+    val eDelta = windowEdgeDelta(oldStore, newStore, edgeLabel, None,
+      undirected, touchedV)
+    val eOld = hopRelation(oldStore, edgeLabel, None, undirected)
+    var wPrev = vertexIds(oldStore, srcLabel, srcPred, "c0")
     var dPrev: DataFrame = windowVertexDelta(oldStore, newStore,
-      srcLabel, srcPred, "c0", Some(touchedV))
+      srcLabel, srcPred, "c0", touchedV)
     for (i <- 1 to maxLevel) {
       val s = s"c${i - 1}"
       val d = s"c$i"
@@ -1264,63 +1276,10 @@ object Views {
         .filter(col("__sign") =!= 0))
       onLevel(i, wPrev, e, dW, dwCnt, s, d)
       if (i < maxLevel) {
-        // stateless fallback pair-compresses too: the lazy bag would
-        // re-enumerate degree^h walk rows at every level and in every
-        // downstream term — the blow-up the counted-pair form removes
-        wPrev = walkOld.getOrElse(i, {
-          val ext = wPrev.join(e, s)
-          val m = if (ext.columns.contains("__mult"))
-            sum("__mult").as("__mult") else count(lit(1)).as("__mult")
-          ext.groupBy(col("c0"), col(d)).agg(m)
-        })
+        wPrev = walkOld(i)
         dPrev = dW
       }
     }
-  }
-
-  /** Emission term of the var-length fold: Δ(W_h ⋈_{d} V_dst) with
-    * the old-side middle term REASSOCIATED (the [[level2Delta]]
-    * move): W_h^old = W_{h-1}^old ⋈ E never materializes on the
-    * probe path — the window-sized E-slice into touched dst vertices
-    * broadcasts into the stored walk scan. ΔW_h arrives netted
-    * (`__sign` counts, magnitude = net walk count), ΔV_dst as ±1 op
-    * rows; returns (src, dst, __sign). Posture note: `eTouched`'s
-    * size is the hop relation's fan-in to the touched dst set — for
-    * an edge base that is per-vertex-degree bounded, so the default
-    * path broadcasts without a measuring action; when the
-    * lower-bounded composition passes the CLOSURE as `eOld`, a
-    * touched hub dst can pull its whole reach-set slice into the
-    * broadcast even while the closure itself is quiet (the recompute
-    * switch one level up only fires on closure churn) — those
-    * callers pass `gateETouched = true`, which spends one count on
-    * the materialized slice and downgrades to a SHUFFLE_HASH join
-    * when it exceeds the session broadcast budget
-    * ([[broadcastRowBudget]]): a skew-safe shuffle instead of a
-    * driver/executor OOM.
-    */
-  private def walkEmitDelta(wPrevOld: DataFrame, eOld: DataFrame,
-      dstOld: DataFrame, dWalk: DataFrame, dDst: DataFrame,
-      s: String, d: String, gateETouched: Boolean = false): DataFrame = {
-    val sA = dWalk.withColumnRenamed("__sign", "__sa")
-    val sV = dDst.withColumn("__sb", validatedSign).drop("op")
-    val t1 = broadcast(sA).join(dstOld.withColumn("__sb", lit(1)), d)
-      .select(col("c0"), col(d), col("__sa"), col("__sb"))
-    val eTouched = {
-      val raw = eOld.join(broadcast(sV), d)
-      if (!gateETouched) broadcast(raw)
-      else {
-        val (eT, eTCnt) = cutCount(raw)
-        if (eTCnt <= broadcastRowBudget(eT)) broadcast(eT)
-        else eT.hint("shuffle_hash")
-      }
-    }
-    val t2 = weighted(wPrevOld, "__sa").join(eTouched, s)
-      .select(col("c0"), col(d), col("__sa"), col("__sb"))
-    val t3 = broadcast(sA).join(sV, d)
-      .select(col("c0"), col(d), col("__sa"), col("__sb"))
-    t1.unionByName(t2).unionByName(t3)
-      .select(col("c0").as("src"), col(d).as("dst"),
-        (col("__sa") * col("__sb")).as("__sign"))
   }
 
   /** Per-level WALK states for a catalog-backed var-length view
@@ -1333,20 +1292,16 @@ object Views {
     * level's bag by one edge join (cumulative — stored lower levels
     * are reused), paid once. Returns (walk bags keyed by level, the
     * fold callback that merges each level's netted delta forward —
-    * skipping the state rewrite when a level's delta is empty).
+    * [[levelStateFold]]).
     */
   private def walkHooks(catalog: ViewCatalog, prefix: String,
-      oldStore: graft.graph.GraphStore, srcLabel: String,
+      oldStore: GraphStore, srcLabel: String,
       edgeLabel: String, maxHops: Int, srcPred: Option[Column],
       undirected: Boolean)
       : (Map[Int, DataFrame], (Int, DataFrame, Long) => Unit) = {
-    val e1 = oldStore.edges.filter(col("label") === edgeLabel)
-      .select("src", "dst")
-    val e = if (!undirected) e1 else e1.unionByName(
-      e1.select(col("dst").as("src"), col("src").as("dst")))
-    var w = oldStore.vertices
-      .filter(srcPred.foldLeft(col("label") === srcLabel)(_ && _))
-      .select(col("id").as("c0"), lit(1L).as("__mult"))
+    val e = hopRelation(oldStore, edgeLabel, None, undirected)
+    var w = vertexIds(oldStore, srcLabel, srcPred, "c0")
+      .withColumn("__mult", lit(1L))
     val oldStates = (1 until maxHops).map { i =>
       val s = s"c${i - 1}"
       val d = s"c$i"
@@ -1356,15 +1311,7 @@ object Views {
           .localCheckpoint())
       i -> w
     }.toMap
-    val fold = (i: Int, dW: DataFrame, dwCnt: Long) => {
-      // the fused level count replaces the old isEmpty action (r12)
-      if (dwCnt > 0) {
-        val s1 = mergeJoinDelta(oldStates(i), dW).localCheckpoint()
-        catalog.put(s"$prefix!w$i", s1)
-      } else if (catalog.dataOf(s"$prefix!w$i").isEmpty)
-        catalog.put(s"$prefix!w$i", oldStates(i)) // persist the bootstrap
-    }
-    (oldStates, fold)
+    (oldStates, levelStateFold(catalog, i => s"$prefix!w$i", oldStates))
   }
 
   /** Bootstrap var-length state: (src, dst, __mult = total walk count
@@ -1376,29 +1323,23 @@ object Views {
     * bootstrap never enumerates degree^h walk tuples — counts are
     * summed where the tuples would have multiplied.
     */
-  def initVarLengthState(store: graft.graph.GraphStore, srcLabel: String,
+  def initVarLengthState(store: GraphStore, srcLabel: String,
       edgeLabel: String, dstLabel: String, minHops: Int, maxHops: Int,
       srcPred: Option[Column] = None,
       dstPred: Option[Column] = None,
       undirected: Boolean = false): DataFrame = {
     requireHops(minHops, maxHops)
-    val e1 = store.edges.filter(col("label") === edgeLabel)
-      .select("src", "dst")
-    val e = if (!undirected) e1
-      else e1.unionByName(e1.select(col("dst").as("src"), col("src").as("dst")))
-    val dstV = store.vertices.filter(
-      dstPred.foldLeft(col("label") === dstLabel)(_ && _))
-    var walk = store.vertices.filter(
-        srcPred.foldLeft(col("label") === srcLabel)(_ && _))
-      .select(col("id").as("c0"), lit(1L).as("__mult"))
-    val emitted = scala.collection.mutable.Buffer[DataFrame]()
+    val e = hopRelation(store, edgeLabel, None, undirected)
+    var walk = vertexIds(store, srcLabel, srcPred, "c0")
+      .withColumn("__mult", lit(1L))
+    val emitted = mutable.Buffer[DataFrame]()
     for (h <- 1 to maxHops) {
       val s = s"c${h - 1}"
       val d = s"c$h"
       walk = walk.join(e.select(col("src").as(s), col("dst").as(d)), s)
         .groupBy(col("c0"), col(d)).agg(sum("__mult").as("__mult"))
       if (h >= minHops)
-        emitted += walk.join(dstV.select(col("id").as(d)), d)
+        emitted += walk.join(vertexIds(store, dstLabel, dstPred, d), d)
           .select(col("c0").as("src"), col(d).as("dst"), col("__mult"))
     }
     emitted.reduce(_ unionByName _)
@@ -1413,20 +1354,21 @@ object Views {
     * counting state that keeps it maintainable.
     */
   def refreshVarLengthPatternView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       minHops: Int, maxHops: Int,
       srcPred: Option[Column] = None,
       dstPred: Option[Column] = None,
       undirected: Boolean = false): DataFrame = {
+    val touchedV = feedTouchedV(oldStore, newStore)
     val state0 = catalog.dataOf(s"$name!state").getOrElse(
       initVarLengthState(oldStore, srcLabel, edgeLabel, dstLabel,
         minHops, maxHops, srcPred, dstPred, undirected))
     val (wOld, wFold) = walkHooks(catalog, name, oldStore,
       srcLabel, edgeLabel, maxHops, srcPred, undirected)
-    val delta = varLengthViewDelta(oldStore, newStore,
+    val delta = varLengthViewDelta(oldStore, newStore, touchedV,
       srcLabel, edgeLabel, dstLabel, minHops, maxHops, srcPred, dstPred,
-      undirected, walkOld = wOld, onWalkDelta = wFold)
+      undirected, wOld, wFold)
     val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
     catalog.put(s"$name!state", state1)
     // state keys are unique by mergeJoinDelta's groupBy, all __mult>0:
@@ -1442,16 +1384,8 @@ object Views {
     * (r9's ledger: "cross-variable WHERE in view definitions").
     *
     * Maintained by TUPLE-level net compare instead of the composed
-    * per-position rule: a tuple's membership depends only on its
-    * edge's existence, both endpoints' label/props, and the edge's
-    * props — so every tuple the window could have flipped has its
-    * edge in the touched-edge set (explicit edge ops + old/new edges
-    * incident to feed-touched vertices, the same incident scan the
-    * chain deltas use), and comparing the predicated MATCH membership
-    * between the two stores restricted to that set yields the exact
-    * signed delta, prop-flip windows included. Bases are scanned with
-    * the touched set broadcast — never shuffled; the MATCH itself
-    * runs only at bootstrap.
+    * per-position rule ([[whereHopMembers]]); the MATCH itself runs
+    * only at bootstrap.
     *
     * `tuplePred` evaluates against the tuple frame, whose props
     * columns are named `srcPropsCol` / `edgePropsCol` / `dstPropsCol`
@@ -1464,7 +1398,7 @@ object Views {
     * views and join downstream.
     */
   def refreshWherePatternView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPropsCol: String, edgePropsCol: String, dstPropsCol: String,
       tuplePred: Column,
@@ -1472,7 +1406,7 @@ object Views {
       dstPred: Option[Column] = None,
       edgePred: Option[Column] = None): DataFrame = {
     val (oldMembers, ops) = whereHopMembers(oldStore, newStore,
-      srcLabel, edgeLabel, dstLabel,
+      feedTouchedV(oldStore, newStore), srcLabel, edgeLabel, dstLabel,
       srcPropsCol, edgePropsCol, dstPropsCol, tuplePred,
       srcPred, dstPred, edgePred)
     val state0 = catalog.dataOf(s"$name!state").getOrElse(
@@ -1480,11 +1414,7 @@ object Views {
         .agg(count(lit(1)).as("__mult")))
     val delta = ops.select(col("src"), col("dst"),
       when(col("op") === "add", lit(1L)).otherwise(lit(-1L)).as("__sign"))
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
-    catalog.put(s"$name!state", state1)
-    val view = finalizeJoin(state1)
-    catalog.put(name, view)
-    view
+    commitJoinState(catalog, name, state0, delta)
   }
 
   /** One WHERE-predicated hop's (full OLD-store member pairs, netted
@@ -1493,54 +1423,35 @@ object Views {
     * maintainer ([[refreshWhereChainView]]). A tuple's membership
     * depends only on its edge's existence, both endpoints'
     * label/props, and the edge's props — so every tuple the window
-    * could have flipped has its edge in the touched set (explicit
-    * edge ops + old/new edges incident to feed-touched vertices),
-    * and the old/new member compare restricted to that set is the
-    * exact delta, prop-flip windows included. The member frame is a
-    * LAZY join of label-filtered base scans (read with the delta
-    * side broadcast wherever the chain algebra consumes it); only
-    * the op rows are materialized.
+    * could have flipped has its edge in the touched-edge set
+    * ([[touchedEdgeKeys]]), and the old/new member compare
+    * restricted to that set is the exact delta, prop-flip windows
+    * included. The member frame is a LAZY join of label-filtered
+    * base scans (read with the delta side broadcast wherever the
+    * chain algebra consumes it); only the op rows are materialized.
     */
   private def whereHopMembers(
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPropsCol: String, edgePropsCol: String, dstPropsCol: String,
       tuplePred: Column, srcPred: Option[Column],
-      dstPred: Option[Column], edgePred: Option[Column],
-      sharedTouchedV: Option[IdProbe] = None)
+      dstPred: Option[Column], edgePred: Option[Column])
       : (DataFrame, DataFrame) = {
-    def members(store: graft.graph.GraphStore): DataFrame =
-      store.vertices.filter(
-          srcPred.foldLeft(col("label") === srcLabel)(_ && _))
-        .select(col("id").as("src"), col("props").as(srcPropsCol))
-        .join(store.edges.filter(
-            edgePred.foldLeft(col("label") === edgeLabel)(_ && _))
-          .select(col("src"), col("dst"), col("props").as(edgePropsCol)),
-          "src")
-        .join(store.vertices.filter(
-            dstPred.foldLeft(col("label") === dstLabel)(_ && _))
-          .select(col("id").as("dst"), col("props").as(dstPropsCol)),
-          "dst")
+    def ends(store: GraphStore, label: String, pred: Option[Column],
+        id: String, props: String) =
+      store.vertices.filter(labeled(label, pred))
+        .select(col("id").as(id), col("props").as(props))
+    def edges(store: GraphStore) =
+      store.edges.filter(labeled(edgeLabel, edgePred))
+        .select(col("src"), col("dst"), col("props").as(edgePropsCol))
+    def members(store: GraphStore): DataFrame =
+      ends(store, srcLabel, srcPred, "src", srcPropsCol)
+        .join(edges(store), "src")
+        .join(ends(store, dstLabel, dstPred, "dst", dstPropsCol), "dst")
         .filter(tuplePred)
         .select("src", "dst")
-    val feed = newStore.changes.filter(col("version") > oldStore.version)
-    // a multi-hop caller computes the touched set ONCE and shares it
-    // across its predicated hops (it is hop-independent)
-    val touchedV = sharedTouchedV.getOrElse(idProbe(lazyCut(feed
-      .filter(col("op").isin("add_vertex", "remove_vertex",
-        "update_vertex_props"))
-      .select(col("id")).distinct())))
-    val explicitE = feed.filter(
-        col("op").isin("add_edge", "remove_edge", "update_edge_props")
-          && col("elabel") === edgeLabel)
-      .select(col("src"), col("dst")).distinct()
-    def incident(store: graft.graph.GraphStore) = {
-      val e = store.edges.filter(col("label") === edgeLabel)
-      touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
-        .select(col("src"), col("dst"))
-    }
-    val touchedE = lazyCut(explicitE.unionByName(incident(oldStore))
-      .unionByName(incident(newStore)).distinct())
+    val touchedE = lazyCut(
+      touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV))
     // restrict the EDGE SCAN first and broadcast the window-sized
     // slice outward — the members(store)-then-semi-join form left
     // Catalyst to re-plan the three-way props-carrying join, and
@@ -1549,29 +1460,18 @@ object Views {
     // the where-chain class's dominant refresh
     // shuffle). Every frame here is scanned once; every join side
     // that crosses is window-sized and hinted.
-    def touchedMembers(store: graft.graph.GraphStore) = {
-      val eT = store.edges.filter(
-          edgePred.foldLeft(col("label") === edgeLabel)(_ && _))
-        .select(col("src"), col("dst"), col("props").as(edgePropsCol))
+    def touchedMembers(store: GraphStore) = {
+      val eT = edges(store)
         .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
-      val withSrc = store.vertices.filter(
-          srcPred.foldLeft(col("label") === srcLabel)(_ && _))
-        .select(col("id").as("src"), col("props").as(srcPropsCol))
+      val withSrc = ends(store, srcLabel, srcPred, "src", srcPropsCol)
         .join(broadcast(eT), "src")
-      store.vertices.filter(
-          dstPred.foldLeft(col("label") === dstLabel)(_ && _))
-        .select(col("id").as("dst"), col("props").as(dstPropsCol))
+      ends(store, dstLabel, dstPred, "dst", dstPropsCol)
         .join(broadcast(withSrc), "dst")
         .filter(tuplePred)
         .select("src", "dst")
     }
-    val o = touchedMembers(oldStore)
-    val n = touchedMembers(newStore)
-    val ops = lazyCut(n.join(o, Seq("src", "dst"), "left_anti")
-      .select(lit("add").as("op"), col("src"), col("dst"))
-      .unionByName(o.join(n, Seq("src", "dst"), "left_anti")
-        .select(lit("remove").as("op"), col("src"), col("dst"))))
-    (members(oldStore), ops)
+    (members(oldStore), lazyCut(netOps(touchedMembers(oldStore),
+      touchedMembers(newStore), Seq("src", "dst"))))
   }
 
   /** Catalog-driven refresh of a CHAIN view whose WHERE decomposes
@@ -1611,7 +1511,7 @@ object Views {
     * (the GQL front door enforces this).
     */
   def refreshWhereChainView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       vertexLabels: Seq[String], edgeLabels: Seq[String],
       vertexPropsCols: Seq[String], edgePropsCols: Seq[String],
       hopPreds: Seq[Option[Column]],
@@ -1623,17 +1523,15 @@ object Views {
         vertexPropsCols.size == vertexLabels.size &&
         edgePropsCols.size == edgeLabels.size,
       "per-hop predicate/props-column seqs must align with the chain")
-    val preds = if (vertexPreds.isEmpty)
-      Seq.fill(vertexLabels.size)(None: Option[Column]) else vertexPreds
-    val epreds = if (edgePreds.isEmpty)
-      Seq.fill(edgeLabels.size)(None: Option[Column]) else edgePreds
-    val sharedTouchedV = feedTouchedV(oldStore, newStore)
+    val (preds, epreds, undir) = chainShape(vertexLabels, edgeLabels,
+      vertexPreds, edgePreds, Nil)
+    val touchedV = feedTouchedV(oldStore, newStore)
     val overrides = hopPreds.zipWithIndex.collect {
       case (Some(p), j) =>
         val (oldMembers, ops) = whereHopMembers(oldStore, newStore,
-          vertexLabels(j), edgeLabels(j), vertexLabels(j + 1),
+          touchedV, vertexLabels(j), edgeLabels(j), vertexLabels(j + 1),
           vertexPropsCols(j), edgePropsCols(j), vertexPropsCols(j + 1),
-          p, preds(j), preds(j + 1), epreds(j), Some(sharedTouchedV))
+          p, preds(j), preds(j + 1), epreds(j))
         val sub = s"$name!wh$j"
         val s0 = catalog.dataOf(sub).getOrElse(
           oldMembers.groupBy("src", "dst")
@@ -1642,28 +1540,10 @@ object Views {
           when(col("op") === "add", lit(1L)).otherwise(lit(-1L))
             .as("__sign"))).localCheckpoint()
         catalog.put(sub, s1)
-        val rOld = finalizeJoin(s0)
-        j -> ((s: String, d: String) => (
-          rOld.select(col("src").as(s), col("dst").as(d)),
-          ops.select(col("op"), col("src").as(s), col("dst").as(d))))
+        j -> pairHop(finalizeJoin(s0), ops)
     }.toMap
-    val bootOverrides = overrides.map { case (j, provider) =>
-      j -> ((s: String, d: String) => provider(s, d)._1)
-    }
-    val undir = Seq.fill(edgeLabels.size)(false)
-    val state0 = catalog.dataOf(s"$name!state").getOrElse(
-      initPatternChainState(oldStore, vertexLabels, edgeLabels,
-        preds, epreds, undir, bootOverrides))
-    val (prefixOld, fold) = chainPrefixHooks(catalog, name, oldStore,
-      vertexLabels, edgeLabels, preds, epreds, undir, bootOverrides)
-    val delta = patternChainViewDelta(oldStore, newStore, vertexLabels,
-      edgeLabels, preds, epreds, undir, overrides,
-      prefixOld = prefixOld, onLevelDelta = fold)
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
-    catalog.put(s"$name!state", state1)
-    val view = finalizeJoin(state1)
-    catalog.put(name, view)
-    view
+    refreshChain(catalog, name, oldStore, newStore, touchedV,
+      vertexLabels, edgeLabels, preds, epreds, undir, overrides)
   }
 
   /** Catalog-driven refresh of a COMPOSED chain view — a MATCH chain
@@ -1678,19 +1558,20 @@ object Views {
     * that sub-state's DISTINCT-pair MEMBERSHIP — the executor's own
     * mid-chain var-length semantics (seeded expansion distincts its
     * (from, to) pairs before the next join). Membership deltas come
-    * from [[stateMembershipOps]] — the netted delta probed into one
-    * state scan; a pair enters when its first walk appears, leaves
-    * when its last walk dies — and the chain folds them through the
-    * signed two-level rule as any edge delta — the algebra is
-    * indifferent to where a hop relation comes from as long as
-    * old + ops = new ([[patternChainViewDelta]]'s hopOverrides).
-    * Endpoint labels/preds are applied both inside the sub-state and
-    * by the chain's vertex joins; double-filtering is algebraically
-    * idempotent (each factor relation stays accurate).
+    * from [[mergeJoinDeltaWithOps]] — the netted delta probed into
+    * one state scan; a pair enters when its first walk appears,
+    * leaves when its last walk dies — and the chain folds them
+    * through the signed two-level rule as any edge delta — the
+    * algebra is indifferent to where a hop relation comes from as
+    * long as old + ops = new ([[patternChainViewDelta]]'s
+    * hopOverrides). Endpoint labels/preds are applied both inside the
+    * sub-state and by the chain's vertex joins; double-filtering is
+    * algebraically idempotent (each factor relation stays accurate).
     *
     * Cost: one counting-sub-state fold per var-length hop (bounded
     * [1, 6] like the standalone form) + the chain fold — all deltas
-    * broadcast, bases scanned never shuffled.
+    * broadcast, bases scanned never shuffled. The touched vertex set
+    * is computed once and shared by every sub-fold and the chain.
     *
     * UNBOUNDED `*1..` segments compose too (r11, closing the r10
     * ledger's last view-shape gap): the segment's relation is the
@@ -1705,7 +1586,7 @@ object Views {
     * (the chain state multiplies only by the OTHER hops' fan-out).
     */
   def refreshComposedChainView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       vertexLabels: Seq[String], edgeLabels: Seq[String],
       ranges: Seq[Option[(Int, Int)]],
       vertexPreds: Seq[Option[Column]] = Nil,
@@ -1723,13 +1604,8 @@ object Views {
       "an unbounded segment composes as *1.. (closure sub-state) or " +
         "*m.. with m in [2, 6] (walk x closure composition — the walk " +
         "factor inherits the bounded family's hop cap)")
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint()
-    val preds = if (vertexPreds.isEmpty)
-      Seq.fill(vertexLabels.size)(None: Option[Column]) else vertexPreds
-    val epreds = if (edgePreds.isEmpty)
-      Seq.fill(edgeLabels.size)(None: Option[Column]) else edgePreds
-    val undir = if (undirectedHops.isEmpty)
-      Seq.fill(edgeLabels.size)(false) else undirectedHops
+    val (preds, epreds, undir) = chainShape(vertexLabels, edgeLabels,
+      vertexPreds, edgePreds, undirectedHops)
     ranges.zipWithIndex.foreach { case (r, j) =>
       require(r.isEmpty || epreds(j).isEmpty,
         "edge props cannot predicate a var-length segment")
@@ -1737,6 +1613,7 @@ object Views {
         "unbounded segments are directed-only (undirected unbounded " +
           "reachability is connected-component membership)")
     }
+    val touchedV = feedTouchedV(oldStore, newStore)
     // fold every var-length hop's sub-state FIRST; its membership
     // delta feeds the chain fold below. Two sub-state kinds: an
     // UNBOUNDED segment keeps the closure (foldReachState under
@@ -1748,64 +1625,39 @@ object Views {
         // ops accumulate from the fold's own DRed/insertion work —
         // no closure-sized anti-join on the refresh path
         val (k0, _, ops) = foldReachState(catalog, s"$name!tc$j",
-          oldStore, newStore, edgeLabels(j),
+          oldStore, newStore, touchedV, edgeLabels(j),
           recomputeRatio = recomputeRatio)
-        j -> ((s: String, dn: String) => (
-          k0.select(col("src").as(s), col("dst").as(dn)),
-          ops.select(col("op"), col("src").as(s), col("dst").as(dn))))
+        j -> pairHop(k0, ops)
       case (Some((mn, Int.MaxValue)), j) =>
         // *m.. (m >= 2): the walk x closure composition sub-state
         // ([[foldLowerBoundedState]]) under `name!lb<j>` — its
         // counting state's membership ops feed the chain like any
         // other sub-state relation
         val (s0, _, ops) = foldLowerBoundedState(catalog, s"$name!lb$j",
-          oldStore, newStore, vertexLabels(j), edgeLabels(j),
+          oldStore, newStore, touchedV, vertexLabels(j), edgeLabels(j),
           vertexLabels(j + 1), mn, preds(j), preds(j + 1),
           recomputeRatio = recomputeRatio)
-        val k0 = s0.select("src", "dst")
-        j -> ((s: String, dn: String) => (
-          k0.select(col("src").as(s), col("dst").as(dn)),
-          ops.select(col("op"), col("src").as(s), col("dst").as(dn))))
+        j -> pairHop(s0, ops)
       case (Some((mn, mx)), j) =>
         val sub = s"$name!vl$j"
-        val s0 = catalog.dataOf(sub).getOrElse(cut(
+        val s0 = catalog.dataOf(sub).getOrElse(
           initVarLengthState(oldStore, vertexLabels(j), edgeLabels(j),
             vertexLabels(j + 1), mn, mx, preds(j), preds(j + 1),
-            undir(j))))
+            undir(j)).localCheckpoint())
         val (wOld, wFold) = walkHooks(catalog, sub, oldStore,
           vertexLabels(j), edgeLabels(j), mx, preds(j), undir(j))
-        val d = lazyCut(varLengthViewDelta(oldStore, newStore,
+        val d = lazyCut(varLengthViewDelta(oldStore, newStore, touchedV,
           vertexLabels(j), edgeLabels(j), vertexLabels(j + 1), mn, mx,
-          preds(j), preds(j + 1), undir(j), walkOld = wOld,
-          onWalkDelta = wFold))
+          preds(j), preds(j + 1), undir(j), wOld, wFold))
         // fused fold: one netted delta + one state scan serve the
         // merge AND the membership ops — the old `new ANTI old`
         // both-ways diff shuffled two walk-state-sized frames
         val (s1Raw, opsRaw) = mergeJoinDeltaWithOps(s0, d)
-        val s1 = s1Raw.localCheckpoint()
-        catalog.put(sub, s1)
-        val k0 = s0.select("src", "dst")
-        val ops = cut(opsRaw)
-        j -> ((s: String, dn: String) => (
-          k0.select(col("src").as(s), col("dst").as(dn)),
-          ops.select(col("op"), col("src").as(s), col("dst").as(dn))))
+        catalog.put(sub, s1Raw.localCheckpoint())
+        j -> pairHop(s0, opsRaw.localCheckpoint())
     }.toMap
-    val bootOverrides = overrides.map { case (j, provider) =>
-      j -> ((s: String, dn: String) => provider(s, dn)._1)
-    }
-    val state0 = catalog.dataOf(s"$name!state").getOrElse(
-      initPatternChainState(oldStore, vertexLabels, edgeLabels,
-        preds, epreds, undir, bootOverrides))
-    val (prefixOld, fold) = chainPrefixHooks(catalog, name, oldStore,
-      vertexLabels, edgeLabels, preds, epreds, undir, bootOverrides)
-    val delta = patternChainViewDelta(oldStore, newStore, vertexLabels,
-      edgeLabels, preds, epreds, undir, overrides,
-      prefixOld = prefixOld, onLevelDelta = fold)
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
-    catalog.put(s"$name!state", state1)
-    val view = finalizeJoin(state1)
-    catalog.put(name, view)
-    view
+    refreshChain(catalog, name, oldStore, newStore, touchedV,
+      vertexLabels, edgeLabels, preds, epreds, undir, overrides)
   }
 
   // ---- V5e: UNBOUNDED reachability views (semi-naive + DRed) ------
@@ -1820,7 +1672,7 @@ object Views {
     * — it is meant for sparse, DAG-ish labeled subgraphs
     * (hierarchies, dependency/feeds graphs), not the social graph.
     */
-  def initReachState(store: graft.graph.GraphStore, edgeLabel: String,
+  def initReachState(store: GraphStore, edgeLabel: String,
       maxRounds: Int = 60): DataFrame = {
     val (e, eCnt) = cutCount(store.edges
       .filter(col("label") === edgeLabel).select("src", "dst"))
@@ -1851,53 +1703,33 @@ object Views {
   }
 
   /** Netted (adds, removes) of the `edgeLabel` edge set between two
-    * store versions, cascades included — the same
-    * feed-touched-incident-membership compare the pattern-view deltas
-    * use, shared here by the reachability refresher.
+    * store versions, cascades included — the touched-edge window and
+    * member scan the pattern-view deltas use, kept as a separate
+    * (adds, removes) pair for the closure and component folds.
     */
-  private def reachEdgeDelta(oldStore: graft.graph.GraphStore,
-      newStore: graft.graph.GraphStore,
-      edgeLabel: String,
-      sharedTouchedV: Option[IdProbe] = None): (DataFrame, DataFrame) = {
-    val feed = newStore.changes.filter(col("version") > oldStore.version)
-    val touchedV = sharedTouchedV.getOrElse(
-      feedTouchedV(oldStore, newStore))
-    val explicitE = feed.filter(
-        col("op").isin("add_edge", "remove_edge", "update_edge_props")
-          && col("elabel") === edgeLabel)
-      .select(col("src"), col("dst")).distinct()
-    def incident(store: graft.graph.GraphStore) = {
-      val e = store.edges.filter(col("label") === edgeLabel)
-      touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
-        .select(col("src"), col("dst"))
-    }
+  private def reachEdgeDelta(oldStore: GraphStore, newStore: GraphStore,
+      edgeLabel: String, touchedV: IdProbe): (DataFrame, DataFrame) = {
     // the touched-edge frame stays an EAGER checkpoint — it feeds
     // two broadcast builds, which collect on the driver outside any
     // counted consumer job. The returned add/remove frames are lazy:
     // the fold's first count on each IS its materialization (one
     // job, not two).
-    val touchedE = explicitE.unionByName(incident(oldStore))
-      .unionByName(incident(newStore)).distinct().localCheckpoint()
-    def eMembers(store: graft.graph.GraphStore) =
-      store.edges.filter(col("label") === edgeLabel)
-        .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
-        .select("src", "dst")
-    val eo = eMembers(oldStore)
-    val en = eMembers(newStore)
+    val touchedE = touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV)
+      .localCheckpoint()
+    val eo = edgeMembers(oldStore, edgeLabel, None, touchedE)
+    val en = edgeMembers(newStore, edgeLabel, None, touchedE)
     (lazyCut(en.join(eo, Seq("src", "dst"), "left_anti")),
       lazyCut(eo.join(en, Seq("src", "dst"), "left_anti")))
   }
 
-  private def serveReach(store: graft.graph.GraphStore, state: DataFrame,
+  private def serveReach(store: GraphStore, state: DataFrame,
       srcLabel: String, dstLabel: String, srcPred: Option[Column],
-      dstPred: Option[Column]): DataFrame = {
-    def vSet(label: String, pred: Option[Column], as: String) =
-      store.vertices.filter(pred.foldLeft(col("label") === label)(_ && _))
-        .select(col("id").as(as))
-    state.join(vSet(srcLabel, srcPred, "src"), Seq("src"), "left_semi")
-      .join(vSet(dstLabel, dstPred, "dst"), Seq("dst"), "left_semi")
+      dstPred: Option[Column]): DataFrame =
+    state.join(vertexIds(store, srcLabel, srcPred, "src"), Seq("src"),
+        "left_semi")
+      .join(vertexIds(store, dstLabel, dstPred, "dst"), Seq("dst"),
+        "left_semi")
       .select("src", "dst")
-  }
 
   /** Catalog-driven refresh of an UNBOUNDED reachability view
     * `(a:srcLabel)-[:edgeLabel*1..]->(b:dstLabel)` — the one view
@@ -1934,7 +1766,8 @@ object Views {
     *    point, and on a small view it could exceed the whole state.
     *
     * `rederiveCap` keeps only its BROADCAST-licensing role: frames
-    * counted at or below it may hash-broadcast inside the rounds.
+    * counted at or below it may hash-broadcast inside the rounds,
+    * within the session byte budget ([[hintIfFits]]).
     *
     * State under `name!state` is the label-free closure; endpoint
     * labels/predicates are SERVE-time semi-joins against the current
@@ -1942,14 +1775,14 @@ object Views {
     * closure). Served rows under `name`: distinct (src, dst).
     */
   def refreshReachabilityView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1, _) = foldReachState(catalog, s"$name!state",
-      oldStore, newStore, edgeLabel, rederiveCap, maxRounds,
-      recomputeRatio, needOps = false)
+      oldStore, newStore, feedTouchedV(oldStore, newStore), edgeLabel,
+      rederiveCap, maxRounds, recomputeRatio, needOps = false)
     val view = serveReach(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)
@@ -1988,16 +1821,14 @@ object Views {
     */
   private[views] def foldReachState(catalog: ViewCatalog,
       stateKey: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       edgeLabel: String,
       rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3,
-      sharedTouchedV: Option[IdProbe] = None,
       needOps: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint()
     def hinted(df: DataFrame, cnt: Long): DataFrame =
-      if (cnt <= rederiveCap) broadcast(df) else df
+      hintIfFits(df, cnt, rederiveCap)
     val keys = Seq("src", "dst")
     // CORE + TAIL state layout (r12): the closure lives as a
     // hash-partitioned, pair-sorted CORE carried across refreshes
@@ -2034,7 +1865,7 @@ object Views {
     }
     val s0 = core0.unionByName(tail0)
     val (eAdd, eRem) = reachEdgeDelta(oldStore, newStore, edgeLabel,
-      sharedTouchedV)
+      touchedV)
     // `needOps = false` callers (standalone reachability refresh)
     // discard the ±op frame, so the recompute fallback must not pay
     // its both-ways closure-sized state-diff anti-join for them —
@@ -2054,7 +1885,7 @@ object Views {
         else if (tailBound > rederiveCap || tailBound * 4 > coreCnt) {
           val (c, n) = partitionedCkpt(core.unionByName(tail), keys)
           (c, tail.limit(0).localCheckpoint(), n)
-        } else (core, cut(tail), coreCnt)
+        } else (core, tail.localCheckpoint(), coreCnt)
       val state = coreF.unionByName(tailF)
       catalog.put(s"$stateKey!core", coreF)
       catalog.put(s"$stateKey!tail", tailF)
@@ -2064,13 +1895,8 @@ object Views {
       // two checkpoints just stored
       catalog.put(stateKey, state, persist = false)
       val o = ops.getOrElse {
-        if (!needOps)
-          s0.limit(0).withColumn("op", lit("add"))
-        else cut(
-          state.join(s0, keys, "left_anti")
-            .withColumn("op", lit("add"))
-            .unionByName(s0.join(state, keys, "left_anti")
-              .withColumn("op", lit("remove"))))
+        if (!needOps) s0.limit(0).withColumn("op", lit("add"))
+        else netOps(s0, state, keys).localCheckpoint()
       }
       (s0, state, o)
     }
@@ -2273,7 +2099,7 @@ object Views {
     * (`prefix!tc`). Both factors' deltas fall out of their own folds
     * (ΔW netted pair counts; ΔTC ops from DRed/insertion work), and
     * the three-relation delta Δ(W ⋈ TC ⋈ V_dst) composes the same
-    * two-level rule as a bounded emission — [[walkEmitDelta]] with
+    * two-level rule as a bounded emission — [[twoLevelDelta]] with
     * the closure as the "edge" relation, so every big frame is a
     * stored scan and every crossing side is window-sized. Counting
     * keeps deletion exact: a pair leaves only when its last
@@ -2293,7 +2119,7 @@ object Views {
     */
   private[views] def foldLowerBoundedState(catalog: ViewCatalog,
       prefix: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       minHops: Int,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
@@ -2306,30 +2132,26 @@ object Views {
         "(refreshReachabilityView), and the walk factor inherits the " +
         "bounded family's [1, 6] hop discipline")
     val lvl = minHops - 1
-    def cut(df: DataFrame): DataFrame = df.localCheckpoint()
-    val touchedV = feedTouchedV(oldStore, newStore)
     // (delta-path frames below are LAZY cuts — each materializes
     // inside the state fold's own counted job; see cutCount's doc)
     val (tc0, tc1, tcOps) = foldReachState(catalog, s"$prefix!tc",
-      oldStore, newStore, edgeLabel, rederiveCap, maxRounds,
-      recomputeRatio, Some(touchedV))
+      oldStore, newStore, touchedV, edgeLabel, rederiveCap, maxRounds,
+      recomputeRatio)
     val (wOld, wFold) = walkHooks(catalog, prefix, oldStore,
       srcLabel, edgeLabel, lvl + 1, srcPred, undirected = false)
     var dWL: DataFrame = null
-    walkFoldLevels(oldStore, newStore, srcLabel, edgeLabel, lvl,
+    walkFoldLevels(oldStore, newStore, touchedV, srcLabel, edgeLabel, lvl,
       srcPred, undirected = false, wOld, (i, _, _, dW, dwCnt, _, _) => {
         wFold(i, dW, dwCnt)
         if (i == lvl) dWL = dW
-      }, Some(touchedV))
+      })
     val x = "__x"
     val b = "__b"
-    def dstV(store: graft.graph.GraphStore) = store.vertices.filter(
-        dstPred.foldLeft(col("label") === dstLabel)(_ && _))
-      .select(col("id").as(b))
+    def dstV(store: GraphStore) = vertexIds(store, dstLabel, dstPred, b)
     def composed(walk: DataFrame, tc: DataFrame, dst: DataFrame) =
-      cut(walk.join(tc, x).join(dst, b)
+      walk.join(tc, x).join(dst, b)
         .groupBy(col("c0").as("src"), col(b).as("dst"))
-        .agg(sum("__mult").as("__mult")))
+        .agg(sum("__mult").as("__mult")).localCheckpoint()
     val wl = wOld(lvl).select(col("c0"), col(s"c$lvl").as(x), col("__mult"))
     val tcRel = tc0.select(col("src").as(x), col("dst").as(b))
     val state0 = catalog.dataOf(s"$prefix!state").getOrElse(
@@ -2342,12 +2164,8 @@ object Views {
         .select(col("c0"), col(s"c$lvl").as(x), col("__mult"))
       val state1 = composed(wlNew,
         tc1.select(col("src").as(x), col("dst").as(b)), dstV(newStore))
-      val k0 = state0.select("src", "dst")
-      val k1 = state1.select("src", "dst")
-      val ops = cut(k1.join(k0, Seq("src", "dst"), "left_anti")
-        .select(col("src"), col("dst"), lit("add").as("op"))
-        .unionByName(k0.join(k1, Seq("src", "dst"), "left_anti")
-          .select(col("src"), col("dst"), lit("remove").as("op"))))
+      val ops = netOps(state0.select("src", "dst"),
+        state1.select("src", "dst"), Seq("src", "dst")).localCheckpoint()
       catalog.put(s"$prefix!state", state1)
       return (state0, state1, ops)
     }
@@ -2359,9 +2177,10 @@ object Views {
       .agg(sum("__sign").as("__sign"))
       .filter(col("__sign") =!= 0))
     val dstDelta = windowVertexDelta(oldStore, newStore, dstLabel,
-      dstPred, "__d", Some(touchedV)).select(col("op"), col("__d").as(b))
-    val delta = lazyCut(walkEmitDelta(wl, tcRel, dstV(oldStore), dJ,
-      dstDelta, x, b, gateETouched = true))
+      dstPred, b, touchedV)
+    val delta = lazyCut(twoLevelDelta(wl, tcRel, dstV(oldStore), dJ,
+      dstDelta, x, b, gateETouched = true)
+      .select(col("c0").as("src"), col(b).as("dst"), col("__sign")))
     val (s1Raw, opsRaw) = mergeJoinDeltaWithOps(state0, delta)
     // the state stays an EAGER checkpoint (put-boundary contract) —
     // its job also materializes the fold's lazy `touched`/`matched`
@@ -2377,15 +2196,16 @@ object Views {
     * counting state (state keys are unique, all __mult > 0).
     */
   def refreshLowerBoundedReachView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       minHops: Int,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, state1, _) = foldLowerBoundedState(catalog, name,
-      oldStore, newStore, srcLabel, edgeLabel, dstLabel, minHops,
-      srcPred, dstPred, rederiveCap, maxRounds, recomputeRatio)
+      oldStore, newStore, feedTouchedV(oldStore, newStore), srcLabel,
+      edgeLabel, dstLabel, minHops, srcPred, dstPred, rederiveCap,
+      maxRounds, recomputeRatio)
     val view = state1.select("src", "dst")
     catalog.put(name, view)
     view
@@ -2416,8 +2236,7 @@ object Views {
     */
   private def ccLabels(edges: DataFrame, maxRounds: Int,
       hintSmall: Boolean = false): DataFrame = {
-    val sym0 = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val sym0 = symmetrize(edges.select("src", "dst"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
     val sym = if (hintSmall) broadcast(sym0) else sym0
     var lbl = edges.select(col("src").as("id"))
@@ -2459,7 +2278,7 @@ object Views {
     * edge, comp = the component's minimum vertex id (deterministic,
     * stable across refreshes that do not change the component).
     */
-  def initCcState(store: graft.graph.GraphStore, edgeLabel: String,
+  def initCcState(store: GraphStore, edgeLabel: String,
       maxRounds: Int = 60): DataFrame =
     ccLabels(store.edges.filter(col("label") === edgeLabel)
       .select("src", "dst"), maxRounds)
@@ -2490,17 +2309,15 @@ object Views {
     * at or below it may hash-broadcast inside the fold.
     */
   private[views] def foldCcState(catalog: ViewCatalog, stateKey: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       edgeLabel: String, rederiveCap: Long = 1L << 20,
       maxRounds: Int = 60, recomputeRatio: Double = 0.3)
       : (DataFrame, DataFrame) = {
     // broadcast license: row count against min(policy cap, the BYTE
     // budget for this frame's row shape) — r12 verdict #6: a row
-    // count alone is row-width blind; fitsBudget derives
-    // rows-from-bytes off autoBroadcastJoinThreshold exactly as
-    // mergeJoinDelta already does
+    // count alone is row-width blind
     def hinted(df: DataFrame, cnt: Long): DataFrame =
-      if (fitsBudget(df, cnt, rederiveCap)) broadcast(df) else df
+      hintIfFits(df, cnt, rederiveCap)
     val s0 = catalog.dataOf(stateKey).getOrElse(
       initCcState(oldStore, edgeLabel, maxRounds))
     // the state's cardinality is journal-covered catalog meta carried
@@ -2509,7 +2326,8 @@ object Views {
     // — the exact defect class the r12 review fixed via `!coreCnt` in
     // foldReachState); a fresh or reloaded catalog recounts once
     var stateCnt = catalog.metaOf(s"$stateKey!ccCnt").getOrElse(s0.count())
-    val (eAdd, eRem) = reachEdgeDelta(oldStore, newStore, edgeLabel)
+    val (eAdd, eRem) = reachEdgeDelta(oldStore, newStore, edgeLabel,
+      touchedV)
     def finish(s1: DataFrame): (DataFrame, DataFrame) = {
       catalog.put(stateKey, s1)
       catalog.putMeta(s"$stateKey!ccCnt", stateCnt)
@@ -2598,15 +2416,14 @@ object Views {
     * same-component pairs, so that is the answer's own cardinality,
     * not maintenance state (the state stays O(V)).
     */
-  private def serveCcPairs(store: graft.graph.GraphStore,
+  private def serveCcPairs(store: GraphStore,
       state: DataFrame, srcLabel: String, dstLabel: String,
       srcPred: Option[Column], dstPred: Option[Column]): DataFrame = {
-    def vSet(label: String, pred: Option[Column]) =
-      store.vertices.filter(pred.foldLeft(col("label") === label)(_ && _))
-        .select("id")
-    val a = state.join(vSet(srcLabel, srcPred), Seq("id"), "left_semi")
+    val a = state.join(vertexIds(store, srcLabel, srcPred, "id"),
+        Seq("id"), "left_semi")
       .select(col("id").as("src"), col("comp"))
-    val b = state.join(vSet(dstLabel, dstPred), Seq("id"), "left_semi")
+    val b = state.join(vertexIds(store, dstLabel, dstPred, "id"),
+        Seq("id"), "left_semi")
       .select(col("id").as("dst"), col("comp"))
     a.join(b, "comp").select("src", "dst")
   }
@@ -2629,13 +2446,14 @@ object Views {
     * included, exactly the executor's orientation-union expansion.
     */
   def refreshUndirectedReachView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1) = foldCcState(catalog, s"$name!cc", oldStore, newStore,
-      edgeLabel, rederiveCap, maxRounds, recomputeRatio)
+      feedTouchedV(oldStore, newStore), edgeLabel, rederiveCap,
+      maxRounds, recomputeRatio)
     val view = serveCcPairs(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)
@@ -2653,29 +2471,24 @@ object Views {
     * the next refresh folds into).
     */
   def refreshPatternView(catalog: ViewCatalog, name: String,
-      oldStore: graft.graph.GraphStore, newStore: graft.graph.GraphStore,
+      oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPred: Option[Column] = None,
       dstPred: Option[Column] = None,
       edgePred: Option[Column] = None,
       undirected: Boolean = false): DataFrame = {
-    val state0 = catalog.dataOf(s"$name!state").getOrElse(
-      initPatternState(oldStore, srcLabel, edgeLabel, dstLabel,
-        srcPred, dstPred, edgePred, undirected))
-    val delta = patternViewDelta(oldStore, newStore,
-      srcLabel, edgeLabel, dstLabel, srcPred, dstPred, edgePred,
-      undirected)
-    // a refresh MATERIALIZES its state (localCheckpoint — eager,
-    // lineage-cut): the state IS the view, and leaving it lazy makes
-    // refresh chains compose every prior round's delta plan into one
-    // nest the analyzer re-walks per action (measured 51 s → ~2 s for
-    // a two-round chain at sf0.1, almost all of it driver-side
-    // planning). Same discipline as GraphStore.truncated().
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
-    catalog.put(s"$name!state", state1)
-    val view = finalizeJoin(state1)
-    catalog.put(name, view)
-    view
+    // the k = 1 chain, served and stored as (src, dst)
+    def pairs(df: DataFrame) =
+      df.withColumnRenamed("c0", "src").withColumnRenamed("c1", "dst")
+    val labels = Seq(srcLabel, dstLabel)
+    val preds = Seq(srcPred, dstPred)
+    val state0 = catalog.dataOf(s"$name!state").getOrElse(pairs(
+      initPatternChainState(oldStore, labels, Seq(edgeLabel), preds,
+        Seq(edgePred), Seq(undirected), Map.empty)))
+    val delta = pairs(patternChainViewDelta(oldStore, newStore,
+      feedTouchedV(oldStore, newStore), labels, Seq(edgeLabel), preds,
+      Seq(edgePred), Seq(undirected)))
+    commitJoinState(catalog, name, state0, delta)
   }
 
   /** G2/V5 analytics refresh: maintain a PageRank view through the

@@ -2419,6 +2419,104 @@ class StreamViewsSpec extends SparkSpec {
     assert(rows(r3).contains((1L, 4L, 11L)), "1→3→4 walk reaches owns 4→11")
   }
 
+  test("view refresh job counts: a warm refresh of the single-hop, " +
+    "WHERE-hop, 2-hop chain and composed classes stays within its " +
+    "measured job budget") {
+    import spark.implicits._
+    import graft.graph.GraphStore
+    import graft.graph.GraphStore.propsMap
+    import graft.gql.GqlViews
+    val base = GraphStore.fromTuples(spark,
+      Seq((1L, "A", Seq("w" -> 2)), (2L, "A", Seq("w" -> 0)),
+        (3L, "A", Seq("w" -> 1)), (10L, "B", Seq("w" -> 1)),
+        (11L, "B", Seq("w" -> 0))),
+      Seq((1L, 10L, "x", Seq("m" -> 1)), (2L, 10L, "x", Seq("m" -> 0)),
+        (3L, 11L, "x", Seq("m" -> 1)), (10L, 2L, "y", Nil),
+        (11L, 3L, "y", Nil), (1L, 2L, "y", Nil), (2L, 3L, "y", Nil)))
+    // one mixed window: a vertex cascade, an edge add, a prop flip
+    val m1 = base.removeVertices(Seq(3L).toDF("id"))
+      .addEdges(Seq((1L, 11L, "x")).toDF("src", "dst", "label")
+        .withColumn("props", propsMap("m" -> 0)))
+      .updateVertexProps(Seq(2L).toDF("id")
+        .withColumn("props", propsMap("w" -> 3)))
+    // budgets are the counts measured on this fixture; a change
+    // that adds a job to a refresh fails here
+    val budgets = Seq(
+      ("hop", "MATCH (a:A)-[:x]->(b:B)", 28),
+      ("where_hop", "MATCH (a:A)-[e:x]->(b:B) WHERE a.w >= b.w", 28),
+      ("chain", "MATCH (a:A)-[:x]->(b:B)-[:y]->(c:A)", 52),
+      ("composed", "MATCH (a:A)-[:y*1..2]->(b:A)-[:x]->(c:B)", 91))
+    val cat = new Views.ViewCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft_jobs_cat").toString)
+    val sc = spark.sparkContext
+    val counts = budgets.map { case (name, gql, _) =>
+      GqlViews.register(cat, name, gql)
+      GqlViews.refresh(cat, name, base, base) // bootstrap: not counted
+      val group = s"refresh-jobs-$name-${System.nanoTime()}"
+      sc.setJobGroup(group, s"warm refresh of $name", false)
+      try GqlViews.refresh(cat, name, base, m1)
+      finally sc.clearJobGroup()
+      org.apache.spark.graft.SparkTestAccess.flushListenerBus(sc)
+      name -> sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    info(counts.map { case (n, c) => s"$n=$c" }.mkString(" "))
+    budgets.zip(counts).foreach { case ((name, _, bound), (_, n)) =>
+      assert(n <= bound, s"$name: $n jobs per warm refresh, budget $bound")
+    }
+  }
+
+  test("reach fold broadcast license: frames past the session byte " +
+    "budget stay unhinted, and an over-budget removal wavefront still " +
+    "equals recompute") {
+    import spark.implicits._
+    import graft.graph.GraphStore
+    def tc(edges: Set[(Long, Long)]): Set[(Long, Long)] = {
+      var r = edges
+      var changed = true
+      while (changed) {
+        val r2 = r ++ (for ((a, x) <- r; (y, b) <- r if x == y) yield (a, b))
+        changed = r2.size != r.size
+        r = r2
+      }
+      r
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("src", "dst").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1kb")
+    try {
+      // 1 KB over a 16-byte (src, dst) row: 64 rows fit, whatever the
+      // caller's row ceiling
+      val pair = Seq((1L, 2L)).toDF("src", "dst")
+      def hinted(rows: Long) = Views.hintIfFits(pair, rows, 1L << 20)
+        .queryExecution.logical.toString.contains("broadcast")
+      assert(hinted(64L) && !hinted(65L))
+      val noProps = lit(null).cast(graft.model.PropValue.mapType)
+      val base = GraphStore.fromTuples(spark,
+        (0L to 29L).map(i => (i, "N", Seq.empty[(String, Any)])), Nil)
+      val chain = (0L until 29L).map(i => (i, i + 1)).toSet
+      val m1 = base.addEdges(chain.toSeq.map { case (a, b) => (a, b, "dep") }
+        .toDF("src", "dst", "label").withColumn("props", noProps))
+      // cutting 14→15 puts 15·15 = 225 closure pairs on the removal
+      // wavefront (past the 64-row budget); the 13→16 bypass
+      // re-derives most of them round by round. recomputeRatio = ∞
+      // keeps the fold on the DRed path.
+      val m2 = m1.removeEdges(Seq((14L, 15L, "dep")).toDF("src", "dst", "label"))
+        .addEdges(Seq((13L, 16L, "dep")).toDF("src", "dst", "label")
+          .withColumn("props", noProps))
+      val cat = new Views.ViewCatalog(spark,
+        java.nio.file.Files.createTempDirectory("graft_tc_budget").toString)
+      val r1 = Views.refreshReachabilityView(cat, "tcb", base, m1,
+        "N", "dep", "N", recomputeRatio = Double.MaxValue)
+      assert(rows(r1) == tc(chain))
+      val r2 = Views.refreshReachabilityView(cat, "tcb", m1, m2,
+        "N", "dep", "N", recomputeRatio = Double.MaxValue)
+      assert(rows(r2) == tc(chain - ((14L, 15L)) + ((13L, 16L))))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("refresh policies: needsRefresh semantics") {
     assert(FixedInterval(1000).needsRefresh(0, 1500, dirty = false))
     assert(!FixedInterval(1000).needsRefresh(1000, 1500, dirty = true))
