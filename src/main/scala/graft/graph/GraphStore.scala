@@ -23,6 +23,12 @@ import java.util.concurrent.ConcurrentHashMap
   * and carry a monotonically increasing version. Each mutation also
   * appends rows to a change feed (FIXTURES §4 schema) that drives
   * incremental view maintenance.
+  *
+  * Property updates keep the store's partitioning: a small update
+  * frame broadcasts into one left-outer join over the base scan, so
+  * a stream of update batches does not grow the partition count (and
+  * with it every later scan's task count). Vertex/edge additions
+  * still append the batch frame's partitions.
   */
 final class GraphStore(
     val vertices: DataFrame,
@@ -156,9 +162,7 @@ final class GraphStore(
   def updateVertexProps(rows: DataFrame): GraphStore = {
     val upd = rows.select(col("id"), col("props").as("__newProps"))
     val matched = vertices.join(upd, Seq("id"))
-    val newV = vertices.join(upd.select("id"), Seq("id"), "left_anti")
-      .unionByName(matched.select(col("id"), col("label"),
-        col("__newProps").as("props")))
+    val newV = replaceProps(vertices, upd, Seq("id"))
     val ch = matched.select(
       lit("update_vertex_props").as("op"), col("id"),
       lit(null).cast(LongType).as("src"), lit(null).cast(LongType).as("dst"),
@@ -178,10 +182,7 @@ final class GraphStore(
     val upd = rows.select(col("src"), col("dst"), col("label"),
       col("props").as("__newProps"))
     val matched = edges.join(upd, Seq("src", "dst", "label"))
-    val newE = edges.join(upd.select("src", "dst", "label"),
-        Seq("src", "dst", "label"), "left_anti")
-      .unionByName(matched.select(col("src"), col("dst"), col("label"),
-        col("__newProps").as("props")))
+    val newE = replaceProps(edges, upd, Seq("src", "dst", "label"))
     val ch = matched.select(
       lit("update_edge_props").as("op"), lit(null).cast(LongType).as("id"),
       col("src"), col("dst"), col("label").as("elabel"),
@@ -190,6 +191,23 @@ final class GraphStore(
       lit(version + 1).as("version"))
     new GraphStore(vertices, newE, changes.unionByName(ch), version + 1)
   }
+
+  /** `base` with the props of rows matching `upd` (keys, __newProps)
+    * REPLACED — null maps included; a key listed twice yields two
+    * rows, an absent key nothing. One left-outer join with a hit
+    * marker: a small `upd` broadcasts and the result keeps `base`'s
+    * partitions, where a union with the matched rows would append the
+    * join's partitions on every update batch.
+    */
+  private def replaceProps(base: DataFrame, upd: DataFrame,
+      keys: Seq[String]): DataFrame =
+    base.join(upd.withColumn("__hit", lit(true)), keys, "left_outer")
+      .select(base.columns.map {
+        case "props" =>
+          when(col("__hit"), col("__newProps")).otherwise(col("props"))
+            .as("props")
+        case c => col(c)
+      }: _*)
 
   def maxVertexId(): Long =
     vertices.agg(coalesce(max("id"), lit(0L))).head().getLong(0)

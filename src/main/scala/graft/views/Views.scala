@@ -24,7 +24,9 @@ object Views {
   // Every `refresh*View` entry computes the feed-touched vertex set
   // once (feedTouchedV) and passes it to each of its sub-folds. The
   // change-window bricks, each written once:
-  //   netOps             n ANTI o → add, o ANTI n → remove (uncut)
+  //   netOps             n ANTI o → add, o ANTI n → remove as ONE
+  //                      exchange: side-tagged union, one group-by
+  //                      with per-side counts (netTagged; uncut)
   //   windowVertexDelta  one label's vertex ±ops (lazy cut)
   //   touchedEdgeKeys    edge keys the window could change (uncut)
   //   edgeMembers        edge scan restricted to those keys (uncut)
@@ -40,7 +42,9 @@ object Views {
   //     refreshChain; lazy window frames, counted level cuts, eager
   //     prefix and chain states.
   //   refreshWherePatternView — whereHopMembers (touchedEdgeKeys,
-  //     netOps), lazy touched keys and ops; eager state.
+  //     netTagged): old and new touched members as ONE side-tagged
+  //     frame, each broadcast build serving both; lazy touched keys
+  //     and ops; eager state.
   //   refreshWhereChainView — whereHopMembers per hop (eager !wh<j>)
   //     feeding refreshChain.
   //   refreshVarLengthPatternView — walkFoldLevels (windowEdgeDelta,
@@ -432,12 +436,16 @@ object Views {
       rel.withColumn(signCol, col("__mult").cast("long")).drop("__mult")
     else rel.withColumn(signCol, lit(1L))
 
-  /** LAZY localCheckpoint + count fused into ONE driver job (r12
+  /** LAZY localCheckpoint + count fused into ONE count job (r12
     * verdict #4): the family's eager checkpoint-then-count idiom paid
     * two scheduler round-trips per fixpoint round — the checkpoint
     * job materialized the frame, then the count re-read it. The first
     * action on a lazily-marked checkpoint materializes it, so the
-    * count IS the materialization. On a real cluster each saved job
+    * count IS the materialization. What runs under AQE: creating the
+    * checkpoint plans the frame adaptively, which already runs its
+    * shuffle-map (and broadcast) stages as their own jobs; the count
+    * of the checkpoint's RDD ([[rowCount]]) is then the one job of
+    * the final stage. On a real cluster each saved job
     * is a driver→executor round-trip; at view-catalog scale (hundreds
     * of views per batch) the job count is the refresh latency floor.
     *
@@ -451,8 +459,16 @@ object Views {
     */
   private def cutCount(df: DataFrame): (DataFrame, Long) = {
     val c = df.localCheckpoint(false)
-    (c, c.count())
+    (c, rowCount(c))
   }
+
+  /** Rows of a lazily checkpointed frame in ONE job that also
+    * materializes its blocks: a count of the checkpoint's RDD.
+    * `Dataset.count` would plan an aggregate with its own shuffle
+    * stage over the scan — under AQE a second job.
+    */
+  private def rowCount(ckpt: DataFrame): Long =
+    ckpt.queryExecution.toRdd.count()
 
   private def lazyCut(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
@@ -503,7 +519,7 @@ object Views {
         .sortWithinPartitions(keyCols.map(col): _*)
         .localCheckpoint(false)
     }
-    (c, c.count())
+    (c, rowCount(c))
   }
 
   /** Lazy checkpoint of a frame DERIVED from a partitioned core by
@@ -711,14 +727,43 @@ object Views {
       .select(col("src").as(s), col("dst").as(d))
   }
 
-  /** Net membership ops between two key frames: `n ANTI o` → add,
-    * `o ANTI n` → remove, as (keys…, op). Uncut.
+  /** Net membership ops between two key frames, as (keys…, op): the
+    * bag `n ANTI o` → add, `o ANTI n` → remove, duplicates included.
+    * Contract: both frames are KEY-ONLY (exactly `keys`) with non-null
+    * keys — every caller's shape; a null key would net here where the
+    * anti-joins never match it. Uncut.
+    *
+    * One exchange (the Z-set difference as a signed union and one
+    * group-by): the side-tagged union of `o` and `n`, grouped on the
+    * keys with per-side counts ([[netTagged]]), so each input is
+    * computed once; an anti-join pair would compute each twice and
+    * build or shuffle both sides of both joins.
     */
-  private def netOps(o: DataFrame, n: DataFrame, keys: Seq[String])
+  private[graft] def netOps(o: DataFrame, n: DataFrame, keys: Seq[String])
       : DataFrame =
-    n.join(o, keys, "left_anti").withColumn("op", lit("add"))
-      .unionByName(o.join(n, keys, "left_anti")
-        .withColumn("op", lit("remove")))
+    netTagged(sideTagged(o, n), keys)
+
+  /** `o` ∪ `n` tagged by side: `__new` is 0 on old-side rows and 1 on
+    * new-side rows.
+    */
+  private def sideTagged(o: DataFrame, n: DataFrame): DataFrame =
+    o.withColumn("__new", lit(0L)).unionByName(n.withColumn("__new", lit(1L)))
+
+  /** [[netOps]] over one [[sideTagged]] frame (keys…, __new): a key
+    * present on one side only emits that side's count of rows — `add`
+    * for new, `remove` for old.
+    */
+  private def netTagged(tagged: DataFrame, keys: Seq[String])
+      : DataFrame = {
+    val ks = keys.map(col)
+    tagged.groupBy(ks: _*)
+      .agg(sum(lit(1L) - col("__new")).as("__o"), sum("__new").as("__n"))
+      .filter(col("__o") === 0 || col("__n") === 0)
+      .select(ks ++ Seq(
+        when(col("__o") === 0, lit("add")).otherwise(lit("remove")).as("op"),
+        explode(sequence(lit(1L), col("__o") + col("__n"))).as("__i")): _*)
+      .drop("__i")
+  }
 
   /** The feed-touched vertex-id set every window brick probes —
     * computed ONCE per refresh by each `refresh*View` entry and
@@ -1460,18 +1505,20 @@ object Views {
     // the where-chain class's dominant refresh
     // shuffle). Every frame here is scanned once; every join side
     // that crosses is window-sized and hinted.
-    def touchedMembers(store: GraphStore) = {
-      val eT = edges(store)
-        .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
-      val withSrc = ends(store, srcLabel, srcPred, "src", srcPropsCol)
-        .join(broadcast(eT), "src")
-      ends(store, dstLabel, dstPred, "dst", dstPropsCol)
-        .join(broadcast(withSrc), "dst")
-        .filter(tuplePred)
-        .select("src", "dst")
-    }
-    (members(oldStore), lazyCut(netOps(touchedMembers(oldStore),
-      touchedMembers(newStore), Seq("src", "dst"))))
+    // Both store versions run as ONE side-tagged frame (`__new`), so
+    // each broadcast build (eT, withSrc) serves old and new together
+    // and the net compare is one group-by ([[netTagged]]).
+    def bothSides(f: GraphStore => DataFrame) =
+      sideTagged(f(oldStore), f(newStore))
+    val eT = bothSides(edges)
+      .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
+    val withSrc = bothSides(ends(_, srcLabel, srcPred, "src", srcPropsCol))
+      .join(broadcast(eT), Seq("src", "__new"))
+    val touched = bothSides(ends(_, dstLabel, dstPred, "dst", dstPropsCol))
+      .join(broadcast(withSrc), Seq("dst", "__new"))
+      .filter(tuplePred)
+      .select("src", "dst", "__new")
+    (members(oldStore), lazyCut(netTagged(touched, Seq("src", "dst"))))
   }
 
   /** Catalog-driven refresh of a CHAIN view whose WHERE decomposes

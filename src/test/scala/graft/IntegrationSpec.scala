@@ -320,6 +320,72 @@ class IntegrationSpec extends SparkSpec {
     assert(s3.version == 3L)
   }
 
+  test("X2 props updates keep the store's partitions and equal the " +
+    "anti-join ∪ matched reference as bags, feed rows included") {
+    val s0 = GraphStore.fromTuples(spark,
+      (1L to 8L).map(i => (i, "P", Seq("k" -> i.toInt))),
+      Seq((1L, 2L, "knows", Seq("w" -> 1.0)), (1L, 2L, "likes", Seq("w" -> 2.0)),
+        (2L, 3L, "knows", Nil), (3L, 4L, "knows", Seq("w" -> 3.0))))
+    // duplicate id (two maps), a null new map, an absent id
+    val vRows = Seq((2L, 20), (2L, 21), (4L, 40)).toDF("id", "k")
+      .select(col("id"), map(lit("k"), PropValue.ofInt(col("k").cast("long")))
+        .as("props"))
+      .unionByName(Seq(5L, 99L).toDF("id")
+        .withColumn("props", GraphStore.propsMap()))
+    // (1, 2, knows) updated while (1, 2, likes) keeps its map; a
+    // null map and an absent key
+    val eRows = Seq((1L, 2L, "knows")).toDF("src", "dst", "label")
+      .withColumn("props", GraphStore.propsMap("w" -> 9.0))
+      .unionByName(Seq((3L, 4L, "knows"), (7L, 7L, "ghost"))
+        .toDF("src", "dst", "label")
+        .withColumn("props", GraphStore.propsMap()))
+    val s1 = s0.updateVertexProps(vRows)
+    val s2 = s1.updateEdgeProps(eRows)
+
+    // a small update frame broadcasts; the old union doubled these
+    val (vParts, eParts) =
+      (s0.vertices.rdd.getNumPartitions, s0.edges.rdd.getNumPartitions)
+    assert(vParts > 1 && eParts > 1, "fixture spans several partitions")
+    assert(s1.vertices.rdd.getNumPartitions == vParts)
+    assert(s2.edges.rdd.getNumPartitions == eParts)
+
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    def reference(base: org.apache.spark.sql.DataFrame,
+        rows: org.apache.spark.sql.DataFrame, keys: Seq[String]) = {
+      val upd = rows.withColumnRenamed("props", "__newProps")
+      val matched = base.join(upd, keys)
+      (base.join(upd.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(matched.select(base.columns.map {
+          case "props" => col("__newProps").as("props")
+          case c => col(c)
+        }: _*)), matched)
+    }
+    val (refV, matchedV) = reference(s0.vertices, vRows, Seq("id"))
+    val (refE, matchedE) = reference(s1.edges, eRows, Seq("src", "dst", "label"))
+    assert(s1.vertices.count() == 9)
+    assert(bag(s1.vertices) == bag(refV))
+    assert(s2.edges.count() == 4)
+    assert(bag(s2.edges) == bag(refE))
+
+    // feed rows: one per matched (key, new map), old and new props
+    val feedCols = Seq("op", "id", "src", "dst", "elabel", "oldProps",
+      "newProps", "source", "version").map(col)
+    assert(bag(s2.changes.filter(col("op") === "update_vertex_props")
+      .select(feedCols: _*)) == bag(matchedV.select(
+        lit("update_vertex_props").as("op"), col("id"),
+        lit(null).cast("long").as("src"), lit(null).cast("long").as("dst"),
+        lit(null).cast("string").as("elabel"), col("props").as("oldProps"),
+        col("__newProps").as("newProps"), lit("api").as("source"),
+        lit(1L).as("version"))))
+    assert(bag(s2.changes.filter(col("op") === "update_edge_props")
+      .select(feedCols: _*)) == bag(matchedE.select(
+        lit("update_edge_props").as("op"), lit(null).cast("long").as("id"),
+        col("src"), col("dst"), col("label").as("elabel"),
+        col("props").as("oldProps"), col("__newProps").as("newProps"),
+        lit("api").as("source"), lit(2L).as("version"))))
+  }
+
   test("X2 semantics: versions increase, removals carry prior props") {
     val s0 = GraphStore.fromTuples(spark, Seq((1L, "T", Seq("k" -> "v"))), Nil)
     assert(s0.version == 0L)
