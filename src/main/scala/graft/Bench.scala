@@ -65,23 +65,8 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // iterative queries (CC rounds, k-hop expansion) generate one
-      // codegen class per iteration DEPTH; the default 100-entry
-      // class cache thrashes across 95 queries and re-Janino-compiles
-      // the tail queries' loops every run
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     // Session warmup, untimed: codegen plumbing + parquet footers + a
     // tiny shuffle, and the shared TPC-H graph projection (vertices +

@@ -36,14 +36,4 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply scale-oriented settings to an externally created session
-    * (Verify/Bench build their own sessions per the driver contract).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark
-  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Lineage.{CutOps, cutCount}
 
 /** Batch graph algorithms (SURVEY §2.8) on GraphX/Pregel.
   *
@@ -323,7 +324,6 @@ object Algorithms {
   def reachability(edges: DataFrame, sources: Seq[Long], maxIter: Int = 50,
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    import graft.Lineage.CutOps
     val spark = edges.sparkSession
     import spark.implicits._
     val rel = graft.Lineage.configure(edges, checkpointDir)
@@ -341,11 +341,10 @@ object Algorithms {
     // distinct BEFORE the first cut (mirrors multiSourceBfs): duplicate
     // seed ids would duplicate every visited row and inflate the exact
     // frontier/visited counts the broadcast gating relies on
-    var visited = sources.distinct.toDF("id").cut(rel)
+    var (visited, visitedCount) = cutCount(sources.distinct.toDF("id"), rel)
     var frontier = visited
     try {
-      var frontierCount = frontier.count()
-      var visitedCount = frontierCount
+      var frontierCount = visitedCount
       var iter = 0
       var done = frontierCount == 0L
       while (!done && iter < maxIter) {
@@ -353,11 +352,9 @@ object Algorithms {
         val fr = hintIfAtMost(frontier, frontierCount, broadcastRows)
         val eSide = if (small) e else eSmj()
         val visSide = hintIfAtMost(visited, visitedCount, broadcastRows)
-        val next = fr.join(eSide, fr("id") === eSide("src"))
+        val (next, cnt) = cutCount(fr.join(eSide, fr("id") === eSide("src"))
           .select(eSide("dst").as("id")).distinct()
-          .join(visSide, Seq("id"), "left_anti")
-          .cut(rel)
-        val cnt = next.count()
+          .join(visSide, Seq("id"), "left_anti"), rel)
         if (cnt == 0L) done = true
         else {
           visited = visited.union(next)
@@ -405,7 +402,6 @@ object Algorithms {
       undirected: Boolean = false,
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val e0 = edges.select(col("src"), col("dst"))
     // Persist the edge projection only when it is a pure projection
@@ -449,12 +445,11 @@ object Algorithms {
     // distinct(): the per-(source, vertex) output contract must hold
     // even for a seed frame with duplicate ids (hop-0 rows never pass
     // through the per-round distinct below).
-    var visited = sources.select(col("id")).distinct()
-      .select(col("id").as("source"), col("id"), lit(0).as("hops")).cut(rel)
+    var (visited, visitedCount) = cutCount(sources.select(col("id")).distinct()
+      .select(col("id").as("source"), col("id"), lit(0).as("hops")), rel)
     var frontier = visited
     try {
-      var frontierCount = frontier.count()
-      var visitedCount = frontierCount
+      var frontierCount = visitedCount
       var hop = 1
       var done = frontierCount == 0L
       while (!done && hop <= maxHops) {
@@ -464,13 +459,11 @@ object Algorithms {
         val vis = visited.select(col("source").as("__v_src"),
           col("id").as("__v_id"))
         val visSide = hintIfAtMost(vis, visitedCount, broadcastRows)
-        val next = candidates.distinct()
+        val (next, cnt) = cutCount(candidates.distinct()
           .join(visSide,
             col("source") === col("__v_src") && col("id") === col("__v_id"),
             "left_anti")
-          .withColumn("hops", lit(hop))
-          .cut(rel)
-        val cnt = next.count()
+          .withColumn("hops", lit(hop)), rel)
         if (cnt == 0L) done = true
         else {
           // Lazy union of already-cut frontiers: each round's rows are
@@ -606,7 +599,6 @@ object Algorithms {
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows,
       dateBuckets: Int = 1): DataFrame = {
-    import graft.Lineage.CutOps
     require(dateBuckets >= 1, s"dateBuckets must be >= 1, got $dateBuckets")
     val rel = graft.Lineage.configure(tedges, checkpointDir)
     val e = tedges.select(col("src"), col("dst"), col("d").as("ed"))
@@ -616,12 +608,12 @@ object Algorithms {
       // key-unique broadcast joins (no re-grouping), so duplicate
       // seed rows must collapse HERE — the old union+groupBy merge
       // absorbed them incidentally on the first improving round
-      var arrival = seeds.select(col("id").as("seed"), col("id"),
-        lit(sentinel).as("d")).distinct().cut(rel)
-      // running upper bound on |arrival| (seed rows + every improved
-      // frame folded in): licenses the SCAN-ONLY state merge below
-      // without ever counting the state — one seed-sized job here
-      var arrivalUb = arrival.count()
+      // arrivalUb: running upper bound on |arrival| (seed rows + every
+      // improved frame folded in): licenses the SCAN-ONLY state merge
+      // below without ever counting the state — the seed count rides
+      // the seed cut's one job
+      var (arrival, arrivalUb) = cutCount(seeds.select(col("id").as("seed"),
+        col("id"), lit(sentinel).as("d")).distinct(), rel)
       // equal-width bucket bounds over the edge-stamp span (one agg;
       // any boundary choice is CORRECT, this one is deterministic).
       // dateBuckets = 1 (the default) skips the span agg, the slice
@@ -655,12 +647,15 @@ object Algorithms {
                 col("ed").cast("timestamp").cast("long") <= hiSec)
             .cut(rel)
         }
-        var frontier = hiOpt match {
-          case None => arrival
-          case Some(hiSec) => arrival.filter(
-            col("d") <= lit(new java.sql.Timestamp(hiSec * 1000L)))
+        // None is the single flat bucket, entered before any round:
+        // arrivalUb is still the exact seed count there
+        var (frontier, frontierCnt) = hiOpt match {
+          case None => (arrival, arrivalUb)
+          case Some(hiSec) =>
+            val f = arrival.filter(
+              col("d") <= lit(new java.sql.Timestamp(hiSec * 1000L)))
+            (f, f.count())
         }
-        var frontierCnt = frontier.count()
         var improvedCnt = -1L
         while (frontierCnt > 0 && improvedCnt != 0 && rounds < maxRounds) {
           val fr = hintIfFits(frontier, frontierCnt, broadcastRows)
@@ -671,12 +666,11 @@ object Algorithms {
           // `old` kept on the improved frame: the state-merge below
           // splits on it (null = first arrival, else strictly better),
           // so the arrival update needs NO re-probe of the state
-          val improved = candidates
+          val (improved, n) = cutCount(candidates
             .join(arrival.select(col("seed"), col("id"),
               col("d").as("old")), Seq("seed", "id"), "left")
-            .filter(col("old").isNull || col("d") < col("old"))
-            .cut(rel)
-          improvedCnt = improved.count()
+            .filter(col("old").isNull || col("d") < col("old")), rel)
+          improvedCnt = n
           if (improvedCnt > 0) {
             // SCAN-ONLY state merge (r13, the r12 verdict watch item):
             // the old union+groupBy re-shuffled the O(seeds·V) arrival
@@ -736,7 +730,6 @@ object Algorithms {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100,
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     var e = edges.select(col("src"), col("dst")).cut(rel)
     var changed = true
@@ -745,12 +738,11 @@ object Algorithms {
       val deg = e.select(col("src").as("id"))
         .unionAll(e.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
-      // cut + count: without it the isEmpty probe AND both anti-joins
+      // counted cut: without it the emptiness probe AND both anti-joins
       // would each recompute the degree aggregation; the count also
       // licenses broadcasting the (usually tiny) prune set so the
       // anti-joins stream `e` instead of shuffling it every round
-      val bad = deg.filter(col("degree") < k).select("id").cut(rel)
-      val badCnt = bad.count()
+      val (bad, badCnt) = cutCount(deg.filter(col("degree") < k).select("id"), rel)
       if (badCnt == 0L) changed = false
       else {
         val b = hintIfAtMost(bad, badCnt, broadcastRows)
@@ -786,7 +778,6 @@ object Algorithms {
     */
   def coreness(edges: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val e = edges.select(col("src"), col("dst"))
     val adj = graft.TransientCache.persist(
@@ -891,15 +882,13 @@ object Algorithms {
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(canonicalEdges, checkpointDir)
     var e = canonicalEdges.select("src", "dst").distinct().cut(rel)
     var changed = true
     var iter = 0
     while (changed && iter < maxIter) {
-      val bad = edgeSupport(e).filter(col("support") < k - 2)
-        .select("src", "dst").cut(rel)
-      val badCnt = bad.count()
+      val (bad, badCnt) = cutCount(edgeSupport(e)
+        .filter(col("support") < k - 2).select("src", "dst"), rel)
       if (badCnt == 0L) changed = false
       else {
         val b = hintIfAtMost(bad, badCnt, broadcastRows)
@@ -978,10 +967,8 @@ object Algorithms {
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
       numIter: Int = 50, checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(vertices, checkpointDir)
-    var remaining = vertices.select(col("id")).cut(rel)
-    var remainingCount = remaining.count()
+    var (remaining, remainingCount) = cutCount(vertices.select(col("id")), rel)
     // Restrict edges to the declared vertex set at ENTRY (the later
     // label joins filtered stray endpoints anyway, so semantics are
     // unchanged): afterwards every per-round frame — f, marked, and
@@ -1031,26 +1018,26 @@ object Algorithms {
       var marked = f.filter(col("f") === col("id")).cut(rel)
       converged = false
       while (!converged) {
-        val newly = e
+        val (newly, newlyCount) = cutCount(e
           .join(bc(marked.select(col("id").as("dst"), col("f").as("fw"))),
             "dst")
           .select(col("src").as("id"), col("fw"))
           .join(bc(f), Seq("id"))
           .filter(col("f") === col("fw"))
           .select(col("id"), col("f")).distinct()
-          .join(bc(marked.select(col("id"))), Seq("id"), "left_anti")
-          .cut(rel)
-        if (newly.isEmpty) converged = true
+          .join(bc(marked.select(col("id"))), Seq("id"), "left_anti"), rel)
+        if (newlyCount == 0L) converged = true
         else marked = marked.unionByName(newly).cut(rel)
       }
       // 3. peel
       accumulate(marked.select(col("id"), col("f").as("component")))
-      remaining = remaining
-        .join(bc(marked.select(col("id"))), Seq("id"), "left_anti").cut(rel)
       e = e.join(bc(marked.select(col("id").as("src"))), Seq("src"), "left_anti")
         .join(bc(marked.select(col("id").as("dst"))), Seq("dst"), "left_anti")
         .select(col("src"), col("dst")).cut(rel)
-      remainingCount = remaining.count()
+      val (rest, restCount) = cutCount(remaining
+        .join(bc(marked.select(col("id"))), Seq("id"), "left_anti"), rel)
+      remaining = rest
+      remainingCount = restCount
       outer += 1
     }
     if (remainingCount > 0L) {
@@ -1099,7 +1086,6 @@ object Algorithms {
     */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
       numIter: Int = 4, undirected: Boolean = true): DataFrame = {
-    import graft.Lineage.CutOps
     val e0 = edges.select(col("src"), col("dst"))
     // SIMPLE-graph semantics: distinct() so an input that lists an
     // undirected edge in both orientations doesn't double its vote —
@@ -1286,7 +1272,6 @@ object Algorithms {
       undirected: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
     require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val sd = seeds.distinct
     val sMass = 1.0 / sd.size
@@ -1335,7 +1320,6 @@ object Algorithms {
       damping: Double = 0.85, numIter: Int = 10,
       undirected: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val eDir = edges.select(col("src"), col("dst"),
       col("w").cast("double").as("w"))
@@ -1380,7 +1364,6 @@ object Algorithms {
       alpha: Double = 0.1, beta: Double = 1.0, numIter: Int = 8,
       undirected: Boolean = false,
       checkpointDir: Option[String] = None): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val eDir = edges.select(col("src"), col("dst"))
     val e = graft.TransientCache.persist(
@@ -1421,7 +1404,6 @@ object Algorithms {
     */
   def hits(vertices: DataFrame, edges: DataFrame, numIter: Int = 8,
       checkpointDir: Option[String] = None): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val e = graft.TransientCache.persist(
       edges.select(col("src"), col("dst")))
@@ -1630,20 +1612,19 @@ object Algorithms {
       sources: Option[DataFrame] = None,
       checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    import graft.Lineage.CutOps
     val rel = graft.Lineage.configure(edges, checkpointDir)
     val eDir = edges.select(col("src"), col("dst"))
     val e = (if (undirected)
         eDir.unionByName(eDir.select(col("dst").as("src"), col("src").as("dst")))
       else eDir).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val seed = sources.getOrElse(vertices).select(col("id")).distinct()
-      .select(col("id").as("source"), col("id"),
-        lit(1.0).as("sigma")).cut(rel)
     // Per-level frames (already materialized by their cut) + exact
     // counts — the backward pass replays them without re-filtering.
-    val levels = scala.collection.mutable.ArrayBuffer((seed, seed.count()))
+    val levels = scala.collection.mutable.ArrayBuffer(cutCount(
+      sources.getOrElse(vertices).select(col("id")).distinct()
+        .select(col("id").as("source"), col("id"), lit(1.0).as("sigma")),
+      rel))
     try {
-      var visited = seed.select(col("source"), col("id"))
+      var visited = levels(0)._1.select(col("source"), col("id"))
       var visitedCount = levels(0)._2
       var hop = 1
       var done = levels(0)._2 == 0L
@@ -1656,11 +1637,10 @@ object Algorithms {
         val visSide = hintIfAtMost(
           visited.select(col("source").as("__v_src"), col("id").as("__v_id")),
           visitedCount, broadcastRows)
-        val next = cand.join(visSide,
+        val (next, cnt) = cutCount(cand.join(visSide,
             col("source") === col("__v_src") && col("id") === col("__v_id"),
             "left_anti")
-          .select(col("source"), col("id"), col("sigma")).cut(rel)
-        val cnt = next.count()
+          .select(col("source"), col("id"), col("sigma")), rel)
         if (cnt == 0L) done = true
         else {
           visited = visited.unionByName(next.select(col("source"), col("id")))
@@ -1721,7 +1701,7 @@ object Algorithms {
       if (delta != null) graft.Lineage.freeCut(delta)
       graft.Lineage.freeCut(levels(0)._1)
       if (bcAcc == null)
-        seed.sparkSession.emptyDataFrame
+        edges.sparkSession.emptyDataFrame
           .select(lit(0L).as("id"), lit(0.0).as("betweenness")).limit(0)
       else {
         val scale = if (undirected) 0.5 else 1.0
@@ -1807,7 +1787,7 @@ object Algorithms {
     // h=0 total is V exactly)
     var state = vertices.select(col("id")).distinct()
       .groupBy("id").agg(hll_sketch_agg(col("id"), lgK).as("sk"))
-      .localCheckpoint()
+      .cut(reliable = false)
     def total(st: DataFrame): Long =
       st.agg(sum(hll_sketch_estimate(col("sk")))).head().getLong(0)
     val out = scala.collection.mutable.Buffer((0, total(state)))
@@ -1817,7 +1797,7 @@ object Algorithms {
         .select(col("src").as("id"), col("sk"))
       val next = state.unionByName(contrib)
         .groupBy("id").agg(hll_union_agg(col("sk")).as("sk"))
-        .localCheckpoint()
+        .cut(reliable = false)
       graft.Lineage.freeCut(state)
       state = next
       out += ((h, total(state)))
@@ -1984,7 +1964,6 @@ object Algorithms {
   private def louvainLocalMoves(vertices: DataFrame, e: DataFrame,
       seed: DataFrame, eps: Double, maxRounds: Int,
       minMovers: Long): (DataFrame, Double, Double) = {
-    import graft.Lineage.CutOps
     val m = e.agg(sum("w")).head().getDouble(0)
     require(m > 0, "louvain needs at least one edge")
     val nonself = e.filter(col("src") =!= col("dst"))

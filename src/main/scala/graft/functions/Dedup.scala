@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Lineage.{CutOps, cutCount}
 
 /** Deduplication operators for 100 TB-scale corpus curation.
   *
@@ -482,7 +483,6 @@ object Dedup {
       maxRounds: Int = 30,
       broadcastRows: Long = graft.algorithms.Algorithms.DefaultBroadcastRows)
       : DataFrame = {
-    import graft.Lineage.CutOps
     // pairs is read three times (two vertex projections + the edge
     // set) and its producer is typically a whole sketch+verify
     // pipeline. Checkpoint, not persist: a persist caches the
@@ -549,7 +549,6 @@ object Dedup {
       maxRounds: Int = 30, reliable: Boolean = false,
       broadcastRows: Long = graft.algorithms.Algorithms.DefaultBroadcastRows)
       : DataFrame = {
-    import graft.Lineage.CutOps
     // Every per-round frame is lineage-truncated: persist alone keeps
     // the full producer lineage in the plan, and the optimizer +
     // Janino re-walk it each round — the classic iterative-DataFrame
@@ -557,14 +556,15 @@ object Dedup {
     val edges = pairs.select(col("ida").as("a"), col("idb").as("b"))
       .unionByName(pairs.select(col("idb").as("a"), col("ida").as("b")))
       .cut(reliable)
-    var labels = vertices.select(col("id"), col("id").as("component"))
-      .cut(reliable)
     // The label frame's row count is CONSTANT across rounds (one row
     // per pair-subgraph vertex) and the frames are checkpointed, i.e.
-    // stats-less — one count licenses broadcast-hinting the
-    // vertex-sided frames every round so the loop stops sort-merge-
-    // shuffling the edge set (see Algorithms.DefaultBroadcastRows).
-    val vertCnt = labels.count()
+    // stats-less — one count, riding the first cut's job, licenses
+    // broadcast-hinting the vertex-sided frames every round so the
+    // loop stops sort-merge-shuffling the edge set (see
+    // Algorithms.DefaultBroadcastRows).
+    val (labels0, vertCnt) = cutCount(
+      vertices.select(col("id"), col("id").as("component")), reliable)
+    var labels = labels0
     def bc(df: DataFrame): DataFrame =
       graft.algorithms.Algorithms.hintIfAtMost(df, vertCnt, broadcastRows)
     var round = 0
@@ -599,14 +599,6 @@ object Dedup {
         pairs.select(col("ida").as("src"), col("idb").as("dst")))
     }
   }
-
-  /** SimHash: 64-bit signature — bit j is the sign of the sum over
-    * token hashes' j-th bits (+1/−1). Computed via bit arithmetic in
-    * column space. Token multiplicity counts (frequency-weighted
-    * votes), so shared-vocabulary docs still separate.
-    */
-  def tokenHashes(text: Column): Column =
-    transform(TextFunctions.shingles(text, 1), t => xxhash64(t))
 
   /** SimHash signatures, relationally: explode token hashes to rows,
     * compute the 64 per-bit ±1 vote sums as ordinary HashAggregate
@@ -1399,7 +1391,6 @@ object Dedup {
   def stripDuplicatedSpansFixpointStats(df: DataFrame, textCol: String,
       idCol: String, k: Int = 5, minDocs: Int = 2, maxRounds: Int = 8)
       : (DataFrame, Int, Boolean) = {
-    import graft.Lineage.CutOps
     // Normalize ONCE; every later round's rebuilt text is already in
     // normalized form (single-spaced lowercase tokens), so per-round
     // work never re-normalizes the corpus.

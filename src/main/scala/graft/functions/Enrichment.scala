@@ -20,10 +20,6 @@ object Enrichment {
     df.join(broadcast(mapping), df(keyCol) === mapping(mapKey), "left")
       .drop(mapping(mapKey))
 
-  /** E3: timestamp enrichment (the reference's TimestampEnricher). */
-  def withProcessingTime(df: DataFrame, outCol: String = "processed_at"): DataFrame =
-    df.withColumn(outCol, current_timestamp())
-
   /** E3: derived-metadata enrichment from a column expression. */
   def withDerived(df: DataFrame, outCol: String, expr: Column): DataFrame =
     df.withColumn(outCol, expr)

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Lineage.CutOps
 
 /** Approximate/exact nearest-neighbor search over embedding columns
   * (`ARRAY<FLOAT>`).
@@ -418,22 +419,12 @@ object Similarity {
           "writeIvfIndex over the corpus) once to backfill the record.", e)
     }
 
-  /** Refresh-policy front door: check the incoming batch BEFORE
-    * appending it (drift shows up in the batch's assignment quality
-    * whether or not it has been written yet).
-    */
-  def shouldRetrainIvf(spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: Option[DataFrame] = None, growthFactor: Double = 2.0,
-      imbalanceFactor: Double = 4.0, driftMargin: Double = 0.15): Boolean =
-    ivfStaleness(spark, path, batch, growthFactor, imbalanceFactor,
-      driftMargin).shouldRetrain
-
   /** Rebuild the index from its own at-rest corpus: fresh k-means,
     * fresh assignment, fresh fit record. `nlist = 0` (the default)
     * reuses the nlist recorded at train time — a default-argument
     * retrain must not silently reshape the model (cell count feeds
     * the imbalance threshold and the nprobe/nlist recall trade).
-    * The corpus is materialized (localCheckpoint) before the
+    * The corpus is materialized (an eager cut) before the
     * overwrite so the rewrite never reads the files it is replacing.
     * That materialization is test/modest-index convenience — a
     * 100 TB deployment retrains by writing a NEW versioned path
@@ -446,7 +437,7 @@ object Similarity {
       if (nlist > 0) nlist
       else readIvfMeta(spark, path).getAs[Int]("nlist")
     val data = graft.sources.Sinks.readPartitioned(spark, s"$path/corpus")
-      .drop("cid").localCheckpoint()
+      .drop("cid").cut(reliable = false)
     writeIvfIndex(data, path, effectiveNlist, iters)
   }
 

@@ -203,13 +203,4 @@ object TextFunctions {
         round(col("topc").cast("double") / col("nb").cast("double"), 4)
           .as("top_bigram_frac"))
   }
-
-  /** Character n-grams of size k. */
-  def charNgrams(text: Column, k: Int): Column = {
-    val norm = regexp_replace(lower(trim(text)), "\\s+", " ")
-    val n = length(norm)
-    when(n >= k,
-      transform(sequence(lit(1), n - k + 1), i => norm.substr(i, lit(k))))
-      .otherwise(array(norm))
-  }
 }

@@ -943,7 +943,7 @@ object GqlExecutor {
         // Catalyst/Janino a maxHops-join-deep plan to re-optimize and
         // re-codegen at every action (a `*..20` pattern = 20 chained
         // joins). Every 4th round keeps short join runs inside one
-        // codegen stage while the eager localCheckpoint (the frame is
+        // codegen stage while the eager cut (the frame is
         // settled-pairs-sized, bounded by stCnt) resets plan depth to
         // O(1). No cut outside the multiples — the tail (≤ 3 joins)
         // rides into `out`'s plan for free, so the common `*..3`

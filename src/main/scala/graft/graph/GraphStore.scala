@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.model.PropValue
 import graft.sources.Tables
+import graft.Lineage.CutOps
 import java.util.concurrent.ConcurrentHashMap
 
 /** Property-graph store over two DataFrames.
@@ -262,7 +263,7 @@ final class GraphStore(
     this
   }
 
-  /** Truncate the mutation lineage: eagerly localCheckpoint the
+  /** Truncate the mutation lineage: eagerly cut (local) the
     * vertex frame so CHAINED mutation statements stop re-executing
     * the whole prior anti-join/union plan on every existence probe
     * and read (each uncut mutation layer adds a full re-execution —
@@ -273,7 +274,7 @@ final class GraphStore(
     * speed — `compact(dir)` is the durable form.
     */
   def truncated(): GraphStore =
-    new GraphStore(vertices.localCheckpoint(), edges, changes, version)
+    new GraphStore(vertices.cut(reliable = false), edges, changes, version)
 
   /** Edge-side lineage cut — the [[truncated]] twin for chains of
     * EDGE mutations (relationship MERGE loops): each uncut layer
@@ -283,7 +284,7 @@ final class GraphStore(
     * mutate it).
     */
   def truncatedEdges(): GraphStore =
-    new GraphStore(vertices, edges.localCheckpoint(), changes, version)
+    new GraphStore(vertices, edges.cut(reliable = false), changes, version)
 }
 
 object GraphStore {

@@ -56,13 +56,4 @@ object StreamConnectors {
         // kafka's (key, value) are binary; downstream operators want text
         .withColumn("value", col("value").cast("string"))
   }
-
-  /** Extraction rules (stream_connectors.rs ExtractionRule): parse
-    * line-delimited JSON events into typed columns. Malformed lines
-    * become null structs the caller can route to a dead-letter sink —
-    * the Spark-native form of the reference's per-rule error path.
-    */
-  def extractJson(lines: DataFrame, valueCol: String, schema: StructType): DataFrame =
-    lines.select(from_json(col(valueCol), schema).as("event"))
-      .select(col("event.*"))
 }

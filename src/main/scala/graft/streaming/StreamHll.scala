@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.Sketches
+import graft.Lineage.CutOps
 
 /** Streaming HLL distinct-count index — the ingest-side twin of
   * `Sketches.hllIndex`, same one-operator-for-ingest-and-backfill
@@ -26,19 +26,9 @@ import graft.functions.Sketches
   */
 object StreamHll {
 
-  /** Maintain the per-`groupCols` HLL index at `path` from a stream;
-    * `onBatch` receives the batchId after each applied batch.
-    */
-  def distinctEachBatch(stream: DataFrame, keyCol: String,
-      groupCols: Seq[String], path: String, lgK: Int = 12)(
-      onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, keyCol, groupCols, path, lgK, batchId)(onBatch)
-      ()
-    }
-
-  /** Per-batch body, directly callable (re-delivery tests, batch
-    * backfill through the identical code path). Returns false for a
+  /** Per-batch body: a stream's `foreachBatch` function, also called
+    * directly (re-delivery tests, batch backfill through the
+    * identical code path). Returns false for a
     * batchId at or below the high-water mark.
     */
   def applyBatch(batch: DataFrame, keyCol: String, groupCols: Seq[String],
@@ -59,7 +49,7 @@ object StreamHll {
       // materialize BEFORE the overwrite — the merge plan reads the
       // same parquet it is about to replace, and the index is tiny
       // (groups × ≤2^lgK registers) by design
-      merged.localCheckpoint()
+      merged.cut(reliable = false)
         .write.mode("overwrite").parquet(s"$path/index")
       StreamMeta.writeLastApplied(spark, path, batchId)
       onBatch(batchId)

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.{Curation, TextFunctions}
+import graft.Lineage.CutOps
 
 /** Streaming n-gram LM model maintenance — the ingest-side twin of
   * `Curation.lmPerplexity`'s training half, same
@@ -30,18 +30,9 @@ import graft.functions.{Curation, TextFunctions}
   */
 object StreamLm {
 
-  /** Maintain the bigram model at `path` from a reference-document
-    * stream; `onBatch` receives the batchId after each applied batch.
-    */
-  def modelEachBatch(stream: DataFrame, textCol: String, path: String)(
-      onBatch: Long => Unit = _ => ()): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, textCol, path, batchId)(onBatch)
-      ()
-    }
-
-  /** Per-batch body, directly callable (re-delivery tests, batch
-    * backfill through the identical code path). Returns false for a
+  /** Per-batch body: a stream's `foreachBatch` function, also called
+    * directly (re-delivery tests, batch backfill through the
+    * identical code path). Returns false for a
     * batchId at or below the high-water mark.
     */
   def applyBatch(batch: DataFrame, textCol: String, path: String,
@@ -64,12 +55,11 @@ object StreamLm {
       }
       // HWM first (lose-the-batch, never double-count), then c2,
       // then vocab — see the class doc for why this order makes the
-      // remaining crash window detectable. localCheckpoint before
-      // each overwrite: the merge plans read the parquet they
-      // replace.
+      // remaining crash window detectable. Cut before each
+      // overwrite: the merge plans read the parquet they replace.
       StreamMeta.writeLastApplied(spark, path, batchId)
-      c2.localCheckpoint().write.mode("overwrite").parquet(s"$path/c2")
-      vocab.localCheckpoint().write.mode("overwrite").parquet(s"$path/vocab")
+      c2.cut(reliable = false).write.mode("overwrite").parquet(s"$path/c2")
+      vocab.cut(reliable = false).write.mode("overwrite").parquet(s"$path/vocab")
       onBatch(batchId)
     }
     apply

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.graph.GraphStore
+import graft.Lineage.CutOps
 import graft.views.Views
 
 /** Streaming maintenance of a registered MATCH-pattern view — the
@@ -77,7 +78,7 @@ final class StreamPatternView private[graft] (initial: GraphStore,
   def current(): GraphStore = cur
 
   private def applyBatch(batch: DataFrame): GraphStore = {
-    val b = batch.localCheckpoint() // read 6×, one tiny frame
+    val b = batch.cut(reliable = false) // read 6×, one tiny frame
     var st = cur
     val va = b.filter(col("op") === "add_vertex")
       .select(col("id"), col("label"), col("props"))

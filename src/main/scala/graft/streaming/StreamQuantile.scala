@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.Sketches
 
@@ -28,19 +27,9 @@ import graft.functions.Sketches
   */
 object StreamQuantile {
 
-  /** Maintain the quantile coreset at `path` from a stream; `onBatch`
-    * receives (batchId, slack after the batch).
-    */
-  def quantilesEachBatch(stream: DataFrame, valueCol: String,
-      path: String, eps: Double = 0.01, cap: Int = 8192)(
-      onBatch: (Long, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, valueCol, path, batchId, eps, cap)(onBatch)
-      ()
-    }
-
-  /** Per-batch body, directly callable (re-delivery tests, batch
-    * backfill through the identical code path). Returns false at or
+  /** Per-batch body: a stream's `foreachBatch` function, also called
+    * directly (re-delivery tests, batch backfill through the
+    * identical code path). Returns false at or
     * below the recorded high-water mark (see [[StreamMeta]]).
     */
   def applyBatch(batch: DataFrame, valueCol: String, path: String,

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.Sketches
 
@@ -25,19 +24,9 @@ import graft.functions.Sketches
   */
 object StreamSketch {
 
-  /** Maintain the MG summary at `path` from a stream; `onBatch`
-    * receives (batchId, summary error bound after the batch).
-    */
-  def heavyHittersEachBatch(stream: DataFrame, keyCol: String,
-      path: String, capacity: Int)(
-      onBatch: (Long, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, keyCol, path, capacity, batchId)(onBatch)
-      ()
-    }
-
-  /** Per-batch body, directly callable (re-delivery tests, batch
-    * backfill through the identical code path). Returns false when
+  /** Per-batch body: a stream's `foreachBatch` function, also called
+    * directly (re-delivery tests, batch backfill through the
+    * identical code path). Returns false when
     * `batchId` is at or below the recorded high-water mark (the
     * at-least-once re-delivery guard, see [[StreamMeta]]).
     */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 import graft.graph.GraphStore
+import graft.Lineage.{CutOps, cutCount, lazyCut, partitionedCkpt, preservedCkpt}
 
 /** Materialized-view subsystem (SURVEY §2.10): catalog, refresh
   * policies, change-impact analysis, dependency DAG, incremental
@@ -58,6 +59,8 @@ object Views {
   //     rounds.
   //   refreshLowerBoundedReachView — foldReachState + walkFoldLevels +
   //     gated twoLevelDelta; lazy delta, eager state.
+  // The cut kinds named here (eager, lazy, counted, partition-carrying)
+  // are defined once, in graft.Lineage.
 
   // ---- V1: view types ---------------------------------------------
 
@@ -436,102 +439,6 @@ object Views {
       rel.withColumn(signCol, col("__mult").cast("long")).drop("__mult")
     else rel.withColumn(signCol, lit(1L))
 
-  /** LAZY localCheckpoint + count fused into ONE count job (r12
-    * verdict #4): the family's eager checkpoint-then-count idiom paid
-    * two scheduler round-trips per fixpoint round — the checkpoint
-    * job materialized the frame, then the count re-read it. The first
-    * action on a lazily-marked checkpoint materializes it, so the
-    * count IS the materialization. What runs under AQE: creating the
-    * checkpoint plans the frame adaptively, which already runs its
-    * shuffle-map (and broadcast) stages as their own jobs; the count
-    * of the checkpoint's RDD ([[rowCount]]) is then the one job of
-    * the final stage. On a real cluster each saved job
-    * is a driver→executor round-trip; at view-catalog scale (hundreds
-    * of views per batch) the job count is the refresh latency floor.
-    *
-    * Lazy-checkpoint discipline for frames WITHOUT a fused count
-    * ([[lazyCut]]): safe exactly when some later action in the same
-    * fold touches the frame before its INPUTS are unpersisted —
-    * inside a fold every input is a materialized checkpoint, so a
-    * deferred materialization never re-derives through the catalog's
-    * replaced state. Frames handed to `catalog.put` stay EAGER (the
-    * put boundary is the state's materialization contract).
-    */
-  private def cutCount(df: DataFrame): (DataFrame, Long) = {
-    val c = df.localCheckpoint(false)
-    (c, rowCount(c))
-  }
-
-  /** Rows of a lazily checkpointed frame in ONE job that also
-    * materializes its blocks: a count of the checkpoint's RDD.
-    * `Dataset.count` would plan an aggregate with its own shuffle
-    * stage over the scan — under AQE a second job.
-    */
-  private def rowCount(ckpt: DataFrame): Long =
-    ckpt.queryExecution.toRdd.count()
-
-  private def lazyCut(df: DataFrame): DataFrame = df.localCheckpoint(false)
-
-  /** AQE-off scope for creating PARTITION-CARRYING checkpoints.
-    * Dataset.localCheckpoint captures the physical plan's
-    * outputPartitioning/outputOrdering into the returned LogicalRDD —
-    * but only usefully with AQE off at CREATION time: under AQE the
-    * captured partitioning degrades to unknown (measured by the r12
-    * partition probe, see OPTIMIZATION_r13.md, Retired diagnostics —
-    * consumers plan an ENSURE_REQUIREMENTS
-    * exchange over the checkpointed scan with AQE on at creation,
-    * and no exchange / no sort with it off). The scope covers only
-    * the checkpoint's own planning; consumer queries keep AQE.
-    */
-  private val aqeLock = new Object
-  private def aqeOff[A](spark: SparkSession)(f: => A): A =
-    // the conf is SESSION-global: two concurrent maintainers (the
-    // batch journal's foreachBatch use case) racing on set/restore
-    // could capture an AQE-degraded layout into a checkpoint or
-    // leave AQE off session-wide. Serialized under one monitor —
-    // callers scope `f` to PLANNING only (a lazy localCheckpoint
-    // builds its LogicalRDD at call time; materialization happens
-    // outside the lock), so the critical section holds no jobs.
-    aqeLock.synchronized {
-      val key = "spark.sql.adaptive.enabled"
-      val prev = spark.conf.get(key, "true")
-      spark.conf.set(key, "false")
-      try f finally spark.conf.set(key, prev)
-    }
-
-  /** One state-sized shuffle that buys shuffle-free membership joins
-    * for every later fold round and refresh: hash-partition + sort on
-    * `keyCols`, checkpoint eagerly with the layout carried into the
-    * LogicalRDD ([[aqeOff]]). EnsureRequirements then plans every
-    * equi/semi/anti join on these keys with NO exchange and NO sort
-    * on this side — only the window-sized probe side shuffles.
-    */
-  private def partitionedCkpt(df: DataFrame, keyCols: Seq[String])
-      : (DataFrame, Long) = {
-    // lazy checkpoint planned under the AQE-off lock, then ONE count
-    // job (outside the lock) that both materializes it and yields
-    // the row count — the count rides the job the eager checkpoint
-    // already paid, so callers get the core's cardinality for free
-    // (carried across refreshes as `!coreCnt` meta; finish()'s
-    // compaction test then needs no state scan)
-    val c = aqeOff(df.sparkSession) {
-      df.repartition(keyCols.map(col): _*)
-        .sortWithinPartitions(keyCols.map(col): _*)
-        .localCheckpoint(false)
-    }
-    (c, rowCount(c))
-  }
-
-  /** Lazy checkpoint of a frame DERIVED from a partitioned core by
-    * layout-preserving operators (broadcast joins, filters, alias
-    * projections) — the carried partitioning/ordering survives into
-    * the new checkpoint (partition probe case 3, same table), so a
-    * filtered core
-    * keeps serving exchange-free joins.
-    */
-  private def preservedCkpt(df: DataFrame): DataFrame =
-    aqeOff(df.sparkSession) { df.localCheckpoint(false) }
-
   /** Rows of `df`'s shape that fit the session broadcast budget:
     * `spark.sql.autoBroadcastJoinThreshold` divided by the schema's
     * estimated row width — the byte-derived stand-in for the old
@@ -649,7 +556,7 @@ object Views {
         .groupBy(cols.map(col): _*)
         .agg(sum("__m").as("__mult"))
         .filter(col("__mult") > 0)
-        .localCheckpoint()
+        .cut(false)
       return (s1, netOps(state.select(cols.map(col): _*),
         s1.select(cols.map(col): _*), cols.toSeq))
     }
@@ -813,10 +720,10 @@ object Views {
     */
   private def feedTouchedV(oldStore: GraphStore,
       newStore: GraphStore): IdProbe =
-    idProbe(feedOf(oldStore, newStore)
+    idProbe(lazyCut(feedOf(oldStore, newStore)
       .filter(col("op").isin("add_vertex", "remove_vertex",
         "update_vertex_props"))
-      .select(col("id")).distinct().localCheckpoint(false))
+      .select(col("id")).distinct()))
 
   /** Net ±op membership delta (op, `keyName`) of the `label` (+ pred)
     * vertex set between two store versions, restricted to the
@@ -940,14 +847,14 @@ object Views {
       oldStates: Map[Int, DataFrame]): (Int, DataFrame, Long) => Unit =
     (i, delta, cnt) =>
       if (cnt > 0)
-        catalog.put(key(i), mergeJoinDelta(oldStates(i), delta).localCheckpoint())
+        catalog.put(key(i), mergeJoinDelta(oldStates(i), delta).cut(false))
       else if (catalog.dataOf(key(i)).isEmpty)
         catalog.put(key(i), oldStates(i)) // persist the bootstrap
 
   /** State-commit tail of the join-state refreshers: fold the signed
     * delta, store the multiset state under `name!state`, serve the
     * finalized rows under `name`. The state is MATERIALIZED
-    * (localCheckpoint — eager, lineage-cut): the state IS the view,
+    * (an eager cut): the state IS the view,
     * and leaving it lazy makes refresh chains compose every prior
     * round's delta plan into one nest the analyzer re-walks per
     * action (measured 51 s → ~2 s for a two-round chain at sf0.1,
@@ -956,7 +863,7 @@ object Views {
     */
   private def commitJoinState(catalog: ViewCatalog, name: String,
       state0: DataFrame, delta: DataFrame): DataFrame = {
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
+    val state1 = mergeJoinDelta(state0, delta).cut(false)
     catalog.put(s"$name!state", state1)
     val view = finalizeJoin(state1)
     catalog.put(name, view)
@@ -1160,7 +1067,7 @@ object Views {
         initPatternChainState(oldStore,
           vertexLabels.take(i + 1), edgeLabels.take(i),
           preds.take(i + 1), epreds.take(i), undir.take(i),
-          bootOverrides.filter(_._1 < i)).localCheckpoint())
+          bootOverrides.filter(_._1 < i)).cut(false))
     }.toMap
     val delta = patternChainViewDelta(oldStore, newStore, touchedV,
       vertexLabels, edgeLabels, preds, epreds, undir, overrides,
@@ -1353,7 +1260,7 @@ object Views {
       w = catalog.dataOf(s"$prefix!w$i").getOrElse(
         w.join(e.select(col("src").as(s), col("dst").as(d)), s)
           .groupBy(col("c0"), col(d)).agg(sum("__mult").as("__mult"))
-          .localCheckpoint())
+          .cut(false))
       i -> w
     }.toMap
     (oldStates, levelStateFold(catalog, i => s"$prefix!w$i", oldStates))
@@ -1414,7 +1321,7 @@ object Views {
     val delta = varLengthViewDelta(oldStore, newStore, touchedV,
       srcLabel, edgeLabel, dstLabel, minHops, maxHops, srcPred, dstPred,
       undirected, wOld, wFold)
-    val state1 = mergeJoinDelta(state0, delta).localCheckpoint()
+    val state1 = mergeJoinDelta(state0, delta).cut(false)
     catalog.put(s"$name!state", state1)
     // state keys are unique by mergeJoinDelta's groupBy, all __mult>0:
     // the distinct pairs are exactly the state's key columns
@@ -1582,10 +1489,10 @@ object Views {
         val sub = s"$name!wh$j"
         val s0 = catalog.dataOf(sub).getOrElse(
           oldMembers.groupBy("src", "dst")
-            .agg(count(lit(1)).as("__mult")).localCheckpoint())
+            .agg(count(lit(1)).as("__mult")).cut(false))
         val s1 = mergeJoinDelta(s0, ops.select(col("src"), col("dst"),
           when(col("op") === "add", lit(1L)).otherwise(lit(-1L))
-            .as("__sign"))).localCheckpoint()
+            .as("__sign"))).cut(false)
         catalog.put(sub, s1)
         j -> pairHop(finalizeJoin(s0), ops)
     }.toMap
@@ -1690,7 +1597,7 @@ object Views {
         val s0 = catalog.dataOf(sub).getOrElse(
           initVarLengthState(oldStore, vertexLabels(j), edgeLabels(j),
             vertexLabels(j + 1), mn, mx, preds(j), preds(j + 1),
-            undir(j)).localCheckpoint())
+            undir(j)).cut(false))
         val (wOld, wFold) = walkHooks(catalog, sub, oldStore,
           vertexLabels(j), edgeLabels(j), mx, preds(j), undir(j))
         val d = lazyCut(varLengthViewDelta(oldStore, newStore, touchedV,
@@ -1700,8 +1607,8 @@ object Views {
         // merge AND the membership ops — the old `new ANTI old`
         // both-ways diff shuffled two walk-state-sized frames
         val (s1Raw, opsRaw) = mergeJoinDeltaWithOps(s0, d)
-        catalog.put(sub, s1Raw.localCheckpoint())
-        j -> pairHop(s0, opsRaw.localCheckpoint())
+        catalog.put(sub, s1Raw.cut(false))
+        j -> pairHop(s0, opsRaw.cut(false))
     }.toMap
     refreshChain(catalog, name, oldStore, newStore, touchedV,
       vertexLabels, edgeLabels, preds, epreds, undir, overrides)
@@ -1762,7 +1669,7 @@ object Views {
     // the fold's first count on each IS its materialization (one
     // job, not two).
     val touchedE = touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV)
-      .localCheckpoint()
+      .cut(false)
     val eo = edgeMembers(oldStore, edgeLabel, None, touchedE)
     val en = edgeMembers(newStore, edgeLabel, None, touchedE)
     (lazyCut(en.join(eo, Seq("src", "dst"), "left_anti")),
@@ -1846,8 +1753,9 @@ object Views {
     *
     * STATE LAYOUT (r12): `stateKey!core` is the closure
     * hash-partitioned + sorted on (src, dst) with the layout carried
-    * across refreshes ([[partitionedCkpt]]); `stateKey!tail` is the
-    * window-accumulated remainder; the plain `stateKey` serves their
+    * across refreshes ([[graft.Lineage.partitionedCkpt]]);
+    * `stateKey!tail` is the window-accumulated remainder; the plain
+    * `stateKey` serves their
     * union. Every membership anti/semi inside the fold plans with NO
     * exchange on the core side and a broadcast tail side — refresh
     * shuffle is window-bounded; the tail folds into the core at
@@ -1879,7 +1787,7 @@ object Views {
     val keys = Seq("src", "dst")
     // CORE + TAIL state layout (r12): the closure lives as a
     // hash-partitioned, pair-sorted CORE carried across refreshes
-    // ([[partitionedCkpt]] — the layout rides the checkpoint into
+    // (Lineage.partitionedCkpt — the layout rides the checkpoint into
     // join planning) plus a window-accumulated TAIL. Every
     // membership anti/semi join inside the fold then shuffles ONLY
     // the window-sized probe side: the core side plans with no
@@ -1908,7 +1816,7 @@ object Views {
         val boot = catalog.dataOf(stateKey).getOrElse(
           initReachState(oldStore, edgeLabel, maxRounds))
         val (c, n) = partitionedCkpt(boot, keys)
-        (c, boot.limit(0).localCheckpoint(), 0L, n)
+        (c, boot.limit(0).cut(false), 0L, n)
     }
     val s0 = core0.unionByName(tail0)
     val (eAdd, eRem) = reachEdgeDelta(oldStore, newStore, edgeLabel,
@@ -1931,8 +1839,8 @@ object Views {
         if (tailBound == 0L) (core, tail, coreCnt)
         else if (tailBound > rederiveCap || tailBound * 4 > coreCnt) {
           val (c, n) = partitionedCkpt(core.unionByName(tail), keys)
-          (c, tail.limit(0).localCheckpoint(), n)
-        } else (core, tail.localCheckpoint(), coreCnt)
+          (c, tail.limit(0).cut(false), n)
+        } else (core, tail.cut(false), coreCnt)
       val state = coreF.unionByName(tailF)
       catalog.put(s"$stateKey!core", coreF)
       catalog.put(s"$stateKey!tail", tailF)
@@ -1943,7 +1851,7 @@ object Views {
       catalog.put(stateKey, state, persist = false)
       val o = ops.getOrElse {
         if (!needOps) s0.limit(0).withColumn("op", lit("add"))
-        else netOps(s0, state, keys).localCheckpoint()
+        else netOps(s0, state, keys).cut(false)
       }
       (s0, state, o)
     }
@@ -2012,7 +1920,7 @@ object Views {
         .select("src", "dst")
         .join(hinted(eRem, remCnt), Seq("src", "dst"), "left_anti"))
       // kept = state minus candidates, SPLIT: the core side keeps its
-      // carried layout through the broadcast-anti ([[preservedCkpt]]),
+      // carried layout through the broadcast-anti (Lineage.preservedCkpt),
       // so the per-round membership semi below shuffles only the
       // probe; re-derived rows accumulate in the window-sized tail
       val keptCore = preservedCkpt(core.join(hinted(cands, aCnt), keys,
@@ -2198,7 +2106,7 @@ object Views {
     def composed(walk: DataFrame, tc: DataFrame, dst: DataFrame) =
       walk.join(tc, x).join(dst, b)
         .groupBy(col("c0").as("src"), col(b).as("dst"))
-        .agg(sum("__mult").as("__mult")).localCheckpoint()
+        .agg(sum("__mult").as("__mult")).cut(false)
     val wl = wOld(lvl).select(col("c0"), col(s"c$lvl").as(x), col("__mult"))
     val tcRel = tc0.select(col("src").as(x), col("dst").as(b))
     val state0 = catalog.dataOf(s"$prefix!state").getOrElse(
@@ -2212,7 +2120,7 @@ object Views {
       val state1 = composed(wlNew,
         tc1.select(col("src").as(x), col("dst").as(b)), dstV(newStore))
       val ops = netOps(state0.select("src", "dst"),
-        state1.select("src", "dst"), Seq("src", "dst")).localCheckpoint()
+        state1.select("src", "dst"), Seq("src", "dst")).cut(false)
       catalog.put(s"$prefix!state", state1)
       return (state0, state1, ops)
     }
@@ -2232,7 +2140,7 @@ object Views {
     // the state stays an EAGER checkpoint (put-boundary contract) —
     // its job also materializes the fold's lazy `touched`/`matched`
     // probes, which the lazy ops then read as stored blocks
-    val state1 = s1Raw.localCheckpoint()
+    val state1 = s1Raw.cut(false)
     catalog.put(s"$prefix!state", state1)
     (state0, state1, lazyCut(opsRaw))
   }
@@ -2284,11 +2192,11 @@ object Views {
   private def ccLabels(edges: DataFrame, maxRounds: Int,
       hintSmall: Boolean = false): DataFrame = {
     val sym0 = symmetrize(edges.select("src", "dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct().cut(false)
     val sym = if (hintSmall) broadcast(sym0) else sym0
     var lbl = edges.select(col("src").as("id"))
       .unionByName(edges.select(col("dst").as("id")))
-      .distinct().withColumn("comp", col("id")).localCheckpoint()
+      .distinct().withColumn("comp", col("id")).cut(false)
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
@@ -2298,18 +2206,16 @@ object Views {
       // relax: min over self + neighbor labels; the old label rides
       // the union (exactly one non-null __c0 per id), so the change
       // test below needs no join against the previous state
-      val relaxed = lbl
+      val relaxed = lazyCut(lbl
         .select(col("id"), col("comp"), col("comp").as("__c0"))
         .unionByName(msgs)
-        .groupBy("id").agg(min("comp").as("comp"), min("__c0").as("__c0"))
-        .localCheckpoint(false)
+        .groupBy("id").agg(min("comp").as("comp"), min("__c0").as("__c0")))
       // shortcut: comp := comp(comp) — label chains halve every round
-      val next = relaxed.join(
+      val next = lazyCut(relaxed.join(
           relaxed.select(col("id").as("__cid"), col("comp").as("__cc")),
           col("comp") === col("__cid"), "left")
         .select(col("id"), coalesce(col("__cc"), col("comp")).as("comp"),
-          col("__c0"))
-        .localCheckpoint(false)
+          col("__c0")))
       changed = next.filter(col("comp") =!= col("__c0")).count()
       lbl = next.select("id", "comp")
       rounds += 1
@@ -2574,7 +2480,7 @@ object Views {
     def apply(batch: DataFrame, batchId: Long)(
         merge: (DataFrame, DataFrame) => DataFrame): Unit = synchronized {
       if (!applied.contains(batchId)) {
-        state = merge(state, batch).localCheckpoint()
+        state = merge(state, batch).cut(false)
         applied += batchId
       }
     }
