@@ -1498,11 +1498,6 @@ object GqlExecutor {
 
   // ---- CREATE / DELETE (executor.rs:522-615) ----------------------
 
-  /** CREATE assigns ids max_id+1.. in pattern order; consecutive
-    * pattern nodes are linked with the edge's label or the default
-    * `related` (executor.rs:547-562). Node label is stored both as
-    * the `label` column and the `type` prop (executor.rs:534-537).
-    */
   /** MERGE (Cypher match-or-create, single node): the existence
     * probe is ONE limit(1) count on the label+props filter — the
     * same pushed predicate a MATCH runs, stopping at the first hit.
@@ -1511,7 +1506,9 @@ object GqlExecutor {
     * folds, own-property reads only) are identical to MATCH-SET; on
     * the create path only the just-created node can match (nothing
     * matched a moment earlier, and creation is driver-sequential),
-    * so the delegation cannot over-apply.
+    * so the delegation cannot over-apply. Each mutating merge ends in
+    * exactly one lineage cut: the one [[executeSet]] makes (see its
+    * cut contract), or a `truncated()` on a create with no ON CREATE.
     */
   def executeMerge(store: GraphStore, m: MergeStatement): GraphStore = {
     val sets = m.onCreate ++ m.onMatch
@@ -1536,15 +1533,14 @@ object GqlExecutor {
       if (items.isEmpty) st
       else executeSet(st, SetStatement(pat, None, items.map(Left(_))))
     val exists = store.vertices.filter(nodeFilter(node)).limit(1).count() > 0
-    // truncate whenever this merge mutated: merges chain (bulk
-    // upsert loops), and each uncut layer re-executes under the next
-    // merge's probe
-    if (exists) {
-      if (m.onMatch.isEmpty) store
-      else applySets(store, m.onMatch).truncated()
-    } else {
-      applySets(executeCreate(store, CreateStatement(pat)), m.onCreate)
-        .truncated()
+    // cut whenever this merge mutated: merges chain (bulk upsert
+    // loops), and each uncut layer re-executes under the next merge's
+    // probe
+    if (exists) applySets(store, m.onMatch)
+    else {
+      val created = executeCreate(store, CreateStatement(pat))
+      if (m.onCreate.isEmpty) created.truncated()
+      else applySets(created, m.onCreate)
     }
   }
 
@@ -1637,6 +1633,14 @@ object GqlExecutor {
     st
   }
 
+  /** CREATE assigns ids max_id+1.. in pattern order; consecutive
+    * pattern nodes are linked with the edge's label or the default
+    * `related` (executor.rs:547-562). Node label is stored both as
+    * the `label` column and the `type` prop (executor.rs:534-537).
+    * The max is the store's carried one (GraphStore's class doc), so
+    * a CREATE on a store that knows it runs no job, and the new store
+    * knows its own.
+    */
   def executeCreate(store: GraphStore, c: CreateStatement): GraphStore = {
     val spark = store.spark
     val maxId = store.maxVertexId()
@@ -1657,7 +1661,7 @@ object GqlExecutor {
     }
 
     val vDf = GraphStore.fromTuples(spark, vRows, Nil).vertices
-    val withV = store.addVertices(vDf)
+    val withV = store.addVerticesAbove(vDf, maxId + ids.size)
     if (eRows.isEmpty) withV
     else withV.addEdges(GraphStore.fromTuples(spark,
       Seq((0L, "x", Nil)), eRows).edges)
@@ -1674,6 +1678,16 @@ object GqlExecutor {
     * also makes the per-id rows identical across binding fan-out, so
     * the dropDuplicates is deterministic. A NULL value removes the
     * key, Cypher's `SET v.p = null`.
+    *
+    * Cut contract: the returned store's vertex frame is a fresh EAGER
+    * lineage cut (`truncated()`), materialized before the call
+    * returns. The update plan refers to the prior vertex frame twice
+    * (the join's base, and the binding frame inside the update rows),
+    * so an uncut result re-executes every earlier mutation layer at
+    * each later read and commit, and chained SETs grow the plan
+    * exponentially. The cut is eager, not lazy, and is never the
+    * input's vertex frame, so freeing the input's vertex cut
+    * (`Lineage.freeCut`) leaves the returned vertices readable.
     */
   def executeSet(store: GraphStore, s: SetStatement): GraphStore = {
     val bindings = matchPattern(store, s.pattern)
@@ -1726,7 +1740,7 @@ object GqlExecutor {
         .dropDuplicates("id")
       st = st.updateVertexProps(rows)
     }
-    st
+    st.truncated()
   }
 
   /** Fold written-order SET / REMOVE(Right prop name) ops into ONE

@@ -30,14 +30,36 @@ import java.util.concurrent.ConcurrentHashMap
   * a stream of update batches does not grow the partition count (and
   * with it every later scan's task count). Vertex/edge additions
   * still append the batch frame's partitions.
+  *
+  * The store carries its max vertex id, the base GQL CREATE draws new
+  * ids from (live max + 1, executor.rs:618-625). It is computed by one
+  * `max(id)` aggregate the first time [[maxVertexId]] is asked and
+  * memoized; a mutation that keeps the id set (property updates, edge
+  * adds and removes, [[truncated]], [[truncatedEdges]], [[cache]],
+  * [[compact]]) hands the known max to the new store, and CREATE
+  * advances it from the ids it assigned on the driver. Removing
+  * vertices (it may delete the max) and a caller's [[addVertices]]
+  * rows leave it unknown, so the next CREATE recomputes it. A store
+  * built through the public constructor starts unknown.
   */
-final class GraphStore(
+final class GraphStore private (
     val vertices: DataFrame,
     val edges: DataFrame,
     val changes: DataFrame,
-    val version: Long) {
+    val version: Long,
+    carriedMaxId: Option[Long]) {
+
+  def this(vertices: DataFrame, edges: DataFrame, changes: DataFrame,
+      version: Long) = this(vertices, edges, changes, version, None)
 
   import GraphStore._
+
+  // benign race: two threads may both compute the same max
+  @volatile private var knownMaxId: Option[Long] = carriedMaxId
+
+  /** The same store with other frames and the same vertex id set. */
+  private def keepingIds(v: DataFrame, e: DataFrame, ch: DataFrame,
+      ver: Long): GraphStore = new GraphStore(v, e, ch, ver, knownMaxId)
 
   def spark: SparkSession = vertices.sparkSession
 
@@ -93,17 +115,26 @@ final class GraphStore(
 
   // ---- mutations (X1-X2) ------------------------------------------
 
-  def addVertices(rows: DataFrame): GraphStore = {
-    val newV = vertices.join(rows, Seq("id"), "left_anti").unionByName(rows)
-    val ch = rows.select(
+  def addVertices(rows: DataFrame): GraphStore =
+    new GraphStore(vertices.join(rows, Seq("id"), "left_anti").unionByName(rows),
+      edges, changes.unionByName(addVertexOps(rows)), version + 1)
+
+  /** [[addVertices]] for rows whose ids run from [[maxVertexId]] + 1
+    * up to `newMax` (GQL CREATE): no existing vertex can hold them, so
+    * no anti-join, and the new store knows its max without a job.
+    */
+  private[graft] def addVerticesAbove(rows: DataFrame, newMax: Long): GraphStore =
+    new GraphStore(vertices.unionByName(rows), edges,
+      changes.unionByName(addVertexOps(rows)), version + 1, Some(newMax))
+
+  private def addVertexOps(rows: DataFrame): DataFrame =
+    rows.select(
       lit("add_vertex").as("op"), col("id"),
       lit(null).cast(LongType).as("src"), lit(null).cast(LongType).as("dst"),
       lit(null).cast(StringType).as("elabel"),
       lit(null).cast(PropValue.mapType).as("oldProps"), col("props").as("newProps"),
       lit("api").as("source"), current_timestamp().as("ts"),
       lit(version + 1).as("version"))
-    new GraphStore(newV, edges, changes.unionByName(ch), version + 1)
-  }
 
   def addEdges(rows: DataFrame): GraphStore = {
     val newE = edges.join(rows, Seq("src", "dst", "label"), "left_anti").unionByName(rows)
@@ -113,7 +144,7 @@ final class GraphStore(
       lit(null).cast(PropValue.mapType).as("oldProps"), col("props").as("newProps"),
       lit("api").as("source"), current_timestamp().as("ts"),
       lit(version + 1).as("version"))
-    new GraphStore(vertices, newE, changes.unionByName(ch), version + 1)
+    keepingIds(vertices, newE, changes.unionByName(ch), version + 1)
   }
 
   /** Remove vertices and cascade their edges
@@ -151,7 +182,7 @@ final class GraphStore(
       col("props").as("oldProps"), lit(null).cast(PropValue.mapType).as("newProps"),
       lit("api").as("source"), current_timestamp().as("ts"),
       lit(version + 1).as("version"))
-    new GraphStore(vertices, newE, changes.unionByName(ch), version + 1)
+    keepingIds(vertices, newE, changes.unionByName(ch), version + 1)
   }
 
   /** Replace the property map of existing vertices
@@ -171,7 +202,7 @@ final class GraphStore(
       col("props").as("oldProps"), col("__newProps").as("newProps"),
       lit("api").as("source"), current_timestamp().as("ts"),
       lit(version + 1).as("version"))
-    new GraphStore(newV, edges, changes.unionByName(ch), version + 1)
+    keepingIds(newV, edges, changes.unionByName(ch), version + 1)
   }
 
   /** Replace the property map of existing edges, keyed (src, dst,
@@ -190,7 +221,7 @@ final class GraphStore(
       col("props").as("oldProps"), col("__newProps").as("newProps"),
       lit("api").as("source"), current_timestamp().as("ts"),
       lit(version + 1).as("version"))
-    new GraphStore(vertices, newE, changes.unionByName(ch), version + 1)
+    keepingIds(vertices, newE, changes.unionByName(ch), version + 1)
   }
 
   /** `base` with the props of rows matching `upd` (keys, __newProps)
@@ -210,8 +241,14 @@ final class GraphStore(
         case c => col(c)
       }: _*)
 
-  def maxVertexId(): Long =
-    vertices.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
+  /** The live max vertex id, 0 for an empty store: carried when known
+    * (see the class doc), else one aggregate, memoized.
+    */
+  def maxVertexId(): Long = knownMaxId.getOrElse {
+    val m = vertices.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
+    knownMaxId = Some(m)
+    m
+  }
 
   // ---- persistence (S6) -------------------------------------------
 
@@ -253,7 +290,7 @@ final class GraphStore(
   def compact(dir: String): GraphStore = {
     save(dir)
     val reloaded = GraphStore.load(spark, dir)
-    new GraphStore(reloaded.vertices, reloaded.edges,
+    keepingIds(reloaded.vertices, reloaded.edges,
       GraphStore.emptyChanges(spark), version)
   }
 
@@ -271,10 +308,12 @@ final class GraphStore(
     * Edges and the change feed keep their lineage: vertex-only
     * mutations leave edges untouched, and the append-only feed is
     * read rarely. Local checkpoints trade executor-loss recovery for
-    * speed — `compact(dir)` is the durable form.
+    * speed — `compact(dir)` is the durable form. The cut is fresh
+    * even when the vertex frame already is one, so a caller may free
+    * the replaced store's cuts (`Lineage.freeCut`) after a commit.
     */
   def truncated(): GraphStore =
-    new GraphStore(vertices.cut(reliable = false), edges, changes, version)
+    keepingIds(vertices.cut(reliable = false), edges, changes, version)
 
   /** Edge-side lineage cut — the [[truncated]] twin for chains of
     * EDGE mutations (relationship MERGE loops): each uncut layer
@@ -284,7 +323,7 @@ final class GraphStore(
     * mutate it).
     */
   def truncatedEdges(): GraphStore =
-    new GraphStore(vertices, edges.cut(reliable = false), changes, version)
+    keepingIds(vertices, edges.cut(reliable = false), changes, version)
 }
 
 object GraphStore {

@@ -1144,25 +1144,16 @@ class AlgoSpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L),
       (5L, 6L)).toDF("src", "dst")
     val v = (1L to 6L).map(Tuple1(_)).toDF("id")
-    val sc = spark.sparkContext
-    // the job-group recipe of StreamViewsSpec "view refresh job counts":
-    // every job the operator fires, result collect included
-    def jobsOf(name: String)(f: => Map[Long, Long]): (Map[Long, Long], Int) = {
-      val group = s"algo-jobs-$name-${System.nanoTime()}"
-      sc.setJobGroup(group, s"job budget of $name", false)
-      val out = try f finally sc.clearJobGroup()
-      org.apache.spark.graft.SparkTestAccess.flushListenerBus(sc)
-      (out, sc.statusTracker.getJobIdsForGroup(group).length)
-    }
     def pairs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (scc, sccJobs) = jobsOf("scc")(
+    // every job the operator fires, result collect included
+    val (scc, sccJobs) = jobsOf(
       pairs(Algorithms.stronglyConnectedComponents(v, e)))
     assert(scc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L,
       6L -> 6L))
-    val (core, coreJobs) = jobsOf("kcore")(pairs(Algorithms.kCore(e, 2)))
+    val (core, coreJobs) = jobsOf(pairs(Algorithms.kCore(e, 2)))
     assert(core == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 3L, 5L -> 2L))
-    val (bfs, bfsJobs) = jobsOf("bfs")(pairs(Algorithms.multiSourceBfs(e,
+    val (bfs, bfsJobs) = jobsOf(pairs(Algorithms.multiSourceBfs(e,
       Seq(1L).toDF("id"), maxHops = 6).select("id", "hops")
       .withColumn("hops", col("hops").cast("long"))))
     assert(bfs == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L,

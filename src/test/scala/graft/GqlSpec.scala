@@ -704,6 +704,123 @@ class GqlSpec extends SparkSpec {
     assert(s3.edges.filter(col("label") === "related").count() == 1)
   }
 
+  /** The fixture's frames in a store that has not learned its max id. */
+  private def freshFixture: GraphStore =
+    new GraphStore(fixture.vertices, fixture.edges, fixture.changes, fixture.version)
+
+  private def idOf(st: GraphStore, name: String): Long =
+    st.vertices.filter(PropValue.compare(col("props")("name"), name, "="))
+      .select("id").collect().map(_.getLong(0)).toSeq match {
+        case Seq(id) => id
+        case ids => fail(s"$name: ids $ids")
+      }
+
+  test("write transaction job budget: CREATE → SET → read-your-write → " +
+    "commit, and a node MERGE on both paths") {
+    def txn(st: GraphStore, name: String): (GraphStore, Seq[Int]) = {
+      val (created, j1) = jobsOf(GqlExecutor.run(st,
+        s"""CREATE (c:Person {name: "$name", age: 40})""").store)
+      val (updated, j2) = jobsOf(GqlExecutor.run(created,
+        s"""MATCH (c:Person) WHERE c.name = "$name" SET c.age = c.age + 2""").store)
+      val (seen, j3) = jobsOf(GqlExecutor.run(updated,
+        s"""MATCH (c:Person {name: "$name"}) RETURN c.age""").df
+        .select(PropValue.asDouble(col("c_age"))).collect())
+      assert(seen.map(_.getDouble(0)).toSeq == Seq(42.0))
+      val (committed, j4) = jobsOf(updated.truncated())
+      // the commit is a fresh cut: freeing the SET's cut, as a session
+      // frees a replaced store, leaves the committed store readable
+      graft.Lineage.freeCut(updated.vertices)
+      (committed, Seq(j1, j2, j3, j4))
+    }
+    // the first transaction learns the max id, as a session's first
+    // write does; the second is the steady state that is counted
+    val (s1, _) = txn(freshFixture, "T1")
+    val (s2, steps) = txn(s1, "T2")
+    // node MERGE: the match path with ON MATCH, and the create path
+    // with and without ON CREATE
+    val (_, onMatch) = jobsOf(GqlExecutor.run(s2,
+      """MERGE (p:Person {name: "Bob"}) ON MATCH SET p.seen = 1""").store)
+    val (_, onCreate) = jobsOf(GqlExecutor.run(s2,
+      """MERGE (p:Person {name: "Zed"}) ON CREATE SET p.fresh = 1""").store)
+    val (_, bare) = jobsOf(GqlExecutor.run(s2, """MERGE (p:Person {name: "Zed"})""").store)
+    info(s"CREATE/SET/read/commit jobs: ${steps.mkString("/")} = ${steps.sum}")
+    info(s"MERGE jobs: on match $onMatch, on create $onCreate, create $bare")
+    assert(GqlExecutor.run(s2, """MATCH (c:Person) WHERE c.age = 42 RETURN c.name""")
+      .df.count() == 2L)
+    // budgets are the counts measured on this fixture
+    assert(steps.head == 0, s"CREATE with a known max id fired ${steps.head} jobs")
+    assert(steps.sum <= 5, s"write transaction: ${steps.sum} jobs, budget 5")
+    assert(onMatch <= 5, s"MERGE ON MATCH: $onMatch jobs, budget 5")
+    assert(onCreate <= 5, s"MERGE ON CREATE: $onCreate jobs, budget 5")
+    assert(bare <= 3, s"MERGE create: $bare jobs, budget 3")
+  }
+
+  test("chained SETs stay flat: each result is one cut leaf, answers " +
+    "equal the client-cut chain") {
+    val sets = Seq(
+      "MATCH (v:Person) WHERE v.age > 26 SET v.age = v.age + 1",
+      "MATCH (v:Person) WHERE v.department = \"Engineering\" SET v.lvl = 2",
+      "MATCH (v:Person) WHERE v.age > 30 SET v.age = v.age * 2, v.lvl = 3",
+      "MATCH (v:Person) WHERE v.name = \"Bob\" REMOVE v.age")
+    var chained = fixture
+    sets.zipWithIndex.foreach { case (q, i) =>
+      chained = GqlExecutor.run(chained, q).store
+      // read before any action on the result: an uncut SET nests the
+      // prior vertex plan twice, and the chain grows exponentially
+      val plan = chained.vertices.queryExecution.analyzed
+      assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+        s"SET ${i + 1}: vertex plan is not one cut leaf:\n$plan")
+    }
+    val cut = sets.foldLeft(fixture)((st, q) => GqlExecutor.run(st, q).store.truncated())
+    def rows(st: GraphStore): Seq[String] =
+      st.vertices.select(col("id"), col("label"),
+        to_json(map_entries(col("props"))).as("p"))
+        .collect().map(r => s"${r.getLong(0)} ${r.getString(1)} ${r.getString(2)}")
+        .toSeq.sorted
+    assert(rows(chained) == rows(cut))
+    assert(idOf(chained, "Charlie") == 3L)
+    val charlie = chained.vertices.filter(col("id") === 3L)
+      .select(PropValue.asDouble(col("props")("age")),
+        PropValue.asLong(col("props")("lvl"))).head()
+    assert((charlie.getDouble(0), charlie.getLong(1)) == ((72.0, 3L)))
+  }
+
+  test("carried max id: CREATE and MERGE assign live max + 1 without a job " +
+    "while the max is known") {
+    def create(st: GraphStore, name: String): (GraphStore, Int) =
+      jobsOf(GqlExecutor.run(st, s"""CREATE (x:Person {name: "$name"})""").store)
+    def merge(st: GraphStore, name: String): GraphStore =
+      GqlExecutor.run(st, s"""MERGE (x:Person {name: "$name"})""").store
+    // consecutive CREATEs: max+1, max+2…; only the first one asks
+    val (a, j0) = create(freshFixture, "A")
+    assert(j0 > 0)
+    val (b, jb) = create(a, "B")
+    val (c, jc) = jobsOf(GqlExecutor.run(b,
+      """CREATE (x:Person {name: "C"})-[:knows]->(y:Person {name: "D"})""").store)
+    assert((jb, jc) == ((0, 0)))
+    assert(Seq("A", "B", "C", "D").map(idOf(c, _)) == Seq(5L, 6L, 7L, 8L))
+    // SET, edge mutations and commits keep it
+    val kept = GqlExecutor.run(c, """MATCH (v:Person) WHERE v.name = "A" SET v.k = 1""")
+      .store.removeEdges(c.edges.filter(col("label") === "knows"))
+      .truncatedEdges()
+    val (e, je) = create(kept, "E")
+    assert(je == 0 && idOf(e, "E") == 9L)
+    // DELETE of the max vertex: the next id is the LIVE max + 1
+    val del = GqlExecutor.run(e, """MATCH (v:Person) WHERE v.name = "E" DELETE v""").store
+    assert(idOf(create(del, "F")._1, "F") == 9L)
+    assert(idOf(merge(del, "F"), "F") == 9L)
+    // caller rows above the max: the next id lands above them
+    import spark.implicits._
+    val big = e.addVertices(Seq((100L, "Robot")).toDF("id", "label")
+      .withColumn("props", GraphStore.propsMap("name" -> "R")))
+    assert(idOf(create(big, "G")._1, "G") == 101L)
+    assert(idOf(merge(big, "G"), "G") == 101L)
+    // MERGE's create path advances the max like CREATE
+    val m1 = merge(e, "M1")
+    val (m2, jm) = create(m1, "M2")
+    assert(jm == 0 && (idOf(m1, "M1"), idOf(m2, "M2")) == ((10L, 11L)))
+  }
+
   test("RETURN AS aliases and expressions: props, aggs, keys, literals") {
     // property + arithmetic expression, both aliased
     val r = GqlExecutor.run(fixture,

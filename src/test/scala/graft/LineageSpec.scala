@@ -53,18 +53,6 @@ class LineageSpec extends SparkSpec {
       "cut lineage through graft.Lineage:\n" + offenders.mkString("\n"))
   }
 
-  /** (result, jobs fired by `f`) — the job-group recipe of the
-    * StreamViewsSpec job budgets.
-    */
-  private def jobsOf[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"lineage-jobs-${System.nanoTime()}"
-    sc.setJobGroup(group, "lineage cut", false)
-    val out = try f finally sc.clearJobGroup()
-    org.apache.spark.graft.SparkTestAccess.flushListenerBus(sc)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   private def bag(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 

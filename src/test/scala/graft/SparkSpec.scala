@@ -3,24 +3,27 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession. */
+/** Shared session for all suites — one JVM-wide SparkSession, built
+  * by the same builder as the mains.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(8)
   val sf: String = "/root/testdata/sf0.001"
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** (result, Spark jobs fired by `f`): every job `f` starts runs in
+    * one fresh job group, counted once the listener bus is drained.
+    */
+  protected def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "counted jobs", false)
+    val out = try f finally sc.clearJobGroup()
+    org.apache.spark.graft.SparkTestAccess.flushListenerBus(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }
