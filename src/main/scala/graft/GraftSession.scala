@@ -25,7 +25,7 @@ object GraftSession {
       // iterative plans generate a codegen class per loop round —
       // size the class cache so mixed workloads don't recompile them
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // iterative loops run with a RELIABLE checkpointDir write one
+      // iterative loops under a session checkpoint dir write one
       // frame per round; without this the files outlive their RDDs
       // (Spark's default) and a deep job leaks O(rounds) durable
       // storage — must be set at session build, the ContextCleaner

@@ -47,19 +47,25 @@ import org.apache.spark.util.AccumulatorV2
   *
   * Local vs reliable: local mode (`localCheckpoint`) is fastest, but
   * its blocks live in executor storage and die with an executor. A
-  * long-lived cluster job passes `checkpointDir` to the owning
-  * operator, which calls [[configure]] once at entry and then cuts
-  * with `reliable = true`: the RELIABLE `checkpoint` writes
-  * HDFS/object-store files that survive executor loss — same
-  * plan-flattening effect, durable blocks. Lazy and partition-carrying
-  * cuts are local only (view folds run in one session's lifetime).
+  * long-lived cluster job sets the session's checkpoint dir once with
+  * Spark's own `sc.setCheckpointDir(dir)`; the iterative operators
+  * (reachability, BFS, k-core, SCC, PageRank family, betweenness,
+  * cluster resolve) read [[reliable]] once at entry and then cut with
+  * the RELIABLE `checkpoint`, which writes HDFS/object-store files
+  * that survive executor loss — same plan-flattening effect, durable
+  * blocks. Lazy and partition-carrying cuts are local only (view
+  * folds run in one session's lifetime), and so are store commits,
+  * louvain, neighborhoodFunction and labelPropagation.
   *
   * Every lazy local cut keeps the SQL metrics of the plan it marked
   * alive as long as the checkpoint's RDD ([[pinMetrics]]).
   */
 object Lineage {
 
-  /** Point the session at a reliable checkpoint dir (no-op when None).
+  /** True when the session has a checkpoint dir, so an operator's
+    * cuts are reliable. Only the user sets the dir
+    * (`sc.setCheckpointDir`); no graft code writes it. Operators read
+    * this once at entry.
     *
     * Checkpoint files are only reclaimed when the session was built
     * with `spark.cleaner.referenceTracking.cleanCheckpoints=true`
@@ -69,43 +75,15 @@ object Lineage {
     * O(rounds × frame size) of durable storage. Warn rather than
     * fail: the files are orphaned, not wrong.
     */
-  def configure(df: DataFrame, checkpointDir: Option[String]): Boolean = {
-    checkpointDir.foreach { d =>
-      val sc = df.sparkSession.sparkContext
-      if (!sc.getConf.getBoolean(
-          "spark.cleaner.referenceTracking.cleanCheckpoints", false))
-        System.err.println("[graft] reliable checkpointing without " +
-          "spark.cleaner.referenceTracking.cleanCheckpoints=true (set at " +
-          "session build): per-round checkpoint files will not be reclaimed")
-      // the checkpoint dir is SESSION-GLOBAL SparkContext state: two
-      // operators running concurrently in one session with different
-      // dirs race, and the last caller silently redirects the
-      // other's checkpoints — surface the overwrite instead.
-      // getCheckpointDir returns the qualified <dir>/<uuid> path
-      // setCheckpointDir created, so compare its PARENT against the
-      // requested dir. Compare FULLY-QUALIFIED paths (FileSystem
-      // .makeQualified fills in scheme + authority + working dir), not
-      // just the path component: hdfs://nn/ckpt vs file:/ckpt must
-      // warn, and the same /ckpt on two different namenodes must too.
-      // Qualification needs a FileSystem lookup that can throw on an
-      // unknown scheme; this is warning-only code, so fall back to the
-      // raw-path comparison rather than fail the operator.
-      def qualified(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-        scala.util.Try(p.getFileSystem(sc.hadoopConfiguration).makeQualified(p))
-          .getOrElse(p)
-      sc.getCheckpointDir
-        .filterNot { existing =>
-          val parent = new org.apache.hadoop.fs.Path(existing).getParent
-          parent != null &&
-            qualified(parent) == qualified(new org.apache.hadoop.fs.Path(d))
-        }
-        .foreach(existing => System.err.println(
-          s"[graft] overwriting session checkpoint dir $existing with $d — " +
-            "checkpointDir is session-global; concurrent operators with " +
-            "different dirs will checkpoint into the LAST one set"))
-      sc.setCheckpointDir(d)
-    }
-    checkpointDir.isDefined
+  def reliable(spark: SparkSession): Boolean = {
+    val sc = spark.sparkContext
+    val rel = sc.getCheckpointDir.isDefined
+    if (rel && !sc.getConf.getBoolean(
+        "spark.cleaner.referenceTracking.cleanCheckpoints", false))
+      System.err.println("[graft] reliable checkpointing without " +
+        "spark.cleaner.referenceTracking.cleanCheckpoints=true (set at " +
+        "session build): per-round checkpoint files will not be reclaimed")
+    rel
   }
 
   implicit class CutOps(private val df: DataFrame) extends AnyVal {

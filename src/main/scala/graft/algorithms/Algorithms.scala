@@ -51,16 +51,6 @@ object Algorithms {
       ceiling: Long): DataFrame =
     if (rows <= ceiling) broadcast(df) else df
 
-  /** Byte-aware variant of [[hintIfAtMost]] (r13, r12 verdict #6):
-    * the caller's row ceiling is additionally clamped by the session
-    * broadcast byte budget derived from THIS frame's estimated row
-    * width ([[graft.views.Views.broadcastRowBudget]]) — the policy
-    * ceiling stays as an upper bound, the row-width blindness goes.
-    */
-  private[graft] def hintIfFits(df: DataFrame, rows: Long,
-      ceiling: Long): DataFrame =
-    graft.views.Views.hintIfFits(df, rows, ceiling)
-
   /** True when `df` is a pure projection over an already-cached (or
     * driver-local) relation — the cases where re-persisting would
     * duplicate a cache that already serves scans cheaply. Anything
@@ -310,8 +300,8 @@ object Algorithms {
 
   /** G8: forward reachability from a source set — iterative frontier
     * expansion, accumulating visited. DataFrame loop with lineage
-    * truncation per round (`checkpointDir` swaps the local truncation
-    * for a reliable one — see [[graft.Lineage]]).
+    * truncation per round (reliable when the session has a checkpoint
+    * dir — see [[graft.Lineage.reliable]]).
     *
     * Same join-side economics as [[multiSourceBfs]]: checkpointed
     * frontiers are stats-less, so without a hint every round
@@ -322,11 +312,10 @@ object Algorithms {
     * lazy union of the once-cut frontiers.
     */
   def reachability(edges: DataFrame, sources: Seq[Long], maxIter: Int = 50,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val e0 = edges.select(col("src"), col("dst"))
     val inputServedCheaply = servedFromCache(e0)
     val e = if (inputServedCheaply) e0
@@ -381,8 +370,8 @@ object Algorithms {
     * pays `maxHops` equi-joins total for any number of sources —
     * the shape that survives a thousand-seed batch at cluster scale.
     * Sources: a single-column (`id`) frame; output rows include the
-    * seeds at hops 0. Rounds are lineage-truncated (`checkpointDir`
-    * selects the reliable variant).
+    * seeds at hops 0. Rounds are lineage-truncated (reliably when the
+    * session has a checkpoint dir).
     *
     * Join-side economics (the part AQE cannot fix here): each round's
     * frontier is a checkpointed frame with no catalog stats, so the
@@ -400,9 +389,8 @@ object Algorithms {
     */
   def multiSourceBfs(edges: DataFrame, sources: DataFrame, maxHops: Int,
       undirected: Boolean = false,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val e0 = edges.select(col("src"), col("dst"))
     // Persist the edge projection only when it is a pure projection
     // of an already-cached (or driver-local) relation:
@@ -525,8 +513,7 @@ object Algorithms {
     * (L-bounded, never a global sort).
     */
   def landmarkIndex(edges: DataFrame, numLandmarks: Int, maxHops: Int,
-      undirected: Boolean = true,
-      checkpointDir: Option[String] = None): DataFrame = {
+      undirected: Boolean = true): DataFrame = {
     require(numLandmarks > 0, "need at least one landmark")
     val e = edges.select(col("src"), col("dst"))
     val doubled =
@@ -537,7 +524,7 @@ object Algorithms {
       .agg(count(lit(1)).as("degree"))
       .orderBy(col("degree").desc, col("id").asc)
       .limit(numLandmarks).select("id")
-    multiSourceBfs(e, lms, maxHops, undirected, checkpointDir)
+    multiSourceBfs(e, lms, maxHops, undirected)
   }
 
   /** Triangle-inequality distance bounds from a landmark index (an
@@ -596,11 +583,10 @@ object Algorithms {
     */
   def temporalReachability(tedges: DataFrame, seeds: DataFrame,
       sentinel: java.sql.Timestamp, maxRounds: Int = 60,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows,
       dateBuckets: Int = 1): DataFrame = {
     require(dateBuckets >= 1, s"dateBuckets must be >= 1, got $dateBuckets")
-    val rel = graft.Lineage.configure(tedges, checkpointDir)
+    val rel = graft.Lineage.reliable(tedges.sparkSession)
     val e = tedges.select(col("src"), col("dst"), col("d").as("ed"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -658,7 +644,8 @@ object Algorithms {
         }
         var improvedCnt = -1L
         while (frontierCnt > 0 && improvedCnt != 0 && rounds < maxRounds) {
-          val fr = hintIfFits(frontier, frontierCnt, broadcastRows)
+          val fr = graft.views.Views.hintIfFits(frontier, frontierCnt,
+            broadcastRows)
           val candidates = fr.join(eb,
               fr("id") === eb("src") && eb("ed") >= fr("d"))
             .select(col("seed"), col("dst").as("id"), col("ed").as("d"))
@@ -728,9 +715,8 @@ object Algorithms {
     * ids with their core degree.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     var e = edges.select(col("src"), col("dst")).cut(rel)
     var changed = true
     var iter = 0
@@ -776,9 +762,8 @@ object Algorithms {
     * makes this the distributed-friendly form of coreness (the
     * textbook peel is inherently ordered).
     */
-  def coreness(edges: DataFrame, maxIter: Int = 50,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+  def coreness(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val e = edges.select(col("src"), col("dst"))
     val adj = graft.TransientCache.persist(
       e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -879,10 +864,9 @@ object Algorithms {
     * peel depth, in practice single digits.
     */
   def kTruss(canonicalEdges: DataFrame, k: Int, maxIter: Int = 100,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val rel = graft.Lineage.configure(canonicalEdges, checkpointDir)
+    val rel = graft.Lineage.reliable(canonicalEdges.sparkSession)
     var e = canonicalEdges.select("src", "dst").distinct().cut(rel)
     var changed = true
     var iter = 0
@@ -955,7 +939,7 @@ object Algorithms {
     *
     * Every per-round frame is lineage-truncated — flat lineage, the
     * iterative-DataFrame pattern used by reachability/kCore/CC here
-    * (`checkpointDir` swaps local truncation for reliable — see
+    * (reliable when the session has a checkpoint dir — see
     * [[graft.Lineage]]). `numIter` caps OUTER rounds (each peels ≥1
     * SCC per color; deep SCC-DAG chains need more rounds — leftovers
     * get their forward min-reaching-id label, the same best-effort
@@ -965,9 +949,9 @@ object Algorithms {
     * graphs, where convergence exits the loop early anyway).
     */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
-      numIter: Int = 50, checkpointDir: Option[String] = None,
+      numIter: Int = 50,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    val rel = graft.Lineage.configure(vertices, checkpointDir)
+    val rel = graft.Lineage.reliable(vertices.sparkSession)
     var (remaining, remainingCount) = cutCount(vertices.select(col("id")), rel)
     // Restrict edges to the declared vertex set at ENTRY (the later
     // label joins filtered stray endpoints anyway, so semantics are
@@ -1269,10 +1253,9 @@ object Algorithms {
     */
   def personalizedPageRank(vertices: DataFrame, edges: DataFrame,
       seeds: Seq[Long], damping: Double = 0.85, numIter: Int = 10,
-      undirected: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
+      undirected: Boolean = false): DataFrame = {
     require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val sd = seeds.distinct
     val sMass = 1.0 / sd.size
     val eDir = edges.select(col("src"), col("dst"))
@@ -1318,9 +1301,8 @@ object Algorithms {
     */
   def pageRankWeighted(vertices: DataFrame, edges: DataFrame,
       damping: Double = 0.85, numIter: Int = 10,
-      undirected: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+      undirected: Boolean = false): DataFrame = {
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val eDir = edges.select(col("src"), col("dst"),
       col("w").cast("double").as("w"))
     val eAll = if (undirected)
@@ -1362,9 +1344,8 @@ object Algorithms {
     */
   def katzCentrality(vertices: DataFrame, edges: DataFrame,
       alpha: Double = 0.1, beta: Double = 1.0, numIter: Int = 8,
-      undirected: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+      undirected: Boolean = false): DataFrame = {
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val eDir = edges.select(col("src"), col("dst"))
     val e = graft.TransientCache.persist(
       if (undirected)
@@ -1402,9 +1383,9 @@ object Algorithms {
     * out-edges hub 0 (explicit rows — the zero IS the answer here,
     * unlike the reachability family where absence means absence).
     */
-  def hits(vertices: DataFrame, edges: DataFrame, numIter: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+  def hits(vertices: DataFrame, edges: DataFrame, numIter: Int = 8)
+      : DataFrame = {
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val e = graft.TransientCache.persist(
       edges.select(col("src"), col("dst")))
     val v = graft.TransientCache.persist(vertices.select(col("id")))
@@ -1610,9 +1591,8 @@ object Algorithms {
   def betweennessCentrality(edges: DataFrame, vertices: DataFrame,
       maxHops: Int, undirected: Boolean = false,
       sources: Option[DataFrame] = None,
-      checkpointDir: Option[String] = None,
       broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
-    val rel = graft.Lineage.configure(edges, checkpointDir)
+    val rel = graft.Lineage.reliable(edges.sparkSession)
     val eDir = edges.select(col("src"), col("dst"))
     val e = (if (undirected)
         eDir.unionByName(eDir.select(col("dst").as("src"), col("src").as("dst")))

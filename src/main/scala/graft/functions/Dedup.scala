@@ -479,8 +479,7 @@ object Dedup {
     * joins in exactly once, as an anti-join.
     */
   def resolveDupClusters(docs: DataFrame, idCol: String,
-      pairs: DataFrame, checkpointDir: Option[String] = None,
-      maxRounds: Int = 30,
+      pairs: DataFrame, maxRounds: Int = 30,
       broadcastRows: Long = graft.algorithms.Algorithms.DefaultBroadcastRows)
       : DataFrame = {
     // pairs is read three times (two vertex projections + the edge
@@ -489,10 +488,10 @@ object Dedup {
     // BLOCKS but every downstream plan still carries (and re-analyzes,
     // re-codegens) the full sketch+verify lineage — measured 6+ s of
     // pure planning per CC round at sf0.1. The checkpoint cuts the
-    // plan to a flat scan. `checkpointDir` selects the RELIABLE
-    // variant (blocks survive executor loss — the long-lived
+    // plan to a flat scan. A session checkpoint dir selects the
+    // RELIABLE variant (blocks survive executor loss — the long-lived
     // cluster-job setting); default is the faster localCheckpoint.
-    val rel = graft.Lineage.configure(pairs, checkpointDir)
+    val rel = graft.Lineage.reliable(pairs.sparkSession)
     val p = pairs.select(col("ida"), col("idb")).cut(rel)
     val touched = p.select(col("ida").as("id"))
       .unionByName(p.select(col("idb").as("id"))).distinct()
@@ -513,14 +512,13 @@ object Dedup {
     * construction, so partitions are, too), one map-back join.
     */
   def resolveDupClustersByScore(scored: DataFrame, idCol: String,
-      scoreCol: String, pairs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+      scoreCol: String, pairs: DataFrame): DataFrame = {
     // members is consumed twice (survivor ranking + the map-back
     // join); without the persist each consumer re-runs the corpus
     // anti-join tail of resolveDupClusters — two full corpus scans
     // at cluster scale for one logical pass
     val members = graft.TransientCache.persist(
-      resolveDupClusters(scored, idCol, pairs, checkpointDir)
+      resolveDupClusters(scored, idCol, pairs)
         .select(col("id"), col("canonical_id").as("component")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("component")
       .orderBy(col(scoreCol).desc, col("id").asc)

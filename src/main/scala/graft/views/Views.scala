@@ -1616,6 +1616,21 @@ object Views {
 
   // ---- V5e: UNBOUNDED reachability views (semi-naive + DRed) ------
 
+  /** Row cap of the reach and component folds: frames counted at or
+    * below it may hash-broadcast inside the rounds, within the
+    * session byte budget ([[hintIfFits]]); a closure tail past it
+    * compacts into the partitioned core, and closure ops past it send
+    * the lower-bounded composition to recompute.
+    */
+  private val rederiveCap = 1L << 20
+
+  /** Round cap of every reach/component fixpoint below (closure, DRed
+    * re-derivation, insertion, label propagation). Closure rounds
+    * grow with the labeled subgraph's diameter, label propagation's
+    * with its log; a deeper subgraph fails the refresh's `require`.
+    */
+  private val maxRounds = 60
+
   /** Transitive closure of the `edgeLabel` subgraph as membership
     * pairs (src, dst) — semi-naive: the frontier (pairs first derived
     * last round) composes with the edge set once per round, so rounds
@@ -1626,8 +1641,7 @@ object Views {
     * — it is meant for sparse, DAG-ish labeled subgraphs
     * (hierarchies, dependency/feeds graphs), not the social graph.
     */
-  def initReachState(store: GraphStore, edgeLabel: String,
-      maxRounds: Int = 60): DataFrame = {
+  def initReachState(store: GraphStore, edgeLabel: String): DataFrame = {
     val (e, eCnt) = cutCount(store.edges
       .filter(col("label") === edgeLabel).select("src", "dst"))
     var r = e
@@ -1651,8 +1665,8 @@ object Views {
       rounds += 1
     }
     require(cnt == 0L,
-      s"reachability closure did not converge in $maxRounds rounds; " +
-        "raise maxRounds")
+      s"reachability closure did not converge within the fixed " +
+        s"$maxRounds-round cap")
     r
   }
 
@@ -1719,9 +1733,7 @@ object Views {
     *    closure a 2²⁰ wavefront is far below any sane recompute
     *    point, and on a small view it could exceed the whole state.
     *
-    * `rederiveCap` keeps only its BROADCAST-licensing role: frames
-    * counted at or below it may hash-broadcast inside the rounds,
-    * within the session byte budget ([[hintIfFits]]).
+    * [[rederiveCap]] keeps only its BROADCAST-licensing role.
     *
     * State under `name!state` is the label-free closure; endpoint
     * labels/predicates are SERVE-time semi-joins against the current
@@ -1732,11 +1744,10 @@ object Views {
       oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
-      rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1, _) = foldReachState(catalog, s"$name!state",
       oldStore, newStore, feedTouchedV(oldStore, newStore), edgeLabel,
-      rederiveCap, maxRounds, recomputeRatio, needOps = false)
+      recomputeRatio, needOps = false)
     val view = serveReach(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)
@@ -1778,7 +1789,6 @@ object Views {
       stateKey: String,
       oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       edgeLabel: String,
-      rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3,
       needOps: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1814,7 +1824,7 @@ object Views {
         // state-sized shuffle this layout ever pays outside
         // compaction
         val boot = catalog.dataOf(stateKey).getOrElse(
-          initReachState(oldStore, edgeLabel, maxRounds))
+          initReachState(oldStore, edgeLabel))
         val (c, n) = partitionedCkpt(boot, keys)
         (c, boot.limit(0).cut(false), 0L, n)
     }
@@ -1909,7 +1919,7 @@ object Views {
         // proportionate, the wavefront IS a large fraction of the
         // state here.
         val (rc, rcCnt) = partitionedCkpt(
-          initReachState(newStore, edgeLabel, maxRounds), keys)
+          initReachState(newStore, edgeLabel), keys)
         return finish(rc, eRem.limit(0), 0L, rcCnt, None)
       }
       // lazy cuts throughout the loop: each round's single count
@@ -1977,8 +1987,8 @@ object Views {
       // a round that derives nothing proves the remaining candidates
       // are truly underivable — anything else is a budget cut
       require(derivedCnt == 0L || pendCnt == 0L,
-        s"DRed re-derivation did not converge in $maxRounds rounds " +
-          s"($pendCnt candidates still open); raise maxRounds")
+        s"DRed re-derivation did not converge within the fixed " +
+          s"$maxRounds-round cap ($pendCnt candidates still open)")
       core = keptCore
       coreCnt = keptCoreCnt
       tail = keptTail
@@ -2021,8 +2031,8 @@ object Views {
         rounds += 1
       }
       require(dCnt == 0L,
-        s"insertion closure did not converge in $maxRounds rounds; " +
-          "raise maxRounds")
+        s"insertion closure did not converge within the fixed " +
+          s"$maxRounds-round cap")
     }
     // net the two window-bounded frames: a DRed-removed pair that the
     // insertion re-derived was present before AND after — no op.
@@ -2078,7 +2088,6 @@ object Views {
       srcLabel: String, edgeLabel: String, dstLabel: String,
       minHops: Int,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
-      rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3)
       : (DataFrame, DataFrame, DataFrame) = {
     require(minHops >= 2 && minHops <= 6,
@@ -2090,8 +2099,7 @@ object Views {
     // (delta-path frames below are LAZY cuts — each materializes
     // inside the state fold's own counted job; see cutCount's doc)
     val (tc0, tc1, tcOps) = foldReachState(catalog, s"$prefix!tc",
-      oldStore, newStore, touchedV, edgeLabel, rederiveCap, maxRounds,
-      recomputeRatio)
+      oldStore, newStore, touchedV, edgeLabel, recomputeRatio)
     val (wOld, wFold) = walkHooks(catalog, prefix, oldStore,
       srcLabel, edgeLabel, lvl + 1, srcPred, undirected = false)
     var dWL: DataFrame = null
@@ -2155,12 +2163,10 @@ object Views {
       srcLabel: String, edgeLabel: String, dstLabel: String,
       minHops: Int,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
-      rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, state1, _) = foldLowerBoundedState(catalog, name,
       oldStore, newStore, feedTouchedV(oldStore, newStore), srcLabel,
-      edgeLabel, dstLabel, minHops, srcPred, dstPred, rederiveCap,
-      maxRounds, recomputeRatio)
+      edgeLabel, dstLabel, minHops, srcPred, dstPred, recomputeRatio)
     val view = state1.select("src", "dst")
     catalog.put(name, view)
     view
@@ -2189,7 +2195,7 @@ object Views {
     * window-sized by construction. Self-loops seed their vertex but
     * propagate nothing.
     */
-  private def ccLabels(edges: DataFrame, maxRounds: Int,
+  private def ccLabels(edges: DataFrame,
       hintSmall: Boolean = false): DataFrame = {
     val sym0 = symmetrize(edges.select("src", "dst"))
       .filter(col("src") =!= col("dst")).distinct().cut(false)
@@ -2221,8 +2227,8 @@ object Views {
       rounds += 1
     }
     require(changed == 0L,
-      s"component labels did not converge in $maxRounds rounds; " +
-        "raise maxRounds")
+      s"component labels did not converge within the fixed " +
+        s"$maxRounds-round cap")
     lbl
   }
 
@@ -2231,10 +2237,9 @@ object Views {
     * edge, comp = the component's minimum vertex id (deterministic,
     * stable across refreshes that do not change the component).
     */
-  def initCcState(store: GraphStore, edgeLabel: String,
-      maxRounds: Int = 60): DataFrame =
+  def initCcState(store: GraphStore, edgeLabel: String): DataFrame =
     ccLabels(store.edges.filter(col("label") === edgeLabel)
-      .select("src", "dst"), maxRounds)
+      .select("src", "dst"))
 
   /** The component-label fold behind [[refreshUndirectedReachView]]:
     * bootstraps `stateKey` from `oldStore` when absent, folds the
@@ -2258,13 +2263,11 @@ object Views {
     *    (old comp → new comp) map as one broadcast relabel over a
     *    state SCAN. No state shuffle on either path.
     *
-    * `rederiveCap` keeps its broadcast-licensing role: frames counted
-    * at or below it may hash-broadcast inside the fold.
+    * [[rederiveCap]] licenses broadcasts inside the fold.
     */
   private[views] def foldCcState(catalog: ViewCatalog, stateKey: String,
       oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
-      edgeLabel: String, rederiveCap: Long = 1L << 20,
-      maxRounds: Int = 60, recomputeRatio: Double = 0.3)
+      edgeLabel: String, recomputeRatio: Double = 0.3)
       : (DataFrame, DataFrame) = {
     // broadcast license: row count against min(policy cap, the BYTE
     // budget for this frame's row shape) — r12 verdict #6: a row
@@ -2272,7 +2275,7 @@ object Views {
     def hinted(df: DataFrame, cnt: Long): DataFrame =
       hintIfFits(df, cnt, rederiveCap)
     val s0 = catalog.dataOf(stateKey).getOrElse(
-      initCcState(oldStore, edgeLabel, maxRounds))
+      initCcState(oldStore, edgeLabel))
     // the state's cardinality is journal-covered catalog meta carried
     // from the counted deltas (r12 verdict #3: the old per-deletion
     // `s.count()` was one state-sized driver job per refresh per view
@@ -2301,7 +2304,7 @@ object Views {
         // (additions are part of newStore's edge set, so the fold is
         // complete here); the count rides the recompute's own
         // materialization
-        val (rc, rcCnt) = cutCount(initCcState(newStore, edgeLabel, maxRounds))
+        val (rc, rcCnt) = cutCount(initCcState(newStore, edgeLabel))
         stateCnt = rcCnt
         return finish(rc)
       }
@@ -2320,7 +2323,7 @@ object Views {
       // edge drop out of the union here.
       val (s1, s1Cnt) = cutCount(
         s.join(hinted(affected, 2 * remCnt), Seq("comp"), "left_anti")
-          .unionByName(ccLabels(eMid, maxRounds)))
+          .unionByName(ccLabels(eMid)))
       s = s1
       stateCnt = s1Cnt
     }
@@ -2345,7 +2348,7 @@ object Views {
         .join(epLbl.select(col("id").as("dst"), col("comp").as("__cd")),
           "dst")
         .select(col("__cs").as("src"), col("__cd").as("dst"))
-      val mapping = ccLabels(mgEdges, maxRounds, hintSmall = true)
+      val mapping = ccLabels(mgEdges, hintSmall = true)
         .filter(col("id") =!= col("comp"))
         .select(col("id").as("__oc"), col("comp").as("__nc"))
       // one broadcast relabel over a state scan; fresh endpoints join
@@ -2402,11 +2405,9 @@ object Views {
       oldStore: GraphStore, newStore: GraphStore,
       srcLabel: String, edgeLabel: String, dstLabel: String,
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
-      rederiveCap: Long = 1L << 20, maxRounds: Int = 60,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1) = foldCcState(catalog, s"$name!cc", oldStore, newStore,
-      feedTouchedV(oldStore, newStore), edgeLabel, rederiveCap,
-      maxRounds, recomputeRatio)
+      feedTouchedV(oldStore, newStore), edgeLabel, recomputeRatio)
     val view = serveCcPairs(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)

@@ -52,42 +52,39 @@ class IntegrationSpec extends SparkSpec {
   }
 
   test("reliable checkpointDir: iterative loops match localCheckpoint results") {
-    // the long-lived-cluster-job variant: every iterative operator
-    // accepts checkpointDir and swaps localCheckpoint() for the
+    // the long-lived-cluster-job variant: with a session checkpoint
+    // dir every iterative operator swaps localCheckpoint() for the
     // reliable checkpoint() — results must be identical, and the
     // checkpoint dir must actually receive data
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 5L), (3L, 4L)).toDF("ida", "idb")
     val docs = (1L to 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val viaReliable = graft.functions.Dedup.resolveDupClusters(
-        docs, "doc_id", pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLocal = graft.functions.Dedup.resolveDupClusters(
-        docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaReliable == viaLocal)
-
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
     val verts = (1L to 4L).map(Tuple1(_)).toDF("id")
-    val sccR = graft.algorithms.Algorithms.stronglyConnectedComponents(
-        verts, edges, checkpointDir = Some(dir))
+    def clusters() = graft.functions.Dedup.resolveDupClusters(
+        docs, "doc_id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sccR == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+    val viaLocal = clusters()
+    withCheckpointDir { dir =>
+      assert(clusters() == viaLocal)
 
-    val reach = graft.algorithms.Algorithms.reachability(
-        edges, Seq(1L), checkpointDir = Some(dir))
-      .collect().map(_.getLong(0)).toSet
-    assert(reach == Set(1L, 2L, 3L, 4L))
+      val sccR = graft.algorithms.Algorithms.stronglyConnectedComponents(
+          verts, edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(sccR == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
 
-    val core = graft.algorithms.Algorithms.kCore(
-        edges, 2, checkpointDir = Some(dir))
-      .collect().map(_.getLong(0)).toSet
-    assert(core == Set(1L, 2L, 3L))
+      val reach = graft.algorithms.Algorithms.reachability(edges, Seq(1L))
+        .collect().map(_.getLong(0)).toSet
+      assert(reach == Set(1L, 2L, 3L, 4L))
 
-    // reliable checkpoints actually landed on disk
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, s"no checkpoint files under $dir")
+      val core = graft.algorithms.Algorithms.kCore(edges, 2)
+        .collect().map(_.getLong(0)).toSet
+      assert(core == Set(1L, 2L, 3L))
+
+      // reliable checkpoints actually landed on disk
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, s"no checkpoint files under $dir")
+    }
   }
 
   test("GQL ORDER BY / LIMIT extension") {

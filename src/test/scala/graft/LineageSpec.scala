@@ -21,36 +21,53 @@ class LineageSpec extends SparkSpec {
 
   private val cutCall = """\blocalCheckpoint\b|\.checkpoint\s*\(""".r
 
-  private def cutCalls(f: java.io.File): Seq[String] = {
+  private def cutCalls(f: java.io.File,
+      call: scala.util.matching.Regex = cutCall): Seq[String] = {
     val code = codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath),
       "UTF-8"))
     code.split("\n", -1).toSeq.zipWithIndex.collect {
-      case (line, n) if cutCall.findFirstIn(line).isDefined =>
+      case (line, n) if call.findFirstIn(line).isDefined =>
         s"${f.getPath}:${n + 1}: ${line.trim}"
     }
   }
 
-  test("no src/main file other than Lineage.scala calls localCheckpoint " +
-    "or checkpoint( in code") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    val files = java.nio.file.Files.walk(root.toPath).toArray
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  private def mainFiles(): Seq[java.io.File] = {
+    assert(mainRoot.isDirectory, s"run from the project root: $mainRoot")
+    java.nio.file.Files.walk(mainRoot.toPath).toArray
       .map(_.asInstanceOf[java.nio.file.Path].toFile)
       .filter(_.getName.endsWith(".scala")).toSeq
-    val (lineage, others) = files.partition(_.getName == "Lineage.scala")
+  }
+
+  test("no src/main file other than Lineage.scala calls localCheckpoint " +
+    "or checkpoint( in code") {
+    val (lineage, others) = mainFiles().partition(_.getName == "Lineage.scala")
     // the scan is not vacuous: it sees the module's own calls
     assert(lineage.size == 1 && cutCalls(lineage.head).nonEmpty)
     // and it reads code, not comments or strings (Dedup's comments
     // name localCheckpoint)
-    val dedup = new java.io.File(root, "graft/functions/Dedup.scala")
+    val dedup = new java.io.File(mainRoot, "graft/functions/Dedup.scala")
     assert(new String(java.nio.file.Files.readAllBytes(dedup.toPath), "UTF-8")
       .contains("localCheckpoint") && cutCalls(dedup).isEmpty)
     assert(codeOnly("a // x.checkpoint()\n/* localCheckpoint\n */ b '\"' " +
       "\"s3://localCheckpoint\" c.checkpoint(false)").split("\n")
       .map(cutCall.findAllIn(_).size).sum == 1)
-    val offenders = others.flatMap(cutCalls)
+    val offenders = others.flatMap(cutCalls(_))
     assert(offenders.isEmpty,
       "cut lineage through graft.Lineage:\n" + offenders.mkString("\n"))
+  }
+
+  test("no src/main file sets the session checkpoint dir in code") {
+    // the dir is session-global: only the user sets it, once, and
+    // every operator's reliable cuts follow it (Lineage.reliable)
+    val setDir = """\bsetCheckpointDir\b""".r
+    assert(codeOnly("sc.setCheckpointDir(d) // setCheckpointDir\n" +
+      "\"setCheckpointDir\"").split("\n").map(setDir.findAllIn(_).size).sum == 1)
+    val offenders = mainFiles().flatMap(cutCalls(_, setDir))
+    assert(offenders.isEmpty,
+      "the session checkpoint dir is the user's to set:\n" +
+        offenders.mkString("\n"))
   }
 
   private def bag(df: DataFrame): Seq[(Long, Long)] =
@@ -73,19 +90,62 @@ class LineageSpec extends SparkSpec {
     assert(local.queryExecution.analyzed.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_cut").toString
-    assert(Lineage.configure(frame, Some(dir)))
-    val relEager = frame.cut(true)
-    val ((rel, relN), relJobs) = jobsOf(cutCount(frame, reliable = true))
-    assert(relN == relEager.count() && relN == eagerN)
-    assert(bag(rel) == bag(relEager) && bag(rel) == bag(eager))
-    assert(relJobs <= 2, s"a reliable counted cut took $relJobs jobs")
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .toArray.map(_.asInstanceOf[java.nio.file.Path])
-    assert(files.exists(java.nio.file.Files.isRegularFile(_)),
-      s"no checkpoint files under $dir")
-    // the test session does not reclaim checkpoint files itself
-    files.sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
+    withCheckpointDir { dir =>
+      assert(Lineage.reliable(spark))
+      val relEager = frame.cut(true)
+      val ((rel, relN), relJobs) = jobsOf(cutCount(frame, reliable = true))
+      assert(relN == relEager.count() && relN == eagerN)
+      assert(bag(rel) == bag(relEager) && bag(rel) == bag(eager))
+      assert(relJobs <= 2, s"a reliable counted cut took $relJobs jobs")
+      assert(java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          .anyMatch(java.nio.file.Files.isRegularFile(_)),
+        s"no checkpoint files under $dir")
+    }
+  }
+
+  test("reliable cuts follow the session's checkpoint dir: SCC and " +
+    "resolveDupClusters cut locally without one, write files with one, " +
+    "and return the same rows") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val verts = (1L to 6L).map(Tuple1(_)).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 6L),
+      (6L, 5L)).toDF("src", "dst")
+    val docs = (1L to 6L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 5L), (3L, 4L)).toDF("ida", "idb")
+    def pairsOf(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def scc() = graft.algorithms.Algorithms
+      .stronglyConnectedComponents(verts, edges)
+    def clusters() =
+      graft.functions.Dedup.resolveDupClusters(docs, "doc_id", pairs)
+    // no dir: every cut is local (a reliable cut would throw here)
+    assert(sc.getCheckpointDir.isEmpty && !Lineage.reliable(spark))
+    val (sccLocal, dupLocal) = (pairsOf(scc()), pairsOf(clusters()))
+    assert(sccLocal == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+      5L -> 5L, 6L -> 5L))
+    assert(dupLocal == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+      5L -> 1L, 6L -> 6L))
+    withCheckpointDir { dir =>
+      // listFiles, not Files.walk: the ContextCleaner may remove a
+      // collected cut's files while the scan runs
+      def files(f: java.io.File): Set[String] =
+        Option(f.listFiles).toSeq.flatten.flatMap(c =>
+          if (c.isFile) Set(c.getPath) else files(c)).toSet
+      val root = new java.io.File(dir)
+      assert(files(root).isEmpty)
+      // each result is held while its files are listed: its plan
+      // reads the last cuts, so the cleaner keeps their files
+      val sccRel = scc()
+      assert(pairsOf(sccRel) == sccLocal)
+      val sccFiles = files(root)
+      assert(sccFiles.nonEmpty, s"SCC wrote no checkpoint files under $dir")
+      val dupRel = clusters()
+      assert(pairsOf(dupRel) == dupLocal)
+      assert((files(root) -- sccFiles).nonEmpty,
+        s"resolveDupClusters wrote no checkpoint files under $dir")
+    }
+    assert(sc.getCheckpointDir.isEmpty && !Lineage.reliable(spark))
   }
 
   test("lazyCut: a stage that read the frame before it was materialized " +

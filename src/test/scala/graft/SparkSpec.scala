@@ -26,4 +26,24 @@ abstract class SparkSpec extends AnyFunSuite {
     org.apache.spark.graft.SparkTestAccess.flushListenerBus(sc)
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
+
+  /** `f(dir)` with the session's checkpoint dir set to a fresh temp
+    * `dir`, so operators cut reliably inside `f`. The dir is unset and
+    * deleted afterwards: a dir left set would make every later suite
+    * in the JVM cut reliably. (`setCheckpointDir(null)` stores
+    * `Option(null)`, i.e. unsets it, in local mode.)
+    */
+  protected def withCheckpointDir[A](f: String => A): A = {
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty,
+      s"session checkpoint dir already set: ${sc.getCheckpointDir}")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    sc.setCheckpointDir(dir.getPath)
+    try f(dir.getPath) finally {
+      sc.setCheckpointDir(null)
+      // quietly: the ContextCleaner may delete checkpoint files under
+      // it concurrently
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+  }
 }
