@@ -925,7 +925,8 @@ object Algorithms {
     * forward-backward coloring (Slota/Madduri-style FB-trim without
     * the trim step; GraphX's `stronglyConnectedComponents` rebuilds
     * the whole graph each superstep and measured ~5× slower on the
-    * co-order bench graph).
+    * co-order bench graph), finished on the driver once the residual
+    * graph is small.
     *
     * Each outer round over the remaining subgraph:
     *  1. forward min-label fixpoint: f(v) = min id that reaches v
@@ -937,16 +938,30 @@ object Algorithms {
     *  3. peel every root SCC (≥1 per color class per round), restrict
     *     edges, repeat.
     *
+    * Local finish: at entry and after every peel, when the remaining
+    * vertex frame and the residual edge frame both fit the broadcast
+    * license ([[graft.views.Views.fitsBudget]]: the session byte
+    * budget capped by `broadcastRows`; both counts come from the
+    * loop's counted cuts), the two are collected and labeled on the
+    * driver by [[sccLocalSolve]] (Tarjan, O(V + E)). The answer rows
+    * form a driver-local frame, one per collected vertex row, unioned
+    * with the rows already peeled. Each distributed round costs a
+    * dozen-plus jobs whatever its size, so a small residual graph is
+    * cheaper to finish in one collect. `broadcastRows = 0` keeps
+    * every round distributed (no non-empty frame fits a 0-row
+    * ceiling).
+    *
     * Every per-round frame is lineage-truncated — flat lineage, the
     * iterative-DataFrame pattern used by reachability/kCore/CC here
     * (reliable when the session has a checkpoint dir — see
-    * [[graft.Lineage]]). `numIter` caps OUTER rounds (each peels ≥1
-    * SCC per color; deep SCC-DAG chains need more rounds — leftovers
-    * get their forward min-reaching-id label, the same best-effort
-    * cutoff GraphX's numIter applies, which can MERGE distinct SCCs;
-    * the cutoff is counted and logged so it can't fire silently, and
-    * the default cap is far above any peel depth seen in the bench
-    * graphs, where convergence exits the loop early anyway).
+    * [[graft.Lineage]]). `numIter` caps the DISTRIBUTED outer rounds
+    * (each peels ≥1 SCC per color; deep SCC-DAG chains need more
+    * rounds); the local finish is exact and runs whenever the residual
+    * fits, also after the last capped round. Leftovers that neither
+    * peel nor fit get their forward min-reaching-id label, the same
+    * best-effort cutoff GraphX's numIter applies, which can MERGE
+    * distinct SCCs; the cutoff is counted and logged so it can't fire
+    * silently.
     */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
       numIter: Int = 50,
@@ -960,15 +975,18 @@ object Algorithms {
     // remainingCount, which makes the broadcast hints below sound
     // even for edge inputs mentioning ids outside `vertices`.
     val vIds = hintIfAtMost(remaining, remainingCount, broadcastRows)
-    var e = edges.select(col("src"), col("dst"))
+    var (e, eCount) = cutCount(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .join(vIds.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(vIds.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .select(col("src"), col("dst")).cut(rel)
+      .select(col("src"), col("dst")), rel)
     var result: DataFrame = null
     def accumulate(done: DataFrame): Unit =
       result = if (result == null) done.cut(rel)
       else result.unionByName(done).cut(rel)
+    def fitsDriver: Boolean =
+      graft.views.Views.fitsBudget(remaining, remainingCount, broadcastRows) &&
+        graft.views.Views.fitsBudget(e, eCount, broadcastRows)
     var outer = 0
     var lastF: DataFrame = null
     // Every frame in the loops below is checkpointed, i.e. stats-less
@@ -979,7 +997,7 @@ object Algorithms {
     // (slim rows: id + label), leave the edge side streaming.
     def bc(df: DataFrame): DataFrame =
       hintIfAtMost(df, remainingCount, broadcastRows)
-    while (outer < numIter && remainingCount > 0L) {
+    while (outer < numIter && remainingCount > 0L && !fitsDriver) {
       // 1. forward min-label fixpoint
       var f = remaining.select(col("id"), col("id").as("f")).cut(rel)
       var converged = false
@@ -1005,26 +1023,43 @@ object Algorithms {
         val (newly, newlyCount) = cutCount(e
           .join(bc(marked.select(col("id").as("dst"), col("f").as("fw"))),
             "dst")
-          .select(col("src").as("id"), col("fw"))
+          .select(col("src").as("id"), col("fw")).distinct()
+          // after the distinct: a vertex row repeated in `vertices`
+          // is marked once per repeat, as a root is
           .join(bc(f), Seq("id"))
           .filter(col("f") === col("fw"))
-          .select(col("id"), col("f")).distinct()
+          .select(col("id"), col("f"))
           .join(bc(marked.select(col("id"))), Seq("id"), "left_anti"), rel)
         if (newlyCount == 0L) converged = true
         else marked = marked.unionByName(newly).cut(rel)
       }
       // 3. peel
       accumulate(marked.select(col("id"), col("f").as("component")))
-      e = e.join(bc(marked.select(col("id").as("src"))), Seq("src"), "left_anti")
+      val (restE, restECount) = cutCount(e
+        .join(bc(marked.select(col("id").as("src"))), Seq("src"), "left_anti")
         .join(bc(marked.select(col("id").as("dst"))), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst")).cut(rel)
+        .select(col("src"), col("dst")), rel)
+      e = restE
+      eCount = restECount
       val (rest, restCount) = cutCount(remaining
         .join(bc(marked.select(col("id"))), Seq("id"), "left_anti"), rel)
       remaining = rest
       remainingCount = restCount
       outer += 1
     }
-    if (remainingCount > 0L) {
+    if (remainingCount > 0L && fitsDriver) {
+      // local finish: exact labels for every remaining vertex row
+      val idType = remaining.schema("id").dataType
+      val ids = remaining.select(col("id").cast("long")).collect()
+        .map(_.getLong(0))
+      val pairs = e.select(col("src").cast("long"), col("dst").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val spark = vertices.sparkSession
+      val local = spark.createDataFrame(ids.toSeq.zip(sccLocalSolve(ids, pairs)))
+        .select(col("_1").cast(idType).as("id"),
+          col("_2").cast(idType).as("component"))
+      result = if (result == null) local else result.unionByName(local)
+    } else if (remainingCount > 0L) {
       // numIter cutoff: best-effort labels for unpeeled vertices —
       // logged, never silent (forward labels can merge distinct SCCs)
       val unpeeled = remainingCount
@@ -1032,7 +1067,7 @@ object Algorithms {
         s"[graft] SCC numIter=$numIter cap hit: $unpeeled vertices keep " +
           "best-effort forward labels (distinct SCCs may merge); raise numIter")
       val fallback =
-        if (lastF != null) remaining.join(lastF, Seq("id"))
+        if (lastF != null) lastF.join(remaining, Seq("id"), "left_semi")
           .select(col("id"), col("f").as("component"))
         else remaining.select(col("id"), col("id").as("component"))
       accumulate(fallback)
@@ -2023,6 +2058,76 @@ object Algorithms {
     graft.Lineage.freeCut(state)
     ee.unpersist(); deg.unpersist()
     (out, q0, q)
+  }
+
+  /** Strongly connected components of a COLLECTED directed graph —
+    * the driver-local finish of [[stronglyConnectedComponents]].
+    * Tarjan's algorithm over a CSR adjacency with an explicit call
+    * stack (per-vertex edge cursors), so a 10⁵-deep path or ring needs
+    * no JVM stack: O(V + E) time, a few int arrays of memory. Returns
+    * the label of each entry of `vertIds`, position for position
+    * (duplicates included): the smallest member id of its component,
+    * the convention the distributed loop emits. Edges with an
+    * endpoint outside `vertIds` are ignored.
+    */
+  private[graft] def sccLocalSolve(vertIds: Array[Long],
+      edges: Array[(Long, Long)]): Array[Long] = {
+    val vids = vertIds.distinct.sorted
+    val n = vids.length
+    def ix(id: Long): Int = java.util.Arrays.binarySearch(vids, id)
+    val ends = edges.iterator.map { case (s, d) => (ix(s), ix(d)) }
+      .filter { case (a, b) => a >= 0 && b >= 0 }.toArray
+    // CSR: the out-neighbors of v are adj(off(v) until off(v + 1))
+    val off = new Array[Int](n + 1)
+    ends.foreach { case (a, _) => off(a + 1) += 1 }
+    for (v <- 0 until n) off(v + 1) += off(v)
+    val adj = new Array[Int](ends.length)
+    val fill = java.util.Arrays.copyOf(off, n)
+    ends.foreach { case (a, b) => adj(fill(a)) = b; fill(a) += 1 }
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val cursor = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n)
+    val calls = new Array[Int](n)
+    val label = new Array[Long](n)
+    var sp = 0
+    var counter = 0
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      cursor(v) = off(v)
+      stack(sp) = v; sp += 1; onStack(v) = true
+    }
+    for (root <- 0 until n if index(root) < 0) {
+      visit(root)
+      var depth = 0
+      calls(0) = root
+      while (depth >= 0) {
+        val v = calls(depth)
+        if (cursor(v) < off(v + 1)) {
+          val w = adj(cursor(v))
+          cursor(v) += 1
+          if (index(w) < 0) { visit(w); depth += 1; calls(depth) = w }
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          if (low(v) == index(v)) {
+            // pop v's component; vids is sorted, so its smallest
+            // dense index is its smallest id
+            val top = sp
+            var minIx = v
+            do { sp -= 1; minIx = math.min(minIx, stack(sp)) }
+            while (stack(sp) != v)
+            for (i <- sp until top) {
+              onStack(stack(i)) = false
+              label(stack(i)) = vids(minIx)
+            }
+          }
+          depth -= 1
+          if (depth >= 0) low(calls(depth)) = math.min(low(calls(depth)), low(v))
+        }
+      }
+    }
+    vertIds.map(id => label(ix(id)))
   }
 
   /** Deterministic sequential multi-level Louvain on a COLLECTED

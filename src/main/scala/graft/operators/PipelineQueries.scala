@@ -670,7 +670,7 @@ object PipelineQueries {
       import graft.streaming.StreamQuantile
       val li = graft.TransientCache.persist(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice")))
-      val path = java.nio.file.Files.createTempDirectory("graft_sqs")
+      val path = graft.Scratch.dir("graft_sqs")
         .toString
       (0 until 4).foreach { b =>
         StreamQuantile.applyBatch(
@@ -819,7 +819,7 @@ object PipelineQueries {
       cache: java.util.concurrent.ConcurrentHashMap[String, String],
       prefix: String, dir: String): String =
     cache.computeIfAbsent(dir, _ =>
-      java.nio.file.Files.createTempDirectory(prefix).toString)
+      graft.Scratch.dir(prefix).toString)
 
   private val ivfIncDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -93,7 +93,7 @@ object StreamQueries {
           lit("located_in").as("label"), noProps.as("props")))
         .truncated().truncatedEdges()
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pv").toString)
+        graft.Scratch.dir("graft_pv").toString)
       Views.refreshPatternView(cat, "cust_nation", base, m1,
         "Customer", "located_in", "Nation")
       // round 2: resurrect nation 2 (its cascaded edges stay gone),
@@ -139,7 +139,7 @@ object StreamQueries {
               seg("BUILDING").as("props"))))
         .truncated()
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvs").toString)
+        graft.Scratch.dir("graft_pvs").toString)
       Views.refreshPatternView(cat, "seg", base, m1,
         "Customer", "located_in", "Nation", srcPred = pred)
       val m2 = m1.updateVertexProps(s.range(6, 7)
@@ -181,7 +181,7 @@ object StreamQueries {
           lit("in_region").as("label"), noProps.as("props")))
         .truncated().truncatedEdges()
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pv2").toString)
+        graft.Scratch.dir("graft_pv2").toString)
       Views.refreshPatternChainView(cat, "cnr", base, m1, labels, elabels)
       // round 2: sweep nation 0's region links (original + the new one)
       val m2 = m1.removeEdges(m1.edges.filter(
@@ -220,7 +220,7 @@ object StreamQueries {
             lit("feeds").as("label"), noProps.as("props")))
         .truncatedEdges()
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvv").toString)
+        graft.Scratch.dir("graft_pvv").toString)
       graft.gql.GqlViews.register(cat, "nation_reach",
         "MATCH (a:Nation)-[:feeds*2..3]->(b:Nation)")
       graft.gql.GqlViews.refresh(cat, "nation_reach", base, m1)
@@ -254,7 +254,7 @@ object StreamQueries {
       val base = GraphStore.fromTpch(s, dir)
       val noProps = lit(null).cast(PropValue.mapType)
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvu").toString)
+        graft.Scratch.dir("graft_pvu").toString)
       graft.gql.GqlViews.register(cat, "nation_peer",
         "MATCH (a:Nation)-[:peer]-(b:Nation)")
       // round 1: chain i→i+1, a reciprocal 4→3 (making 3⇄4), and a
@@ -307,7 +307,7 @@ object StreamQueries {
       val cOff = GraphStore.CustomerOff
       val oOff = GraphStore.OrderOff
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvw").toString)
+        graft.Scratch.dir("graft_pvw").toString)
       graft.gql.GqlViews.register(cat, "big_orders",
         "MATCH (c:Customer)-[:placed]->(o:Order) " +
           "WHERE o.totalprice > c.acctbal * 40.0")
@@ -355,7 +355,7 @@ object StreamQueries {
       val nOff = GraphStore.NationOff
       val rOff = GraphStore.RegionOff
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvwc").toString)
+        graft.Scratch.dir("graft_pvwc").toString)
       graft.gql.GqlViews.register(cat, "rich_in_poor",
         "MATCH (c:Customer)-[:located_in]->(n:Nation)" +
           "-[:in_region]->(r:Region) " +
@@ -408,7 +408,7 @@ object StreamQueries {
       val noProps = lit(null).cast(PropValue.mapType)
       val nOff = GraphStore.NationOff
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvc").toString)
+        graft.Scratch.dir("graft_pvc").toString)
       graft.gql.GqlViews.register(cat, "feeds_region",
         "MATCH (a:Nation)-[:feeds*1..2]->(b:Nation)-[:in_region]->(c:Region)")
       val m1 = base.addEdges(s.range(0, 25)
@@ -453,7 +453,7 @@ object StreamQueries {
           .toDF("src", "dst", "label").withColumn("props", noProps)
       }
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvtc").toString)
+        graft.Scratch.dir("graft_pvtc").toString)
       graft.gql.GqlViews.register(cat, "nation_flows",
         "MATCH (a:Nation)-[:flows*1..]->(b:Nation)")
       // window 1: chain 0→1→…→15, branch 3→20→21, cycle 22⇄23 fed
@@ -500,7 +500,7 @@ object StreamQueries {
           .toDF("src", "dst", "label").withColumn("props", noProps)
       }
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvcc").toString)
+        graft.Scratch.dir("graft_pvcc").toString)
       graft.gql.GqlViews.register(cat, "nation_peers",
         "MATCH (a:Nation)-[:peers*1..]-(b:Nation)")
       val m1 = base.addEdges(edgeFrame(Seq(
@@ -543,7 +543,7 @@ object StreamQueries {
           .toDF("src", "dst", "label").withColumn("props", noProps)
       }
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvcu").toString)
+        graft.Scratch.dir("graft_pvcu").toString)
       graft.gql.GqlViews.register(cat, "flows_region",
         "MATCH (a:Nation)-[:flows*1..]->(b:Nation)" +
           "-[:in_region]->(c:Region)")
@@ -589,7 +589,7 @@ object StreamQueries {
           .toDF("src", "dst", "label").withColumn("props", noProps)
       }
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvcl").toString)
+        graft.Scratch.dir("graft_pvcl").toString)
       graft.gql.GqlViews.register(cat, "far_region",
         "MATCH (a:Nation)-[:flows*2..]->(b:Nation)" +
           "-[:in_region]->(c:Region)")
@@ -632,7 +632,7 @@ object StreamQueries {
           .toDF("src", "dst", "label").withColumn("props", noProps)
       }
       val cat = new Views.ViewCatalog(s,
-        java.nio.file.Files.createTempDirectory("graft_pvlb").toString)
+        graft.Scratch.dir("graft_pvlb").toString)
       graft.gql.GqlViews.register(cat, "far_flows",
         "MATCH (a:Nation)-[:flows*2..]->(b:Nation)")
       val m1 = base.addEdges(edgeFrame(

@@ -131,6 +131,44 @@ class AlgoSpec extends SparkSpec {
     assert(scc(1L) == scc(2L) && scc(3L) != scc(1L))
   }
 
+  test("scc: the driver-local finish equals the distributed loop, as " +
+    "bags, on duplicates, self-loops, stray ids and empty inputs") {
+    def bag(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Int] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+    val cases = Seq(
+      // {1,2} and {3,4}, each with a duplicated root and non-root id
+      "duplicates" -> (Seq(1L, 2L, 3L, 3L, 4L, 2L),
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 3L),
+          (3L, 4L))),
+      "self-loops" -> (Seq(1L, 2L, 3L, 4L),
+        Seq((1L, 1L), (1L, 2L), (2L, 1L), (3L, 3L), (3L, 4L))),
+      // 9, 7 and 8 are not vertices: the cycle through 9 is no cycle
+      "stray ids" -> (Seq(1L, 2L, 3L),
+        Seq((1L, 2L), (2L, 9L), (9L, 1L), (2L, 3L), (3L, 2L), (7L, 8L))),
+      "isolated" -> (Seq(1L, 2L, 3L, 4L, 5L), Seq((1L, 2L), (2L, 1L))),
+      "no edges" -> (Seq(1L, 2L, 3L), Seq.empty[(Long, Long)]),
+      "no vertices" -> (Seq.empty[Long], Seq((1L, 2L), (2L, 1L))))
+    for ((name, (vs, es)) <- cases) {
+      def scc(br: Long) = bag(Algorithms.stronglyConnectedComponents(
+        vs.toDF("id"), es.toDF("src", "dst"), broadcastRows = br))
+      val local = scc(Algorithms.DefaultBroadcastRows)
+      assert(local.values.sum == vs.size, name)
+      assert(local == scc(0L), name)
+    }
+  }
+
+  test("sccLocalSolve: a 1e5-vertex path and ring need no deep JVM stack") {
+    val n = 100000
+    val ids = Array.tabulate(n)(i => (i + 1).toLong)
+    val path = Array.tabulate(n - 1)(i => (ids(i), ids(i + 1)))
+    // a DAG path: every vertex is its own component
+    assert(Algorithms.sccLocalSolve(ids, path).sameElements(ids))
+    // closing the path into a ring makes one component, labeled 1
+    val ring = path :+ ((ids(n - 1), ids(0)))
+    assert(Algorithms.sccLocalSolve(ids, ring).forall(_ == 1L))
+  }
+
   test("betweenness: path, star, triangle hand values (Brandes)") {
     def btw(edges: Seq[(Long, Long)], ids: Seq[Long]): Map[Long, Double] = {
       val e = edges.toDF("src", "dst")
@@ -1158,13 +1196,19 @@ class AlgoSpec extends SparkSpec {
       .withColumn("hops", col("hops").cast("long"))))
     assert(bfs == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L,
       6L -> 5L))
-    info(s"scc=$sccJobs kcore=$coreJobs bfs=$bfsJobs")
+    // the same SCC with every round distributed (a 0-row ceiling)
+    val (sccLoop, sccLoopJobs) = jobsOf(
+      pairs(Algorithms.stronglyConnectedComponents(v, e, broadcastRows = 0L)))
+    assert(sccLoop == scc)
+    info(s"scc=$sccJobs sccLoop=$sccLoopJobs kcore=$coreJobs bfs=$bfsJobs")
     // budgets are the counts measured on this fixture with every
     // per-round size read from its counted cut (an eager cut plus a
     // separate count read 139, 13 and 38); a change that adds a job
-    // to a round fails here
-    val budgets = Seq(("scc", sccJobs, 128), ("kcore", coreJobs, 9),
-      ("bfs", bfsJobs, 26))
+    // to a round fails here. SCC finishes on the driver at entry (128
+    // jobs before the local finish); its distributed loop keeps the
+    // count it had then
+    val budgets = Seq(("scc", sccJobs, 6), ("sccLoop", sccLoopJobs, 156),
+      ("kcore", coreJobs, 9), ("bfs", bfsJobs, 26))
     budgets.foreach { case (name, n, bound) =>
       assert(n <= bound, s"$name: $n jobs, budget $bound")
     }

@@ -379,7 +379,7 @@ class CurationSpec extends SparkSpec {
         newB, corpus, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     TransientCache.releaseAll()
-    val dir = java.nio.file.Files.createTempDirectory("mh_index").toString
+    val dir = tempDir("mh_index").toString
     graft.functions.Dedup.buildMinHashIndex(corpus, "text", "doc_id")
       .write.mode("overwrite").parquet(dir)
     val viaIndex = graft.functions.Dedup.minHashIndexPairs(

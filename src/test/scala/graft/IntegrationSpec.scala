@@ -19,7 +19,7 @@ class IntegrationSpec extends SparkSpec {
         (3L, "Bot", Seq("score" -> 5.0))),
       Nil)
     val catalog = new ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_int").toString)
+      tempDir("graft_int").toString)
     catalog.register(ViewDefn("score_by_label",
       Aggregation("sum", "score", Seq("label")), EventDriven(0), Seq("vertices")))
 
@@ -152,7 +152,7 @@ class IntegrationSpec extends SparkSpec {
     val s1 = s0.addVertices(GraphStore.fromTuples(spark,
       Seq((2L, "T", Nil)), Nil).vertices)
     assert(s1.changes.count() == 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     val s2 = s1.compact(dir)
     assert(s2.vertices.count() == 2)
     assert(s2.changes.count() == 0)
@@ -164,7 +164,7 @@ class IntegrationSpec extends SparkSpec {
     val store = GraphStore.fromTuples(spark,
       Seq((1L, "Person", Seq("name" -> "Alice")), (2L, "Person", Seq("name" -> "Bob"))),
       Seq((1L, 2L, "friend", Nil)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_router").toString
+    val dir = tempDir("graft_router").toString
     val catalog = new ViewCatalog(spark, dir)
     // a maintained count view — the router should serve COUNT queries
     // from it without touching the executor
@@ -220,7 +220,7 @@ class IntegrationSpec extends SparkSpec {
         (3L, "Person", Seq("department" -> "Marketing"))),
       Seq((1L, 2L, "friend", Nil), (2L, 3L, "friend", Nil)))
     val cat = new ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_gqlv").toString)
+      tempDir("graft_gqlv").toString)
     val defn = "MATCH (a:Person {department: \"Engineering\"})" +
       "-[:friend]->(b:Person)"
     GqlViews.register(cat, "eng_friends", defn)

@@ -116,7 +116,7 @@ class PipelineSpec extends SparkSpec {
       id -> Array.fill(8)(rnd.nextFloat() * 2 - 1).toSeq
     }.toDF("vec_id", "embedding")
     val queries = vecs.filter(col("vec_id") < 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqidx").toString
+    val dir = tempDir("graft_pqidx").toString
     Similarity.writePqIndex(vecs, dir, m = 2, ksub = 8)
     val fromIdx = Similarity.pqTopKFromIndex(spark, dir, vecs, queries, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -583,7 +583,7 @@ class PipelineSpec extends SparkSpec {
         (math.min(a, b), math.max(a, b)) -> j } == cross, s"t=$t")
     }
     // the index survives a parquet round-trip bit-for-bit
-    val dir = java.nio.file.Files.createTempDirectory("ngramidx").toString
+    val dir = tempDir("ngramidx").toString
     idx.write.mode("overwrite").parquet(dir)
     val viaDisk = toMap(Dedup.ngramJaccardIndexPairsFromSets(
       batchSets, spark.read.parquet(dir), 0.8))
@@ -975,7 +975,7 @@ class PipelineSpec extends SparkSpec {
       // corpus — batch-internal dups must NOT surface
       (22L, "bb1 bb2 bb3 bb4 bb5"),
       (23L, "bb1 bb2 bb3 bb4 bb5")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_spanidx")
+    val dir = tempDir("graft_spanidx")
     Dedup.buildSpanGramIndex(corpus, "text", "doc_id", k = 3)
       .write.mode("overwrite").parquet(dir.toString)
     val idx = spark.read.parquet(dir.toString)

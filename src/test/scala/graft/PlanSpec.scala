@@ -82,7 +82,7 @@ class PlanSpec extends SparkSpec {
 
   test("bucketed tables: id/src-keyed joins are exchange-free and sort-free") {
     val store = GraphStore.fromTpch(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val dir = tempDir("graft_bkt").toString
     store.saveBucketed("bkt", 4, dir)
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -142,7 +142,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitioned corpus write: per-slice reads prune at the directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val docs = graft.sources.Tables.documents(spark, sf)
     graft.sources.Sinks.writePartitioned(docs, dir, Seq("lang"))
     val back = graft.sources.Sinks.readPartitioned(spark, dir)
@@ -174,7 +174,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ivf index at rest: probe scan prunes to the probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
     graft.functions.Similarity.writeIvfIndex(emb, dir, nlist = 8, iters = 2)
     val queries = emb.filter(col("vec_id") < 3)
@@ -193,7 +193,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ivf index append: only the appended cells' partitions gain files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = tempDir("graft_ivf_app").toString
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val batch = emb.filter(col("vec_id") % 10 === 0)
@@ -261,7 +261,7 @@ class PlanSpec extends SparkSpec {
     val inDist = clusteredVecs(401L, 50, ivfE1, 0.15, 13L)
     val drifted = clusteredVecs(501L, 200, ivfE3, 0.15, 17L)
     def df(rows: Seq[(Long, Array[Float])]) = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_refresh").toString
+    val dir = tempDir("graft_ivf_refresh").toString
     S.writeIvfIndex(df(clusterA ++ clusterB), dir, nlist = 3, iters = 4)
 
     // footer cell counts are exact and jobless: they sum to the corpus
@@ -321,7 +321,7 @@ class PlanSpec extends SparkSpec {
     val clusterA = clusteredVecs(1L, 250, ivfE1, 0.15, 7L)
     val clusterB = clusteredVecs(251L, 150, ivfE2, 0.15, 11L)
     def df(rows: Seq[(Long, Array[Float])]) = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_imb").toString
+    val dir = tempDir("graft_ivf_imb").toString
     S.writeIvfIndex(df(clusterA ++ clusterB), dir, nlist = 8, iters = 4)
     // a tight 1.5×-corpus batch at the e1 center is IN distribution
     // (assign cos ≈ train fit → drift silent) but concentrates into
@@ -344,7 +344,7 @@ class PlanSpec extends SparkSpec {
     val clusterA = clusteredVecs(1L, 250, ivfE1, 0.15, 7L)
     val clusterB = clusteredVecs(251L, 150, ivfE2, 0.15, 11L)
     def df(rows: Seq[(Long, Array[Float])]) = rows.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_big").toString
+    val dir = tempDir("graft_ivf_big").toString
     S.writeIvfIndex(df(clusterA ++ clusterB), dir, nlist = 8, iters = 4)
     // 20k queries: the per-query probe pairs (20k × nprobe) live in
     // the distributed probes frame; the only driver-side list is
@@ -423,7 +423,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("graph store round-trips through parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store").toString
+    val dir = tempDir("graft_store").toString
     val store = GraphStore.fromTuples(spark,
       Seq((1L, "A", Seq("x" -> 1)), (2L, "B", Nil)),
       Seq((1L, 2L, "e", Nil)))

@@ -166,7 +166,14 @@ class PropertySpec extends SparkSpec {
   test("property: SCC equals Tarjan on random graphs") {
     // random directed graph with planted cycles: base edges plus the
     // reverse of every third one (guarantees non-trivial SCCs without
-    // collapsing everything into one), across three seeds
+    // collapsing everything into one), across three seeds. A tail of
+    // two 2-cycles hangs off vertex 1: the first round colors it 1
+    // but it cannot reach 1, so it outlives the first peel. Three
+    // modes per seed: finished on the driver at entry, finished there
+    // after one distributed peel, and fully distributed
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val tail = Seq((1L, 23L), (23L, 24L), (24L, 23L), (24L, 25L), (25L, 26L),
+      (26L, 25L))
     for (seed <- Seq(42L, 43L, 44L)) {
       val vN = 22
       val base = Gen.listOfN(70,
@@ -175,13 +182,38 @@ class PropertySpec extends SparkSpec {
         .filter { case (a, b) => a != b }.distinct
       val es = (base ++ base.zipWithIndex.collect {
         case ((a, b), i) if i % 3 == 0 => (b, a)
-      }).distinct
-      val vs = (1L to vN.toLong)
+      } ++ tail).distinct
+      val vs = (1L to vN.toLong + 4L)
       val expect = tarjanScc(vs, es)
-      val got = graft.algorithms.Algorithms.stronglyConnectedComponents(
-          vs.toDF("id"), es.toDF("src", "dst"), numIter = 50)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expect, s"seed=$seed")
+      def scc(broadcastRows: Long, numIter: Int = 50) = jobsOf(
+        graft.algorithms.Algorithms.stronglyConnectedComponents(
+            vs.toDF("id"), es.toDF("src", "dst"), numIter = numIter,
+            broadcastRows = broadcastRows)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      // default: the whole graph fits, finished on the driver at entry
+      val (atEntry, _) = scc(graft.algorithms.Algorithms.DefaultBroadcastRows)
+      assert(atEntry == expect, s"seed=$seed at entry")
+      // 1 KB caps the license at 64 (src, dst) rows: the entry edges
+      // exceed it, the residual after the first peel does not, so one
+      // distributed round plus the local finish is exact
+      assert(es.size > 64, s"seed=$seed: ${es.size} edges fit at entry")
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "1kb")
+      val (afterPeel, peelJobs) = try
+        scc(graft.algorithms.Algorithms.DefaultBroadcastRows, numIter = 1)
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      assert(afterPeel == expect, s"seed=$seed after a peel")
+      // a 0-row ceiling: every round distributed
+      val (distributed, loopJobs) = scc(0L)
+      assert(distributed == expect, s"seed=$seed distributed")
+      assert(peelJobs < loopJobs,
+        s"seed=$seed: local finish $peelJobs jobs, loop $loopJobs")
+      // one distributed round alone leaves SCCs unpeeled, so the exact
+      // answer after a peel came from the driver
+      assert(scc(0L, numIter = 1)._1 != expect, s"seed=$seed one round")
     }
   }
 
@@ -191,20 +223,27 @@ class PropertySpec extends SparkSpec {
     // numIter = 3 forces the cap path: peeled {1,2,3} keep exact
     // labels, and the unpeeled tail keeps the LAST round's forward
     // fixpoint — computed on remaining = {3..10} before 3 was peeled,
-    // so every leftover carries the merged best-effort label 3
+    // so every leftover carries the merged best-effort label 3.
+    // broadcastRows = 0 keeps the distributed loop, whose rounds the
+    // cap counts (a residual that fits is finished exactly instead)
     val chain = (1L until 10L).map(v => (v, v + 1))
     val vs = (1L to 10L).toDF("id")
     val capped = graft.algorithms.Algorithms.stronglyConnectedComponents(
-        vs, chain.toDF("src", "dst"), numIter = 3)
+        vs, chain.toDF("src", "dst"), numIter = 3, broadcastRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(capped.keySet == (1L to 10L).toSet)
     (1L to 3L).foreach(v => assert(capped(v) == v, s"peeled $v"))
     (4L to 10L).foreach(v => assert(capped(v) == 3L, s"unpeeled $v"))
     // with the cap lifted the same input matches Tarjan exactly
     val full = graft.algorithms.Algorithms.stronglyConnectedComponents(
-        vs, chain.toDF("src", "dst"), numIter = 50)
+        vs, chain.toDF("src", "dst"), numIter = 50, broadcastRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(full == tarjanScc(1L to 10L, chain))
+    // the default path finishes on the driver, exact at any cap
+    val local = graft.algorithms.Algorithms.stronglyConnectedComponents(
+        vs, chain.toDF("src", "dst"), numIter = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(local == tarjanScc(1L to 10L, chain))
   }
 
   test("property: betweenness equals reference Brandes on random graphs") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one JVM-wide SparkSession, built
@@ -11,9 +12,29 @@ object TestSpark {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** This suite's temp root, made on the first [[tempDir]] call and
+    * deleted with everything under it after the suite's last test.
+    */
+  private var tempRoot: Option[java.io.File] = None
+
+  /** A fresh directory named `prefix…` under this suite's temp root. */
+  protected def tempDir(prefix: String): java.nio.file.Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(
+        s"graft_${getClass.getSimpleName}_").toFile
+      tempRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root.toPath, prefix)
+  }
+
+  override protected def afterAll(): Unit =
+    try tempRoot.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    finally super.afterAll()
 
   /** (result, Spark jobs fired by `f`): every job `f` starts runs in
     * one fresh job group, counted once the listener bus is drained.
@@ -37,7 +58,7 @@ abstract class SparkSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty,
       s"session checkpoint dir already set: ${sc.getCheckpointDir}")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    val dir = tempDir("graft_ckpt").toFile
     sc.setCheckpointDir(dir.getPath)
     try f(dir.getPath) finally {
       sc.setCheckpointDir(null)

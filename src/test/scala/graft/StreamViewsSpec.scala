@@ -25,7 +25,7 @@ class StreamViewsSpec extends SparkSpec {
       Seq(count(lit(1)).as("cnt")))
       .select("event_type", "window_start", "cnt")
     // file source needs a directory; stage the single parquet file
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val stageDir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       stageDir.resolve("events.parquet"))
@@ -222,7 +222,7 @@ class StreamViewsSpec extends SparkSpec {
       Seq((1L, "A", Nil), (2L, "B", Nil), (3L, "C", Nil), (4L, "C", Nil)),
       Seq((1L, 2L, "ab", Nil), (2L, 3L, "bc", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_pfx_cat").toString)
+      tempDir("graft_pfx_cat").toString)
     Views.refreshPatternChainView(cat, "abc", base, base,
       Seq("A", "B", "C"), Seq("ab", "bc"))
     val p1Before = cat.dataOf("abc!p1")
@@ -462,8 +462,8 @@ class StreamViewsSpec extends SparkSpec {
     val ortho = Array(1f, -1f, 1f, -1f, 1f, -1f, 1f, -1f)
     val train = ((0L until 4L).map(i => i -> near(a)) ++
       (4L until 8L).map(i => i -> near(b))).toDF("vec_id", "embedding")
-    val dirA = java.nio.file.Files.createTempDirectory("graft_sivf_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_sivf_b").toString
+    val dirA = tempDir("graft_sivf_a").toString
+    val dirB = tempDir("graft_sivf_b").toString
     Similarity.writeIvfIndex(train, dirA, nlist = 2)
     Similarity.writeIvfIndex(train, dirB, nlist = 2)
     // batch 0 is in-distribution; batch 1 points nowhere near either
@@ -504,7 +504,7 @@ class StreamViewsSpec extends SparkSpec {
   test("streaming MG summary: bounds hold, heavy keys survive, redelivery no-op") {
     import spark.implicits._
     import graft.streaming.StreamSketch
-    val dir = java.nio.file.Files.createTempDirectory("graft_smg").toString
+    val dir = tempDir("graft_smg").toString
     val cap = 8
     // two skewed batches with churn in the cold tail
     val b1 = Seq.fill(50)("hot") ++ Seq.fill(20)("warm") ++
@@ -544,7 +544,7 @@ class StreamViewsSpec extends SparkSpec {
     // partition — decrement-all evicts everything, and the carried
     // bound must still cover the undercount (in-partition loss is
     // part of the bound, not just merge prunes)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_smg2").toString
+    val dir2 = tempDir("graft_smg2").toString
     val uni = (1 to 9).map(i => s"u$i")
     assert(StreamSketch.applyBatch(uni.toDF("k").coalesce(1), "k",
       dir2, 8, 0L)())
@@ -560,7 +560,7 @@ class StreamViewsSpec extends SparkSpec {
   test("MG summary: half-written state throws instead of resetting the bound") {
     import spark.implicits._
     import graft.streaming.StreamSketch
-    val dir = java.nio.file.Files.createTempDirectory("graft_smg3").toString
+    val dir = tempDir("graft_smg3").toString
     assert(StreamSketch.applyBatch(
       Seq.fill(5)("hot").toDF("k"), "k", dir, 4, 0L)())
     // simulate the documented crash window: sketch_meta landed,
@@ -587,7 +587,7 @@ class StreamViewsSpec extends SparkSpec {
   test("streaming quantile coreset: slack contract holds across batches and compaction") {
     import spark.implicits._
     import graft.streaming.StreamQuantile
-    val dir = java.nio.file.Files.createTempDirectory("graft_sq").toString
+    val dir = tempDir("graft_sq").toString
     val rnd = new scala.util.Random(5)
     // three skewed batches; small cap FORCES compaction on the way
     val batches = Seq(
@@ -667,7 +667,7 @@ class StreamViewsSpec extends SparkSpec {
     import spark.implicits._
     import graft.functions.Curation
     import graft.streaming.StreamLm
-    val path = java.nio.file.Files.createTempDirectory("graft_slm").toString
+    val path = tempDir("graft_slm").toString
     val refBatches = Seq(
       Seq("the cat sat on the mat", "the dog sat"),
       Seq("a cat ran", "the cat sat on a dog"),
@@ -711,7 +711,7 @@ class StreamViewsSpec extends SparkSpec {
     import spark.implicits._
     import graft.functions.Sketches
     import graft.streaming.StreamHll
-    val path = java.nio.file.Files.createTempDirectory("graft_shll").toString
+    val path = tempDir("graft_shll").toString
     // overlapping batches: u0..u999 then u500..u1499, 3 rows per key
     def mk(lo: Int) = spark.range(0, 3000)
       .select(concat(lit("u"), (col("id") % 1000) + lo).as("user"),
@@ -743,7 +743,7 @@ class StreamViewsSpec extends SparkSpec {
 
   test("streaming minhash dedup: growing index catches cross-batch near-dups") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_smh").toString
+    val dir = tempDir("graft_smh").toString
     // seed corpus: A and B at rest
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -784,7 +784,7 @@ class StreamViewsSpec extends SparkSpec {
   test("rate limiting: maxFilesPerTrigger bounds each micro-batch (T3/T4)") {
     // the Spark-native replacement for the reference's buffer
     // backpressure + flush thresholds (stream_processing.rs:118-129)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rate")
+    val dir = tempDir("graft_rate")
     val ev = Tables.load(spark, sf, "events")
     ev.limit(50).write.parquet(dir.resolve("f1").toString)
     ev.limit(50).write.parquet(dir.resolve("f2").toString)
@@ -829,8 +829,8 @@ class StreamViewsSpec extends SparkSpec {
     // would re-emit windowIndex 0 — recovering index 1 proves the
     // store came back from the checkpoint
     import CountWindow.{Ev, WindowOut}
-    val stage = java.nio.file.Files.createTempDirectory("graft_cw_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cw_ck").toString
+    val stage = tempDir("graft_cw_src")
+    val ckpt = tempDir("graft_cw_ck").toString
     def writeEvents(name: String, vals: Seq[Double]): Unit =
       vals.zipWithIndex.map { case (v, i) =>
         Ev(1L, java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i}%02d"), v)
@@ -871,8 +871,8 @@ class StreamViewsSpec extends SparkSpec {
     // Spark commits that batch, so the restarted query (same
     // checkpoint dir) re-delivers batch 1 with the same batchId —
     // without the applied-id dedup the view would double-count.
-    val stage = java.nio.file.Files.createTempDirectory("graft_restart_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ck").toString
+    val stage = tempDir("graft_restart_src")
+    val ckpt = tempDir("graft_restart_ck").toString
     def writeDelta(name: String, rows: Seq[(String, String, Double)]): Unit =
       rows.toDF("op", "g", "value").coalesce(1)
         .write.parquet(stage.resolve(name).toString)
@@ -943,7 +943,7 @@ class StreamViewsSpec extends SparkSpec {
   }
 
   test("streaming session windows match the batch computation") {
-    val stageDir = java.nio.file.Files.createTempDirectory("graft_sess")
+    val stageDir = tempDir("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       stageDir.resolve("events.parquet"))
@@ -987,7 +987,7 @@ class StreamViewsSpec extends SparkSpec {
   test("G2: pagerank view refresh warm-starts from the prior fixpoint") {
     val vs = Seq(1L, 2L, 3L).toDF("id")
     val es0 = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_view").toString
+    val dir = tempDir("graft_pr_view").toString
     val catalog = new ViewCatalog(spark, dir)
     catalog.register(ViewDefn("pr", Analytics("pagerank", Map.empty),
       EventDriven(0), Seq("edges")))
@@ -1045,7 +1045,7 @@ class StreamViewsSpec extends SparkSpec {
   }
 
   test("view catalog stores and reloads view data as parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_views").toString
+    val dir = tempDir("graft_views").toString
     val catalog = new ViewCatalog(spark, dir)
     catalog.register(ViewDefn("v1", Lookup("id", Seq(1L, 2L)),
       EventDriven(50), Seq("vertices")))
@@ -1057,7 +1057,7 @@ class StreamViewsSpec extends SparkSpec {
 
   test("view catalog: load() inside an open batch rolls back — frame, " +
     "timestamp and purged derived meta all restored (r13 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_views_lj").toString
+    val dir = tempDir("graft_views_lj").toString
     val catalog = new ViewCatalog(spark, dir)
     catalog.register(ViewDefn("v1", Lookup("id", Seq(1L)),
       EventDriven(50), Seq("vertices")))
@@ -1080,7 +1080,7 @@ class StreamViewsSpec extends SparkSpec {
 
   test("view catalog: load() releases the frame it replaces — no " +
     "persisted RDD outlives put→load→commit or put→load→rollback") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_views_leak").toString
+    val dir = tempDir("graft_views_leak").toString
     val catalog = new ViewCatalog(spark, dir)
     catalog.register(ViewDefn("v1", Lookup("id", Seq(1L)),
       EventDriven(50), Seq("vertices")))
@@ -1145,7 +1145,7 @@ class StreamViewsSpec extends SparkSpec {
       df.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_pv_spec").toString)
+      tempDir("graft_pv_spec").toString)
     // round 1: cascade-removing group 10, a fresh user with an edge,
     // and a DUPLICATE add (3→11 exists: feed logs add_edge, the net
     // delta must not double it)
@@ -1207,7 +1207,7 @@ class StreamViewsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_pv2_cat").toString)
+      tempDir("graft_pv2_cat").toString)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
       df.select("c0", "c1", "c2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -1265,7 +1265,7 @@ class StreamViewsSpec extends SparkSpec {
       df.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_pvp_cat").toString)
+      tempDir("graft_pvp_cat").toString)
     def props(kv: (String, Int)*) =
       map(kv.flatMap { case (k, v) =>
         Seq(lit(k), PropValue.ofInt(lit(v.toLong))) }: _*)
@@ -1311,7 +1311,7 @@ class StreamViewsSpec extends SparkSpec {
         .select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_epv_cat").toString)
+      tempDir("graft_epv_cat").toString)
     def wProps(v: Int) = map(lit("w"), PropValue.ofInt(lit(v.toLong)))
     // swap the weights: edge (1,10) leaves, (2,10) enters — a pure
     // update_edge_props window, no add/remove op anywhere
@@ -1347,8 +1347,8 @@ class StreamViewsSpec extends SparkSpec {
         .select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_spv_cat").toString)
-    val meta = java.nio.file.Files.createTempDirectory("graft_spv").toString
+      tempDir("graft_spv_cat").toString)
+    val meta = tempDir("graft_spv").toString
     val spv = new StreamPatternView(base, meta, cat, "membership",
       "User", "member", "Group")
     val perBatch = scala.collection.concurrent.TrieMap
@@ -1400,8 +1400,8 @@ class StreamViewsSpec extends SparkSpec {
       Seq((1L, "User", Nil), (10L, "Group", Nil)),
       Seq((1L, 10L, "member", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_spv_rb_cat").toString)
-    val meta = java.nio.file.Files.createTempDirectory("graft_spv_rb").toString
+      tempDir("graft_spv_rb_cat").toString)
+    val meta = tempDir("graft_spv_rb").toString
     // fault injection: the refresh completes its catalog puts (view +
     // !state — a fully half-applied fold from the journal's point of
     // view) and THEN dies, once. Pre-r11 this either lost the batch
@@ -1469,8 +1469,8 @@ class StreamViewsSpec extends SparkSpec {
       h2 ++ h3
     }
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_svlv_cat").toString)
-    val meta = java.nio.file.Files.createTempDirectory("graft_svlv").toString
+      tempDir("graft_svlv_cat").toString)
+    val meta = tempDir("graft_svlv").toString
     val spv = StreamPatternView.fromGql(base, meta, cat, "reach",
       "MATCH (a:N)-[:link*2..3]->(b:N)")
     val perBatch = scala.collection.concurrent.TrieMap
@@ -1508,8 +1508,8 @@ class StreamViewsSpec extends SparkSpec {
         (10L, "Group", Nil)),
       Seq((1L, 10L, "member", Nil), (2L, 10L, "member", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_gspv_cat").toString)
-    val meta = java.nio.file.Files.createTempDirectory("graft_gspv").toString
+      tempDir("graft_gspv_cat").toString)
+    val meta = tempDir("graft_gspv").toString
     val spv = StreamPatternView.fromGql(base, meta, cat, "active_members",
       "MATCH (a:User {active: 1})-[:member]->(b:Group)")
     // a PURE prop-update batch: user 1 deactivates, user 2 activates
@@ -1548,8 +1548,8 @@ class StreamViewsSpec extends SparkSpec {
       (1L to 6L).map(i => (i, "N", Seq.empty[(String, Any)])),
       Seq((1L, 2L, "dep", Nil), (2L, 3L, "dep", Nil), (4L, 5L, "dep", Nil)))
     val cat1 = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_stc_cat").toString)
-    val meta1 = java.nio.file.Files.createTempDirectory("graft_stc").toString
+      tempDir("graft_stc_cat").toString)
+    val meta1 = tempDir("graft_stc").toString
     val spv1 = StreamPatternView.fromGql(b1, meta1, cat1, "stc",
       "MATCH (a:N)-[:dep*1..]->(b:N)")
     def edgeCmd(op: String, s: Long, d: Long) =
@@ -1572,8 +1572,8 @@ class StreamViewsSpec extends SparkSpec {
       Seq((1L, "P", Seq("score" -> 5.0)), (2L, "P", Seq("score" -> 3.0))),
       Seq((1L, 2L, "beats", Nil), (2L, 1L, "beats", Nil)))
     val cat2 = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_swh_cat").toString)
-    val meta2 = java.nio.file.Files.createTempDirectory("graft_swh").toString
+      tempDir("graft_swh_cat").toString)
+    val meta2 = tempDir("graft_swh").toString
     val spv2 = StreamPatternView.fromGql(b2, meta2, cat2, "supsets",
       "MATCH (a:P)-[:beats]->(b:P) WHERE a.score > b.score")
     val flip = Seq(("update_vertex_props", 2L)).toDF("op", "id")
@@ -1616,7 +1616,7 @@ class StreamViewsSpec extends SparkSpec {
       df.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_vlv_cat").toString)
+      tempDir("graft_vlv_cat").toString)
     // bootstrap sanity incl. the cycle pair (1,1) and (4,4)
     val boot = Views.initVarLengthState(base, "N", "link", "N", 2, 3)
     assert(boot.filter(col("src") === 1L && col("dst") === 4L)
@@ -1671,7 +1671,7 @@ class StreamViewsSpec extends SparkSpec {
         (2L, 4L, "link", Nil), (3L, 4L, "link", Nil),
         (4L, 5L, "link", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_wlk_cat").toString)
+      tempDir("graft_wlk_cat").toString)
     val r0 = Views.refreshVarLengthPatternView(cat, "vl", base, base,
       "N", "link", "N", 2, 3)
     def pairs(df: org.apache.spark.sql.DataFrame) =
@@ -1709,7 +1709,7 @@ class StreamViewsSpec extends SparkSpec {
     assert(counts(w2.get)((1L, 4L)) == 1L, "one walk survives with count 1")
     assert(pairs(r3).contains((1L, 4L)))
     val fresh = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_wlk_cat2").toString)
+      tempDir("graft_wlk_cat2").toString)
     Views.refreshVarLengthPatternView(fresh, "vl", m3, m3,
       "N", "link", "N", 2, 3)
     assert(counts(w2.get) == counts(fresh.dataOf("vl!w2").get),
@@ -1728,7 +1728,7 @@ class StreamViewsSpec extends SparkSpec {
     def edges(es: (Long, Long)*) =
       es.map { case (a, b) => (a, b, "dep") }.toDF("src", "dst", "label")
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_lb_cat").toString)
+      tempDir("graft_lb_cat").toString)
     GqlViews.register(cat, "far", "MATCH (a:N)-[:dep*2..]->(b:N)")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("src", "dst").collect()
@@ -1763,7 +1763,7 @@ class StreamViewsSpec extends SparkSpec {
     assert(rows(r2).contains((7L, 7L)), "the cycle itself survives")
     // end-state parity against a fresh bootstrap (fold == recompute)
     val fresh = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_lb_cat2").toString)
+      tempDir("graft_lb_cat2").toString)
     GqlViews.register(fresh, "far", "MATCH (a:N)-[:dep*2..]->(b:N)")
     assert(rows(r2) == rows(GqlViews.refresh(fresh, "far", m2, m2)))
     // *m.. COMPOSES in chains too (sub-state under name!lb<j>): bolt
@@ -1776,7 +1776,7 @@ class StreamViewsSpec extends SparkSpec {
         .toDF("src", "dst", "label").withColumn("props", noProps))
       .truncated().truncatedEdges()
     val cat3 = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_lbc_cat").toString)
+      tempDir("graft_lbc_cat").toString)
     GqlViews.register(cat3, "far_owns",
       "MATCH (a:N)-[:dep*2..]->(b:N)-[:owns]->(c:M)")
     def exeChain(st: GraphStore) = graft.gql.GqlExecutor.run(st,
@@ -1833,7 +1833,7 @@ class StreamViewsSpec extends SparkSpec {
       Seq((1L, 2L, "link", Nil), (2L, 3L, "link", Nil),
         (3L, 4L, "link", Nil), (2L, 5L, "link", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_uvl_cat").toString)
+      tempDir("graft_uvl_cat").toString)
     GqlViews.register(cat, "u22", "MATCH (a:N)-[:link*2..2]-(b:N)")
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("src", "dst").collect()
@@ -1877,7 +1877,7 @@ class StreamViewsSpec extends SparkSpec {
         (3L, 3L, "link", Nil), (2L, 3L, "link", Nil),
         (4L, 5L, "link", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_uh_cat").toString)
+      tempDir("graft_uh_cat").toString)
     GqlViews.register(cat, "uh", "MATCH (a:N)-[:link]-(b:N)")
     def bag(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       df.select("src", "dst").collect()
@@ -1957,7 +1957,7 @@ class StreamViewsSpec extends SparkSpec {
     val base = GraphStore.fromTuples(spark,
       (0L to 9L).map(i => (i, "N", Seq.empty[(String, Any)])), Nil)
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_tc_cat").toString)
+      tempDir("graft_tc_cat").toString)
     GqlViews.register(cat, "tc", "MATCH (a:N)-[:dep*1..]->(b:N)")
     // window 1 — INSERTIONS: a chain, a branch, and a 2-cycle; the
     // view bootstraps empty so every pair arrives via the semi-naive
@@ -1992,7 +1992,7 @@ class StreamViewsSpec extends SparkSpec {
     // deletion → always recompute.
     for (ratio <- Seq(Double.MaxValue, 0.0)) {
       val cat2 = new Views.ViewCatalog(spark,
-        java.nio.file.Files.createTempDirectory("graft_tc2_cat").toString)
+        tempDir("graft_tc2_cat").toString)
       Views.refreshReachabilityView(cat2, "tc2", base, m1, "N", "dep", "N")
       Views.refreshReachabilityView(cat2, "tc2", m1, m2, "N", "dep", "N",
         recomputeRatio = ratio)
@@ -2040,7 +2040,7 @@ class StreamViewsSpec extends SparkSpec {
     val base = GraphStore.fromTuples(spark,
       (0L to 17L).map(i => (i, "N", Seq.empty[(String, Any)])), Nil)
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_cc_cat").toString)
+      tempDir("graft_cc_cat").toString)
     GqlViews.register(cat, "peers", "MATCH (a:N)-[:link*1..]-(b:N)")
     // window 1 — mixed-orientation chain {0..5}, triangle {6,7,8},
     // self-loop {10}, pair {12,13}, star {15,16,17}; the view
@@ -2094,7 +2094,7 @@ class StreamViewsSpec extends SparkSpec {
     // deletion (always recompute) — end state identical
     for (ratio <- Seq(Double.MaxValue, 0.0)) {
       val cat2 = new Views.ViewCatalog(spark,
-        java.nio.file.Files.createTempDirectory("graft_cc2_cat").toString)
+        tempDir("graft_cc2_cat").toString)
       Views.refreshUndirectedReachView(cat2, "p2", base, m1,
         "N", "link", "N")
       val rf = Views.refreshUndirectedReachView(cat2, "p2", m1, m2,
@@ -2127,7 +2127,7 @@ class StreamViewsSpec extends SparkSpec {
       Seq((1L, 2L, "link", Nil), (2L, 3L, "link", Nil),
         (3L, 4L, "link", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_gvlv_cat").toString)
+      tempDir("graft_gvlv_cat").toString)
     GqlViews.register(cat, "reach23", "MATCH (a:N)-[:link*2..3]->(b:N)")
     val m1 = base.removeEdges(Seq((2L, 3L, "link")).toDF("src", "dst", "label"))
     val r1 = GqlViews.refresh(cat, "reach23", base, m1)
@@ -2167,7 +2167,7 @@ class StreamViewsSpec extends SparkSpec {
         (4L, 10L, "owns", Nil), (5L, 11L, "owns", Nil),
         (2L, 10L, "owns", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_ucc_cat").toString)
+      tempDir("graft_ucc_cat").toString)
     val defn = "MATCH (a:N)-[:dep*1..]->(b:N)-[:owns]->(c:M)"
     GqlViews.register(cat, "reach_owns", defn)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
@@ -2211,7 +2211,7 @@ class StreamViewsSpec extends SparkSpec {
     // forced-branch parity on the SAME windows: ratio=0 recomputes
     // the closure sub-state instead of DRed — end state identical
     val cat2 = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_ucc2_cat").toString)
+      tempDir("graft_ucc2_cat").toString)
     GqlViews.register(cat2, "reach_owns", defn)
     GqlViews.refresh(cat2, "reach_owns", base, m1)
     // the GQL front door has no ratio knob — drive the Views-level
@@ -2237,7 +2237,7 @@ class StreamViewsSpec extends SparkSpec {
         (3L, 4L, "beats", Seq("margin" -> 2.0)),
         (4L, 1L, "beats", Seq("margin" -> 9.0))))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_wh_cat").toString)
+      tempDir("graft_wh_cat").toString)
     // cross-variable + edge-prop arithmetic: exactly the class the
     // per-position props-block split cannot carry
     val defn = "MATCH (a:P)-[e:beats]->(b:P) " +
@@ -2312,7 +2312,7 @@ class StreamViewsSpec extends SparkSpec {
         (4L, 5L, "beats", Seq("margin" -> 9.0)),
         (2L, 4L, "beats", Seq("margin" -> 3.0))))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_whc_cat").toString)
+      tempDir("graft_whc_cat").toString)
     // three conjunct scopes in one definition: cross-variable within
     // hop 0 (a, b), edge-only within hop 1 (e2), and an interior
     // single-variable (b — fits both windows, assigned to hop 0)
@@ -2378,7 +2378,7 @@ class StreamViewsSpec extends SparkSpec {
         (3L, 4L, "link", Nil), (1L, 3L, "link", Nil),
         (3L, 10L, "owns", Nil), (4L, 11L, "owns", Nil)))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_cc_cat").toString)
+      tempDir("graft_cc_cat").toString)
     val defn = "MATCH (a:N)-[:link*1..2]->(b:N)-[:owns]->(c:M)"
     GqlViews.register(cat, "vl_owns", defn)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
@@ -2473,7 +2473,7 @@ class StreamViewsSpec extends SparkSpec {
       ("chain", "MATCH (a:A)-[:x]->(b:B)-[:y]->(c:A)", 45),
       ("composed", "MATCH (a:A)-[:y*1..2]->(b:A)-[:x]->(c:B)", 78))
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_jobs_cat").toString)
+      tempDir("graft_jobs_cat").toString)
     val sc = spark.sparkContext
     val counts = budgets.map { case (name, gql, _) =>
       GqlViews.register(cat, name, gql)
@@ -2533,7 +2533,7 @@ class StreamViewsSpec extends SparkSpec {
         .addEdges(Seq((13L, 16L, "dep")).toDF("src", "dst", "label")
           .withColumn("props", noProps))
       val cat = new Views.ViewCatalog(spark,
-        java.nio.file.Files.createTempDirectory("graft_tc_budget").toString)
+        tempDir("graft_tc_budget").toString)
       val r1 = Views.refreshReachabilityView(cat, "tcb", base, m1,
         "N", "dep", "N", recomputeRatio = Double.MaxValue)
       assert(rows(r1) == tc(chain))

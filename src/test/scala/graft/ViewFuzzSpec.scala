@@ -191,7 +191,7 @@ class ViewFuzzSpec extends SparkSpec {
     val rnd = new Random(seed)
     val m = new Model(rnd)
     val cat = new Views.ViewCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_fuzz").toString)
+      tempDir("graft_fuzz").toString)
     var store = initial(m, rnd)
     views.foreach(d => GqlViews.register(cat, d.name, d.gql))
     // the first refresh bootstraps each view from the initial store
