@@ -1,6 +1,6 @@
 package graft.views
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
@@ -22,17 +22,22 @@ object Views {
 
   // ---- map of the pattern-view refreshers (V5c–V5e) ----------------
   //
-  // Every `refresh*View` entry computes the feed-touched vertex set
-  // once (feedTouchedV) and passes it to each of its sub-folds. The
-  // change-window bricks, each written once:
+  // Every `refresh*View` entry reads the change feed once
+  // (feedTouchedV: the window's touched vertex ids and explicit edge
+  // keys, collected as driver-side literals when they fit) and passes
+  // it to each of its sub-folds. The change-window bricks, each
+  // written once:
   //   netOps             n ANTI o → add, o ANTI n → remove as ONE
   //                      exchange: side-tagged union, one group-by
   //                      with per-side counts (netTagged; uncut)
   //   windowVertexDelta  one label's vertex ±ops (lazy cut)
-  //   touchedEdgeKeys    edge keys the window could change (uncut)
-  //   edgeMembers        edge scan restricted to those keys (uncut)
+  //   edgeWindow         edge scans restricted to the keys the window
+  //                      could change: one in-scan filter (src ∈ T ||
+  //                      dst ∈ T || (src, dst) ∈ K); an oversized
+  //                      window cuts touchedEdgeKeys and broadcasts it
+  //   edgeMembers        one store's (src, dst) inside the window
   //   windowEdgeDelta    one label's edge ±ops, symmetrized for
-  //                      undirected hops (lazy cuts)
+  //                      undirected hops (lazy cut)
   //   hopRelation        old hop relation; symmetrize gives E ∪ Eᵀ
   //   twoLevelDelta      reassociated Δ((P⋈E)⋈V) of a hop / emission
   //   levelStateFold     stored per-level bags (!p<i>, !w<i>)
@@ -42,10 +47,10 @@ object Views {
   //     (windowVertexDelta, windowEdgeDelta, twoLevelDelta) through
   //     refreshChain; lazy window frames, counted level cuts, eager
   //     prefix and chain states.
-  //   refreshWherePatternView — whereHopMembers (touchedEdgeKeys,
+  //   refreshWherePatternView — whereHopMembers (edgeWindow,
   //     netTagged): old and new touched members as ONE side-tagged
-  //     frame, each broadcast build serving both; lazy touched keys
-  //     and ops; eager state.
+  //     frame, each broadcast build serving both; lazy ops (and lazy
+  //     touched keys on an oversized window); eager state.
   //   refreshWhereChainView — whereHopMembers per hop (eager !wh<j>)
   //     feeding refreshChain.
   //   refreshVarLengthPatternView — walkFoldLevels (windowEdgeDelta,
@@ -54,9 +59,9 @@ object Views {
   //   refreshComposedChainView — sub-folds (eager !vl<j> and its ops,
   //     lazy walk delta; !tc<j>; !lb<j>) feeding refreshChain.
   //   refreshReachabilityView, refreshUndirectedReachView —
-  //     foldReachState / foldCcState over reachEdgeDelta (touchedEdgeKeys
-  //     + edgeMembers), EAGER touched keys, lazy adds/removes, counted
-  //     rounds.
+  //     foldReachState / foldCcState over reachEdgeDelta (edgeWindow
+  //     + edgeMembers; EAGER touched keys on an oversized window),
+  //     lazy adds/removes, counted rounds.
   //   refreshLowerBoundedReachView — foldReachState + walkFoldLevels +
   //     gated twoLevelDelta; lazy delta, eager state.
   // The cut kinds named here (eager, lazy, counted, partition-carrying)
@@ -672,58 +677,111 @@ object Views {
       .drop("__i")
   }
 
-  /** The feed-touched vertex-id set every window brick probes —
-    * computed ONCE per refresh by each `refresh*View` entry and
-    * passed down to every sub-fold.
+  private val vertexOps =
+    Seq("add_vertex", "remove_vertex", "update_vertex_props")
+  private val edgeOps = Seq("add_edge", "remove_edge", "update_edge_props")
+
+  /** A refresh's change window — the distinct (op, id, src, dst,
+    * elabel) rows of its vertex ops and of its ops on the view's
+    * `edgeLabels`, read from the feed ONCE ([[feedTouchedV]]) and
+    * passed down to every sub-fold. It answers the two questions every
+    * window brick asks: which vertex ids did the window touch, and
+    * which `label` edge keys did it name.
     *
-    * Probe shape (r12): a normal change window is a HANDFUL of ids,
+    * Probe shape (r12): a normal change window is a HANDFUL of rows,
     * yet the old broadcast-semi-join form paid one broadcast-build
     * job per consumer query — the job-trace probe (OPTIMIZATION_r13.md,
     * Retired diagnostics) attributed 52 of a
     * composed refresh's 76 jobs to broadcast builds, many of them
-    * this frame over and over. [[IdProbe]] collects the set once
-    * (one driver job) when it fits `collectCap` and probes as an
-    * InSet FILTER pushed into each scan — zero per-consumer build
-    * jobs, tighter codegen; an oversized window falls back to the
-    * broadcast semi-join.
+    * the touched-id frame over and over. When the window fits (`rows`
+    * is collected), touched ids and edge keys probe as InSet FILTERS
+    * inside each scan: zero per-consumer build jobs, and the touched
+    * edges are one filtered edge scan ([[edgeFilter]]) instead of a
+    * cut key frame broadcast into a semi-join. An oversized window
+    * (`rows` is None) keeps the frame forms: broadcast semi-joins on
+    * the touched ids, and a cut [[touchedEdgeKeys]] frame.
     */
-  private[views] final class IdProbe(val df: DataFrame,
-      ids: Option[Array[Long]]) {
+  private[views] final class IdProbe(window: DataFrame,
+      edgeLabels: Seq[String], rows: Option[Array[Row]]) {
+    private def ofOps(ops: Seq[String]) =
+      rows.map(_.filter(r => ops.contains(r.getString(0))))
+    private val ids: Option[Array[Long]] =
+      ofOps(vertexOps).map(_.map(_.getLong(1)).distinct)
+    private def onLabel(label: String): String = {
+      require(edgeLabels.contains(label),
+        s"edge label $label is outside the window's $edgeLabels")
+      label
+    }
+
+    /** The explicit `label` edge-op keys (src, dst) as a frame (uncut);
+      * prop updates included — they can flip a predicated edge's
+      * membership.
+      */
+    def edgeKeys(label: String): DataFrame =
+      window.filter(col("op").isin(edgeOps: _*) &&
+          col("elabel") === onLabel(label))
+        .select("src", "dst").distinct()
+
     /** rows of `x` whose column `on` is in the touched set */
     def semi(x: DataFrame, on: String): DataFrame = ids match {
       case Some(a) if a.isEmpty => x.filter(lit(false))
       case Some(a) => x.filter(col(on).isInCollection(a))
       case None =>
-        x.join(broadcast(df.select(col("id").as(on))), Seq(on), "left_semi")
+        x.join(broadcast(window.filter(col("op").isin(vertexOps: _*))
+          .select(col("id").as(on))), Seq(on), "left_semi")
     }
+
+    /** On a collected window, the in-scan predicate over a `label`
+      * edge frame that keeps exactly the [[touchedEdgeKeys]] rows:
+      * `src ∈ T || dst ∈ T || (src, dst) ∈ K_label`. A label edge is
+      * in that key set iff it names an explicit op key or one of its
+      * endpoints is touched, and both store versions give a key the
+      * same endpoints. None on an oversized window.
+      */
+    def edgeFilter(label: String): Option[Column] =
+      for (a <- ids; ops <- ofOps(edgeOps); l = onLabel(label)) yield {
+        val keys = ops.filter(_.getString(4) == l)
+          .map(r => (r.getLong(2), r.getLong(3))).distinct
+        val byId = if (a.isEmpty) Nil
+          else Seq(col("src").isInCollection(a), col("dst").isInCollection(a))
+        // the struct's field names are the tuple literals' (_1, _2):
+        // In requires one struct type on both sides
+        val byKey = if (keys.isEmpty) Nil
+          else Seq(struct(col("src").as("_1"), col("dst").as("_2"))
+            .isin(keys.map(typedLit(_)): _*))
+        (byId ++ byKey).reduceOption(_ || _).getOrElse(lit(false))
+      }
   }
 
   private val collectCap = 1 << 16
 
-  /** Wrap a single-column id frame as an [[IdProbe]] — one bounded
-    * collect; oversize sets stay as broadcast semi-joins.
-    */
-  private def idProbe(df: DataFrame): IdProbe = {
-    val head = df.limit(collectCap + 1).collect()
-    new IdProbe(df,
-      if (head.length > collectCap) None
-      else Some(head.map(_.getLong(0))))
-  }
-
-  private def feedOf(oldStore: GraphStore, newStore: GraphStore): DataFrame =
-    newStore.changes.filter(col("version") > oldStore.version)
-
-  /** update_vertex_props joins the touched set: for a predicated
+  /** The refresh's only read of the change feed (the store's ops
+    * after `oldStore`'s version): its vertex and edge ops as the
+    * [[IdProbe]] window — lazily cut (the distinct's exchange leaves
+    * few partitions, so the bounded collect below is one pass, not a
+    * `limit` scale-up over the feed's many tiny ones), then collected
+    * when it fits both `collectCap` and the broadcast license
+    * ([[fitsBudget]]), the one gate between the in-scan and the frame
+    * forms.
+    *
+    * update_vertex_props joins the touched set: for a predicated
     * position the update can flip membership; for label-only
     * positions the NET compare yields no delta row, so the wider set
-    * costs nothing but a few extra probe keys.
+    * costs nothing but a few extra probe keys. Ops on other edge
+    * labels stay out: the filter folds their feed branches away, so
+    * the read never executes another label's mutation plans.
     */
-  private def feedTouchedV(oldStore: GraphStore,
-      newStore: GraphStore): IdProbe =
-    idProbe(lazyCut(feedOf(oldStore, newStore)
-      .filter(col("op").isin("add_vertex", "remove_vertex",
-        "update_vertex_props"))
-      .select(col("id")).distinct()))
+  private def feedTouchedV(oldStore: GraphStore, newStore: GraphStore,
+      edgeLabels: Seq[String]): IdProbe = {
+    val window = lazyCut(newStore.changes
+      .filter(col("version") > oldStore.version &&
+        (col("op").isin(vertexOps: _*) ||
+          col("op").isin(edgeOps: _*) && col("elabel").isin(edgeLabels: _*)))
+      .select("op", "id", "src", "dst", "elabel").distinct())
+    val head = window.limit(collectCap + 1).collect()
+    new IdProbe(window, edgeLabels,
+      Some(head).filter(h => fitsBudget(window, h.length, collectCap)))
+  }
 
   /** Net ±op membership delta (op, `keyName`) of the `label` (+ pred)
     * vertex set between two store versions, restricted to the
@@ -738,33 +796,45 @@ object Views {
   }
 
   /** (src, dst) keys of `edgeLabel` edges the window could have
-    * changed: explicit edge ops (prop updates included — they can
-    * flip a predicated edge's membership) plus every old/new edge
-    * incident to a touched vertex (cascades are not spelled out in
-    * the feed). Uncut.
+    * changed: explicit edge ops plus every old/new edge incident to a
+    * touched vertex (cascades are not spelled out in the feed) — the
+    * frame form of [[IdProbe.edgeFilter]], built only for an
+    * oversized window. Uncut.
     */
   private def touchedEdgeKeys(oldStore: GraphStore, newStore: GraphStore,
       edgeLabel: String, touchedV: IdProbe): DataFrame = {
-    val explicitE = feedOf(oldStore, newStore).filter(
-        col("op").isin("add_edge", "remove_edge", "update_edge_props")
-          && col("elabel") === edgeLabel)
-      .select(col("src"), col("dst")).distinct()
     def incident(store: GraphStore) = {
       val e = store.edges.filter(col("label") === edgeLabel)
       touchedV.semi(e, "src").unionByName(touchedV.semi(e, "dst"))
         .select(col("src"), col("dst"))
     }
-    explicitE.unionByName(incident(oldStore))
+    touchedV.edgeKeys(edgeLabel).unionByName(incident(oldStore))
       .unionByName(incident(newStore)).distinct()
   }
 
-  /** The `edgeLabel` (+ pred) edges of `store` whose key is in the
-    * (cut) touched-key frame: a base scan with the window broadcast.
+  /** Restricts `edgeLabel` edge frames (src, dst, …) of either store
+    * version to the keys the window could have changed: the in-scan
+    * [[IdProbe.edgeFilter]] on a collected window; on an oversized
+    * one, the [[touchedEdgeKeys]] frame, cut by `cut` and broadcast
+    * into a semi-join.
+    */
+  private def edgeWindow(oldStore: GraphStore, newStore: GraphStore,
+      edgeLabel: String, touchedV: IdProbe,
+      cut: DataFrame => DataFrame = lazyCut): DataFrame => DataFrame =
+    touchedV.edgeFilter(edgeLabel) match {
+      case Some(p) => _.filter(p)
+      case None =>
+        val touchedE = cut(
+          touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV))
+        _.join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
+    }
+
+  /** The `edgeLabel` (+ pred) edges of `store` inside the window, as
+    * (src, dst).
     */
   private def edgeMembers(store: GraphStore, edgeLabel: String,
-      pred: Option[Column], touchedE: DataFrame): DataFrame =
-    store.edges.filter(labeled(edgeLabel, pred))
-      .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
+      pred: Option[Column], inWindow: DataFrame => DataFrame): DataFrame =
+    inWindow(store.edges.filter(labeled(edgeLabel, pred)))
       .select("src", "dst")
 
   /** Net ±op delta (op, src, dst) of one edge label over the window,
@@ -776,10 +846,9 @@ object Views {
   private def windowEdgeDelta(oldStore: GraphStore, newStore: GraphStore,
       edgeLabel: String, pred: Option[Column], undirected: Boolean,
       touchedV: IdProbe): DataFrame = {
-    val touchedE = lazyCut(
-      touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV))
-    val net = netOps(edgeMembers(oldStore, edgeLabel, pred, touchedE),
-      edgeMembers(newStore, edgeLabel, pred, touchedE), Seq("src", "dst"))
+    val inWindow = edgeWindow(oldStore, newStore, edgeLabel, touchedV)
+    val net = netOps(edgeMembers(oldStore, edgeLabel, pred, inWindow),
+      edgeMembers(newStore, edgeLabel, pred, inWindow), Seq("src", "dst"))
     lazyCut(if (undirected) symmetrize(net) else net)
   }
 
@@ -1089,8 +1158,8 @@ object Views {
     val (preds, epreds, undir) = chainShape(vertexLabels, edgeLabels,
       vertexPreds, edgePreds, undirectedHops)
     refreshChain(catalog, name, oldStore, newStore,
-      feedTouchedV(oldStore, newStore), vertexLabels, edgeLabels,
-      preds, epreds, undir)
+      feedTouchedV(oldStore, newStore, edgeLabels), vertexLabels,
+      edgeLabels, preds, epreds, undir)
   }
 
   // ---- V5d: var-length pattern views (counting maintenance) -------
@@ -1312,7 +1381,7 @@ object Views {
       srcPred: Option[Column] = None,
       dstPred: Option[Column] = None,
       undirected: Boolean = false): DataFrame = {
-    val touchedV = feedTouchedV(oldStore, newStore)
+    val touchedV = feedTouchedV(oldStore, newStore, Seq(edgeLabel))
     val state0 = catalog.dataOf(s"$name!state").getOrElse(
       initVarLengthState(oldStore, srcLabel, edgeLabel, dstLabel,
         minHops, maxHops, srcPred, dstPred, undirected))
@@ -1358,9 +1427,9 @@ object Views {
       dstPred: Option[Column] = None,
       edgePred: Option[Column] = None): DataFrame = {
     val (oldMembers, ops) = whereHopMembers(oldStore, newStore,
-      feedTouchedV(oldStore, newStore), srcLabel, edgeLabel, dstLabel,
-      srcPropsCol, edgePropsCol, dstPropsCol, tuplePred,
-      srcPred, dstPred, edgePred)
+      feedTouchedV(oldStore, newStore, Seq(edgeLabel)), srcLabel,
+      edgeLabel, dstLabel, srcPropsCol, edgePropsCol, dstPropsCol,
+      tuplePred, srcPred, dstPred, edgePred)
     val state0 = catalog.dataOf(s"$name!state").getOrElse(
       oldMembers.groupBy("src", "dst")
         .agg(count(lit(1)).as("__mult")))
@@ -1375,8 +1444,8 @@ object Views {
     * maintainer ([[refreshWhereChainView]]). A tuple's membership
     * depends only on its edge's existence, both endpoints'
     * label/props, and the edge's props — so every tuple the window
-    * could have flipped has its edge in the touched-edge set
-    * ([[touchedEdgeKeys]]), and the old/new member compare
+    * could have flipped has its edge in the touched-edge window
+    * ([[edgeWindow]]), and the old/new member compare
     * restricted to that set is the exact delta, prop-flip windows
     * included. The member frame is a LAZY join of label-filtered
     * base scans (read with the delta side broadcast wherever the
@@ -1402,8 +1471,7 @@ object Views {
         .join(ends(store, dstLabel, dstPred, "dst", dstPropsCol), "dst")
         .filter(tuplePred)
         .select("src", "dst")
-    val touchedE = lazyCut(
-      touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV))
+    val inWindow = edgeWindow(oldStore, newStore, edgeLabel, touchedV)
     // restrict the EDGE SCAN first and broadcast the window-sized
     // slice outward — the members(store)-then-semi-join form left
     // Catalyst to re-plan the three-way props-carrying join, and
@@ -1417,8 +1485,7 @@ object Views {
     // and the net compare is one group-by ([[netTagged]]).
     def bothSides(f: GraphStore => DataFrame) =
       sideTagged(f(oldStore), f(newStore))
-    val eT = bothSides(edges)
-      .join(broadcast(touchedE), Seq("src", "dst"), "left_semi")
+    val eT = inWindow(bothSides(edges))
     val withSrc = bothSides(ends(_, srcLabel, srcPred, "src", srcPropsCol))
       .join(broadcast(eT), Seq("src", "__new"))
     val touched = bothSides(ends(_, dstLabel, dstPred, "dst", dstPropsCol))
@@ -1479,7 +1546,7 @@ object Views {
       "per-hop predicate/props-column seqs must align with the chain")
     val (preds, epreds, undir) = chainShape(vertexLabels, edgeLabels,
       vertexPreds, edgePreds, Nil)
-    val touchedV = feedTouchedV(oldStore, newStore)
+    val touchedV = feedTouchedV(oldStore, newStore, edgeLabels)
     val overrides = hopPreds.zipWithIndex.collect {
       case (Some(p), j) =>
         val (oldMembers, ops) = whereHopMembers(oldStore, newStore,
@@ -1567,7 +1634,7 @@ object Views {
         "unbounded segments are directed-only (undirected unbounded " +
           "reachability is connected-component membership)")
     }
-    val touchedV = feedTouchedV(oldStore, newStore)
+    val touchedV = feedTouchedV(oldStore, newStore, edgeLabels)
     // fold every var-length hop's sub-state FIRST; its membership
     // delta feeds the chain fold below. Two sub-state kinds: an
     // UNBOUNDED segment keeps the closure (foldReachState under
@@ -1672,20 +1739,22 @@ object Views {
 
   /** Netted (adds, removes) of the `edgeLabel` edge set between two
     * store versions, cascades included — the touched-edge window and
-    * member scan the pattern-view deltas use, kept as a separate
-    * (adds, removes) pair for the closure and component folds.
+    * member scan the pattern-view deltas use ([[edgeWindow]]: an
+    * in-scan filter on a collected window, no cut and no broadcast),
+    * kept as a separate (adds, removes) pair for the closure and
+    * component folds.
     */
   private def reachEdgeDelta(oldStore: GraphStore, newStore: GraphStore,
       edgeLabel: String, touchedV: IdProbe): (DataFrame, DataFrame) = {
-    // the touched-edge frame stays an EAGER checkpoint — it feeds
-    // two broadcast builds, which collect on the driver outside any
-    // counted consumer job. The returned add/remove frames are lazy:
-    // the fold's first count on each IS its materialization (one
-    // job, not two).
-    val touchedE = touchedEdgeKeys(oldStore, newStore, edgeLabel, touchedV)
-      .cut(false)
-    val eo = edgeMembers(oldStore, edgeLabel, None, touchedE)
-    val en = edgeMembers(newStore, edgeLabel, None, touchedE)
+    // an oversized window's touched-edge frame is an EAGER cut — it
+    // feeds two broadcast builds, which collect on the driver outside
+    // any counted consumer job. The returned add/remove frames are
+    // lazy: the fold's first count on each IS its materialization
+    // (one job, not two).
+    val inWindow = edgeWindow(oldStore, newStore, edgeLabel, touchedV,
+      _.cut(false))
+    val eo = edgeMembers(oldStore, edgeLabel, None, inWindow)
+    val en = edgeMembers(newStore, edgeLabel, None, inWindow)
     (lazyCut(en.join(eo, Seq("src", "dst"), "left_anti")),
       lazyCut(eo.join(en, Seq("src", "dst"), "left_anti")))
   }
@@ -1746,8 +1815,8 @@ object Views {
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1, _) = foldReachState(catalog, s"$name!state",
-      oldStore, newStore, feedTouchedV(oldStore, newStore), edgeLabel,
-      recomputeRatio, needOps = false)
+      oldStore, newStore, feedTouchedV(oldStore, newStore, Seq(edgeLabel)),
+      edgeLabel, recomputeRatio, needOps = false)
     val view = serveReach(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)
@@ -2165,8 +2234,9 @@ object Views {
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, state1, _) = foldLowerBoundedState(catalog, name,
-      oldStore, newStore, feedTouchedV(oldStore, newStore), srcLabel,
-      edgeLabel, dstLabel, minHops, srcPred, dstPred, recomputeRatio)
+      oldStore, newStore, feedTouchedV(oldStore, newStore, Seq(edgeLabel)),
+      srcLabel, edgeLabel, dstLabel, minHops, srcPred, dstPred,
+      recomputeRatio)
     val view = state1.select("src", "dst")
     catalog.put(name, view)
     view
@@ -2407,7 +2477,8 @@ object Views {
       srcPred: Option[Column] = None, dstPred: Option[Column] = None,
       recomputeRatio: Double = 0.3): DataFrame = {
     val (_, s1) = foldCcState(catalog, s"$name!cc", oldStore, newStore,
-      feedTouchedV(oldStore, newStore), edgeLabel, recomputeRatio)
+      feedTouchedV(oldStore, newStore, Seq(edgeLabel)), edgeLabel,
+      recomputeRatio)
     val view = serveCcPairs(newStore, s1, srcLabel, dstLabel,
       srcPred, dstPred)
     catalog.put(name, view)
@@ -2440,8 +2511,8 @@ object Views {
       initPatternChainState(oldStore, labels, Seq(edgeLabel), preds,
         Seq(edgePred), Seq(undirected), Map.empty)))
     val delta = pairs(patternChainViewDelta(oldStore, newStore,
-      feedTouchedV(oldStore, newStore), labels, Seq(edgeLabel), preds,
-      Seq(edgePred), Seq(undirected)))
+      feedTouchedV(oldStore, newStore, Seq(edgeLabel)), labels,
+      Seq(edgeLabel), preds, Seq(edgePred), Seq(undirected)))
     commitJoinState(catalog, name, state0, delta)
   }
 

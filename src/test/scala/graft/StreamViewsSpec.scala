@@ -2468,10 +2468,10 @@ class StreamViewsSpec extends SparkSpec {
     // budgets are the counts measured on this fixture; a change
     // that adds a job to a refresh fails here
     val budgets = Seq(
-      ("hop", "MATCH (a:A)-[:x]->(b:B)", 25),
-      ("where_hop", "MATCH (a:A)-[e:x]->(b:B) WHERE a.w >= b.w", 22),
-      ("chain", "MATCH (a:A)-[:x]->(b:B)-[:y]->(c:A)", 45),
-      ("composed", "MATCH (a:A)-[:y*1..2]->(b:A)-[:x]->(c:B)", 78))
+      ("hop", "MATCH (a:A)-[:x]->(b:B)", 21),
+      ("where_hop", "MATCH (a:A)-[e:x]->(b:B) WHERE a.w >= b.w", 18),
+      ("chain", "MATCH (a:A)-[:x]->(b:B)-[:y]->(c:A)", 38),
+      ("composed", "MATCH (a:A)-[:y*1..2]->(b:A)-[:x]->(c:B)", 71))
     val cat = new Views.ViewCatalog(spark,
       tempDir("graft_jobs_cat").toString)
     val sc = spark.sparkContext
@@ -2489,6 +2489,108 @@ class StreamViewsSpec extends SparkSpec {
     budgets.zip(counts).foreach { case ((name, _, bound), (_, n)) =>
       assert(n <= bound, s"$name: $n jobs per warm refresh, budget $bound")
     }
+  }
+
+  test("change window: edge-only, duplicate-row, self-loop and " +
+    "other-label windows are exact on the in-scan path and on the " +
+    "oversized-window path") {
+    import spark.implicits._
+    import graft.graph.GraphStore
+    import graft.graph.GraphStore.propsMap
+    import graft.gql.{GqlExecutor, GqlViews}
+    val base = GraphStore.fromTuples(spark,
+      Seq((1L, "A", Seq("w" -> 2)), (2L, "A", Seq("w" -> 0)),
+        (3L, "A", Seq("w" -> 1)), (10L, "B", Seq("w" -> 1)),
+        (11L, "B", Seq("w" -> 0)), (12L, "B", Seq("w" -> 2))) ++
+        (20L to 25L).map(i => (i, "C", Seq("w" -> 0))),
+      Seq((1L, 10L, "x", Seq("m" -> 1)), (2L, 10L, "x", Seq("m" -> 0)),
+        (2L, 10L, "x", Seq("m" -> 0)), (3L, 11L, "x", Seq("m" -> 1)),
+        (1L, 11L, "x", Seq("m" -> 1)), (10L, 2L, "y", Nil),
+        (11L, 3L, "y", Nil), (1L, 2L, "y", Nil), (2L, 3L, "y", Nil),
+        (12L, 1L, "y", Nil), (1L, 10L, "z", Seq("m" -> 0))))
+    // name -> (definition, compared as a bag)
+    val views = Seq(
+      "where_hop" -> ("MATCH (a:A)-[e:x]->(b:B) WHERE a.w >= b.w AND e.m < 2",
+        true),
+      "props_hop" -> ("MATCH (a:A)-[:x {m: 1}]->(b:B)", true),
+      "chain" -> ("MATCH (a:A)-[:x]->(b:B)-[:y]->(c:A)", true),
+      "reach" -> ("MATCH (a:A)-[:y*1..]->(b:A)", false))
+    def edges(l: String, m: Int, keys: (Long, Long)*) =
+      keys.map { case (s, d) => (s, d, l) }.toDF("src", "dst", "label")
+        .withColumn("props", propsMap("m" -> m))
+    def keys(l: String, ks: (Long, Long)*) =
+      ks.map { case (s, d) => (s, d, l) }.toDF("src", "dst", "label")
+    // every window also re-adds 18 x and 18 y edges between C
+    // vertices, which no view's answer can hold: enough distinct
+    // window rows on each view's labels to pass a 1 KB license
+    val pad = for (s <- 20L to 22L; d <- 20L to 25L) yield (s, d)
+    val windows: Seq[(String, GraphStore => GraphStore)] = Seq(
+      "add_edge, untouched ends" -> (_.addEdges(edges("x", 1, 3L -> 12L))),
+      "update_edge_props" -> (_.updateEdgeProps(edges("x", 5, 1L -> 10L))),
+      "remove_edge" -> (_.removeEdges(keys("x", 3L -> 11L))),
+      "duplicate rows" -> (_.addEdges(edges("x", 1, 1L -> 12L, 1L -> 12L))
+        .updateEdgeProps(edges("x", 1, 2L -> 10L))),
+      "self-loop" -> (_.addEdges(edges("y", 0, 2L -> 2L, 10L -> 1L))),
+      "other label" -> (_.updateEdgeProps(edges("z", 2, 1L -> 10L))),
+      "vertex and edge ops" -> (_.updateVertexProps(Seq(2L).toDF("id")
+          .withColumn("props", propsMap("w" -> 3)))
+        .removeVertices(Seq(11L).toDF("id"))
+        .addEdges(edges("y", 0, 12L -> 3L))),
+      "remove duplicates and self-loop" -> (_.removeEdges(
+        keys("x", 1L -> 12L, 2L -> 10L).unionByName(keys("y", 2L -> 2L)))))
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+        bag: Boolean) = {
+      val rs = df.select(cols.head, cols.tail: _*).collect()
+        .map(r => cols.indices.map(r.getLong).toList).toSeq
+      if (bag) rs.groupBy(identity).view.mapValues(_.size).toMap
+      else rs.distinct.map(_ -> 1).toMap
+    }
+    // one pass over every window; returns the refreshes' job count
+    def run(tag: String): Int = {
+      val cat = new Views.ViewCatalog(spark,
+        tempDir(s"graft_window_cat_$tag").toString)
+      views.foreach { case (n, (gql, _)) =>
+        GqlViews.register(cat, n, gql)
+        GqlViews.refresh(cat, n, base, base)
+      }
+      var store = base
+      windows.map { case (what, mutate) =>
+        val next = mutate(store).addEdges(edges("x", 0, pad: _*))
+          .addEdges(edges("y", 0, pad: _*)).truncated().truncatedEdges()
+        val jobs = views.map { case (n, (gql, bag)) =>
+          val vars = if (n == "chain") Seq("a", "b", "c") else Seq("a", "b")
+          val cols = if (vars.size == 2) Seq("src", "dst")
+            else vars.indices.map(i => s"c$i")
+          val (got, j) = jobsOf(
+            rows(GqlViews.refresh(cat, n, store, next), cols, bag))
+          val want = rows(GqlExecutor.run(next, gql + " RETURN " +
+            vars.map(v => s"id($v) AS $v").mkString(", ")).df, vars, bag)
+          assert(got == want, s"$tag, $what, $n")
+          j
+        }.sum
+        store = next
+        jobs
+      }.sum
+    }
+    val inScan = run("default")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1kb")
+    val oversized = try {
+      // 1 KB over a 64-byte (op, id, src, dst, elabel) window row
+      // licenses 16 rows; every window holds at least the 18 pad rows
+      val shape = GraphStore.emptyChanges(spark)
+        .select("op", "id", "src", "dst", "elabel")
+      assert(Views.broadcastRowBudget(shape) == 16L && pad.size > 16)
+      run("1kb")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    info(s"refresh jobs over ${windows.size} windows: in-scan $inScan, " +
+      s"oversized $oversized")
+    // the oversized path cuts and broadcasts the touched keys
+    assert(oversized > inScan)
   }
 
   test("reach fold broadcast license: frames past the session byte " +
