@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.Broadcast
 import graft.Lineage.{CutOps, cutCount}
 
 /** Batch graph algorithms (SURVEY §2.8) on GraphX/Pregel.
@@ -25,31 +26,13 @@ import graft.Lineage.{CutOps, cutCount}
   * vertex id per component; Dijkstra carries (dist, pred) for path
   * reconstruction (basic.rs:277-340). The reference's FIFO-"Dijkstra"
   * bug (incremental_engine.rs:1233) is intentionally NOT replicated.
+  *
+  * Every count-gated broadcast hint and driver-local finish in the
+  * frontier and peel loops asks the session's broadcast license
+  * ([[graft.Broadcast]]): the exact count of a cut frame against the
+  * byte budget over that frame's row width.
   */
 object Algorithms {
-
-  /** Row-count ceiling for broadcast-hinting SLIM frames (2-3 longs
-    * per row — BFS frontiers, visited sets): 1M rows ≈ tens of MB
-    * broadcast, far under Spark's 8 GB hard limit. Frames carrying
-    * fat columns (props maps, path arrays) need their own, lower
-    * ceiling — an explicit hint is obeyed regardless of byte size,
-    * so the caller owns the bytes-per-row reasoning (see
-    * GqlExecutor's fat-frame threshold).
-    */
-  val DefaultBroadcastRows: Long = 1000000L
-
-  /** Count-gated broadcast hint: the one definition of the pattern
-    * used by every iterative loop in this package (frames behind a
-    * checkpoint are stats-less, so the planner's fallback is a
-    * sort-merge join that shuffles the big side every round; an
-    * exact count licenses forcing the hash-join build side instead).
-    * The ceiling is a ROW count — an explicit hint is obeyed
-    * regardless of byte size, so callers of fat frames (props maps,
-    * arrays) must pass a lower ceiling (see GqlExecutor).
-    */
-  private[graft] def hintIfAtMost(df: DataFrame, rows: Long,
-      ceiling: Long): DataFrame =
-    if (rows <= ceiling) broadcast(df) else df
 
   /** True when `df` is a pure projection over an already-cached (or
     * driver-local) relation — the cases where re-persisting would
@@ -311,8 +294,8 @@ object Algorithms {
     * isn't already cache-backed; the cumulative visited set stays a
     * lazy union of the once-cut frontiers.
     */
-  def reachability(edges: DataFrame, sources: Seq[Long], maxIter: Int = 50,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+  def reachability(edges: DataFrame, sources: Seq[Long], maxIter: Int = 50)
+      : DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val rel = graft.Lineage.reliable(edges.sparkSession)
@@ -337,10 +320,10 @@ object Algorithms {
       var iter = 0
       var done = frontierCount == 0L
       while (!done && iter < maxIter) {
-        val small = frontierCount <= broadcastRows
-        val fr = hintIfAtMost(frontier, frontierCount, broadcastRows)
+        val small = Broadcast.fits(frontier, frontierCount)
+        val fr = if (small) broadcast(frontier) else frontier
         val eSide = if (small) e else eSmj()
-        val visSide = hintIfAtMost(visited, visitedCount, broadcastRows)
+        val visSide = Broadcast.hint(visited, visitedCount)
         val (next, cnt) = cutCount(fr.join(eSide, fr("id") === eSide("src"))
           .select(eSide("dst").as("id")).distinct()
           .join(visSide, Seq("id"), "left_anti"), rel)
@@ -380,16 +363,15 @@ object Algorithms {
     * after the edge map stage has already been written. The loop
     * instead tracks exact frontier/visited counts (one cheap count
     * on each already-materialized checkpoint) and broadcast-hints any
-    * side at or below `broadcastRows`, so a selective BFS never
-    * shuffles the edge list at all — each round is one in-memory edge
-    * scan. When a frontier outgrows the threshold (a thousand-seed
-    * batch on a dense graph), the edge set is re-partitioned by `src`
-    * and sorted ONCE, lazily, so the remaining sort-merge rounds
-    * exchange and sort only the frontier side.
+    * side the broadcast license admits ([[graft.Broadcast.fits]]), so
+    * a selective BFS never shuffles the edge list at all — each round
+    * is one in-memory edge scan. When a frontier outgrows the license
+    * (a thousand-seed batch on a dense graph), the edge set is
+    * re-partitioned by `src` and sorted ONCE, lazily, so the remaining
+    * sort-merge rounds exchange and sort only the frontier side.
     */
   def multiSourceBfs(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      undirected: Boolean = false,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+      undirected: Boolean = false): DataFrame = {
     val rel = graft.Lineage.reliable(edges.sparkSession)
     val e0 = edges.select(col("src"), col("dst"))
     // Persist the edge projection only when it is a pure projection
@@ -442,11 +424,11 @@ object Algorithms {
       var done = frontierCount == 0L
       while (!done && hop <= maxHops) {
         val candidates =
-          if (frontierCount <= broadcastRows) expand(broadcast(frontier))
+          if (Broadcast.fits(frontier, frontierCount)) expand(broadcast(frontier))
           else expandSmj(frontier)
         val vis = visited.select(col("source").as("__v_src"),
           col("id").as("__v_id"))
-        val visSide = hintIfAtMost(vis, visitedCount, broadcastRows)
+        val visSide = Broadcast.hint(vis, visitedCount)
         val (next, cnt) = cutCount(candidates.distinct()
           .join(visSide,
             col("source") === col("__v_src") && col("id") === col("__v_id"),
@@ -583,7 +565,6 @@ object Algorithms {
     */
   def temporalReachability(tedges: DataFrame, seeds: DataFrame,
       sentinel: java.sql.Timestamp, maxRounds: Int = 60,
-      broadcastRows: Long = DefaultBroadcastRows,
       dateBuckets: Int = 1): DataFrame = {
     require(dateBuckets >= 1, s"dateBuckets must be >= 1, got $dateBuckets")
     val rel = graft.Lineage.reliable(tedges.sparkSession)
@@ -644,8 +625,7 @@ object Algorithms {
         }
         var improvedCnt = -1L
         while (frontierCnt > 0 && improvedCnt != 0 && rounds < maxRounds) {
-          val fr = graft.views.Views.hintIfFits(frontier, frontierCnt,
-            broadcastRows)
+          val fr = Broadcast.hint(frontier, frontierCnt)
           val candidates = fr.join(eb,
               fr("id") === eb("src") && eb("ed") >= fr("d"))
             .select(col("seed"), col("dst").as("id"), col("ed").as("d"))
@@ -665,16 +645,15 @@ object Algorithms {
             // broadcast-joins onto a state SCAN (keys stay unique:
             // arrival keys are unique, `better` keys are a groupBy's
             // output, `fresh` keys are provably absent). Gated BOTH
-            // ways: the improvement must fit the broadcast budget AND
-            // the state must have outgrown the slim-frame ceiling —
-            // below it the single-shuffle groupBy merge is cheaper
+            // ways: the improvement must fit the broadcast license
+            // AND the arrival state must no longer fit it — while the
+            // state fits, the single-shuffle groupBy merge is cheaper
             // than a per-round broadcast build (measured: g32's
             // 3-seed state lost ~1 s/run to unconditional broadcast
-            // merging), above it the state scan replaces an
+            // merging), past it the state scan replaces an
             // O(rounds·state) shuffle series.
-            val fits = graft.views.Views.fitsBudget(improved, improvedCnt,
-              broadcastRows)
-            val merged = if (fits && arrivalUb > broadcastRows) {
+            val merged = if (Broadcast.fits(improved, improvedCnt) &&
+                !Broadcast.fits(arrival, arrivalUb)) {
               val better = broadcast(improved.filter(col("old").isNotNull)
                 .select(col("seed"), col("id"), col("d").as("__nd")))
               val fresh = improved.filter(col("old").isNull)
@@ -714,8 +693,7 @@ object Algorithms {
     * (graph/algorithms/src/lib.rs:47-82). Returns surviving vertex
     * ids with their core degree.
     */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     val rel = graft.Lineage.reliable(edges.sparkSession)
     var e = edges.select(col("src"), col("dst")).cut(rel)
     var changed = true
@@ -731,7 +709,7 @@ object Algorithms {
       val (bad, badCnt) = cutCount(deg.filter(col("degree") < k).select("id"), rel)
       if (badCnt == 0L) changed = false
       else {
-        val b = hintIfAtMost(bad, badCnt, broadcastRows)
+        val b = Broadcast.hint(bad, badCnt)
         e = e.join(b.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(b.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
           .select("src", "dst")
@@ -863,8 +841,8 @@ object Algorithms {
     * round, never collected); rounds are bounded by the support
     * peel depth, in practice single digits.
     */
-  def kTruss(canonicalEdges: DataFrame, k: Int, maxIter: Int = 100,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+  def kTruss(canonicalEdges: DataFrame, k: Int, maxIter: Int = 100)
+      : DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val rel = graft.Lineage.reliable(canonicalEdges.sparkSession)
     var e = canonicalEdges.select("src", "dst").distinct().cut(rel)
@@ -875,7 +853,7 @@ object Algorithms {
         .filter(col("support") < k - 2).select("src", "dst"), rel)
       if (badCnt == 0L) changed = false
       else {
-        val b = hintIfAtMost(bad, badCnt, broadcastRows)
+        val b = Broadcast.hint(bad, badCnt)
         e = e.join(b, Seq("src", "dst"), "left_anti")
           .select("src", "dst").cut(rel)
       }
@@ -940,16 +918,17 @@ object Algorithms {
     *
     * Local finish: at entry and after every peel, when the remaining
     * vertex frame and the residual edge frame both fit the broadcast
-    * license ([[graft.views.Views.fitsBudget]]: the session byte
-    * budget capped by `broadcastRows`; both counts come from the
-    * loop's counted cuts), the two are collected and labeled on the
+    * license ([[graft.Broadcast.fits]]: the session byte budget over
+    * each frame's row width; both counts come from the loop's counted
+    * cuts), the two are collected and labeled on the
     * driver by [[sccLocalSolve]] (Tarjan, O(V + E)). The answer rows
     * form a driver-local frame, one per collected vertex row, unioned
     * with the rows already peeled. Each distributed round costs a
     * dozen-plus jobs whatever its size, so a small residual graph is
-    * cheaper to finish in one collect. `broadcastRows = 0` keeps
-    * every round distributed (no non-empty frame fits a 0-row
-    * ceiling).
+    * cheaper to finish in one collect. A session
+    * `spark.sql.autoBroadcastJoinThreshold` below one row's width
+    * keeps every round distributed (no non-empty frame fits a 0-row
+    * budget).
     *
     * Every per-round frame is lineage-truncated — flat lineage, the
     * iterative-DataFrame pattern used by reachability/kCore/CC here
@@ -964,8 +943,7 @@ object Algorithms {
     * silently.
     */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
-      numIter: Int = 50,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+      numIter: Int = 50): DataFrame = {
     val rel = graft.Lineage.reliable(vertices.sparkSession)
     var (remaining, remainingCount) = cutCount(vertices.select(col("id")), rel)
     // Restrict edges to the declared vertex set at ENTRY (the later
@@ -974,7 +952,7 @@ object Algorithms {
     // the groupBy-dst aggregate `upd` — is provably bounded by
     // remainingCount, which makes the broadcast hints below sound
     // even for edge inputs mentioning ids outside `vertices`.
-    val vIds = hintIfAtMost(remaining, remainingCount, broadcastRows)
+    val vIds = Broadcast.hint(remaining, remainingCount)
     var (e, eCount) = cutCount(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .join(vIds.select(col("id").as("src")), Seq("src"), "left_semi")
@@ -985,8 +963,7 @@ object Algorithms {
       result = if (result == null) done.cut(rel)
       else result.unionByName(done).cut(rel)
     def fitsDriver: Boolean =
-      graft.views.Views.fitsBudget(remaining, remainingCount, broadcastRows) &&
-        graft.views.Views.fitsBudget(e, eCount, broadcastRows)
+      Broadcast.fits(remaining, remainingCount) && Broadcast.fits(e, eCount)
     var outer = 0
     var lastF: DataFrame = null
     // Every frame in the loops below is checkpointed, i.e. stats-less
@@ -995,8 +972,7 @@ object Algorithms {
     // bounded by the remaining-vertex count, which the loop already
     // pays a count job to learn — broadcast-hint them while they fit
     // (slim rows: id + label), leave the edge side streaming.
-    def bc(df: DataFrame): DataFrame =
-      hintIfAtMost(df, remainingCount, broadcastRows)
+    def bc(df: DataFrame): DataFrame = Broadcast.hint(df, remainingCount)
     while (outer < numIter && remainingCount > 0L && !fitsDriver) {
       // 1. forward min-label fixpoint
       var f = remaining.select(col("id"), col("id").as("f")).cut(rel)
@@ -1617,16 +1593,15 @@ object Algorithms {
     * for V beyond that, pass a SAMPLED `sources` frame (Brandes-Pich
     * pivot estimation: result is the partial sum over the sample;
     * callers scale by V/|S|). Frontiers and δ frames are
-    * lineage-cut every round and broadcast-hinted below
-    * `broadcastRows`, same economics as [[multiSourceBfs]]. Edges are
+    * lineage-cut every round and broadcast-hinted while they fit the
+    * broadcast license, same economics as [[multiSourceBfs]]. Edges are
     * de-duplicated up front: σ counts PATHS, so a parallel edge copy
     * (or a pre-doubled undirected list fed with `undirected=true`)
     * would silently double counts.
     */
   def betweennessCentrality(edges: DataFrame, vertices: DataFrame,
       maxHops: Int, undirected: Boolean = false,
-      sources: Option[DataFrame] = None,
-      broadcastRows: Long = DefaultBroadcastRows): DataFrame = {
+      sources: Option[DataFrame] = None): DataFrame = {
     val rel = graft.Lineage.reliable(edges.sparkSession)
     val eDir = edges.select(col("src"), col("dst"))
     val e = (if (undirected)
@@ -1645,13 +1620,13 @@ object Algorithms {
       var done = levels(0)._2 == 0L
       while (!done && hop <= maxHops) {
         val (frontier, frontierCount) = levels.last
-        val fr = hintIfAtMost(frontier, frontierCount, broadcastRows)
+        val fr = Broadcast.hint(frontier, frontierCount)
         val cand = fr.join(e, fr("id") === e("src"))
           .select(fr("source"), e("dst").as("id"), fr("sigma"))
           .groupBy("source", "id").agg(sum("sigma").as("sigma"))
-        val visSide = hintIfAtMost(
+        val visSide = Broadcast.hint(
           visited.select(col("source").as("__v_src"), col("id").as("__v_id")),
-          visitedCount, broadcastRows)
+          visitedCount)
         val (next, cnt) = cutCount(cand.join(visSide,
             col("source") === col("__v_src") && col("id") === col("__v_id"),
             "left_anti")
@@ -1692,15 +1667,15 @@ object Algorithms {
           else bcAcc.unionByName(part)
             .groupBy("id").agg(sum(col("delta")).as("delta"))).cut(rel)
         if (prevAcc != null) graft.Lineage.freeCut(prevAcc)
-        val w = hintIfAtMost(lvlD, lvlCount, broadcastRows)
+        val w = Broadcast.hint(lvlD, lvlCount)
         val viaEdge = w.join(e, w("wid") === e("dst"))
           .select(w("source"), e("src").as("id"),
             col("wsigma"), col("delta"))
         val (prevLvl, prevCount) = levels(d - 1)
-        val prev = hintIfAtMost(
+        val prev = Broadcast.hint(
           prevLvl.select(col("source"), col("id"),
             col("sigma").as("vsigma")),
-          prevCount, broadcastRows)
+          prevCount)
         val consumedDelta = delta
         delta = viaEdge.join(prev, Seq("source", "id"))
           .groupBy("source", "id")
@@ -2229,8 +2204,9 @@ object Algorithms {
     * polish pass), condenses communities into super-vertices (intra
     * weight becomes a self loop — Q-preserving by construction, so
     * coarse improvements ARE fine improvements), and repeats on the
-    * weighted level graph; once a condensed level fits under
-    * `localGateEdges` it is COLLECTED and finished by the
+    * weighted level graph; once a condensed level's edge frame fits
+    * the broadcast license ([[graft.Broadcast.fits]], the gate SCC's
+    * local finish uses) it is COLLECTED and finished by the
     * deterministic sequential solver ([[louvainLocalSolve]]) — a
     * count-gated bounded collect, since condensation shrinks levels
     * geometrically while each distributed round costs fixed scheduler
@@ -2246,15 +2222,17 @@ object Algorithms {
     * map-side-combined aggregates on vertex/community ids; the
     * dominant cost is level 1 on the raw edge list — the same
     * per-round economics as [[labelPropagation]], times a
-    * measured-small round count. At 100 TB the gate (default 2²⁰
-    * condensed edges ≈ 24 MB of triples) may not be reached for
+    * measured-small round count. At 100 TB the gate (the session
+    * byte budget over a 24-byte (src, dst, w) row: about 437k
+    * condensed edges at the 10 MB default) may not be reached for
     * several levels — each extra level runs distributed, exactly as
-    * level 1 does; set `localGateEdges` = 0 to force every level
-    * distributed (the equivalence is pinned in AlgoSpec).
+    * level 1 does; a session `spark.sql.autoBroadcastJoinThreshold`
+    * below one row's width forces every level distributed (the
+    * equivalence is pinned in AlgoSpec).
     */
   def louvain(vertices: DataFrame, edges: DataFrame,
       eps: Double = 1e-9, maxLevels: Int = 4,
-      maxRounds: Int = 200, localGateEdges: Long = 1L << 20): DataFrame = {
+      maxRounds: Int = 200): DataFrame = {
     val spark = vertices.sparkSession
     val e0 = graft.TransientCache.persist(louvainEdges(edges))
     val verts = vertices.select(col("id"))
@@ -2285,7 +2263,7 @@ object Algorithms {
             .groupBy("src", "dst").agg(sum("w").as("w")))
         levelVerts = graft.TransientCache.persist(
           lcomm.select(col("comm").as("id")).distinct())
-        if (el.count() <= localGateEdges) {
+        if (Broadcast.fits(el, el.count())) {
           // count-gated local finish of the remaining (tiny) levels
           val eRows = el.select("src", "dst", "w").collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

@@ -479,9 +479,7 @@ object Dedup {
     * joins in exactly once, as an anti-join.
     */
   def resolveDupClusters(docs: DataFrame, idCol: String,
-      pairs: DataFrame, maxRounds: Int = 30,
-      broadcastRows: Long = graft.algorithms.Algorithms.DefaultBroadcastRows)
-      : DataFrame = {
+      pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
     // pairs is read three times (two vertex projections + the edge
     // set) and its producer is typically a whole sketch+verify
     // pipeline. Checkpoint, not persist: a persist caches the
@@ -496,7 +494,7 @@ object Dedup {
     val touched = p.select(col("ida").as("id"))
       .unionByName(p.select(col("idb").as("id"))).distinct()
     val clustered = pairGraphComponents(touched, p, maxRounds,
-        reliable = rel, broadcastRows = broadcastRows)
+        reliable = rel)
       .select(col("id"), col("component").as("canonical_id"))
     val loners = docs.select(col(idCol).as("id"))
       .join(touched, Seq("id"), "left_anti")
@@ -544,9 +542,7 @@ object Dedup {
     * `Algorithms.connectedComponents` (GraphX, hash-partitioned).
     */
   private def pairGraphComponents(vertices: DataFrame, pairs: DataFrame,
-      maxRounds: Int = 30, reliable: Boolean = false,
-      broadcastRows: Long = graft.algorithms.Algorithms.DefaultBroadcastRows)
-      : DataFrame = {
+      maxRounds: Int = 30, reliable: Boolean = false): DataFrame = {
     // Every per-round frame is lineage-truncated: persist alone keeps
     // the full producer lineage in the plan, and the optimizer +
     // Janino re-walk it each round — the classic iterative-DataFrame
@@ -559,12 +555,11 @@ object Dedup {
     // stats-less — one count, riding the first cut's job, licenses
     // broadcast-hinting the vertex-sided frames every round so the
     // loop stops sort-merge-shuffling the edge set (see
-    // Algorithms.DefaultBroadcastRows).
+    // graft.Broadcast).
     val (labels0, vertCnt) = cutCount(
       vertices.select(col("id"), col("id").as("component")), reliable)
     var labels = labels0
-    def bc(df: DataFrame): DataFrame =
-      graft.algorithms.Algorithms.hintIfAtMost(df, vertCnt, broadcastRows)
+    def bc(df: DataFrame): DataFrame = graft.Broadcast.hint(df, vertCnt)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {

@@ -38,12 +38,6 @@ object GqlExecutor {
     */
   val VarLenCap: Int = 10
 
-  /** Broadcast-hint row ceiling for FAT frames (props maps, path
-    * arrays) — see the rationale at the `stSmall` use site; slim
-    * frames use [[graft.algorithms.Algorithms.DefaultBroadcastRows]].
-    */
-  private val FatBroadcastRows: Long = 100000L
-
   /** Result of a statement: MATCH returns rows; CREATE/DELETE return
     * the mutated store plus an empty/summary frame.
     */
@@ -887,16 +881,13 @@ object GqlExecutor {
     // for every downstream join: st-derived frames (pairs, detPred,
     // paths) are stats-less to the planner, whose fallback is a
     // sort-merge join that shuffles the full vertex table / adjacency
-    // against what is usually a tiny settled set. The ceiling is 10×
-    // lower than Algorithms.DefaultBroadcastRows because the frames
-    // hinted here carry FAT columns — vertex props maps and
-    // maxHops-length path arrays, hundreds of bytes per row, not the
-    // BFS loop's 2-3 longs — and an explicit hint is obeyed
-    // regardless of byte size (100k × ~1 KB ≈ 100 MB, safely under
-    // the 8 GB broadcast hard limit).
+    // against what is usually a tiny settled set. Each hinted frame
+    // is bounded by stCnt; the broadcast license divides the byte
+    // budget by that frame's own row width, so the frames carrying
+    // vertex props maps and path arrays get fewer rows than the
+    // BFS loop's slim ones.
     val stCnt = st.count()
-    def bc(df: DataFrame): DataFrame =
-      graft.algorithms.Algorithms.hintIfAtMost(df, stCnt, FatBroadcastRows)
+    def bc(df: DataFrame): DataFrame = graft.Broadcast.hint(df, stCnt)
 
     val pairs = st.filter(col("__sp_hops") >= minHops)
     val aSide = store.vertices.filter(nodeFilter(aN)).select(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
+import graft.Broadcast
 import graft.graph.GraphStore
 import graft.Lineage.{CutOps, cutCount, lazyCut, partitionedCkpt, preservedCkpt}
 
@@ -444,36 +445,6 @@ object Views {
       rel.withColumn(signCol, col("__mult").cast("long")).drop("__mult")
     else rel.withColumn(signCol, lit(1L))
 
-  /** Rows of `df`'s shape that fit the session broadcast budget:
-    * `spark.sql.autoBroadcastJoinThreshold` divided by the schema's
-    * estimated row width — the byte-derived stand-in for the old
-    * fixed 4M-row cap (r11 verdict: 4M rows of a 3-long delta is
-    * ~100 MB, an order past the 10 MB default the rest of the plan
-    * broadcasts under; a row count must track the row SHAPE). A
-    * disabled threshold (-1/0) falls back to the byte budget of the
-    * Spark default (10 MB).
-    */
-  private[graft] def broadcastRowBudget(df: DataFrame): Long = {
-    val threshold =
-      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val bytes = if (threshold > 0) threshold else 10L << 20
-    math.max(1L, bytes / math.max(df.schema.defaultSize.toLong, 8L))
-  }
-
-  /** THE broadcast license (r13): `rows` fits when it is under both
-    * the caller's policy row ceiling and the byte budget derived from
-    * this frame's row shape. One definition so a budget-policy change
-    * lands once (previously restated at three call sites).
-    */
-  private[graft] def fitsBudget(df: DataFrame, rows: Long,
-      ceiling: Long): Boolean =
-    rows <= math.min(ceiling, broadcastRowBudget(df))
-
-  /** `df` with a broadcast hint when `rows` fits [[fitsBudget]]. */
-  private[graft] def hintIfFits(df: DataFrame, rows: Long,
-      ceiling: Long): DataFrame =
-    if (fitsBudget(df, rows, ceiling)) broadcast(df) else df
-
   /** Fold a signed join delta into multiset state: merge on the view
     * columns, sum multiplicities, drop rows whose net count reaches
     * zero.
@@ -492,20 +463,16 @@ object Views {
     * one extra state scan; removes the state shuffle entirely.
     * Windows too wide to broadcast fall back to the classic
     * union-regroup, which is the right plan when the delta is
-    * state-sized anyway. The cap is BYTE-derived by default
-    * ([[broadcastRowBudget]]: autoBroadcastJoinThreshold over the
-    * netted delta's row width); pass an explicit `broadcastCap` to
-    * override (0 forces the regroup path).
+    * state-sized anyway. The cap is the netted delta's broadcast
+    * license ([[graft.Broadcast.fits]]).
     */
-  def mergeJoinDelta(state: DataFrame, delta: DataFrame,
-      broadcastCap: Long = -1L): DataFrame = {
+  def mergeJoinDelta(state: DataFrame, delta: DataFrame): DataFrame = {
     val cols = state.columns.filterNot(_ == "__mult")
     val (dAgg, dCnt) = cutCount(delta
       .select(cols.map(col) :+ col("__sign").cast("long").as("__m"): _*)
       .groupBy(cols.map(col): _*)
       .agg(sum("__m").as("__dm")))
-    val cap = if (broadcastCap >= 0) broadcastCap else broadcastRowBudget(dAgg)
-    if (dCnt > cap)
+    if (!Broadcast.fits(dAgg, dCnt))
       return state.select(cols.map(col) :+ col("__mult").as("__m"): _*)
         .unionByName(dAgg.select(cols.map(col) :+ col("__dm").as("__m"): _*))
         .groupBy(cols.map(col): _*)
@@ -545,16 +512,15 @@ object Views {
     * fallback's merged state checkpointed so the diff does not
     * re-execute it.
     */
-  def mergeJoinDeltaWithOps(state: DataFrame, delta: DataFrame,
-      broadcastCap: Long = -1L): (DataFrame, DataFrame) = {
+  def mergeJoinDeltaWithOps(state: DataFrame, delta: DataFrame)
+      : (DataFrame, DataFrame) = {
     val cols = state.columns.filterNot(_ == "__mult")
     val (dAgg, dCnt) = cutCount(delta
       .select(cols.map(col) :+ col("__sign").cast("long").as("__m"): _*)
       .groupBy(cols.map(col): _*)
       .agg(sum("__m").as("__dm"))
       .filter(col("__dm") =!= 0))
-    val cap = if (broadcastCap >= 0) broadcastCap else broadcastRowBudget(dAgg)
-    if (dCnt > cap) {
+    if (!Broadcast.fits(dAgg, dCnt)) {
       val s1 = state
         .select(cols.map(col) :+ col("__mult").as("__m"): _*)
         .unionByName(dAgg.select(cols.map(col) :+ col("__dm").as("__m"): _*))
@@ -585,13 +551,6 @@ object Views {
       .select(cols.map(col) :+ lit("add").as("op"): _*)
     (merged.unionByName(inserts), removes.unionByName(adds))
   }
-
-  /** Just the membership ops of [[mergeJoinDeltaWithOps]] — for
-    * callers that fold the state elsewhere.
-    */
-  def stateMembershipOps(state: DataFrame, delta: DataFrame,
-      broadcastCap: Long = -1L): DataFrame =
-    mergeJoinDeltaWithOps(state, delta, broadcastCap)._2
 
   /** The maintained join view as plain rows (multiplicity expanded). */
   def finalizeJoin(state: DataFrame): DataFrame = {
@@ -761,7 +720,7 @@ object Views {
     * few partitions, so the bounded collect below is one pass, not a
     * `limit` scale-up over the feed's many tiny ones), then collected
     * when it fits both `collectCap` and the broadcast license
-    * ([[fitsBudget]]), the one gate between the in-scan and the frame
+    * ([[graft.Broadcast.fits]]), the one gate between the in-scan and the frame
     * forms.
     *
     * update_vertex_props joins the touched set: for a predicated
@@ -780,7 +739,8 @@ object Views {
       .select("op", "id", "src", "dst", "elabel").distinct())
     val head = window.limit(collectCap + 1).collect()
     new IdProbe(window, edgeLabels,
-      Some(head).filter(h => fitsBudget(window, h.length, collectCap)))
+      Some(head).filter(h =>
+        h.length <= collectCap && Broadcast.fits(window, h.length)))
   }
 
   /** Net ±op membership delta (op, `keyName`) of the `label` (+ pred)
@@ -879,7 +839,7 @@ object Views {
     * that caller passes `gateETouched = true`, which spends one
     * count on the materialized slice and downgrades to a
     * SHUFFLE_HASH join when it exceeds the session broadcast budget
-    * ([[broadcastRowBudget]]): a skew-safe shuffle instead of a
+    * ([[graft.Broadcast.fits]]): a skew-safe shuffle instead of a
     * driver/executor OOM.
     */
   private def twoLevelDelta(pOld: DataFrame, eOld: DataFrame,
@@ -893,7 +853,7 @@ object Views {
       if (!gateETouched) broadcast(raw)
       else {
         val (eT, eTCnt) = cutCount(raw)
-        if (eTCnt <= broadcastRowBudget(eT)) broadcast(eT)
+        if (Broadcast.fits(eT, eTCnt)) broadcast(eT)
         else eT.hint("shuffle_hash")
       }
     }
@@ -1683,14 +1643,6 @@ object Views {
 
   // ---- V5e: UNBOUNDED reachability views (semi-naive + DRed) ------
 
-  /** Row cap of the reach and component folds: frames counted at or
-    * below it may hash-broadcast inside the rounds, within the
-    * session byte budget ([[hintIfFits]]); a closure tail past it
-    * compacts into the partitioned core, and closure ops past it send
-    * the lower-bounded composition to recompute.
-    */
-  private val rederiveCap = 1L << 20
-
   /** Round cap of every reach/component fixpoint below (closure, DRed
     * re-derivation, insertion, label propagation). Closure rounds
     * grow with the labeled subgraph's diameter, label propagation's
@@ -1802,7 +1754,8 @@ object Views {
     *    closure a 2²⁰ wavefront is far below any sane recompute
     *    point, and on a small view it could exceed the whole state.
     *
-    * [[rederiveCap]] keeps only its BROADCAST-licensing role.
+    * The broadcast license ([[graft.Broadcast]]) gates broadcasts
+    * and tail compaction only, never the recompute switch.
     *
     * State under `name!state` is the label-free closure; endpoint
     * labels/predicates are SERVE-time semi-joins against the current
@@ -1861,8 +1814,6 @@ object Views {
       recomputeRatio: Double = 0.3,
       needOps: Boolean = true)
       : (DataFrame, DataFrame, DataFrame) = {
-    def hinted(df: DataFrame, cnt: Long): DataFrame =
-      hintIfFits(df, cnt, rederiveCap)
     val keys = Seq("src", "dst")
     // CORE + TAIL state layout (r12): the closure lives as a
     // hash-partitioned, pair-sorted CORE carried across refreshes
@@ -1916,7 +1867,7 @@ object Views {
       // partitionedCkpt), never re-scanned.
       val (coreF, tailF, coreCntF) =
         if (tailBound == 0L) (core, tail, coreCnt)
-        else if (tailBound > rederiveCap || tailBound * 4 > coreCnt) {
+        else if (!Broadcast.fits(tail, tailBound) || tailBound * 4 > coreCnt) {
           val (c, n) = partitionedCkpt(core.unionByName(tail), keys)
           (c, tail.limit(0).cut(false), n)
         } else (core, tail.cut(false), coreCnt)
@@ -1948,7 +1899,7 @@ object Views {
       // member pair reaching AROUND it (a ⇒ u and/or v ⇒ b, with
       // a = u / b = v coincidences as their own shapes); the R scans
       // stream against the broadcast removal set — no state shuffle
-      val remUV = hinted(
+      val remUV = Broadcast.hint(
         eRem.select(col("src").as("__u"), col("dst").as("__v")), remCnt)
       val r0 = s0
       val rToU = r0.select(col("src").as("__a"), col("dst").as("__u"))
@@ -1966,7 +1917,7 @@ object Views {
         .select(col("__u"), col("__b")))
       val shape3 = remReach
         .select(col("__u").as("src"), col("__b").as("dst"))
-      val shape4 = rToU.join(hinted(remReach, remReachCnt), "__u")
+      val shape4 = rToU.join(Broadcast.hint(remReach, remReachCnt), "__u")
         .select(col("__a").as("src"), col("__b").as("dst"))
       // every shape row is in R BY CONSTRUCTION — each composes
       // R-paths with an E_old edge (a⇒u, u→v ∈ E_old, v⇒b gives
@@ -1997,12 +1948,12 @@ object Views {
       // job per round where the eager form paid three
       val eMid = lazyCut(oldStore.edges.filter(col("label") === edgeLabel)
         .select("src", "dst")
-        .join(hinted(eRem, remCnt), Seq("src", "dst"), "left_anti"))
+        .join(Broadcast.hint(eRem, remCnt), Seq("src", "dst"), "left_anti"))
       // kept = state minus candidates, SPLIT: the core side keeps its
       // carried layout through the broadcast-anti (Lineage.preservedCkpt),
       // so the per-round membership semi below shuffles only the
       // probe; re-derived rows accumulate in the window-sized tail
-      val keptCore = preservedCkpt(core.join(hinted(cands, aCnt), keys,
+      val keptCore = preservedCkpt(core.join(Broadcast.hint(cands, aCnt), keys,
         "left_anti"))
       // counting keptCore fuses into the materialization the fold
       // pays anyway (first round's action would have done it) and
@@ -2014,13 +1965,13 @@ object Views {
       // can skip a broadcast that would have fit)
       var (keptTail, keptTailBound) =
         if (tailBound == 0L) (tail, 0L)
-        else cutCount(tail.join(hinted(cands, aCnt), keys, "left_anti"))
+        else cutCount(tail.join(Broadcast.hint(cands, aCnt), keys, "left_anti"))
       var pending = cands
       var pendCnt = aCnt
       var rounds = 0
       var derivedCnt = -1L
       while (pendCnt > 0 && derivedCnt != 0 && rounds < maxRounds) {
-        val p = hinted(pending, pendCnt)
+        val p = Broadcast.hint(pending, pendCnt)
         // R(a,b) ← E(a,b) | E(a,x) ∧ R(x,b), restricted to candidates;
         // semi against (keptCore ∪ keptTail) in split form —
         // semi(x, A∪B) = semi(x, A) ∪ semi(anti(x, A), B) — so the
@@ -2039,7 +1990,7 @@ object Views {
         val keptTailR = keptTail.select(col("src").as("__x"), col("dst"))
         val step = probe.join(keptCoreR, Seq("__x", "dst"), "left_semi")
           .unionByName(probe.join(keptCoreR, Seq("__x", "dst"), "left_anti")
-            .join(hinted(keptTailR, keptTailBound), Seq("__x", "dst"),
+            .join(Broadcast.hint(keptTailR, keptTailBound), Seq("__x", "dst"),
               "left_semi"))
           .select("src", "dst")
         val (derived, dc) = cutCount(direct.unionByName(step).distinct())
@@ -2047,7 +1998,7 @@ object Views {
         if (derivedCnt > 0) {
           keptTail = lazyCut(keptTail.unionByName(derived))
           keptTailBound += derivedCnt
-          pending = lazyCut(pending.join(hinted(derived, derivedCnt),
+          pending = lazyCut(pending.join(Broadcast.hint(derived, derivedCnt),
             Seq("src", "dst"), "left_anti"))
           pendCnt -= derivedCnt
         }
@@ -2072,7 +2023,7 @@ object Views {
       // the tail, so the relation scans below read core ∪ tail
       def antiState(x: DataFrame): DataFrame =
         x.join(core, keys, "left_anti")
-          .join(hinted(tail, tailBound), keys, "left_anti")
+          .join(Broadcast.hint(tail, tailBound), keys, "left_anti")
       var (delta, dCnt) = cutCount(antiState(eAdd))
       var rounds = 0
       while (dCnt > 0 && rounds < maxRounds) {
@@ -2081,9 +2032,9 @@ object Views {
         added = lazyCut(added.unionByName(delta))
         addedCnt += dCnt
         val rAll = core.unionByName(tail)
-        val dL = hinted(
+        val dL = Broadcast.hint(
           delta.select(col("src").as("__a"), col("dst").as("__m")), dCnt)
-        val dR = hinted(
+        val dR = Broadcast.hint(
           delta.select(col("src").as("__m"), col("dst").as("__b")), dCnt)
         val left = dL
           .join(rAll.select(col("src").as("__m"), col("dst").as("__b")),
@@ -2109,10 +2060,10 @@ object Views {
     // delta, or foldLowerBoundedState's tcOps count) materializes it
     // off checkpointed inputs.
     val ops = if (!needOps) None else Some(lazyCut(
-      added.join(hinted(removedPend, removedCnt), Seq("src", "dst"),
+      added.join(Broadcast.hint(removedPend, removedCnt), Seq("src", "dst"),
           "left_anti")
         .withColumn("op", lit("add"))
-      .unionByName(removedPend.join(hinted(added, addedCnt),
+      .unionByName(removedPend.join(Broadcast.hint(added, addedCnt),
           Seq("src", "dst"), "left_anti")
         .withColumn("op", lit("remove")))))
     finish(core, tail, tailBound, coreCnt, ops)
@@ -2143,8 +2094,8 @@ object Views {
     * their own vertex deltas, prop flips included.
     *
     * When the closure fold fell back to its measured RECOMPUTE (its
-    * ops are then state-diff-sized — `> rederiveCap` — and the delta
-    * path would broadcast them), the composition recomputes too:
+    * ops are then state-diff-sized and would not broadcast
+    * ([[graft.Broadcast.fits]]), the composition recomputes too:
     * one join over the post-fold factors, ops from the counting-state
     * diff — proportionate, the closure itself just churned.
     *
@@ -2188,7 +2139,7 @@ object Views {
     val tcRel = tc0.select(col("src").as(x), col("dst").as(b))
     val state0 = catalog.dataOf(s"$prefix!state").getOrElse(
       composed(wl, tcRel, dstV(oldStore)))
-    if (tcOps.count() > rederiveCap) {
+    if (!Broadcast.fits(tcOps, tcOps.count())) {
       // closure ops are state-diff-sized (the reach fold recomputed):
       // recompute the composition from the POST-fold factors instead
       // of broadcasting them through the delta path
@@ -2333,17 +2284,13 @@ object Views {
     *    (old comp → new comp) map as one broadcast relabel over a
     *    state SCAN. No state shuffle on either path.
     *
-    * [[rederiveCap]] licenses broadcasts inside the fold.
+    * The broadcast license ([[graft.Broadcast.hint]]) gates every
+    * broadcast inside the fold.
     */
   private[views] def foldCcState(catalog: ViewCatalog, stateKey: String,
       oldStore: GraphStore, newStore: GraphStore, touchedV: IdProbe,
       edgeLabel: String, recomputeRatio: Double = 0.3)
       : (DataFrame, DataFrame) = {
-    // broadcast license: row count against min(policy cap, the BYTE
-    // budget for this frame's row shape) — r12 verdict #6: a row
-    // count alone is row-width blind
-    def hinted(df: DataFrame, cnt: Long): DataFrame =
-      hintIfFits(df, cnt, rederiveCap)
     val s0 = catalog.dataOf(stateKey).getOrElse(
       initCcState(oldStore, edgeLabel))
     // the state's cardinality is journal-covered catalog meta carried
@@ -2364,10 +2311,10 @@ object Views {
     if (remCnt > 0) {
       val remV = eRem.select(col("src").as("id"))
         .unionByName(eRem.select(col("dst").as("id"))).distinct()
-      val affected = lazyCut(s.join(hinted(remV, 2 * remCnt), Seq("id"),
+      val affected = lazyCut(s.join(Broadcast.hint(remV, 2 * remCnt), Seq("id"),
           "left_semi")
         .select("comp").distinct())
-      val (memb, membCnt) = cutCount(s.join(hinted(affected, 2 * remCnt),
+      val (memb, membCnt) = cutCount(s.join(Broadcast.hint(affected, 2 * remCnt),
         Seq("comp"), "left_semi"))
       if (membCnt > recomputeRatio * stateCnt) {
         // the split wavefront churns most of the state — recompute
@@ -2380,8 +2327,8 @@ object Views {
       }
       val eMid = oldStore.edges.filter(col("label") === edgeLabel)
         .select("src", "dst")
-        .join(hinted(eRem, remCnt), Seq("src", "dst"), "left_anti")
-        .join(hinted(memb.select(col("id").as("src")), membCnt),
+        .join(Broadcast.hint(eRem, remCnt), Seq("src", "dst"), "left_anti")
+        .join(Broadcast.hint(memb.select(col("id").as("src")), membCnt),
           Seq("src"), "left_semi")
       // the re-derivation propagation shuffles the affected
       // subgraph's edges, which membCnt (a vertex count) does not
@@ -2392,7 +2339,7 @@ object Views {
       // action vs the old eager cut) — members with no surviving
       // edge drop out of the union here.
       val (s1, s1Cnt) = cutCount(
-        s.join(hinted(affected, 2 * remCnt), Seq("comp"), "left_anti")
+        s.join(Broadcast.hint(affected, 2 * remCnt), Seq("comp"), "left_anti")
           .unionByName(ccLabels(eMid)))
       s = s1
       stateCnt = s1Cnt
@@ -2404,12 +2351,12 @@ object Views {
       // current labels of the touched endpoints: known off one state
       // scan; endpoints the state has never seen are their own
       // provisional component
-      val known = lazyCut(s.join(hinted(endpoints, 2 * addCnt), Seq("id"),
+      val known = lazyCut(s.join(Broadcast.hint(endpoints, 2 * addCnt), Seq("id"),
         "left_semi"))
       val fresh = lazyCut(endpoints.join(
-          hinted(known.select("id"), 2 * addCnt), Seq("id"), "left_anti")
+          Broadcast.hint(known.select("id"), 2 * addCnt), Seq("id"), "left_anti")
         .withColumn("comp", col("id")))
-      val epLbl = hinted(known.unionByName(fresh), 2 * addCnt)
+      val epLbl = Broadcast.hint(known.unionByName(fresh), 2 * addCnt)
       // component merge-graph: one node per touched label, one edge
       // per added edge — window-sized, so the propagation broadcasts
       val mgEdges = eAdd

@@ -12,6 +12,12 @@ class AlgoSpec extends SparkSpec {
   lazy val vertices = Seq(1L, 2L, 3L).toDF("id")
   lazy val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
 
+  /** A broadcast threshold below one row's width: the broadcast
+    * license admits no row, so every count-gated loop stays
+    * distributed (sort-merge joins, no driver finish).
+    */
+  private val zeroLicense = "spark.sql.autoBroadcastJoinThreshold" -> "1"
+
   test("pagerank: all scores > 0, sum ≈ contributes correctly, sink highest") {
     val pr = Algorithms.pageRank(vertices, edges, 0.85, 20).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -150,11 +156,11 @@ class AlgoSpec extends SparkSpec {
       "no edges" -> (Seq(1L, 2L, 3L), Seq.empty[(Long, Long)]),
       "no vertices" -> (Seq.empty[Long], Seq((1L, 2L), (2L, 1L))))
     for ((name, (vs, es)) <- cases) {
-      def scc(br: Long) = bag(Algorithms.stronglyConnectedComponents(
-        vs.toDF("id"), es.toDF("src", "dst"), broadcastRows = br))
-      val local = scc(Algorithms.DefaultBroadcastRows)
+      def scc() = bag(Algorithms.stronglyConnectedComponents(
+        vs.toDF("id"), es.toDF("src", "dst")))
+      val local = scc()
       assert(local.values.sum == vs.size, name)
-      assert(local == scc(0L), name)
+      assert(local == withConf(zeroLicense)(scc()), name)
     }
   }
 
@@ -419,37 +425,31 @@ class AlgoSpec extends SparkSpec {
     assert(dup.count(_ == (1L, 1L)) == 1)
   }
 
-  test("frontier loops: forced SMJ fallback (broadcastRows=0) matches broadcast path") {
+  test("frontier loops: forced SMJ fallback (0-row broadcast license) matches broadcast path") {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L),
       (1L, 5L), (5L, 6L), (6L, 4L)).toDF("src", "dst")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val bcast = rows(Algorithms.multiSourceBfs(e, Seq(1L, 5L).toDF("id"), 4))
-    val smj = rows(Algorithms.multiSourceBfs(e, Seq(1L, 5L).toDF("id"), 4,
-      broadcastRows = 0L))
-    assert(smj == bcast)
-    val undB = rows(Algorithms.multiSourceBfs(e, Seq(2L).toDF("id"), 3,
+    def bfs() = rows(Algorithms.multiSourceBfs(e, Seq(1L, 5L).toDF("id"), 4))
+    assert(withConf(zeroLicense)(bfs()) == bfs())
+    def und() = rows(Algorithms.multiSourceBfs(e, Seq(2L).toDF("id"), 3,
       undirected = true))
-    val undS = rows(Algorithms.multiSourceBfs(e, Seq(2L).toDF("id"), 3,
-      undirected = true, broadcastRows = 0L))
-    assert(undS == undB)
-    val reachB = Algorithms.reachability(e, Seq(1L)).collect()
+    assert(withConf(zeroLicense)(und()) == und())
+    def reach() = Algorithms.reachability(e, Seq(1L)).collect()
       .map(_.getLong(0)).toSet
-    val reachS = Algorithms.reachability(e, Seq(1L), broadcastRows = 0L)
-      .collect().map(_.getLong(0)).toSet
+    val reachB = reach()
+    val reachS = withConf(zeroLicense)(reach())
     assert(reachS == reachB && reachB == Set(1L, 2L, 3L, 4L, 5L, 6L))
     // scc: cycle 1↔2 plus dag edge to 3, forced-SMJ == broadcast
     val vs = Seq(1L, 2L, 3L).toDF("id")
     val cyc = Seq((1L, 2L), (2L, 1L), (2L, 3L)).toDF("src", "dst")
-    def sccMap(br: Long) = Algorithms.stronglyConnectedComponents(vs, cyc,
-      10, broadcastRows = br).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sccMap(0L) == sccMap(Algorithms.DefaultBroadcastRows))
+    def sccMap() = Algorithms.stronglyConnectedComponents(vs, cyc, 10)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(withConf(zeroLicense)(sccMap()) == sccMap())
     // k-core: triangle + pendant, forced-SMJ == broadcast
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    def core(br: Long) = Algorithms.kCore(tri, 2, broadcastRows = br)
-      .collect().map(_.getLong(0)).toSet
-    assert(core(0L) == core(Algorithms.DefaultBroadcastRows))
+    def core() = Algorithms.kCore(tri, 2).collect().map(_.getLong(0)).toSet
+    assert(withConf(zeroLicense)(core()) == core())
   }
 
   test("servedFromCache: pure renames over a cache qualify, computed plans don't") {
@@ -701,8 +701,8 @@ class AlgoSpec extends SparkSpec {
   }
 
   test("louvain: count-gated local finisher agrees with all-distributed levels") {
-    // the default gate collects condensed levels; localGateEdges = 0
-    // keeps every level distributed — partitions must agree
+    // the default gate collects condensed levels; a 0-row broadcast
+    // license keeps every level distributed — partitions must agree
     val vs = (1L to 8L).toDF("id")
     val es = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (5L, 6L), (5L, 7L), (5L, 8L), (6L, 7L), (6L, 8L), (7L, 8L),
@@ -710,7 +710,7 @@ class AlgoSpec extends SparkSpec {
     def parts(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
       .groupBy(_._2).values.map(_.keys.toSet).toSet
-    assert(parts(Algorithms.louvain(vs, es, localGateEdges = 0L)) ==
+    assert(withConf(zeroLicense)(parts(Algorithms.louvain(vs, es))) ==
       parts(Algorithms.louvain(vs, es)))
   }
 
@@ -944,15 +944,19 @@ class AlgoSpec extends SparkSpec {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getTimestamp(2)).toMap
       assert(bucketed == want, s"seed=$seed (dateBuckets=3)")
-      // r13: force the SCAN-ONLY state merge (broadcastRows tiny, so
-      // arrivalUb outgrows the ceiling while per-round improvements
-      // still fit) — answer-identical to the shuffling groupBy merge
-      val scanMerged = Algorithms.temporalReachability(
-          esr.toDF("src", "dst", "d"), Seq(1L, 2L).toDF("id"), sentinel,
-          broadcastRows = 3)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getTimestamp(2)).toMap
-      assert(scanMerged == want, s"seed=$seed (broadcastRows=3)")
+      // r13: force the SCAN-ONLY state merge (a 96-byte threshold
+      // licenses 3 rows of a 32-byte improvement and 4 of the 24-byte
+      // arrival state, so arrivalUb outgrows the license while
+      // per-round improvements still fit) — answer-identical to the
+      // shuffling groupBy merge
+      val scanMerged = withConf(
+          "spark.sql.autoBroadcastJoinThreshold" -> "96") {
+        Algorithms.temporalReachability(
+            esr.toDF("src", "dst", "d"), Seq(1L, 2L).toDF("id"), sentinel)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getTimestamp(2)).toMap
+      }
+      assert(scanMerged == want, s"seed=$seed (3-row improvement license)")
     }
   }
 
@@ -1196,9 +1200,9 @@ class AlgoSpec extends SparkSpec {
       .withColumn("hops", col("hops").cast("long"))))
     assert(bfs == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L,
       6L -> 5L))
-    // the same SCC with every round distributed (a 0-row ceiling)
-    val (sccLoop, sccLoopJobs) = jobsOf(
-      pairs(Algorithms.stronglyConnectedComponents(v, e, broadcastRows = 0L)))
+    // the same SCC with every round distributed (a 0-row license)
+    val (sccLoop, sccLoopJobs) = withConf(zeroLicense)(jobsOf(
+      pairs(Algorithms.stronglyConnectedComponents(v, e))))
     assert(sccLoop == scc)
     info(s"scc=$sccJobs sccLoop=$sccLoopJobs kcore=$coreJobs bfs=$bfsJobs")
     // budgets are the counts measured on this fixture with every
@@ -1206,8 +1210,10 @@ class AlgoSpec extends SparkSpec {
     // separate count read 139, 13 and 38); a change that adds a job
     // to a round fails here. SCC finishes on the driver at entry (128
     // jobs before the local finish); its distributed loop keeps the
-    // count it had then
-    val budgets = Seq(("scc", sccJobs, 6), ("sccLoop", sccLoopJobs, 156),
+    // count it had then. The loop is forced by a 1-byte threshold,
+    // which also turns off Spark's own size-based broadcasts of the
+    // small input frames
+    val budgets = Seq(("scc", sccJobs, 6), ("sccLoop", sccLoopJobs, 170),
       ("kcore", coreJobs, 9), ("bfs", bfsJobs, 26))
     budgets.foreach { case (name, n, bound) =>
       assert(n <= bound, s"$name: $n jobs, budget $bound")

@@ -436,14 +436,15 @@ class CurationSpec extends SparkSpec {
     assert(out == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 4L))
   }
 
-  test("resolveDupClusters: forced-SMJ CC (broadcastRows=0) matches broadcast path") {
+  test("resolveDupClusters: forced-SMJ CC (0-row broadcast license) matches broadcast path") {
     val docs = (1L to 6L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("ida", "idb")
-    def resolve(br: Long) = graft.functions.Dedup.resolveDupClusters(
-        docs, "doc_id", pairs, broadcastRows = br)
+    def resolve() = graft.functions.Dedup.resolveDupClusters(
+        docs, "doc_id", pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bcast = resolve(graft.algorithms.Algorithms.DefaultBroadcastRows)
-    val smj = resolve(0L)
+    val bcast = resolve()
+    // a threshold below one row's width licenses 0 rows
+    val smj = withConf("spark.sql.autoBroadcastJoinThreshold" -> "1")(resolve())
     assert(smj == bcast)
     assert(bcast == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L))

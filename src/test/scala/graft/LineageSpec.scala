@@ -10,21 +10,23 @@ import graft.Lineage.{CutOps, cutCount}
 class LineageSpec extends SparkSpec {
 
   /** `src` with comments and string/char literals blanked (newlines
-    * kept, so line numbers survive). One left-to-right pass, so a
-    * quote inside a comment or a `//` inside a string is consumed by
-    * the token that contains it.
+    * kept, so line numbers survive); `keepStrings` blanks comments
+    * only. One left-to-right pass, so a quote inside a comment or a
+    * `//` inside a string is consumed by the token that contains it.
     */
-  private def codeOnly(src: String): String =
+  private def codeOnly(src: String, keepStrings: Boolean = false): String =
     """(?s)/\*.*?\*/|//[^\n]*|'(?:\\.|[^'\\\n])'|"(?:\\.|[^"\\\n])*"""".r
       .replaceAllIn(src, m => scala.util.matching.Regex.quoteReplacement(
-        m.matched.replaceAll("[^\n]", " ")))
+        if (keepStrings && !m.matched.startsWith("/")) m.matched
+        else m.matched.replaceAll("[^\n]", " ")))
 
   private val cutCall = """\blocalCheckpoint\b|\.checkpoint\s*\(""".r
 
   private def cutCalls(f: java.io.File,
-      call: scala.util.matching.Regex = cutCall): Seq[String] = {
+      call: scala.util.matching.Regex = cutCall,
+      keepStrings: Boolean = false): Seq[String] = {
     val code = codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath),
-      "UTF-8"))
+      "UTF-8"), keepStrings)
     code.split("\n", -1).toSeq.zipWithIndex.collect {
       case (line, n) if call.findFirstIn(line).isDefined =>
         s"${f.getPath}:${n + 1}: ${line.trim}"
@@ -67,6 +69,27 @@ class LineageSpec extends SparkSpec {
     val offenders = mainFiles().flatMap(cutCalls(_, setDir))
     assert(offenders.isEmpty,
       "the session checkpoint dir is the user's to set:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("no src/main file other than Broadcast.scala reads the broadcast " +
+    "threshold") {
+    // one broadcast license: every count-gated hint and driver finish
+    // asks graft.Broadcast, which alone turns the session's
+    // autoBroadcastJoinThreshold into a row budget. The conf key in a
+    // string literal counts as a read; a comment does not
+    val threshold = """autoBroadcastJoinThreshold""".r
+    assert(codeOnly("conf.autoBroadcastJoinThreshold // x\n" +
+      "get(\"spark.sql.autoBroadcastJoinThreshold\") /* " +
+      "autoBroadcastJoinThreshold */", keepStrings = true).split("\n")
+      .map(threshold.findAllIn(_).size).sum == 2)
+    val (module, others) = mainFiles().partition(_.getName == "Broadcast.scala")
+    // the scan is not vacuous: it sees the module's own read
+    assert(module.size == 1 &&
+      cutCalls(module.head, threshold, keepStrings = true).nonEmpty)
+    val offenders = others.flatMap(cutCalls(_, threshold, keepStrings = true))
+    assert(offenders.isEmpty,
+      "read the broadcast budget through graft.Broadcast:\n" +
         offenders.mkString("\n"))
   }
 

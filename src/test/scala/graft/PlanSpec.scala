@@ -84,9 +84,7 @@ class PlanSpec extends SparkSpec {
     val store = GraphStore.fromTpch(spark, sf)
     val dir = tempDir("graft_bkt").toString
     store.saveBucketed("bkt", 4, dir)
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // vertices(id) ⋈ edges(src): both sides bucketed+sorted on the
       // join key with equal bucket counts → merge join straight off
       // the files: no Exchange, no Sort
@@ -102,7 +100,6 @@ class PlanSpec extends SparkSpec {
       val self = e.join(e2, col("src") === col("src2"))
       assert(!self.queryExecution.executedPlan.toString.contains("Exchange"))
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       spark.sql("DROP TABLE IF EXISTS bkt_vertices")
       spark.sql("DROP TABLE IF EXISTS bkt_edges")
     }

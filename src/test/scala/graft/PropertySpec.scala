@@ -185,35 +185,28 @@ class PropertySpec extends SparkSpec {
       } ++ tail).distinct
       val vs = (1L to vN.toLong + 4L)
       val expect = tarjanScc(vs, es)
-      def scc(broadcastRows: Long, numIter: Int = 50) = jobsOf(
+      def scc(numIter: Int = 50) = jobsOf(
         graft.algorithms.Algorithms.stronglyConnectedComponents(
-            vs.toDF("id"), es.toDF("src", "dst"), numIter = numIter,
-            broadcastRows = broadcastRows)
+            vs.toDF("id"), es.toDF("src", "dst"), numIter = numIter)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       // default: the whole graph fits, finished on the driver at entry
-      val (atEntry, _) = scc(graft.algorithms.Algorithms.DefaultBroadcastRows)
+      val (atEntry, _) = scc()
       assert(atEntry == expect, s"seed=$seed at entry")
       // 1 KB caps the license at 64 (src, dst) rows: the entry edges
       // exceed it, the residual after the first peel does not, so one
       // distributed round plus the local finish is exact
       assert(es.size > 64, s"seed=$seed: ${es.size} edges fit at entry")
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "1kb")
-      val (afterPeel, peelJobs) = try
-        scc(graft.algorithms.Algorithms.DefaultBroadcastRows, numIter = 1)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+      val (afterPeel, peelJobs) = withConf(key -> "1kb")(scc(numIter = 1))
       assert(afterPeel == expect, s"seed=$seed after a peel")
-      // a 0-row ceiling: every round distributed
-      val (distributed, loopJobs) = scc(0L)
+      // a 1-byte threshold licenses 0 rows: every round distributed
+      val (distributed, loopJobs) = withConf(key -> "1")(scc())
       assert(distributed == expect, s"seed=$seed distributed")
       assert(peelJobs < loopJobs,
         s"seed=$seed: local finish $peelJobs jobs, loop $loopJobs")
       // one distributed round alone leaves SCCs unpeeled, so the exact
       // answer after a peel came from the driver
-      assert(scc(0L, numIter = 1)._1 != expect, s"seed=$seed one round")
+      assert(withConf(key -> "1")(scc(numIter = 1))._1 != expect,
+        s"seed=$seed one round")
     }
   }
 
@@ -224,21 +217,23 @@ class PropertySpec extends SparkSpec {
     // labels, and the unpeeled tail keeps the LAST round's forward
     // fixpoint — computed on remaining = {3..10} before 3 was peeled,
     // so every leftover carries the merged best-effort label 3.
-    // broadcastRows = 0 keeps the distributed loop, whose rounds the
-    // cap counts (a residual that fits is finished exactly instead)
+    // a 1-byte broadcast threshold (a 0-row license) keeps the
+    // distributed loop, whose rounds the cap counts (a residual that
+    // fits is finished exactly instead)
     val chain = (1L until 10L).map(v => (v, v + 1))
     val vs = (1L to 10L).toDF("id")
-    val capped = graft.algorithms.Algorithms.stronglyConnectedComponents(
-        vs, chain.toDF("src", "dst"), numIter = 3, broadcastRows = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def distributed(numIter: Int) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+        graft.algorithms.Algorithms.stronglyConnectedComponents(
+            vs, chain.toDF("src", "dst"), numIter = numIter)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+    val capped = distributed(3)
     assert(capped.keySet == (1L to 10L).toSet)
     (1L to 3L).foreach(v => assert(capped(v) == v, s"peeled $v"))
     (4L to 10L).foreach(v => assert(capped(v) == 3L, s"unpeeled $v"))
     // with the cap lifted the same input matches Tarjan exactly
-    val full = graft.algorithms.Algorithms.stronglyConnectedComponents(
-        vs, chain.toDF("src", "dst"), numIter = 50, broadcastRows = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(full == tarjanScc(1L to 10L, chain))
+    assert(distributed(50) == tarjanScc(1L to 10L, chain))
     // the default path finishes on the driver, exact at any cap
     val local = graft.algorithms.Algorithms.stronglyConnectedComponents(
         vs, chain.toDF("src", "dst"), numIter = 3)

@@ -48,6 +48,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
+  /** `f` with the session SQL conf `kv` set; each key's prior value
+    * (or its absence) is restored afterwards.
+    */
+  protected def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val conf = spark.conf
+    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
+    kv.foreach { case (k, v) => conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** `f(dir)` with the session's checkpoint dir set to a fresh temp
     * `dir`, so operators cut reliably inside `f`. The dir is unset and
     * deleted afterwards: a dir left set would make every later suite

@@ -133,7 +133,10 @@ class StreamViewsSpec extends SparkSpec {
       (7L, 8L, 1L), (9L, 9L, 1L), (9L, 9L, -1L))
       .toDF("src", "dst", "__sign")
     val viaBroadcast = Views.mergeJoinDelta(state, delta)
-    val viaRegroup = Views.mergeJoinDelta(state, delta, broadcastCap = 0L)
+    // a threshold below one row's width licenses 0 rows → regroup
+    val viaRegroup = withConf("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+      Views.mergeJoinDelta(state, delta)
+    }
     val want = Map(
       List(1L, 2L, 2L) -> 1, List(3L, 4L, 1L) -> 1, List(7L, 8L, 1L) -> 1)
     assert(multiset(viaBroadcast) == want)
@@ -148,47 +151,48 @@ class StreamViewsSpec extends SparkSpec {
     val shape = Seq((1L, 2L, 3L)).toDF("src", "dst", "__dm")
     val width = shape.schema.defaultSize.toLong // 3 longs = 24 bytes
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "1kb")
-      assert(Views.broadcastRowBudget(shape) == 1024L / width)
-      spark.conf.set(key, "10485760")
-      assert(Views.broadcastRowBudget(shape) == (10L << 20) / width)
-      // disabled threshold (-1) must not yield a zero/negative cap —
-      // the merge still needs SOME budget; it falls back to the
-      // Spark default byte budget
-      spark.conf.set(key, "-1")
-      assert(Views.broadcastRowBudget(shape) == (10L << 20) / width)
-      // large unit suffixes Spark's byteString conf accepts must
-      // parse too — an operator forcing the merge path with "1tb"
-      // must not silently land on the 10 MB default
-      spark.conf.set(key, "1tb")
-      assert(Views.broadcastRowBudget(shape) == (1L << 40) / width)
-      val state = Seq((1L, 2L), (3L, 4L), (3L, 4L), (5L, 6L))
-        .toDF("src", "dst").groupBy("src", "dst")
-        .agg(count(lit(1)).as("__mult"))
-      val delta = Seq(
-        (1L, 2L, 1L), (5L, 6L, -1L), (3L, 4L, -1L), (7L, 8L, 1L))
-        .toDF("src", "dst", "__sign")
-      val want = Map(
-        List(1L, 2L, 2L) -> 1, List(3L, 4L, 1L) -> 1, List(7L, 8L, 1L) -> 1)
-      // 72-byte threshold → 3-row budget < 4 netted keys → regroup
-      // fallback (plan has NO join: union + re-aggregate only)
-      spark.conf.set(key, "72")
+    def budgetAt(threshold: String) =
+      withConf(key -> threshold)(Broadcast.budget(shape))
+    assert(budgetAt("1kb") == 1024L / width)
+    assert(budgetAt("10485760") == (10L << 20) / width)
+    // disabled threshold (-1 or 0) must not yield a zero/negative
+    // cap — the merge still needs SOME budget; it falls back to the
+    // Spark default byte budget
+    assert(budgetAt("-1") == (10L << 20) / width)
+    assert(budgetAt("0") == (10L << 20) / width)
+    // a positive threshold below one row's width licenses NO row:
+    // tests force the distributed, SMJ and regroup paths this way
+    assert(budgetAt("1") == 0L && budgetAt((width - 1).toString) == 0L)
+    assert(budgetAt(width.toString) == 1L)
+    assert(!withConf(key -> "1")(Broadcast.fits(shape, 1L)))
+    // large unit suffixes Spark's byteString conf accepts must
+    // parse too — an operator forcing the merge path with "1tb"
+    // must not silently land on the 10 MB default
+    assert(budgetAt("1tb") == (1L << 40) / width)
+    val state = Seq((1L, 2L), (3L, 4L), (3L, 4L), (5L, 6L))
+      .toDF("src", "dst").groupBy("src", "dst")
+      .agg(count(lit(1)).as("__mult"))
+    val delta = Seq(
+      (1L, 2L, 1L), (5L, 6L, -1L), (3L, 4L, -1L), (7L, 8L, 1L))
+      .toDF("src", "dst", "__sign")
+    val want = Map(
+      List(1L, 2L, 2L) -> 1, List(3L, 4L, 1L) -> 1, List(7L, 8L, 1L) -> 1)
+    // 72-byte threshold → 3-row budget < 4 netted keys → regroup
+    // fallback (plan has NO join: union + re-aggregate only)
+    withConf(key -> "72") {
       val viaTiny = Views.mergeJoinDelta(state, delta)
       assert(!viaTiny.queryExecution.executedPlan.toString.contains("Join"),
         "a delta over the byte budget must take the join-free regroup path")
       assert(multiset(viaTiny) == want)
-      // default threshold → broadcast merge path (plan joins)
-      spark.conf.set(key, saved)
-      val viaDefault = Views.mergeJoinDelta(state, delta)
-      assert(viaDefault.queryExecution.executedPlan.toString.contains("Join"),
-        "a window-sized delta must take the broadcast merge path")
-      assert(multiset(viaDefault) == want)
-    } finally spark.conf.set(key, saved)
+    }
+    // default threshold → broadcast merge path (plan joins)
+    val viaDefault = Views.mergeJoinDelta(state, delta)
+    assert(viaDefault.queryExecution.executedPlan.toString.contains("Join"),
+      "a window-sized delta must take the broadcast merge path")
+    assert(multiset(viaDefault) == want)
   }
 
-  test("stateMembershipOps branch parity: broadcast derivation == " +
+  test("mergeJoinDeltaWithOps ops branch parity: broadcast derivation == " +
     "state-diff fallback; count moves that stay positive emit nothing") {
     def opset(df: org.apache.spark.sql.DataFrame) =
       df.select("src", "dst", "op").collect()
@@ -204,9 +208,10 @@ class StreamViewsSpec extends SparkSpec {
       (7L, 8L, 1L), (9L, 9L, 1L), (9L, 9L, -1L))
       .toDF("src", "dst", "__sign")
     val want = Set((5L, 6L, "remove"), (7L, 8L, "add"))
-    assert(opset(Views.stateMembershipOps(state, delta)) == want)
-    assert(opset(Views.stateMembershipOps(state, delta,
-      broadcastCap = 0L)) == want)
+    assert(opset(Views.mergeJoinDeltaWithOps(state, delta)._2) == want)
+    assert(opset(withConf("spark.sql.autoBroadcastJoinThreshold" -> "1") {
+      Views.mergeJoinDeltaWithOps(state, delta)._2
+    }) == want)
     // ops must agree with the fold: add keys appear in the merged
     // state, remove keys vanish
     val s1 = Views.mergeJoinDelta(state, delta)
@@ -2573,19 +2578,13 @@ class StreamViewsSpec extends SparkSpec {
       }.sum
     }
     val inScan = run("default")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1kb")
-    val oversized = try {
+    val oversized = withConf("spark.sql.autoBroadcastJoinThreshold" -> "1kb") {
       // 1 KB over a 64-byte (op, id, src, dst, elabel) window row
       // licenses 16 rows; every window holds at least the 18 pad rows
       val shape = GraphStore.emptyChanges(spark)
         .select("op", "id", "src", "dst", "elabel")
-      assert(Views.broadcastRowBudget(shape) == 16L && pad.size > 16)
+      assert(Broadcast.budget(shape) == 16L && pad.size > 16)
       run("1kb")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     info(s"refresh jobs over ${windows.size} windows: in-scan $inScan, " +
       s"oversized $oversized")
@@ -2611,14 +2610,10 @@ class StreamViewsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1kb")
-    try {
-      // 1 KB over a 16-byte (src, dst) row: 64 rows fit, whatever the
-      // caller's row ceiling
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "1kb") {
+      // 1 KB over a 16-byte (src, dst) row: 64 rows fit
       val pair = Seq((1L, 2L)).toDF("src", "dst")
-      def hinted(rows: Long) = Views.hintIfFits(pair, rows, 1L << 20)
+      def hinted(rows: Long) = Broadcast.hint(pair, rows)
         .queryExecution.logical.toString.contains("broadcast")
       assert(hinted(64L) && !hinted(65L))
       val noProps = lit(null).cast(graft.model.PropValue.mapType)
@@ -2642,7 +2637,7 @@ class StreamViewsSpec extends SparkSpec {
       val r2 = Views.refreshReachabilityView(cat, "tcb", m1, m2,
         "N", "dep", "N", recomputeRatio = Double.MaxValue)
       assert(rows(r2) == tc(chain - ((14L, 15L)) + ((13L, 16L))))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("refresh policies: needsRefresh semantics") {
